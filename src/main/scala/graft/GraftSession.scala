@@ -10,6 +10,10 @@ import org.apache.spark.sql.SparkSession
   * runtime; dynamic partition overwrite gives idempotent backfill — the
   * reference sets the same conf at load time,
   * /root/reference/src/main/scala/connector/hive/HiveConnector.scala:48).
+  *
+  * The CLIs and the test session build through [[builder]]; `Bench` and
+  * `Verify` spell the same effective conf out inline. The AQE coalesce,
+  * skew-join and snappy keys set here are Spark's defaults.
   */
 object GraftSession {
   def builder(cores: Int = 32, appName: String = "graft"): SparkSession.Builder =

@@ -1,6 +1,9 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.datasources.v2.{BatchScanExec, FileScan}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -38,6 +41,16 @@ object QueriesEtl {
     val sf = dir.replaceAll(".*/", "")
     s"/root/repo/target/etl_scratch/$sf/$name"
   }
+
+  /** Files the first file scan of an executed plan reads. */
+  private def scanFiles(p: SparkPlan): Option[Int] =
+    p.collectLeaves().flatMap {
+      case a: AdaptiveSparkPlanExec =>
+        scanFiles(a.executedPlan) // AQE wraps the scan behind a leaf
+      case b: BatchScanExec =>
+        Some(b.scan.asInstanceOf[FileScan].fileIndex.inputFiles.length)
+      case _ => None
+    }.headOption
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ── S1/S2: schema-declared CSV scan with month-name path resolution.
@@ -3988,16 +4001,6 @@ object QueriesEtl {
            |       CAST(sum(k) AS BIGINT) AS sum_key,
            |       CAST(sum(cents) AS BIGINT) AS sum_cents
            |FROM graftblm.ord WHERE k = $kLit GROUP BY status""".stripMargin)
-      def scanFiles(p: org.apache.spark.sql.execution.SparkPlan): Option[Int] =
-        p.collectLeaves().flatMap {
-          case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-            scanFiles(a.executedPlan)
-          case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
-            Some(b.scan
-              .asInstanceOf[org.apache.spark.sql.execution.datasources.v2.FileScan]
-              .fileIndex.inputFiles.length)
-          case _ => None
-        }.headOption
       val planned = scanFiles(q.queryExecution.executedPlan).getOrElse(-1)
       val log = new SnapshotLog(scratch(dir, "blmroot") + "/ord")
       val total = log.dataFiles(log.currentVersion.get).size
@@ -4043,16 +4046,6 @@ object QueriesEtl {
       s.sql("DELETE FROM graftbdm.ord WHERE k > 2000")
       // the point lookup still skips, with zero OPTIMIZE between
       val kLit = s.sql("SELECT min(k) AS k FROM graft_bdm_src").head().getLong(0)
-      def scanFiles(p: org.apache.spark.sql.execution.SparkPlan): Option[Int] =
-        p.collectLeaves().flatMap {
-          case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-            scanFiles(a.executedPlan)
-          case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
-            Some(b.scan
-              .asInstanceOf[org.apache.spark.sql.execution.datasources.v2.FileScan]
-              .fileIndex.inputFiles.length)
-          case _ => None
-        }.headOption
       val lookup = s.sql(s"SELECT k, cents FROM graftbdm.ord WHERE k = $kLit")
       val log = new SnapshotLog(scratch(dir, "bdmroot") + "/ord")
       val planned = scanFiles(lookup.queryExecution.executedPlan).getOrElse(-1)
@@ -4981,16 +4974,6 @@ object QueriesEtl {
           |       CAST(sum(cents) AS BIGINT) AS sum_cents
           |FROM graftclu.ord WHERE k BETWEEN 1000 AND 2000
           |GROUP BY status""".stripMargin)
-      def scanFiles(p: org.apache.spark.sql.execution.SparkPlan): Option[Int] =
-        p.collectLeaves().flatMap {
-          case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-            scanFiles(a.executedPlan)
-          case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
-            Some(b.scan
-              .asInstanceOf[org.apache.spark.sql.execution.datasources.v2.FileScan]
-              .fileIndex.inputFiles.length)
-          case _ => None
-        }.headOption
       val planned = scanFiles(q.queryExecution.executedPlan).getOrElse(-1)
       val total = log.dataFiles(log.currentVersion.get).size
       val skipped = planned >= 1 && planned < total
@@ -5044,16 +5027,6 @@ object QueriesEtl {
           |       CAST(sum(cents) AS BIGINT) AS sum_cents
           |FROM graftci.ord WHERE k BETWEEN 300 AND 900
           |GROUP BY status""".stripMargin)
-      def scanFiles(p: org.apache.spark.sql.execution.SparkPlan): Option[Int] =
-        p.collectLeaves().flatMap {
-          case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-            scanFiles(a.executedPlan)
-          case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
-            Some(b.scan
-              .asInstanceOf[org.apache.spark.sql.execution.datasources.v2.FileScan]
-              .fileIndex.inputFiles.length)
-          case _ => None
-        }.headOption
       val planned = scanFiles(q.queryExecution.executedPlan).getOrElse(-1)
       val skipped = planned >= 1 && planned < after.size
       q.withColumn("incr_rewrote_only_tail", lit(incrOnly))
@@ -5086,16 +5059,6 @@ object QueriesEtl {
       finally s.conf.unset("spark.graft.optimize.maxFileSize")
       val log = new SnapshotLog(scratch(dir, "z2root") + "/ord")
       val total = log.dataFiles(log.currentVersion.get).size
-      def scanFiles(p: org.apache.spark.sql.execution.SparkPlan): Option[Int] =
-        p.collectLeaves().flatMap {
-          case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-            scanFiles(a.executedPlan)
-          case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
-            Some(b.scan
-              .asInstanceOf[org.apache.spark.sql.execution.datasources.v2.FileScan]
-              .fileIndex.inputFiles.length)
-          case _ => None
-        }.headOption
       val q = s.sql(
         """SELECT status, count(*) AS n_orders,
           |       CAST(sum(k) AS BIGINT) AS sum_key,
@@ -5142,16 +5105,6 @@ object QueriesEtl {
           |       CAST(sum(cents) AS BIGINT) AS sum_cents
           |FROM graftcw.ord WHERE k BETWEEN 300 AND 600
           |GROUP BY status""".stripMargin)
-      def scanFiles(p: org.apache.spark.sql.execution.SparkPlan): Option[Int] =
-        p.collectLeaves().flatMap {
-          case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-            scanFiles(a.executedPlan)
-          case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
-            Some(b.scan
-              .asInstanceOf[org.apache.spark.sql.execution.datasources.v2.FileScan]
-              .fileIndex.inputFiles.length)
-          case _ => None
-        }.headOption
       val planned = scanFiles(q.queryExecution.executedPlan).getOrElse(-1)
       val total = log.dataFiles(log.currentVersion.get).size
       val skipped = planned >= 1 && planned < total
@@ -5377,16 +5330,6 @@ object QueriesEtl {
           |FROM graftskip.ord
           |WHERE o_orderkey BETWEEN 1000 AND 3000
           |GROUP BY o_orderstatus""".stripMargin)
-      def scanFiles(p: org.apache.spark.sql.execution.SparkPlan): Option[Int] =
-        p.collectLeaves().flatMap {
-          case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-            scanFiles(a.executedPlan) // AQE wraps the scan behind a leaf
-          case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
-            Some(b.scan
-              .asInstanceOf[org.apache.spark.sql.execution.datasources.v2.FileScan]
-              .fileIndex.inputFiles.length)
-          case _ => None
-        }.headOption
       val planned = scanFiles(q.queryExecution.executedPlan).getOrElse(-1)
       val skipped = planned >= 1 && planned < 8
       q.withColumn("files_skipped_at_manifest", lit(skipped))

@@ -227,7 +227,6 @@ object QueriesLlm {
     */
   private def bpeIdStream(
       s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    graft.functions.TextKernels.register(s)
     val docs = Tables.documents(s, dir)
     val merges = Bpe.trainMergesLocal(docs, BpeMerges)
     val words = docs.select(
@@ -1034,7 +1033,6 @@ object QueriesLlm {
     // corpus repeats itself); one codegen'd gram pass per n, a
     // (source × 3)-row output whatever the corpus size ──
     "diversity_stats" -> ((s, dir) => {
-      graft.functions.TextKernels.register(s)
       val docs = Tables.documents(s, dir)
       def grams(n: Int) = docs.select(
         col("source"),
@@ -1080,7 +1078,6 @@ object QueriesLlm {
     // greedy-left folds, per-doc word/subword counts — the consumer path
     // (train → freeze → tokenize) in one verifiable query ──
     "bpe_tokenize" -> ((s, dir) => {
-      graft.functions.TextKernels.register(s)
       val docs = Tables.documents(s, dir)
       val merges = Bpe.trainMergesLocal(docs, BpeMerges)
       docs
@@ -1100,7 +1097,6 @@ object QueriesLlm {
     // stands in for; the oracle rederives the merges, resegments, and
     // replays the layout arithmetic ──
     "bpe_pack" -> ((s, dir) => {
-      graft.functions.TextKernels.register(s)
       val docs = Tables.documents(s, dir)
       val merges = Bpe.trainMergesLocal(docs, BpeMerges)
       val counts = docs
@@ -1150,7 +1146,6 @@ object QueriesLlm {
     // with corpus occurrence counts after all merges — segmentation via
     // the codegen'd kernel, one explode + one count shuffle ──
     "bpe_vocab" -> ((s, dir) => {
-      graft.functions.TextKernels.register(s)
       val docs = Tables.documents(s, dir)
       val merges = Bpe.trainMergesLocal(docs, BpeMerges)
       docs
@@ -1700,7 +1695,6 @@ object QueriesLlm {
     // normalization, silence trimming, and the perceptual hash all read.
     // Exact integer energies, hashed per doc as fingerprint + aggregates ──
     "mm_audio_envelope" -> ((s, dir) => {
-      graft.functions.AudioKernels.register(s)
       Multimodal.withWavPayload(Tables.documents(s, dir).select(col("doc_id")))
         .select(col("doc_id"),
           graft.functions.AudioKernels.wavEnvelopeCol(col("payload")).as("env"))
@@ -1721,7 +1715,6 @@ object QueriesLlm {
     // explode of the (sparse) onset list — the envelope column is computed
     // once per asset and never re-derived across a join ──
     "mm_audio_onsets" -> ((s, dir) => {
-      graft.functions.AudioKernels.register(s)
       Multimodal.withWavPayload(Tables.documents(s, dir).select(col("doc_id")))
         .select(col("doc_id"),
           graft.functions.AudioKernels.wavEnvelopeCol(col("payload")).as("env"))
@@ -1736,7 +1729,6 @@ object QueriesLlm {
     }),
 
     "mm_resize_grid" -> ((s, dir) => {
-      graft.functions.ImageKernels.register(s)
       Multimodal.withPpmPayload(Tables.documents(s, dir).select(col("doc_id")))
         .select(col("doc_id"),
           graft.functions.ImageKernels.ppmResizeCol(col("payload")).as("grid"))
@@ -1750,7 +1742,6 @@ object QueriesLlm {
     }),
 
     "dedup_phash" -> ((s, dir) => {
-      graft.functions.ImageKernels.register(s)
       // repartition = an exchange BARRIER: the synthesis+decode lambda runs
       // interpreted (higher-order functions never codegen), so it must
       // evaluate once per doc and ship 8-byte hashes into the self-join —
@@ -1771,7 +1762,6 @@ object QueriesLlm {
     // group collide with their indexed siblings (rejected), the variant-3
     // checkerboards are genuinely new pictures (admitted) ──
     "dedup_phash_incr" -> ((s, dir) => {
-      graft.functions.ImageKernels.register(s)
       val imgs = Multimodal.withPpmPayload(Tables.documents(s, dir))
         .select(col("doc_id"),
           graft.functions.ImageKernels.ppmDhashCol(col("payload")).as("dhash"))
@@ -1793,7 +1783,6 @@ object QueriesLlm {
     // from the amplitude formula (energy = 8 × amplitude, so the
     // comparisons replay exactly) — two independent implementations ──
     "dedup_audio" -> ((s, dir) => {
-      graft.functions.AudioKernels.register(s)
       val clips = Multimodal.withWavPayload(Tables.documents(s, dir))
         .select(col("doc_id"),
           graft.functions.AudioKernels.wavEnergyHashCol(col("payload")).as("dhash"))
@@ -2214,7 +2203,6 @@ object QueriesLlm {
     // deterministic fixture, so the DuckDB replay hash-matches a genuinely
     // streaming execution ──
     "stream_phash_ingest" -> ((s, dir) => {
-      graft.functions.ImageKernels.register(s)
       val docs = Tables.documents(s, dir)
       val idx = Dedup.hashBandIndex(
         Multimodal.withPpmPayload(docs)
@@ -2737,7 +2725,6 @@ object QueriesLlm {
     // datacard wants next to tfidf_top_terms, but GLOBAL (graph
     // centrality) instead of per-doc (frequency) ──
     "textrank_keywords" -> ((s, dir) => {
-      graft.functions.TextKernels.register(s)
       // codegen'd candidate filter + adjacent-pair scan (identical rows as
       // the interpreted filter(...) + zip_with(slice, slice) they replace)
       val cands = graft.functions.TextKernels.filterCandidatesCol(
@@ -2841,7 +2828,6 @@ object QueriesLlm {
     // coverage of every token with n_true·(k+1) > n_tot), all pinned TRUE
     // by the oracle — the theta/KLL law-boolean discipline ──
     "heavy_hitters_mg" -> ((s, dir) => {
-      graft.functions.FreqFunctions.register(s)
       val toks = Tables.documents(s, dir)
         .select(col("source"), explode(TextAnalysis.tokens(col("text"))).as("token"))
       val mg = toks.groupBy(col("source"))
@@ -2874,7 +2860,6 @@ object QueriesLlm {
     }),
 
     "top_tokens_grouped" -> ((s, dir) => {
-      graft.functions.TopKFunctions.register(s)
       val tf = Tables.documents(s, dir)
         .select(col("source"), explode(TextAnalysis.tokens(col("text"))).as("token"))
         .groupBy(col("source"), col("token"))
@@ -3008,7 +2993,6 @@ object QueriesLlm {
     // identical bytes in hex and replays the identical offset-chained reads
     // (JPEG segment-length hops, WAV chunk skips) in SQL ──
     "mm_decode_real" -> ((s, dir) => {
-      graft.functions.MediaKernels.register(s)
       Multimodal.withMediaPayload(Tables.documents(s, dir))
         .select(
           col("doc_id"), length(col("payload")).cast("long").as("n_bytes"),
@@ -3030,7 +3014,6 @@ object QueriesLlm {
     // metadata, so the hash match also pins metadata == payload size
     // through the file round-trip. Oracle: mm_decode_real's byte replay ──
     "binaryfile_ingest" -> ((s, dir) => {
-      graft.functions.MediaKernels.register(s)
       val files = scratch(dir, "media_files")
       graft.sources.BinaryFiles.writeFiles(
         Multimodal.withMediaPayload(Tables.documents(s, dir)),
@@ -3057,7 +3040,6 @@ object QueriesLlm {
     // normalized md5 — JDK Normalizer vs the oracle's utf8proc
     // nfc_normalize, two independent Unicode implementations hash-matched ──
     "text_nfc_audit" -> ((s, dir) => {
-      graft.functions.TextKernels.register(s)
       val aug = Tables.documents(s, dir).select(
         col("doc_id"),
         when(col("doc_id") % 4 === 0, concat(col("text"), lit(" cafe\u0301")))
@@ -3082,7 +3064,6 @@ object QueriesLlm {
     // cross-engine hash is exact, null fields (audio has no dims, images
     // no sample rate) dropped by SQL sum semantics identically ──
     "mm_format_stats" -> ((s, dir) => {
-      graft.functions.MediaKernels.register(s)
       Multimodal.withMediaPayload(Tables.documents(s, dir))
         .select(
           length(col("payload")).cast("long").as("n_bytes"),
@@ -3106,7 +3087,6 @@ object QueriesLlm {
     // while Spark walks the real bytes (two independent implementations;
     // the non-stub counterpart of mm_frame_hashes' fixed-size chunking) ──
     "mm_gif_frames" -> ((s, dir) => {
-      graft.functions.VideoKernels.register(s)
       Multimodal.withGifPayload(Tables.documents(s, dir))
         .select(col("doc_id"),
           graft.functions.VideoKernels.gifFramesCol(col("payload")).as("m"))
@@ -3119,7 +3099,6 @@ object QueriesLlm {
     // frame of each animation, with its true delay — one row per sampled
     // frame, payload projected away before the explode ──
     "mm_gif_frame_sample" -> ((s, dir) => {
-      graft.functions.VideoKernels.register(s)
       Multimodal.withGifPayload(Tables.documents(s, dir))
         .select(col("doc_id"),
           graft.functions.VideoKernels.gifFramesCol(col("payload")).as("m"))
@@ -3144,7 +3123,6 @@ object QueriesLlm {
     // engines never need to agree on packing, only on the 64 comparison
     // bits. The repartition is the decode-once barrier from dedup_phash ──
     "mm_scene_cuts" -> ((s, dir) => {
-      graft.functions.ImageKernels.register(s)
       val vids = Tables.documents(s, dir)
         .where(pmod(col("doc_id"), lit(5)) === 0).select(col("doc_id"))
       val frames = Multimodal.withVideoFrames(vids, MmFrames, MmSceneLen)

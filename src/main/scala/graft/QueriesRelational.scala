@@ -154,7 +154,6 @@ object QueriesRelational {
     // FAIL the bloom probe must be zero — a count comparison could be
     // numerically masked by false positives; this one cannot. ──
     "join_bloom_prefilter" -> ((s, dir) => {
-      graft.functions.BloomFunctions.register(s)
       val cust = Tables.customer(s, dir)
         .where(col("c_mktsegment") === "BUILDING").select(col("c_custkey"))
       // bounded model fetch: the ~KB filter bytes become a plan literal
@@ -678,7 +677,6 @@ object QueriesRelational {
     // output (merge order is partitioning-dependent) ──
     "kll_quantile_rollup" -> ((s, dir) => {
       import graft.functions.KllFunctions
-      KllFunctions.register(s)
       val kllK = 200
       val eps = 0.03
       val qsArr = array(lit(0.5), lit(0.9), lit(0.99))
@@ -735,7 +733,6 @@ object QueriesRelational {
     // law), never by equality with a differently-ordered batch build ──
     "stream_kll_ingest" -> ((s, dir) => {
       import graft.functions.KllFunctions
-      KllFunctions.register(s)
       val kllK = 200
       val eps = 0.03
       val sink = "stream_kll_ingest_sink"
@@ -786,7 +783,6 @@ object QueriesRelational {
     // all hash-fail ──
     "stream_sketch_rollup" -> ((s, dir) => {
       import graft.functions.ThetaFunctions
-      ThetaFunctions.register(s)
       val lgK = 14
       val ev = Tables.events(s, dir)
       val dailyPath = scratch(dir, "stream_sketch_daily")
@@ -819,7 +815,6 @@ object QueriesRelational {
     // COUNT(DISTINCT) exactly; both pins ride the hash compare ──
     "stream_bitmap_ingest" -> ((s, dir) => {
       import graft.functions.BitmapFunctions
-      BitmapFunctions.register(s)
       val ev = Tables.events(s, dir)
       val dailyPath = scratch(dir, "stream_bitmap_daily")
       graft.streaming.StreamingSessionize.bitmapRollupReplay(ev)
@@ -1478,7 +1473,6 @@ object QueriesRelational {
     // gate holds through estimation mode ──
     "theta_wow_overlap" -> ((s, dir) => {
       import graft.functions.ThetaFunctions
-      ThetaFunctions.register(s)
       val uw = Tables.events(s, dir)
         .select(to_date(date_trunc("week", col("ts"))).as("week"), col("user_id"))
       val weekly = uw.groupBy(col("week"))
@@ -1516,7 +1510,6 @@ object QueriesRelational {
     // month-distinct count ──
     "theta_total_rollup" -> ((s, dir) => {
       import graft.functions.ThetaFunctions
-      ThetaFunctions.register(s)
       val ev = Tables.events(s, dir)
       val weekly = ev
         .select(to_date(date_trunc("week", col("ts"))).as("week"), col("user_id"))
@@ -1542,7 +1535,6 @@ object QueriesRelational {
     // the final join is one ≤2·n-byte bitmap per week, not user ids ──
     "bitmap_wow_overlap" -> ((s, dir) => {
       import graft.functions.BitmapFunctions
-      BitmapFunctions.register(s)
       val weekly = Tables.events(s, dir)
         .select(to_date(date_trunc("week", col("ts"))).as("week"), col("user_id"))
         .groupBy(col("week"))
@@ -1567,7 +1559,6 @@ object QueriesRelational {
     // bit-for-bit); per-week shuffle payload is ≤7 bitmap blobs ──
     "bitmap_wau_rollup" -> ((s, dir) => {
       import graft.functions.BitmapFunctions
-      BitmapFunctions.register(s)
       Tables.events(s, dir)
         .select(
           to_date(col("ts")).as("day"),
@@ -1591,7 +1582,6 @@ object QueriesRelational {
     // hash-matched against a real GROUPING SETS count-distinct ──
     "bitmap_cube_rollup" -> ((s, dir) => {
       import graft.functions.BitmapFunctions
-      BitmapFunctions.register(s)
       val fine = Tables.events(s, dir)
         .select(col("event_type"),
           to_date(date_trunc("week", col("ts"))).as("week"), col("user_id"))

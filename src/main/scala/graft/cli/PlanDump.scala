@@ -2,8 +2,6 @@ package graft.cli
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Optimization-round helper: dump `.explain("formatted")` for named
   * SparkEntry queries to `plans/<tag>/<name>_<suffix>.txt` — the
   * before/after plan evidence the optimization write-ups cite
@@ -22,18 +20,7 @@ object PlanDump {
     val Array(tag, suffix, namesCsv) = args
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      .config("spark.sql.warehouse.dir", "/root/repo/target/warehouse")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(cpus.toInt, "graft-plan-dump")
     val outDir = Paths.get(s"plans/$tag")
     Files.createDirectories(outDir)
     val names = namesCsv.split(",").map(_.trim).filter(_.nonEmpty)

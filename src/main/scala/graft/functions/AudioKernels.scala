@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -159,14 +159,6 @@ object AudioKernels {
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)
     override def prettyName: String = "graft_wav_envelope"
-  }
-
-  /** Register on the session's function registry (idempotent). */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_wav_ehash", exprs => WavEnergyHash(exprs(0)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_wav_envelope", exprs => WavEnvelope(exprs(0)), "scala_udf")
   }
 
   def wavEnergyHashCol(payload: Column): Column =

@@ -2,7 +2,7 @@ package graft.functions
 
 import java.nio.{ByteBuffer, ByteOrder}
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression}
@@ -395,26 +395,6 @@ object BitmapFunctions {
         newFirst: Expression, newSecond: Expression, newThird: Expression): Expression =
       copy(first = newFirst, second = newSecond, third = newThird)
     override def prettyName: String = "graft_dv_contains"
-  }
-
-  /** Register all six functions on the session's registry (idempotent). */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "graft_bitmap_agg", exprs => BitmapBuildAgg(exprs(0)), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "graft_bitmap_union", exprs => BitmapUnionAgg(exprs(0)), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "graft_bitmap_count", exprs => BitmapCount(exprs(0)), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "graft_bitmap_and_count",
-      exprs => BitmapAndCount(exprs(0), exprs(1)), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "graft_bitmap_andnot_count",
-      exprs => BitmapAndNotCount(exprs(0), exprs(1)), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "graft_dv_contains",
-      exprs => DvContains(exprs(0), exprs(1), exprs(2)), "scala_udf")
   }
 
   def bitmapAgg(key: Column): Column = call_function("graft_bitmap_agg", key)

@@ -1,9 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expression, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
@@ -21,23 +20,6 @@ import org.apache.spark.util.sketch.BloomFilter
   * caller here leans on.
   */
 object BloomFunctions {
-
-  /** Registered lazily, same contract as [[VectorFunctions.register]]. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "graft_bloom_agg",
-      exprs => new BloomFilterAggregate(exprs(0), exprs(1), exprs(2)),
-      "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "graft_bloom_contains",
-      exprs => BloomFilterMightContain(exprs(0), exprs(1)),
-      "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "graft_bloom_count_in",
-      exprs => BloomCountIn(exprs(0), binaryArg("graft_bloom_count_in", 1, exprs(1))),
-      "scala_udf")
-  }
 
   /** Bits for the standard optimal-m formula `-n·ln(p) / ln(2)²` — what
     * `spark.util.sketch.BloomFilter` allocates for (n, fpp).
@@ -124,7 +106,7 @@ object BloomFunctions {
     }
   }
 
-  /** Column form of [[BloomCountIn]] (requires [[register]]); the filter
+  /** Column form of [[BloomCountIn]]; the filter
     * bytes ride as a binary literal, deserialized once at plan time.
     */
   def bloomCountInCol(hs: Column, filterBytes: Array[Byte]): Column =

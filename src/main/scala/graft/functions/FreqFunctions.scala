@@ -2,7 +2,7 @@ package graft.functions
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
@@ -180,12 +180,7 @@ object FreqFunctions {
     }
   }
 
-  /** Register `graft_mg` on the session's registry (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_mg", exprs => MisraGriesAgg(exprs(0), kArg(exprs)), "scala_udf")
-
-  /** Misra–Gries summary column (requires [[register]]). */
+  /** Misra–Gries summary column. */
   def misraGries(item: Column, k: Int): Column =
     call_function("graft_mg", item, org.apache.spark.sql.functions.lit(k))
 }

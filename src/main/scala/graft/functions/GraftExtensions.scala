@@ -6,20 +6,19 @@ import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Expre
 import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 
 /** SparkSessionExtensions injector for every graft Catalyst expression —
-  * the spark-submit integration point:
+  * the one place a `graft_*` function is registered:
   *
   * {{{
   *   spark-submit --conf spark.sql.extensions=graft.functions.GraftExtensions ...
   * }}}
   *
-  * makes `graft_dot`, `graft_vec_sum`, `graft_vec_min`/`graft_vec_max`,
-  * `graft_shingles`, `graft_minhash`, `graft_simhash60`, `graft_winnow`,
-  * `graft_repstats` and `graft_bpe_apply` available to every session (SQL
-  * included) without any library call. The operators themselves still lazily register via
-  * [[VectorFunctions.register]]/[[TextKernels.register]] so plain sessions
-  * (Verify, Bench, tests, notebooks) keep working; this class is the
-  * cluster-deployment path where the functions should exist before user code
-  * runs.
+  * makes every kernel (`graft_dot`, `graft_minhash`, `graft_theta_sketch`,
+  * `graft_bitmap_agg`, `graft_ppm_payload`, ...) a built-in of every session
+  * the builder creates, SQL included, and of each `newSession()` or
+  * streaming batch session cloned from one. Every session that runs an
+  * operator must set the extension: without it a kernel call fails at
+  * analysis with `UNRESOLVED_ROUTINE`. The `call_function` column helpers
+  * in `graft.functions` only name these functions.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -245,5 +244,31 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         "graft_lambda_fold(hashes, lambda) - left-to-right sum of lambda[h % len(lambda)]"),
       (exprs: Seq[Expression]) => TextKernels.LambdaFold(
         exprs(0), TextKernels.doubleArrayArg("graft_lambda_fold", 1, exprs(1)))))
+    ext.injectFunction((
+      FunctionIdentifier("graft_dv_contains"),
+      info("graft_dv_contains",
+        "graft_dv_contains(dvs, file, pos) - whether row pos of file is deleted under the literal map of deletion-vector bitmaps"),
+      (exprs: Seq[Expression]) => BitmapFunctions.DvContains(exprs(0), exprs(1), exprs(2))))
+    ext.injectFunction((
+      FunctionIdentifier("graft_ppm_resize"),
+      info("graft_ppm_resize", "graft_ppm_resize(payload) - the 72 pooled block sums of a PPM image"),
+      (exprs: Seq[Expression]) => ImageKernels.PpmPooledGrid(exprs(0))))
+    ext.injectFunction((
+      FunctionIdentifier("graft_wav_envelope"),
+      info("graft_wav_envelope", "graft_wav_envelope(payload) - the 65 window energies of a PCM WAV"),
+      (exprs: Seq[Expression]) => AudioKernels.WavEnvelope(exprs(0))))
+    ext.injectFunction((
+      FunctionIdentifier("graft_ppm_payload"),
+      info("graft_ppm_payload", "graft_ppm_payload(id) - the synthetic PPM image of a bigint id"),
+      (exprs: Seq[Expression]) => MediaSynth.PpmPayload(exprs(0))))
+    ext.injectFunction((
+      FunctionIdentifier("graft_wav_payload"),
+      info("graft_wav_payload", "graft_wav_payload(id) - the synthetic PCM WAV clip of a bigint id"),
+      (exprs: Seq[Expression]) => MediaSynth.WavPayload(exprs(0))))
+    ext.injectFunction((
+      FunctionIdentifier("graft_ppm_frame_payload"),
+      info("graft_ppm_frame_payload",
+        "graft_ppm_frame_payload(id, frame_no, scene_len) - the synthetic PPM video frame of a bigint id"),
+      (exprs: Seq[Expression]) => MediaSynth.PpmFramePayload(exprs(0), exprs(1), exprs(2))))
   }
 }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -168,16 +168,6 @@ object ImageKernels {
     override protected def withNewChildInternal(newChild: Expression): Expression =
       copy(child = newChild)
     override def prettyName: String = "graft_ppm_resize"
-  }
-
-  /** Register on the session's function registry (idempotent, same contract
-    * as [[TextKernels.register]]).
-    */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_ppm_dhash", exprs => PpmDhash(exprs(0)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_ppm_resize", exprs => PpmPooledGrid(exprs(0)), "scala_udf")
   }
 
   def ppmDhashCol(payload: Column): Column =

@@ -4,7 +4,7 @@ import org.apache.datasketches.kll.KllDoublesSketch
 import org.apache.datasketches.memory.Memory
 import org.apache.datasketches.quantilescommon.QuantileSearchCriteria
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
@@ -179,21 +179,6 @@ object KllFunctions {
       case other => throw new IllegalArgumentException(
         s"$name: k must be an integer literal, got $other")
     }
-  }
-
-  /** Register the three functions (idempotent). */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "graft_kll_sketch",
-      exprs => KllSketchAgg(exprs(0), kArg("graft_kll_sketch", exprs(1))),
-      "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "graft_kll_merge",
-      exprs => KllMergeAgg(exprs(0), kArg("graft_kll_merge", exprs(1))),
-      "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "graft_kll_quantile", exprs => KllQuantile(exprs(0), exprs(1)), "scala_udf")
   }
 
   def kllSketch(v: Column, k: Int): Column =

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
@@ -157,13 +157,6 @@ object MediaKernels {
       copy(child = newChild)
     override def prettyName: String = "graft_media_header"
   }
-
-  /** Register on the session's function registry (idempotent, same contract
-    * as [[TextKernels.register]]).
-    */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_media_header", exprs => DecodeMediaHeader(exprs(0)), "scala_udf")
 
   def decodeHeaderCol(payload: Column): Column =
     call_function("graft_media_header", payload)

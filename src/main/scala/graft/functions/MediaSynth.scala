@@ -2,7 +2,7 @@ package graft.functions
 
 import java.nio.charset.StandardCharsets.US_ASCII
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -216,7 +216,7 @@ object MediaSynth {
 
   /** Codegen'd `graft_ppm_frame_payload(id, frame_no, scene_len)` →
     * binary. `scene_len` is a long literal at the one call site; it rides
-    * as a third child so the kernel registers like every other graft
+    * as a third child so the kernel is injected like every other graft
     * function.
     */
   case class PpmFramePayload(first: Expression, second: Expression, third: Expression)
@@ -239,19 +239,6 @@ object MediaSynth {
         newFirst: Expression, newSecond: Expression, newThird: Expression): Expression =
       copy(first = newFirst, second = newSecond, third = newThird)
     override def prettyName: String = "graft_ppm_frame_payload"
-  }
-
-  /** Register on the session's function registry (idempotent, the
-    * [[ImageKernels.register]] contract).
-    */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_ppm_payload", exprs => PpmPayload(exprs(0)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_wav_payload", exprs => WavPayload(exprs(0)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_ppm_frame_payload",
-      exprs => PpmFramePayload(exprs(0), exprs(1), exprs(2)), "scala_udf")
   }
 
   def ppmPayloadCol(id: Column): Column = call_function("graft_ppm_payload", id)

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -718,68 +718,6 @@ object TextKernels {
         throw new IllegalArgumentException(
           s"$fn: argument ${pos + 1} must be an integer literal, got $other")
     }
-  }
-
-  /** Register the kernels on the session's function registry (idempotent —
-    * same lazy-registration contract as [[VectorFunctions.register]]).
-    * `graft_shingles` takes the n-gram width as a literal second argument.
-    */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "graft_shingles",
-      exprs => ShinglesExpr(exprs(0), intArg("graft_shingles", 1, exprs(1))),
-      "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "graft_gram_hashes",
-      exprs => OrderedGramHashes(exprs(0), intArg("graft_gram_hashes", 1, exprs(1))),
-      "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "graft_minhash", exprs => MinHashSignature(exprs(0)), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "graft_simhash60", exprs => SimHash60(exprs(0)), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "graft_winnow",
-      exprs => WinnowFingerprints(
-        exprs(0),
-        intArg("graft_winnow", 1, exprs(1)),
-        intArg("graft_winnow", 2, exprs(2))),
-      "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "graft_repstats",
-      exprs => RepetitionStats(exprs(0), intArg("graft_repstats", 1, exprs(1))),
-      "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "graft_bpe_apply",
-      exprs => BpeApply(exprs(0), stringArrayArg("graft_bpe_apply", 1, exprs(1))),
-      "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "graft_nfc", exprs => NfcNormalize(exprs(0)), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "graft_count_in",
-      exprs => CountIn(exprs(0), stringArrayArg("graft_count_in", 1, exprs(1))),
-      "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "graft_terms_present",
-      exprs => TermsPresent(exprs(0), stringArrayArg("graft_terms_present", 1, exprs(1))),
-      "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "graft_toklen_sum", exprs => TokenLenSum(exprs(0)), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "graft_adj_pairs", exprs => AdjacentPairs(exprs(0)), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "graft_inter_count", exprs => InterCount(exprs(0), exprs(1)), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "graft_filter_cands",
-      exprs => FilterCandidates(
-        exprs(0),
-        stringArrayArg("graft_filter_cands", 1, exprs(1)),
-        intArg("graft_filter_cands", 2, exprs(2))),
-      "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "graft_lambda_fold",
-      exprs => LambdaFold(exprs(0), doubleArrayArg("graft_lambda_fold", 1, exprs(1))),
-      "scala_udf")
   }
 
   /** Extract a foldable array<double> literal function argument. */

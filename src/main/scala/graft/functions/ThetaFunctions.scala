@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.datasketches.memory.Memory
 import org.apache.datasketches.theta.{CompactSketch, SetOperation, Sketches, Union}
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
@@ -233,27 +233,6 @@ object ThetaFunctions {
       case other => throw new IllegalArgumentException(
         s"$name: lgK must be an integer literal, got $other")
     }
-  }
-
-  /** Register all five functions on the session's registry (idempotent). */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction(
-      "graft_theta_sketch",
-      exprs => ThetaSketchAgg(exprs(0), lgKArg("graft_theta_sketch", exprs(1))),
-      "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "graft_theta_union",
-      exprs => ThetaUnionAgg(exprs(0), lgKArg("graft_theta_union", exprs(1))),
-      "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "graft_theta_estimate", exprs => ThetaEstimate(exprs(0)), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "graft_theta_intersect_est",
-      exprs => ThetaIntersectEstimate(exprs(0), exprs(1)), "scala_udf")
-    reg.createOrReplaceTempFunction(
-      "graft_theta_anotb_est",
-      exprs => ThetaANotBEstimate(exprs(0), exprs(1)), "scala_udf")
   }
 
   def thetaSketch(key: Column, lgK: Int): Column =

@@ -2,7 +2,7 @@ package graft.functions
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
@@ -150,12 +150,7 @@ object TopKFunctions {
     }
   }
 
-  /** Register `graft_topk` on the session's registry (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_topk", exprs => TopKAgg(exprs(0), exprs(1), kArg(exprs)), "scala_udf")
-
-  /** Bounded top-k aggregate column (requires [[register]]). */
+  /** Bounded top-k aggregate column. */
   def topK(item: Column, score: Column, k: Int): Column =
     call_function("graft_topk", item, score, org.apache.spark.sql.functions.lit(k))
 }

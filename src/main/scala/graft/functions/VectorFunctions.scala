@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
@@ -556,39 +556,11 @@ object VectorFunctions {
     s
   }
 
-  /** Register `graft_dot` on the given session's function registry
-    * (idempotent). Operators call this lazily so any session — the driver's,
-    * Verify's, Bench's, a test's — can run them without special setup.
-    */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_dot", exprs => DotProduct(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vec_sum", exprs => VectorSumAgg(exprs(0)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vec_min", exprs => VectorExtremeAgg(exprs(0), isMin = true), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_vec_max", exprs => VectorExtremeAgg(exprs(0), isMin = false), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_sqdist_l", exprs => SqDistLong(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_eq_count", exprs => EqSlotCount(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_arr_sum_l", exprs => ArraySumLong(exprs(0)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_rp_project",
-      exprs => RpProject(
-        exprs(0),
-        TextKernels.doubleArrayArg("graft_rp_project", 1, exprs(1)),
-        TextKernels.intArg("graft_rp_project", 2, exprs(2))),
-      "scala_udf")
-  }
-
-  /** Codegen'd element sum of an array<long> column (requires [[register]]). */
+  /** Codegen'd element sum of an array<long> column. */
   def arraySumLongCol(a: Column): Column = call_function("graft_arr_sum_l", a)
 
   /** Codegen'd JL ±1 projection: embedding → array<double> of `outDim`
-    * UNROUNDED components (requires [[register]]). `signsFlat` is the
+    * UNROUNDED components. `signsFlat` is the
     * row-major `outDim × inDim` sign matrix.
     */
   def rpProjectCol(vec: Column, signsFlat: Seq[Double], outDim: Int): Column = {
@@ -596,23 +568,19 @@ object VectorFunctions {
     call_function("graft_rp_project", vec, typedLit(signsFlat), lit(outDim))
   }
 
-  /** Codegen'd dot product (requires [[register]] on the session). */
+  /** Codegen'd dot product. */
   def dot(a: Column, b: Column): Column = call_function("graft_dot", a, b)
 
-  /** Codegen'd integer squared-L2 over two array<long> code columns
-    * (requires [[register]]).
-    */
+  /** Codegen'd integer squared-L2 over two array<long> code columns. */
   def sqDistLong(a: Column, b: Column): Column = call_function("graft_sqdist_l", a, b)
 
-  /** Codegen'd equal-slot count over two array<long> signature columns
-    * (requires [[register]]).
-    */
+  /** Codegen'd equal-slot count over two array<long> signature columns. */
   def eqSlotCount(a: Column, b: Column): Column = call_function("graft_eq_count", a, b)
 
-  /** Element-wise vector-sum aggregate (requires [[register]]). */
+  /** Element-wise vector-sum aggregate. */
   def vecSum(v: Column): Column = call_function("graft_vec_sum", v)
 
-  /** Element-wise vector-min / vector-max aggregates (require [[register]]). */
+  /** Element-wise vector-min / vector-max aggregates. */
   def vecMin(v: Column): Column = call_function("graft_vec_min", v)
   def vecMax(v: Column): Column = call_function("graft_vec_max", v)
 

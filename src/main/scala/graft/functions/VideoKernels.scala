@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
@@ -123,11 +123,6 @@ object VideoKernels {
       copy(child = newChild)
     override def prettyName: String = "graft_gif_frames"
   }
-
-  /** Register on the session's function registry (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_gif_frames", exprs => GifFrames(exprs(0)), "scala_udf")
 
   def gifFramesCol(payload: Column): Column =
     call_function("graft_gif_frames", payload)

@@ -79,7 +79,6 @@ object Bpe {
     */
   def trainMerges(docs: DataFrame, nMerges: Int, textCol: String = "text"): Seq[Merge] = {
     require(nMerges > 0, s"nMerges must be positive, got $nMerges")
-    graft.functions.TextKernels.register(docs.sparkSession)
     val base = wordCounts(docs, textCol)
       .select(col("word"), col("n"), charSyms(col("word")).as("syms"))
       .persist()
@@ -230,8 +229,6 @@ object Bpe {
     * at sf0.1: 11.1 s staged → 4.2 s kernel, of which ~2 s is the
     * in-query training; the nested expression was 726 s). Same greedy-left
     * semantics; BpeSpec pins kernel == staged fold == nested expression.
-    * Caller must have run [[graft.functions.TextKernels.register]] on the
-    * session.
     */
   def tokenKernelCol(word: Column, merges: Seq[Merge]): Column =
     graft.functions.TextKernels.bpeApplyCol(

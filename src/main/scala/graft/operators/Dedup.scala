@@ -51,7 +51,6 @@ object Dedup {
     * Docs with fewer than n tokens have no grams and are dropped.
     */
   def shingles(docs: DataFrame, n: Int = 3, idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    TextKernels.register(docs.sparkSession)
     docs
       .select(
         col(idCol),
@@ -73,7 +72,6 @@ object Dedup {
       window: Int = 4,
       idCol: String = "doc_id",
       textCol: String = "text"): DataFrame = {
-    TextKernels.register(docs.sparkSession)
     docs
       .select(
         col(idCol),
@@ -195,7 +193,6 @@ object Dedup {
       expectedGrams: Long = 0L,
       idCol: String = "doc_id",
       textCol: String = "text"): Array[Byte] = {
-    BloomFunctions.register(evalDocs.sparkSession)
     // pin ONE evaluation of the shingle+distinct pass: the sizing count
     // and the filter aggregation otherwise each re-run the tokenize over
     // the eval corpus (the `sized` parameter stays the exact same count,
@@ -331,7 +328,6 @@ object Dedup {
       idCol: String = "doc_id",
       textCol: String = "text"): DataFrame = {
     require(l > 0 && minOcc >= 2, s"need l > 0 and minOcc >= 2, got $l/$minOcc")
-    TextKernels.register(docs.sparkSession)
     val seeds = docs
       .select(
         col(idCol),
@@ -600,7 +596,6 @@ object Dedup {
     val sb = sigs.select(col(idCol).as("doc_b"), col("sig").as("sig_b"))
     // codegen'd slot-agreement count (identical to the interpreted
     // size(filter(zip_with(...))) chain it replaces)
-    VectorFunctions.register(docs.sparkSession)
     cand.join(sa, "doc_a").join(sb, "doc_b")
       .withColumn("n_match", VectorFunctions.eqSlotCount(col("sig_a"), col("sig_b")))
       .select(
@@ -702,7 +697,6 @@ object Dedup {
     val sa = freshSigs.select(col(idCol).as("f_id"), col("sig").as("sig_a"))
     val sb = corpusSigs.select(col(idCol).as("p_id"), col("sig").as("sig_b"))
       .unionByName(freshSigs.select(col(idCol).as("p_id"), col("sig").as("sig_b")))
-    VectorFunctions.register(fresh.sparkSession)
     val verified = cand.join(sa, "f_id").join(sb, "p_id")
       .withColumn("n_match", VectorFunctions.eqSlotCount(col("sig_a"), col("sig_b")))
       .where(col("n_match").cast("double") / k >= threshold)
@@ -947,7 +941,6 @@ object Dedup {
     * MAP-SIDE and codegen'd: one [[TextKernels.SimHash60]] pass per doc.
     */
   def simhash(docs: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    TextKernels.register(docs.sparkSession)
     docs.select(
       col(idCol),
       TextKernels.simhashSig(array_distinct(TextAnalysis.tokens(col(textCol)))).as("simhash"))

@@ -47,7 +47,6 @@ object LanguageModel {
     * should pay/earn its score 50 times).
     */
   private def docBigrams(d: DataFrame, idCol: String, textCol: String): DataFrame = {
-    graft.functions.TextKernels.register(d.sparkSession)
     // codegen'd adjacent-pair scan — identical pair rows as the interpreted
     // zip_with(slice, slice) chain it replaces (one pass, no intermediates)
     d.select(col(idCol), TextAnalysis.tokens(col(textCol)).as("w"))

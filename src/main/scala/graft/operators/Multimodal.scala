@@ -130,51 +130,15 @@ object Multimodal {
     * whole decode+pool+compare pipeline.
     */
   def withPpmPayload(df: DataFrame, idCol: String = "doc_id"): DataFrame = {
-    graft.functions.MediaSynth.register(df.sparkSession)
     val id = col(idCol).cast("long")
     // one codegen'd pass per row ([[graft.functions.MediaSynth.PpmPayload]]
     // — 72 cell md5s written straight into the raster) replacing the
     // interpreted nested-`transform` hex assembly, byte-identical
-    // (MultimodalSynthSpec pins it against [[ppmPayloadInterpreted]],
+    // (`MultimodalSynthSpec.ppmPayloadInterpreted` pins it,
     // including the null-id header-only edge the guard reproduces)
     df.withColumn("payload",
       when(id.isNull, lit(graft.functions.MediaSynth.PpmHeader))
         .otherwise(graft.functions.MediaSynth.ppmPayloadCol(id)))
-  }
-
-  /** The retained interpreted formula [[withPpmPayload]] replaced —
-    * documentation of the byte derivation and the spec's reference
-    * implementation.
-    */
-  private[graft] def ppmPayloadInterpreted(df: DataFrame, idCol: String = "doc_id"): DataFrame = {
-    val id = col(idCol).cast("long")
-    val g = (id / 4L).cast("long")
-    val v = pmod(id, lit(4L))
-    // one element per pixel ROW (16): each row spans 9 cells at cy = y/2,
-    // every cell contributing 2 identical gray pixels (6 identical hex
-    // bytes) — 9 md5 per row, 144 per image, each on a cell-sized key
-    val body = array_join(
-      transform(sequence(lit(0), lit(PpmH - 1)), { y =>
-        val cy = (y / 2L).cast("long")
-        array_join(
-          transform(sequence(lit(0), lit(8)), { cx =>
-            val topLeft = cx === 0L && cy === 0L
-            val bottomRight = cx === 8L && cy === 7L
-            val perturb = when(v === 1 && topLeft, 100L)
-              .when(v === 2 && (topLeft || bottomRight), 100L)
-              .when(v === 3 && pmod(cx + cy, lit(2L)) === 0L, 128L)
-              .otherwise(0L)
-            val key = concat(g.cast("string"), lit("_"), cx.cast("string"),
-              lit("_"), cy.cast("string"))
-            val base = conv(substring(md5(key), 1, 2), 16, 10).cast("long")
-            val h = lpad(hex(pmod(base + perturb, lit(256L))), 2, "0")
-            repeat(h, 6)
-          }), "")
-      }), "")
-    df.withColumn("payload",
-      concat(
-        encode(lit(s"P6\n$PpmW $PpmH\n255\n"), "UTF-8"),
-        unhex(body)))
   }
 
   /** Synthesized WAV geometry: 65 energy windows × 8 samples each — the
@@ -201,51 +165,14 @@ object Multimodal {
     *    recording entirely.
     */
   def withWavPayload(df: DataFrame, idCol: String = "doc_id"): DataFrame = {
-    graft.functions.MediaSynth.register(df.sparkSession)
     val id = col(idCol).cast("long")
     // codegen'd envelope synthesis ([[graft.functions.MediaSynth
     // .WavPayload]]) replacing the interpreted per-window `transform` hex
-    // assembly — byte-identical (MultimodalSynthSpec vs
-    // [[wavPayloadInterpreted]], null-id header-only edge included)
+    // assembly — byte-identical (`MultimodalSynthSpec.wavPayloadInterpreted`,
+    // null-id header-only edge included)
     df.withColumn("payload",
       when(id.isNull, lit(graft.functions.MediaSynth.WavHeader))
         .otherwise(graft.functions.MediaSynth.wavPayloadCol(id)))
-  }
-
-  /** The retained interpreted formula [[withWavPayload]] replaced — the
-    * spec's reference implementation.
-    */
-  private[graft] def wavPayloadInterpreted(df: DataFrame, idCol: String = "doc_id"): DataFrame = {
-    val id = col(idCol).cast("long")
-    val g = (id / 4L).cast("long")
-    val v = pmod(id, lit(4L))
-    def leHexLit(value: Long, bytes: Int): String = {
-      (0 until bytes).map(i => f"${(value >> (8 * i)) & 0xffL}%02X").mkString
-    }
-    val dataLen = WavSamples * 2L
-    val headerHex =
-      "52494646" + leHexLit(4 + 24 + 8 + dataLen, 4) + "57415645" +
-        "666D7420" + "10000000" + "0100" + "0100" + leHexLit(8000L, 4) +
-        leHexLit(16000L, 4) + "0200" + "1000" +
-        "64617461" + leHexLit(dataLen, 4)
-    // one element per WINDOW (65): all 8 samples of a window carry the
-    // window amplitude, so the sample hex just repeats — one md5 per
-    // window, not per sample (transform lambdas run interpreted)
-    val body = array_join(
-      transform(sequence(lit(0), lit(Windows65 - 1)), { w =>
-        val salt = when(v === 3, lit("_x")).otherwise(lit(""))
-        val key = concat(g.cast("string"), lit("_"), w.cast("string"), salt)
-        val baseAmp = conv(substring(md5(key), 1, 3), 16, 10).cast("long")
-        val amp = baseAmp +
-          when(v === 1 && w === 0L, 20000L)
-            .when(v === 2 && (w === 0L || w === 64L), 20000L)
-            .otherwise(0L)
-        repeat(
-          concat(lpad(hex(pmod(amp, lit(256L))), 2, "0"),
-            lpad(hex((amp / 256L).cast("long")), 2, "0")),
-          WavSamplesPerWindow)
-      }), "")
-    df.withColumn("payload", unhex(concat(lit(headerHex), body)))
   }
 
   /** STUB feature extractor: a deterministic `dim`-component vector in
@@ -368,56 +295,18 @@ object Multimodal {
     require(framesPerVideo >= 2 && framesPerVideo <= 64,
       s"withVideoFrames: framesPerVideo must be in [2, 64], got $framesPerVideo")
     require(sceneLen >= 2, s"withVideoFrames: sceneLen must be >= 2, got $sceneLen")
-    graft.functions.MediaSynth.register(df.sparkSession)
     val id = col(idCol).cast("long")
     val fr = col("frame_no")
     // codegen'd frame synthesis ([[graft.functions.MediaSynth
     // .PpmFramePayload]]) replacing the interpreted nested-`transform`
-    // assembly — byte-identical (MultimodalSynthSpec vs
-    // [[videoFramesInterpreted]], null-id header-only edge included)
+    // assembly — byte-identical (`MultimodalSynthSpec.videoFramesInterpreted`,
+    // null-id header-only edge included)
     df.withColumn("frame_no", explode(sequence(lit(0L), lit(framesPerVideo - 1L))))
       .withColumn("payload",
         when(id.isNull || fr.isNull,
           lit(graft.functions.MediaSynth.PpmHeader))
           .otherwise(
             graft.functions.MediaSynth.ppmFramePayloadCol(id, fr, sceneLen)))
-  }
-
-  /** The retained interpreted formula [[withVideoFrames]] replaced — the
-    * spec's reference implementation.
-    */
-  private[graft] def videoFramesInterpreted(
-      df: DataFrame,
-      framesPerVideo: Int,
-      sceneLen: Int,
-      idCol: String = "doc_id"): DataFrame = {
-    val id = col(idCol).cast("long")
-    val fr = col("frame_no")
-    val scene = (fr / sceneLen).cast("long")
-    val v = pmod(fr, lit(4L))
-    val body = array_join(
-      transform(sequence(lit(0), lit(PpmH - 1)), { y =>
-        val cy = (y / 2L).cast("long")
-        array_join(
-          transform(sequence(lit(0), lit(8)), { cx =>
-            val topLeft = cx === 0L && cy === 0L
-            val bottomRight = cx === 8L && cy === 7L
-            val perturb = when(v === 1 && topLeft, 100L)
-              .when(v === 2 && (topLeft || bottomRight), 100L)
-              .when(v === 3 && bottomRight, 100L)
-              .otherwise(0L)
-            val key = concat(id.cast("string"), lit("_"), scene.cast("string"),
-              lit("_"), cx.cast("string"), lit("_"), cy.cast("string"))
-            val base = conv(substring(md5(key), 1, 2), 16, 10).cast("long")
-            val h = lpad(hex(pmod(base + perturb, lit(256L))), 2, "0")
-            repeat(h, 6)
-          }), "")
-      }), "")
-    df.withColumn("frame_no", explode(sequence(lit(0L), lit(framesPerVideo - 1L))))
-      .withColumn("payload",
-        concat(
-          encode(lit(s"P6\n$PpmW $PpmH\n255\n"), "UTF-8"),
-          unhex(body)))
   }
 
   /** SHOT-BOUNDARY (scene-cut) detection over per-frame perceptual

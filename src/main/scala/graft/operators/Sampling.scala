@@ -148,7 +148,6 @@ object Sampling {
 
   private def bucketSeeds(
       d: DataFrame, n: Int, buckets: Int, idCol: String, textCol: String): DataFrame = {
-    TextKernels.register(d.sparkSession)
     d.select(
       col(idCol),
       explode(
@@ -388,7 +387,6 @@ object Sampling {
     */
   def perKeySample(df: DataFrame, stratum: Column, keyCol: String, k: Int): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
-    graft.functions.TopKFunctions.register(df.sparkSession)
     df
       .select(stratum.as("stratum"), col(keyCol).cast("string").as("ks"))
       .groupBy(col("stratum"))

@@ -72,7 +72,6 @@ object Similarity {
       k: Int,
       idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
-    VectorFunctions.register(queries.sparkSession)
     val q = withNorm(queries, idCol, vecCol, "query_id")
       .select(col("query_id"), col("v").as("qv"), col("nrm").as("qn"))
     val c = withNorm(corpus, idCol, vecCol, "neighbor_id")
@@ -153,7 +152,6 @@ object Similarity {
       vectors: DataFrame,
       labelCol: String = "label",
       vecCol: String = "embedding"): DataFrame = {
-    VectorFunctions.register(vectors.sparkSession)
     vectors.groupBy(col(labelCol))
       .agg(
         VectorFunctions.vecSum(asDouble(col(vecCol))).as("vsum"),
@@ -182,7 +180,6 @@ object Similarity {
       idCol: String = "vec_id",
       labelCol: String = "label",
       vecCol: String = "embedding"): DataFrame = {
-    VectorFunctions.register(vectors.sparkSession)
     val v = vectors
       .select(col(idCol), col(labelCol), asDouble(col(vecCol)).as("v"))
       .withColumn("vn", sqrt(dot(col("v"), col("v"))))
@@ -216,7 +213,6 @@ object Similarity {
       idCol: String = "vec_id",
       labelCol: String = "label",
       vecCol: String = "embedding"): DataFrame = {
-    VectorFunctions.register(queries.sparkSession)
     val q = queries
       .select(col(idCol).as("query_id"), col(labelCol).as("query_label"), asDouble(col(vecCol)).as("qv"))
       .withColumn("qn", sqrt(dot(col("qv"), col("qv"))))
@@ -325,7 +321,6 @@ object Similarity {
     // 4096 · dim=64 doubles ≈ 2 MB of literals — already generous; beyond
     // that an IVF/coreset pre-pass is the right tool, not bigger plans.
     require(k <= 4096, s"k=$k exceeds the plan-literal budget (centroids are plan literals; use a coarse pre-clustering for larger k)")
-    VectorFunctions.register(vectors.sparkSession)
     // The working set is consumed by the seed collect, `iters` M-step
     // aggregations, and the final assignment (iters + 2 passes). Persist it
     // once — at 100 TB recomputing normalize+filter per iteration would be
@@ -405,7 +400,6 @@ object Similarity {
       vecCol: String = "embedding",
       nProbes: Int = 1): DataFrame = {
     require(nProbes >= 1, s"nProbes must be >= 1, got $nProbes")
-    VectorFunctions.register(queries.sparkSession)
     val (corpusAssign, cents) = kmeansFit(corpus, cells, iters, idCol, vecCol)
     ivfProbe(queries, corpus, corpusAssign, cents, k, nProbes, idCol, vecCol)
   }
@@ -577,7 +571,6 @@ object Similarity {
     require(driftTol > 0, s"driftTol must be positive, got $driftTol")
     val spark = newBatch.sparkSession
     import spark.implicits._
-    VectorFunctions.register(spark)
     val (meta, cents) = loadVerifiedIndex(spark, indexPath, cells, iters)
     val indexed = spark.read.parquet(s"$indexPath/assignments")
     val overlap = newBatch.select(col(idCol))
@@ -631,7 +624,6 @@ object Similarity {
       vecCol: String = "embedding"): DataFrame = {
     require(nProbes >= 1, s"nProbes must be >= 1, got $nProbes")
     val spark = queries.sparkSession
-    VectorFunctions.register(spark)
     val (_, cents) = loadVerifiedIndex(spark, indexPath, cells, iters)
     val corpusAssign = spark.read.parquet(s"$indexPath/assignments")
     ivfProbe(queries, corpus, corpusAssign, cents, k, nProbes, idCol, vecCol)
@@ -694,7 +686,6 @@ object Similarity {
     require(driftTol > 0, s"driftTol must be positive, got $driftTol")
     val spark = newBatch.sparkSession
     import spark.implicits._
-    VectorFunctions.register(spark)
     val (meta, cents) = loadVerifiedIndex(spark, indexPath, cells, iters)
     val log = new graft.sources.SnapshotLog(s"$indexPath/assignments_log")
     val indexed = log.readLatest(spark)
@@ -748,7 +739,6 @@ object Similarity {
       vecCol: String = "embedding"): DataFrame = {
     require(nProbes >= 1, s"nProbes must be >= 1, got $nProbes")
     val spark = queries.sparkSession
-    VectorFunctions.register(spark)
     val (_, cents) = loadVerifiedIndex(spark, indexPath, cells, iters)
     val log = new graft.sources.SnapshotLog(s"$indexPath/assignments_log")
     val v = version.orElse(log.currentVersion).getOrElse(
@@ -785,7 +775,6 @@ object Similarity {
     require(k >= 1, s"kCenterGreedy: k must be >= 1, got $k")
     val spark = vectors.sparkSession
     import spark.implicits._
-    VectorFunctions.register(spark)
     val unit = unitized(vectors, idCol, vecCol)
       .select(col(idCol).cast("long").as("id"), col("v"))
     val seedId = unit.agg(min(col("id"))).head().getLong(0)
@@ -839,7 +828,6 @@ object Similarity {
       iters: Int,
       idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
-    VectorFunctions.register(vectors.sparkSession)
     // materialize the (id, cluster) assignment ONCE: it feeds BOTH join
     // sides, and without the checkpoint each side re-derives the final
     // E-step from the raw corpus (two extra full scans at scale — seen in
@@ -872,7 +860,6 @@ object Similarity {
       threshold: Double,
       idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
-    VectorFunctions.register(vectors.sparkSession)
     val a = withNorm(vectors, idCol, vecCol, "vec_a")
       .select(col("vec_a"), col("v").as("va"), col("nrm").as("na"))
     val b = withNorm(vectors, idCol, vecCol, "vec_b")
@@ -896,7 +883,6 @@ object Similarity {
       idCol: String = "vec_id",
       vecCol: String = "embedding",
       dim: Int = DefaultDim): DataFrame = {
-    VectorFunctions.register(vectors.sparkSession)
     val staged = vectors.withColumn("__v", asDouble(col(vecCol)))
     val bits = (0 until nPlanes).map { p =>
       when(dot(col("__v"), VectorFunctions.planeLit(p, dim)) >= 0, lit(1L << p)).otherwise(lit(0L))
@@ -927,7 +913,6 @@ object Similarity {
       probeHamming: Int = 0): DataFrame = {
     require(probeHamming == 0 || probeHamming == 1,
       s"probeHamming supports 0 (single-probe) or 1 (probe Hamming-1 buckets), got $probeHamming")
-    VectorFunctions.register(queries.sparkSession)
     val qbOwn = lshBuckets(queries, nPlanes, idCol, vecCol, dim)
       .select(col(idCol).as("query_id"), asDouble(col(vecCol)).as("qv"), col("bucket"))
       .withColumn("qn", sqrt(dot(col("qv"), col("qv"))))
@@ -967,7 +952,6 @@ object Similarity {
       idCol: String = "vec_id",
       vecCol: String = "embedding",
       dim: Int = DefaultDim): DataFrame = {
-    VectorFunctions.register(vectors.sparkSession)
     val staged = vectors.select(col(idCol), asDouble(col(vecCol)).as("__v"))
     val bucketExprs = (0 until bands).map { t =>
       (0 until planesPerBand).map { p =>
@@ -998,7 +982,6 @@ object Similarity {
       idCol: String = "vec_id",
       vecCol: String = "embedding",
       dim: Int = DefaultDim): DataFrame = {
-    VectorFunctions.register(vectors.sparkSession)
     val bk = bandBuckets(vectors, bands, planesPerBand, idCol, vecCol, dim)
     val cand = bk.as("l").join(bk.as("r"), Seq("band", "bucket"))
       .where(col(s"l.$idCol") < col(s"r.$idCol"))
@@ -1084,7 +1067,6 @@ object Similarity {
     require(iters > 0, s"iters must be positive, got $iters")
     require(k <= 4096, s"k=$k exceeds the plan-literal budget")
     val subDim = dim / m
-    VectorFunctions.register(vectors.sparkSession)
     val slices = array((0 until m).map(s =>
       slice(col(vecCol), s * subDim + 1, subDim)): _*)
     // the [[unitized]] pipeline applied per (vector, subspace) row — same
@@ -1191,7 +1173,6 @@ object Similarity {
       vecCol: String = "embedding"): DataFrame = {
     require(m > 0 && dim % m == 0, s"m ($m) must divide dim ($dim)")
     val subDim = dim / m
-    VectorFunctions.register(queries.sparkSession)
     // all m codebooks in one fused Lloyd loop ([[pqFit]] — m× fewer jobs,
     // one persist), codes and centroids unchanged per subspace
     val (codeFrame, centsBySub) = pqFit(corpus, m, cells, iters, dim, idCol, vecCol)
@@ -1258,7 +1239,6 @@ object Similarity {
     require(m > 0 && dim % m == 0, s"m ($m) must divide dim ($dim)")
     require(nProbes >= 1, s"nProbes must be >= 1, got $nProbes")
     val subDim = dim / m
-    VectorFunctions.register(queries.sparkSession)
     // coarse quantizer: one cell per corpus vector (its own iteration count,
     // so it stays a separate fit)
     val (coarseAssign, coarseCents) = kmeansFit(corpus, coarseCells, coarseIters, idCol, vecCol)
@@ -1332,7 +1312,6 @@ object Similarity {
       idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
     require(levels > 1, s"levels must be > 1, got $levels")
-    VectorFunctions.register(vectors.sparkSession)
     val vecs = vectors.select(col(idCol), asDouble(col(vecCol)).as("v"))
     val statsRow = vecs.agg(
       VectorFunctions.vecMin(col("v")).as("mn"),
@@ -1405,7 +1384,6 @@ object Similarity {
     // upstream quantize+join per query; the 1/N base term now reads `i`
     // on the last rank instead (i == N there by construction)
     require(!train.isEmpty, "knnShapley: empty training set")
-    VectorFunctions.register(train.sparkSession)
     val t = test.select(
       col(idCol).as("test_id"), col("codes").as("tc"),
       col(labelCol).cast("long").as("ty"))
@@ -1477,7 +1455,6 @@ object Similarity {
       vecCol: String = "embedding"): DataFrame = {
     require(k >= 1, s"knnShapleyIvf: k must be >= 1, got $k")
     require(nProbes >= 1, s"knnShapleyIvf: nProbes must be >= 1, got $nProbes")
-    VectorFunctions.register(train.sparkSession)
     val (assign, cents) = kmeansFit(train, cells, iters, idCol, vecCol)
     val probed =
       if (nProbes == 1)
@@ -1565,7 +1542,6 @@ object Similarity {
       idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
     require(outDim > 0 && inDim > 0, "dims must be positive")
-    VectorFunctions.register(embeddings.sparkSession)
     // One codegen'd pass per row ([[graft.functions.RpProject]]) instead of
     // outDim interpreted `aggregate(sequence(...))` chains (r16's kernel
     // lesson): identical left-to-right fold, identical signs, and the
@@ -1638,7 +1614,6 @@ object Similarity {
     require(lambdaTenths >= 0 && lambdaTenths <= 10,
       s"mmrSelect: lambdaTenths must be in [0, 10], got $lambdaTenths")
     val spark = vectors.sparkSession
-    VectorFunctions.register(spark)
     val codes = quantizeEmbeddings(vectors, levels)
       .select(col("vec_id"), asDouble(col("codes")).as("cv"))
     val qRow = codes.where(col("vec_id") === queryId).collect()

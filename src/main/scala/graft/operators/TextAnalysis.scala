@@ -172,7 +172,6 @@ object TextAnalysis {
       n: Int = 3,
       idCol: String = "doc_id",
       textCol: String = "text"): DataFrame = {
-    graft.functions.TextKernels.register(docs.sparkSession)
     docs.select(
       col(idCol),
       graft.functions.TextKernels.repetitionStatsCol(tokens(col(textCol)), n).as("r"))
@@ -351,7 +350,7 @@ object TextAnalysis {
   /** Fraction of tokens that are stopwords (quality signal). */
   val Stopwords: Seq[String] = Seq("the", "a", "an", "of", "and", "to", "in", "is")
 
-  /** Variant over a pre-computed token-array column — lets a query tokenize
+  /** Over a pre-computed token-array column — lets a query tokenize
     * ONCE and feed every downstream metric (r1 re-ran the regex+split chain
     * per metric; Catalyst's CollapseProject keeps a separately-projected
     * token column materialized because it is non-cheap and multiply-used).
@@ -360,7 +359,6 @@ object TextAnalysis {
     // codegen'd occurrence count — same integer as the interpreted
     // `size(filter(toks, isin(stopwords)))` it replaces
     TextKernels.countInCol(toks, Stopwords).cast("double") / size(toks)
-  def stopwordRatio(text: Column): Column = stopwordRatioOf(tokens(text))
 
   /** Mean token length over whitespace tokens. The numerator is the
     * codegen'd integer length sum — sums of integer-valued doubles are
@@ -369,7 +367,6 @@ object TextAnalysis {
     */
   def avgTokenLenOf(toks: Column): Column =
     TextKernels.tokenLenSumCol(toks).cast("double") / size(toks)
-  def avgTokenLen(text: Column): Column = avgTokenLenOf(tokens(text))
 
   /** Composite quality score in [0,1]: long-enough docs with moderate
     * stopword presence and little punctuation score high. Deterministic,
@@ -399,9 +396,6 @@ object TextAnalysis {
     // codegen'd occurrence count — same integer as the interpreted
     // `size(filter(toks, isin(markers)))` it replaces
     TextKernels.countInCol(toks, markers)
-
-  def langScore(text: Column, markers: Seq[String]): Column =
-    langScoreOf(tokens(text), markers)
 
   /** One (language, score) column per marker language — meant to be
     * projected as REAL columns in a staging select, with the argmax

@@ -889,7 +889,6 @@ class SnapshotLog(
     */
   def writeDeleteVectors(spark: SparkSession): (Long, Int) = {
     import org.apache.spark.sql.functions.col
-    graft.functions.BitmapFunctions.register(spark)
     val cur = currentVersion.getOrElse(
       throw new IllegalStateException(s"writeDeleteVectors: no committed snapshot at $root"))
     val pos = posDeleteFiles(cur)
@@ -964,7 +963,6 @@ class SnapshotLog(
           // and rides the plan as a literal — the mask is a codegen'd
           // per-row bitmap PROBE on the scan, not a join
           import org.apache.spark.sql.functions.typedlit
-          graft.functions.BitmapFunctions.register(spark)
           val dvMap: Map[String, Array[Byte]] = spark.read.parquet(
               dvSides.map(p => new File(dataRootPath, p).toString): _*)
             .select(col("_file"), col("dv"))
@@ -3165,7 +3163,6 @@ class SnapshotLog(
       expectedItemsPerFile: Long,
       fpp: Double): Unit = {
     if (staged.isEmpty || bloomCols0.isEmpty) return
-    graft.functions.BloomFunctions.register(spark)
     import org.apache.spark.sql.functions.{col, element_at, input_file_name, lit, split}
     val dir = new File(dataRootPath, staged.head).getParentFile
     val stageId = dir.getName

@@ -698,7 +698,6 @@ object StreamingSessionize {
       slices: Int = 3,
       watermarkDelaySec: Long = 600L,
       queryName: String = "stream_sketch_rollup_sink"): DataFrame = {
-    graft.functions.ThetaFunctions.register(events.sparkSession)
     dailySetAggReplay(events,
       graft.functions.ThetaFunctions.thetaSketch(col("user_id"), lgK),
       slices, watermarkDelaySec, queryName)
@@ -721,7 +720,6 @@ object StreamingSessionize {
       slices: Int = 3,
       watermarkDelaySec: Long = 600L,
       queryName: String = "stream_bitmap_ingest_sink"): DataFrame = {
-    graft.functions.BitmapFunctions.register(events.sparkSession)
     dailySetAggReplay(events,
       graft.functions.BitmapFunctions.bitmapAgg(col("user_id")),
       slices, watermarkDelaySec, queryName)
@@ -1007,7 +1005,6 @@ object StreamingSessionize {
     import org.apache.spark.sql.functions.{round => sqlRound}
     import graft.functions.TextKernels
     import graft.operators.TextAnalysis
-    TextKernels.register(stream.sparkSession)
     val k = graft.operators.Dedup.MinhashSeeds.size
     // The index carries its band geometry as column metadata
     // ([[graft.operators.Dedup.withBandKeys]]); a probe banded differently
@@ -1030,7 +1027,6 @@ object StreamingSessionize {
     val streamBanded = graft.operators.Dedup.withBandKeys(streamSigs, bands)
     // codegen'd slot-agreement count (identical to the interpreted
     // size(filter(zip_with(...))) chain it replaces)
-    graft.functions.VectorFunctions.register(stream.sparkSession)
     streamBanded.join(corpusBanded, Seq("band", "band_key"))
       .withColumn("n_match",
         graft.functions.VectorFunctions.eqSlotCount(col("sig"), col("corpus_sig")))
@@ -1061,7 +1057,6 @@ object StreamingSessionize {
       maxHamming: Int = 3,
       nBands: Int = 4,
       watermarkDelay: String = "10 minutes"): DataFrame = {
-    graft.functions.ImageKernels.register(stream.sparkSession)
     require(maxHamming < nBands,
       s"need maxHamming ($maxHamming) < nBands ($nBands) for the pigeonhole guarantee")
     if (corpusIndex.schema.fieldNames.contains("band")) {
@@ -1110,8 +1105,6 @@ object StreamingSessionize {
     require(evalFilter != null && evalFilter.nonEmpty,
       "decontaminateIngest: eval filter is empty — build it with Dedup.evalGramFilter")
     import graft.functions.{BloomFunctions, TextKernels}
-    TextKernels.register(docs.sparkSession)
-    BloomFunctions.register(docs.sparkSession)
     docs
       .select(
         col(idCol),
@@ -1156,7 +1149,6 @@ object StreamingSessionize {
     require(lambda != null && lambda.length > 1,
       "dsirScoreIngest: need a dense λ array — build it with Sampling.dsirLambdaArray")
     import graft.functions.TextKernels
-    TextKernels.register(docs.sparkSession)
     val buckets = lambda.length
     docs
       .select(
@@ -1200,7 +1192,6 @@ object StreamingSessionize {
       textCol: String = "text"): DataFrame = {
     require(queries.nonEmpty, "bm25ScoreIngest: empty query set")
     require(avgdl > 0, s"bm25ScoreIngest: avgdl must be positive, got $avgdl")
-    graft.functions.TextKernels.register(docs.sparkSession)
     val tk = graft.operators.TextAnalysis.tokens(col(textCol))
     val nonEmpty = filter(tk, x => length(x) > 0)
     // Each term frequency is computed ONCE as a codegen'd kernel column
@@ -1430,8 +1421,6 @@ object StreamingSessionize {
       dsirN: Int = 2): DataFrame = {
     import graft.functions.{BloomFunctions, TextKernels}
     import graft.operators.Dedup
-    TextKernels.register(batch.sparkSession)
-    BloomFunctions.register(batch.sparkSession)
     val k = Dedup.MinhashSeeds.size
     if (corpusIndex.schema.fieldNames.contains("band")) {
       val m = corpusIndex.schema("band").metadata
@@ -1440,7 +1429,6 @@ object StreamingSessionize {
           s"corpusIndex was banded with bands=${m.getLong("graft.bands")} but ingestAnnotate probes with bands=$bands")
     }
     val ids = batch.select(col("doc_id"))
-    graft.functions.VectorFunctions.register(batch.sparkSession)
     val dup = Dedup.withBandKeys(Dedup.minhashSignatures(batch), bands)
       .join(corpusIndex, Seq("band", "band_key"))
       .where(col("corpus_doc_id") =!= col("doc_id"))

@@ -68,8 +68,6 @@ class AudioKernelsSpec extends AnyFunSuite {
 
   test("fixture payloads decode through BOTH kernels and band-dedup into the group structure") {
     val docs = Tables.documents(spark, SfDir)
-    graft.functions.AudioKernels.register(spark)
-    graft.functions.MediaKernels.register(spark)
     val clips = Multimodal.withWavPayload(docs).cache()
     // the synthesized container is a REAL wav: the header sniffer agrees
     val sniffed = clips.select(

@@ -9,8 +9,6 @@ import graft.functions.BitmapFunctions._
 class BitmapFunctionsSpec extends AnyFunSuite {
   import SparkTestSession._
 
-  BitmapFunctions.register(spark)
-
   private def keyed(rows: (String, Long)*) = {
     import spark.implicits._
     rows.toDF("g", "k")

@@ -57,7 +57,6 @@ class BpeSpec extends AnyFunSuite {
   test("kernel route == staged fold == nested expression, including nasty words") {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
-    graft.functions.TextKernels.register(spark)
     val docs = Seq((1L, "low low low"), (2L, "low lower lower")).toDF("doc_id", "text")
     val merges = Bpe.trainMerges(docs, 4)
     // runs (greedy-left), learned words, prefixes/suffixes, unicode
@@ -81,7 +80,6 @@ class BpeSpec extends AnyFunSuite {
   test("decodeIds reconstructs the character stream from a shuffled id stream") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
-    graft.functions.TextKernels.register(spark)
     val docs = Seq(
       (1L, "lower lowest low"),
       (2L, "newer newest new"),

@@ -1,10 +1,17 @@
 package graft
 
+import scala.collection.mutable
+
+import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.functions.{GraftExtensions, MediaSynth}
 
 /** The SparkSessionExtensions deployment path: a session created with
   * `spark.sql.extensions=graft.functions.GraftExtensions` (SparkTestSession
-  * sets it) must expose every kernel to plain SQL with no library call.
+  * sets it) must expose every kernel to plain SQL with no library call —
+  * the extension is the only place a `graft_*` function is registered.
   */
 class ExtensionsSpec extends AnyFunSuite {
   import SparkTestSession._
@@ -245,5 +252,37 @@ class ExtensionsSpec extends AnyFunSuite {
         |  SELECT graft_bitmap_agg(v) AS bm FROM VALUES (1L, 1L), (1L, 2L), (2L, 2L), (2L, 9L) AS t(g, v)
         |  GROUP BY g)""".stripMargin).head().getLong(0)
     assert(u == 3L)
+  }
+
+  test("every injected graft_* kernel resolves on the shared session and on newSession()") {
+    val injected = mutable.ArrayBuffer.empty[String]
+    new GraftExtensions()(new SparkSessionExtensions {
+      override def injectFunction(f: FunctionDescription): Unit = injected += f._1.funcName
+    })
+    val names = injected.toSet
+    assert(injected.size == 51 && names.size == 51, injected.sorted.mkString(", "))
+    assert(names.forall(_.startsWith("graft_")))
+    val fresh = spark.newSession()
+    for (session <- Seq(spark, fresh); n <- names.toSeq.sorted)
+      assert(session.sessionState.functionRegistry.functionExists(FunctionIdentifier(n)), n)
+
+    // one SQL call to each kernel no other test reaches through SQL
+    val dv = fresh.sql("SELECT graft_bitmap_agg(id) FROM range(2, 5)")
+      .head().getAs[Array[Byte]](0).map(b => f"$b%02X").mkString
+    val r = fresh.sql(
+      s"""SELECT
+         |  graft_ppm_payload(5L) AS ppm,
+         |  graft_wav_payload(5L) AS wav,
+         |  graft_ppm_frame_payload(5L, 2L, 4L) AS frame,
+         |  size(graft_ppm_resize(graft_ppm_payload(5L))) AS grid,
+         |  size(graft_wav_envelope(graft_wav_payload(5L))) AS env,
+         |  graft_dv_contains(map('f', X'$dv'), 'f', 3L) AS hit,
+         |  graft_dv_contains(map('f', X'$dv'), 'f', 7L) AS miss
+         |""".stripMargin).head()
+    assert(r.getAs[Array[Byte]](0).sameElements(MediaSynth.ppmPayload(5L)))
+    assert(r.getAs[Array[Byte]](1).sameElements(MediaSynth.wavPayload(5L)))
+    assert(r.getAs[Array[Byte]](2).sameElements(MediaSynth.ppmFramePayload(5L, 2L, 4L)))
+    assert(r.getInt(3) == 72 && r.getInt(4) == 65) // pooled blocks, energy windows
+    assert(r.getBoolean(5) && !r.getBoolean(6))
   }
 }

@@ -14,7 +14,6 @@ class FreqFunctionsSpec extends AnyFunSuite {
     rows.groupBy(identity).view.mapValues(_.size.toLong).toMap
 
   test("MG laws hold on the corpus fixture: underestimate, deficit bound, coverage") {
-    FreqFunctions.register(spark)
     val k = 16
     val toks = Tables.documents(spark, SfDir)
       .select(explode(TextAnalysis.tokens(col("text"))).as("token"))
@@ -49,7 +48,6 @@ class FreqFunctionsSpec extends AnyFunSuite {
 
   test("single-partition stream replays the textbook MG state machine") {
     import spark.implicits._
-    FreqFunctions.register(spark)
     // k=2 over aabcbb: a,a -> {a:2}; b -> {a:2,b:1}; c -> decrement {a:1};
     // b -> {a:1,b:1}; b -> {a:1,b:2}
     val got = Seq("a", "a", "b", "c", "b", "b").toDF("t").coalesce(1)
@@ -62,7 +60,6 @@ class FreqFunctionsSpec extends AnyFunSuite {
 
   test("merge caps state at k and keeps the deficit law across partitionings") {
     import spark.implicits._
-    FreqFunctions.register(spark)
     val k = 4
     val rows = (1 to 2000).map { i =>
       if (i % 3 == 0) "hot" else if (i % 7 == 0) "warm" else s"cold$i"
@@ -88,7 +85,6 @@ class FreqFunctionsSpec extends AnyFunSuite {
 
   test("map side combines before the exchange; SQL surface via extensions; literal-k contract") {
     import spark.implicits._
-    FreqFunctions.register(spark)
     // half the stream is one hot item: 50% > n/(k+1), so the coverage law
     // guarantees a NONEMPTY summary (a fully uniform stream may legally
     // drain every counter to zero)

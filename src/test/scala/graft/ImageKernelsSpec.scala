@@ -69,7 +69,6 @@ class ImageKernelsSpec extends AnyFunSuite {
 
   test("band index is lossless at maxHamming 3: banded pairs == naive all-pairs (pigeonhole)") {
     val docs = Tables.documents(spark, SfDir)
-    graft.functions.ImageKernels.register(spark)
     val hashed = Multimodal.withPpmPayload(docs)
       .select(col("doc_id"), ImageKernels.ppmDhashCol(col("payload")).as("dhash"))
       .cache()
@@ -91,7 +90,6 @@ class ImageKernelsSpec extends AnyFunSuite {
   test("band admission: decisions replay the naive rule; null hashes are quarantined") {
     import spark.implicits._
     val docs = Tables.documents(spark, SfDir)
-    graft.functions.ImageKernels.register(spark)
     val hashed = Multimodal.withPpmPayload(docs)
       .select(col("doc_id"), ImageKernels.ppmDhashCol(col("payload")).as("dhash"))
       .cache()
@@ -123,7 +121,6 @@ class ImageKernelsSpec extends AnyFunSuite {
 
   test("expression guards: non-binary input is rejected at analysis") {
     import spark.implicits._
-    graft.functions.ImageKernels.register(spark)
     val e = intercept[Exception] {
       Seq(1L).toDF("x").select(ImageKernels.ppmDhashCol(col("x"))).collect()
     }

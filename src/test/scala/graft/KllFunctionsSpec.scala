@@ -3,13 +3,10 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.KllFunctions
 import graft.functions.KllFunctions._
 
 class KllFunctionsSpec extends AnyFunSuite {
   import SparkTestSession._
-
-  KllFunctions.register(spark)
 
   test("below k retained values the sketch is exact at every quantile") {
     // n=100 < k=200: KLL keeps every value, INCLUSIVE quantile is the

@@ -86,7 +86,6 @@ class MediaKernelsSpec extends AnyFunSuite {
   }
 
   test("fixture decode matches the id-derived parameters, end-to-end through codegen") {
-    MediaKernels.register(spark)
     val rows = Multimodal.withMediaPayload(Tables.documents(spark, SfDir))
       .select(col("doc_id"), MediaKernels.decodeHeaderCol(col("payload")).as("m"))
       .select(col("doc_id"), col("m.format"), col("m.width"), col("m.height"),

@@ -31,7 +31,6 @@ class MultimodalSpec extends AnyFunSuite {
   }
 
   test("resize fits the target box and preserves aspect ratio") {
-    graft.functions.MediaKernels.register(spark)
     val d = Multimodal.withMediaPayload(Tables.documents(spark, SfDir).limit(100))
       .select(
         col("doc_id"),
@@ -65,7 +64,6 @@ class MultimodalSpec extends AnyFunSuite {
 
   test("sceneCuts: cuts exactly at scene boundaries, shot index = running cut count") {
     import spark.implicits._
-    graft.functions.ImageKernels.register(spark)
     val vids = Seq(0L, 5L).toDF("doc_id")
     val frames = Multimodal.withVideoFrames(vids, framesPerVideo = 8, sceneLen = 4)
       .select(col("doc_id"), col("frame_no"),

@@ -10,7 +10,6 @@ class SimilaritySpec extends AnyFunSuite {
 
   test("dot product rejects mismatched vector lengths instead of truncating") {
     import spark.implicits._
-    graft.functions.VectorFunctions.register(spark)
     val df = Seq((Array(1.0, 2.0), Array(1.0, 2.0, 3.0))).toDF("a", "b")
     val ex = intercept[Exception] {
       df.select(graft.functions.VectorFunctions.dot(col("a"), col("b"))).collect()
@@ -178,7 +177,6 @@ class SimilaritySpec extends AnyFunSuite {
 
   test("vec_sum: element-wise sum, nulls skipped, all-null group null, ragged throws") {
     import spark.implicits._
-    graft.functions.VectorFunctions.register(spark)
     val df = Seq(
       (0, Option(Array(1.0, 2.0))),
       (0, Option(Array(3.0, 4.5))),

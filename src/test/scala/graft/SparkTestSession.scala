@@ -7,16 +7,8 @@ import org.apache.spark.sql.SparkSession
   */
 object SparkTestSession {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
+    val s = GraftSession.builder(4, "graft-test")
       .config("spark.sql.warehouse.dir", "/root/repo/target/test-warehouse")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

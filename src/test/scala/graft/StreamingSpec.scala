@@ -415,7 +415,6 @@ class StreamingSpec extends AnyFunSuite {
 
   test("sketch rollup replay: one exact-mode daily sketch row per day, drained state, no drops") {
     import graft.functions.ThetaFunctions
-    ThetaFunctions.register(spark)
     val ev = Tables.events(spark, SfDir)
     val daily = StreamingSessionize.sketchRollupReplay(ev, queryName = "sketch_spec_sink")
       .collect().map(r => r.getDate(0).toString -> r.getAs[Array[Byte]](1)).toMap
@@ -439,7 +438,6 @@ class StreamingSpec extends AnyFunSuite {
 
   test("bitmap rollup replay: streamed daily bitmap bytes equal batch bit-for-bit at any cardinality") {
     import graft.functions.BitmapFunctions
-    BitmapFunctions.register(spark)
     val ev = Tables.events(spark, SfDir)
     val daily = StreamingSessionize.bitmapRollupReplay(ev, queryName = "bitmap_spec_sink")
       .collect().map(r => r.getDate(0).toString -> r.getAs[Array[Byte]](1)).toMap

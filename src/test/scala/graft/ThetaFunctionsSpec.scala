@@ -3,13 +3,10 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.ThetaFunctions
 import graft.functions.ThetaFunctions._
 
 class ThetaFunctionsSpec extends AnyFunSuite {
   import SparkTestSession._
-
-  ThetaFunctions.register(spark)
 
   private def keyed(rows: (String, Long)*) = {
     import spark.implicits._

@@ -10,7 +10,6 @@ class TopKSpec extends AnyFunSuite {
   import SparkTestSession._
 
   test("graft_topk == window row_number route on the corpus fixture") {
-    TopKFunctions.register(spark)
     val tf = Tables.documents(spark, SfDir)
       .select(col("source"), explode(TextAnalysis.tokens(col("text"))).as("token"))
       .groupBy(col("source"), col("token"))
@@ -35,7 +34,6 @@ class TopKSpec extends AnyFunSuite {
 
   test("ties break item-ascending; k wider than the group returns all, best-first") {
     import spark.implicits._
-    TopKFunctions.register(spark)
     val df = Seq(
       ("g", "beta", 5L), ("g", "alpha", 5L), ("g", "zed", 7L), ("g", "mid", 1L))
       .toDF("g", "item", "n")
@@ -48,7 +46,6 @@ class TopKSpec extends AnyFunSuite {
   }
 
   test("map side combines before the exchange: partial graft_topk, no sort on candidates") {
-    TopKFunctions.register(spark)
     import spark.implicits._
     val df = (1 to 200).map(i => (s"g${i % 3}", s"item$i", i.toLong)).toDF("g", "item", "n")
     val plan = df.groupBy(col("g"))
