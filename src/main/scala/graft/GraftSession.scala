@@ -32,6 +32,17 @@ object GraftSession {
       .config("spark.sql.warehouse.dir", "/root/repo/target/warehouse")
       .config("spark.ui.enabled", "false")
 
+  /** Per-SF scratch directory for queries that persist real artifacts
+    * (a stored index, a streamed sketch table, a snapshot log):
+    * `target/<area>_scratch/<sf>/<name>`, where `sf` is the last segment
+    * of the data dir. The root stays an absolute `s"…/target/…"` literal:
+    * `perfbench/build.sbt` rewrites that form to its per-run root.
+    */
+  def scratch(area: String, dir: String, name: String): String = {
+    val sf = dir.replaceAll(".*/", "")
+    s"/root/repo/target/${area}_scratch/$sf/$name"
+  }
+
   def local(cores: Int = 32, appName: String = "graft"): SparkSession = {
     val spark = builder(cores, appName).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

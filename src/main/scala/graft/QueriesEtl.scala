@@ -37,10 +37,8 @@ object QueriesEtl {
   @volatile private[graft] var lastDppPlan: String = ""
   @volatile private[graft] var lastAggPushdownPlan: String = ""
 
-  private def scratch(dir: String, name: String): String = {
-    val sf = dir.replaceAll(".*/", "")
-    s"/root/repo/target/etl_scratch/$sf/$name"
-  }
+  private def scratch(dir: String, name: String): String =
+    GraftSession.scratch("etl", dir, name)
 
   /** Files the first file scan of an executed plan reads. */
   private def scanFiles(p: SparkPlan): Option[Int] =

@@ -210,13 +210,9 @@ object QueriesLlm {
          |       CAST(count(*) AS BIGINT) AS n_tests$extra
          |FROM sv GROUP BY 1, 2 ORDER BY vec_id""".stripMargin
 
-  /** Per-SF scratch root for queries that persist real artifacts (the
-    * QueriesEtl discipline — e.g. the stored IVF index).
-    */
-  private def scratch(dir: String, name: String): String = {
-    val sf = dir.replaceAll(".*/", "")
-    s"/root/repo/target/llm_scratch/$sf/$name"
-  }
+  /** [[GraftSession.scratch]] for this file's queries (e.g. the stored IVF index). */
+  private def scratch(dir: String, name: String): String =
+    GraftSession.scratch("llm", dir, name)
 
   /** The shipped tokenizer's id stream and vocabulary, shared by
     * `bpe_encode_ids` (emits the stream) and `bpe_decode` (reconstructs
@@ -2167,8 +2163,7 @@ object QueriesLlm {
       // start() must still unpersist the index (the leak the caller-managed
       // lifecycle exists to prevent)
       val idx = StreamingSessionize.corpusBandIndex(docs, bands = MhBands)
-      val sink = "stream_neardup_ingest_sink"
-      try {
+      val sink = try {
         idx.persist()
         val stream = s.readStream
           .schema(docs.schema)
@@ -2181,13 +2176,9 @@ object QueriesLlm {
             to_timestamp(lit("2024-01-01 00:00:00")).as("ts"))
         val out = StreamingSessionize.nearDupIngest(
           stream, idx, minEstJaccard = 0.5, bands = MhBands)
-        StreamingSessionize.withReplayStatePartitions(s) {
-          val q = out.writeStream.format("memory").queryName(sink).outputMode("append").start()
-          try q.processAllAvailable()
-          finally q.stop()
-        }
+        StreamingSessionize.drainToMemory(out, "stream_neardup_ingest_sink")
       } finally idx.unpersist()
-      s.table(sink)
+      sink
         .select(col("doc_id"), col("corpus_doc_id"), col("est_jaccard"))
         .orderBy(col("doc_id"), col("corpus_doc_id"))
     }),
@@ -2209,8 +2200,7 @@ object QueriesLlm {
           .select(col("doc_id"),
             graft.functions.ImageKernels.ppmDhashCol(col("payload")).as("dhash")),
         nBands = 4)
-      val sink = "stream_phash_ingest_sink"
-      try {
+      val sink = try {
         idx.persist()
         val stream = s.readStream
           .schema(docs.schema)
@@ -2220,13 +2210,9 @@ object QueriesLlm {
           .select(col("doc_id"), col("payload"),
             to_timestamp(lit("2024-01-01 00:00:00")).as("ts"))
         val out = StreamingSessionize.phashIngest(stream, idx, maxHamming = 3, nBands = 4)
-        StreamingSessionize.withReplayStatePartitions(s) {
-          val q = out.writeStream.format("memory").queryName(sink).outputMode("append").start()
-          try q.processAllAvailable()
-          finally q.stop()
-        }
+        StreamingSessionize.drainToMemory(out, "stream_phash_ingest_sink")
       } finally idx.unpersist()
-      s.table(sink)
+      sink
         .select(col("doc_id"), col("corpus_doc_id"), col("hamming"))
         .orderBy(col("doc_id"), col("corpus_doc_id"))
     }),
@@ -2240,7 +2226,6 @@ object QueriesLlm {
     // streaming execution hash-comparable to a batch DISTINCT ──
     "stream_dedup_ingest" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
-      val sink = "stream_dedup_ingest_sink"
       def src = s.readStream
         .schema(docs.schema)
         .option("pathGlobFilter", "documents.parquet")
@@ -2249,12 +2234,8 @@ object QueriesLlm {
           col("doc_id"), col("text"),
           to_timestamp(lit("2024-01-01 00:00:00")).as("ts"))
       val out = StreamingSessionize.exactDedup(src.unionByName(src))
-      StreamingSessionize.withReplayStatePartitions(s) {
-        val q = out.writeStream.format("memory").queryName(sink).outputMode("append").start()
-        try q.processAllAvailable()
-        finally q.stop()
-      }
-      s.table(sink).select(col("fingerprint")).orderBy(col("fingerprint"))
+      StreamingSessionize.drainToMemory(out, "stream_dedup_ingest_sink")
+        .select(col("fingerprint")).orderBy(col("fingerprint"))
     }),
 
     // ── frequency sketching AT INGESTION: [[CountMin.sketch]] run
@@ -2267,22 +2248,17 @@ object QueriesLlm {
     // boolean AND the estimates) ──
     "stream_cms_ingest" -> ((s, dir) => {
       val docs = Tables.documents(s, dir)
-      val sink = "stream_cms_ingest_sink"
       val src = s.readStream
         .schema(docs.schema)
         .option("pathGlobFilter", "documents.parquet")
         .parquet(dir)
         .select(explode(TextAnalysis.tokens(col("text"))).as("token"))
-      StreamingSessionize.withReplayStatePartitions(s) {
-        val q = CountMin.sketch(src, "token")
-          .writeStream.format("memory").queryName(sink).outputMode("complete").start()
-        try q.processAllAvailable()
-        finally q.stop()
-      }
+      val streamed = StreamingSessionize.drainToMemory(
+        CountMin.sketch(src, "token"), "stream_cms_ingest_sink", "complete")
       val toks = docs.select(explode(TextAnalysis.tokens(col("text"))).as("token"))
       val exact = toks.groupBy(col("token")).agg(count(lit(1)).as("n_exact"))
         .orderBy(col("n_exact").desc, col("token")).limit(20)
-      val estStream = CountMin.estimate(s.table(sink), exact.select(col("token")), "token")
+      val estStream = CountMin.estimate(streamed, exact.select(col("token")), "token")
         .withColumnRenamed("est", "n_est_stream")
       val estBatch = CountMin.estimate(CountMin.sketch(toks, "token"), exact.select(col("token")), "token")
         .withColumnRenamed("est", "n_est_batch")
@@ -2303,7 +2279,6 @@ object QueriesLlm {
       val docs = Tables.documents(s, dir)
       val eval = docs.where(col("doc_id") % 50 === 0)
       val bytes = Dedup.evalGramFilter(eval, n = GramN, fpp = BloomFpp)
-      val sink = "stream_decontaminate_sink"
       def src = s.readStream
         .schema(docs.schema)
         .option("pathGlobFilter", "documents.parquet")
@@ -2311,16 +2286,12 @@ object QueriesLlm {
         .where(col("doc_id") % 50 =!= 0)
       val out =
         StreamingSessionize.decontaminateIngest(src, bytes, minShared = DeconMinShared, n = GramN)
-      StreamingSessionize.withReplayStatePartitions(s) {
-        val q = out.writeStream.format("memory").queryName(sink).outputMode("append").start()
-        try q.processAllAvailable()
-        finally q.stop()
-      }
+      val sink = StreamingSessionize.drainToMemory(out, "stream_decontaminate_sink")
       val exact = Dedup.contaminationReport(
         docs.where(col("doc_id") % 50 =!= 0), eval, minShared = DeconMinShared, n = GramN)
       exact
         .join(
-          s.table(sink).select(col("doc_id"), lit(true).as("stream_caught")),
+          sink.select(col("doc_id"), lit(true).as("stream_caught")),
           Seq("doc_id"), "left")
         .select(
           col("doc_id"),
@@ -2360,18 +2331,12 @@ object QueriesLlm {
       val docs = Tables.documents(s, dir)
       val lam =
         Sampling.dsirLambdaArray(docs, dsirTarget(docs), n = DsirN, buckets = DsirBuckets)
-      val sink = "stream_dsir_score_sink"
       def src = s.readStream
         .schema(docs.schema)
         .option("pathGlobFilter", "documents.parquet")
         .parquet(dir)
       val out = StreamingSessionize.dsirScoreIngest(src, lam, n = DsirN)
-      StreamingSessionize.withReplayStatePartitions(s) {
-        val q = out.writeStream.format("memory").queryName(sink).outputMode("append").start()
-        try q.processAllAvailable()
-        finally q.stop()
-      }
-      s.table(sink)
+      StreamingSessionize.drainToMemory(out, "stream_dsir_score_sink")
         .select(col("doc_id"), col("log_weight"), col("selected"))
         .orderBy(col("doc_id"))
     }),
@@ -2389,18 +2354,12 @@ object QueriesLlm {
         qid -> text.split("\\s+").filter(_.nonEmpty).distinct.toSeq
       }
       val (idfMap, avgdl) = Retrieval.frozenLexicon(docs, qterms.flatMap(_._2))
-      val sink = "stream_bm25_score_sink"
       val src = s.readStream
         .schema(docs.schema)
         .option("pathGlobFilter", "documents.parquet")
         .parquet(dir)
       val out = StreamingSessionize.bm25ScoreIngest(src, qterms, idfMap, avgdl)
-      StreamingSessionize.withReplayStatePartitions(s) {
-        val q = out.writeStream.format("memory").queryName(sink).outputMode("append").start()
-        try q.processAllAvailable()
-        finally q.stop()
-      }
-      s.table(sink)
+      StreamingSessionize.drainToMemory(out, "stream_bm25_score_sink")
         .select(col("doc_id"), col("query_id"), col("score"))
         .orderBy(col("query_id"), col("doc_id"))
     }),
@@ -2416,8 +2375,6 @@ object QueriesLlm {
     // one-sided decon_ok law; cms_ok pins accumulated-stream cells ==
     // batch sketch cell-for-cell ──
     "ingest_batch" -> ((s, dir) => {
-      import java.nio.file.{Files, StandardCopyOption}
-      import java.nio.file.attribute.FileTime
       val docs = Tables.documents(s, dir)
       val eval = docs.where(col("doc_id") % 50 === 0)
       val streamed = docs.where(col("doc_id") % 50 =!= 0).select(col("doc_id"), col("text"))
@@ -2428,35 +2385,21 @@ object QueriesLlm {
       }
       val (idfMap, avgdl) = Retrieval.frozenLexicon(docs, qterms.flatMap(_._2))
       val idx = StreamingSessionize.corpusBandIndex(docs, bands = MhBands)
-      val base = Files.createTempDirectory("graft_ingest_batch_")
+      val base = java.nio.file.Files.createTempDirectory("graft_ingest_batch_")
       val streamDir = base.resolve("stream")
-      Files.createDirectories(streamDir)
+      java.nio.file.Files.createDirectories(streamDir)
       val accumDir = base.resolve("out").toString
       val cmsAcc = scala.collection.mutable.Map.empty[(Long, Long), Long].withDefaultValue(0L)
       try {
         // three deterministic shards, one file each → three real triggers
-        (0 until 3).foreach { i =>
-          val stage = base.resolve(s"stage_$i")
-          streamed.where(pmod(col("doc_id"), lit(3)) === i)
-            .coalesce(1).write.parquet(stage.toString)
-          val part = Files.list(stage).iterator()
-          var found: java.nio.file.Path = null
-          while (part.hasNext) {
-            val p = part.next()
-            if (p.getFileName.toString.endsWith(".parquet")) found = p
-          }
-          require(found != null, s"no parquet part written for shard $i")
-          val dest = streamDir.resolve(f"part_$i%03d.parquet")
-          Files.move(found, dest, StandardCopyOption.ATOMIC_MOVE)
-          Files.setLastModifiedTime(dest, FileTime.fromMillis(1700000000000L + i * 1000L))
-          ()
-        }
+        StreamingSessionize.stageSliceFiles(base, streamDir,
+          (0 until 3).map(i => streamed.where(pmod(col("doc_id"), lit(3)) === i)))
         idx.persist()
         // micro-batch-sized frames through every leg — run the replay (and
         // the per-batch jobs foreachBatch launches) at replay-scale shuffle
         // partitions; the session conf is restored after the drain
-        try StreamingSessionize.withReplayStatePartitions(s) {
-          val q = s.readStream
+        try StreamingSessionize.drain(s) {
+          s.readStream
             .schema(streamed.schema)
             .option("maxFilesPerTrigger", "1")
             .parquet(streamDir.toString)
@@ -2479,8 +2422,6 @@ object QueriesLlm {
               } finally { b.unpersist(); () }
             }
             .start()
-          try q.processAllAvailable()
-          finally q.stop()
         } finally idx.unpersist()
         val batchCells = CountMin
           .sketch(streamed.select(explode(TextAnalysis.tokens(col("text"))).as("token")), "token")
@@ -2506,19 +2447,11 @@ object QueriesLlm {
             lit(cmsOk).as("cms_ok"))
           .orderBy(col("doc_id"))
       } finally {
-        // the returned plan reads accumDir lazily — it is materialized by
-        // Verify's write before this temp tree could matter, but only the
-        // STAGING files are safe to drop here; accumDir must survive the
-        // return. Verify/Bench temp roots are process-temp, cleaned by the
-        // harness environment.
-        import scala.util.Try
-        (0 until 3).foreach { i =>
-          Try(Files.walk(base.resolve(s"stage_$i")).iterator()).foreach { it =>
-            val ps = new scala.collection.mutable.ArrayBuffer[java.nio.file.Path]
-            while (it.hasNext) { ps += it.next(); () }
-            ps.reverse.foreach(p => Try(Files.delete(p)))
-          }
-        }
+        // the returned plan reads accumDir lazily, so `out/` must survive
+        // the return; the staged and streamed copies of the documents are
+        // dead once the drain ends
+        (0 until 3).foreach(i => StreamingSessionize.deleteTree(base.resolve(s"stage_$i")))
+        StreamingSessionize.deleteTree(streamDir)
       }
     }),
 

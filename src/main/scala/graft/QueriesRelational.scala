@@ -27,14 +27,11 @@ object QueriesRelational {
   private def d(c: Column): Column = c.cast("double")
   private def ts(s: String): Column = to_timestamp(lit(s))
 
-  /** Per-SF scratch root for queries that persist real artifacts (the
-    * QueriesEtl/QueriesLlm discipline — e.g. the streamed daily sketch
-    * table `stream_sketch_rollup` rolls up).
+  /** [[GraftSession.scratch]] for this file's queries (e.g. the streamed
+    * daily sketch table `stream_sketch_rollup` rolls up).
     */
-  private def scratch(dir: String, name: String): String = {
-    val sf = dir.replaceAll(".*/", "")
-    s"/root/repo/target/relational_scratch/$sf/$name"
-  }
+  private def scratch(dir: String, name: String): String =
+    GraftSession.scratch("relational", dir, name)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // ── A1 analog: grouped aggregate with exact sums (TPC-H Q1 shape) ──
@@ -735,20 +732,15 @@ object QueriesRelational {
       import graft.functions.KllFunctions
       val kllK = 200
       val eps = 0.03
-      val sink = "stream_kll_ingest_sink"
       val li = Tables.lineitem(s, dir)
       val src = s.readStream.schema(li.schema)
         .option("pathGlobFilter", "lineitem.parquet").parquet(dir)
         .select(col("l_returnflag").as("flag"), col("l_extendedprice").cast("double").as("v"))
-      graft.streaming.StreamingSessionize.withReplayStatePartitions(s) {
-        val q = src.groupBy(col("flag"))
-          .agg(KllFunctions.kllSketch(col("v"), kllK).as("sk"))
-          .writeStream.format("memory").queryName(sink).outputMode("complete").start()
-        try q.processAllAvailable()
-        finally q.stop()
-      }
+      val sink = graft.streaming.StreamingSessionize.drainToMemory(
+        src.groupBy(col("flag")).agg(KllFunctions.kllSketch(col("v"), kllK).as("sk")),
+        "stream_kll_ingest_sink", "complete")
       val qsArr = array(lit(0.5), lit(0.9), lit(0.99))
-      val est = s.table(sink)
+      val est = sink
         .select(col("flag"), col("sk"), posexplode(qsArr).as(Seq("qi", "q")))
         .select(col("flag"), col("q"), KllFunctions.kllQuantile(col("sk"), col("q")).as("av"))
       val vals = li.select(col("l_returnflag").as("flag"), col("l_extendedprice").cast("double").as("v"))

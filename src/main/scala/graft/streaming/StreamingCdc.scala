@@ -1,7 +1,6 @@
 package graft.streaming
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import java.nio.file.attribute.FileTime
+import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
@@ -42,21 +41,6 @@ import graft.operators.Cdc
   */
 object StreamingCdc {
 
-  /** Stage `df` as a single parquet file inside `streamDir` with a
-    * deterministic mtime, so the file stream source triggers one batch per
-    * slice in staged order (the [[StreamingSessionize]] replay discipline).
-    */
-  private def stageSlice(df: DataFrame, base: Path, streamDir: Path, i: Int): Unit = {
-    val stage = base.resolve(s"stage_$i")
-    df.coalesce(1).write.mode("overwrite").parquet(stage.toString)
-    val part = Files.list(stage).iterator().asScala
-      .find(_.getFileName.toString.endsWith(".parquet"))
-      .getOrElse(sys.error(s"no parquet part written for slice $i"))
-    val dest = streamDir.resolve(f"part_$i%03d.parquet")
-    Files.move(part, dest, StandardCopyOption.ATOMIC_MOVE)
-    Files.setLastModifiedTime(dest, FileTime.fromMillis(1700000000000L + i * 1000L))
-  }
-
   /** Generic foreachBatch replay runner: wipe `root`, stage `input` into
     * `slices` single-file parquet slices by the integer `slice` column
     * expression (values must lie in `[0, slices)`), then drive a REAL
@@ -81,9 +65,9 @@ object StreamingCdc {
     }
     val streamDir = rootPath.resolve("stream")
     Files.createDirectories(streamDir)
-    (0 until slices).foreach { i =>
-      stageSlice(input.where(slice === i.toLong), rootPath, streamDir, i)
-    }
+    // one single-file slice per trigger, mtimes pinned in staged order
+    StreamingSessionize.stageSliceFiles(
+      rootPath, streamDir, (0 until slices).map(i => input.where(slice === i.toLong)))
     val src = spark.readStream
       .schema(input.schema)
       .option("maxFilesPerTrigger", "1")
@@ -222,15 +206,15 @@ object StreamingCdc {
     val files = versions.flatMap(log.appendedFiles)
     require(files.nonEmpty, s"logStreamReplay: no appended files in $versions")
     val spark = org.apache.spark.sql.SparkSession.active
-    val base = Files.createTempDirectory("graft_log_stream_")
-    val streamDir = base.resolve("stream")
-    Files.createDirectories(streamDir)
-    try {
+    // the memory sink owns the rows once drained; the temp root holds only
+    // hard links (the log's own files are other links to the same inodes)
+    StreamingSessionize.withTempRoot("graft_log_stream_") { base =>
+      val streamDir = base.resolve("stream")
+      Files.createDirectories(streamDir)
       files.zipWithIndex.foreach { case (src, i) =>
         val dest = streamDir.resolve(f"part_$i%05d.parquet")
         Files.createLink(dest, Paths.get(src))
-        Files.setLastModifiedTime(dest, FileTime.fromMillis(1700000000000L + i * 1000L))
-        ()
+        StreamingSessionize.pinSliceMtime(dest, i)
       }
       val schema = spark.read.parquet(files.head).schema
       val src = spark.readStream
@@ -248,13 +232,6 @@ object StreamingCdc {
           q.recentProgress.count(_.numInputRows > 0L).toLong
         } finally q.stop()
       (spark.table(queryName), triggers)
-    } finally {
-      import scala.util.Try
-      // the memory sink owns the rows; drop only the hard links (the
-      // log's own files are other links to the same inodes, untouched)
-      Try(Files.walk(base).iterator().asScala.toSeq.reverse
-        .foreach(p => Try(Files.delete(p))))
-      ()
     }
   }
 
@@ -282,9 +259,8 @@ object StreamingCdc {
       partitions: Int,
       aggregate: DataFrame => DataFrame): DataFrame = {
     val spark = org.apache.spark.sql.SparkSession.active
-    val base = Files.createTempDirectory("graft_native_src_")
-    val (sinkDir, ckptDir) = (base.resolve("out"), base.resolve("ckpt"))
-    try {
+    StreamingSessionize.withTempRoot("graft_native_src_") { base =>
+      val (sinkDir, ckptDir) = (base.resolve("out"), base.resolve("ckpt"))
       val schema = log.readLatest(spark).schema
       def runOnce(): Unit = {
         val q = spark.readStream
@@ -311,11 +287,6 @@ object StreamingCdc {
       spark.createDataFrame(rows, agged.schema)
         .withColumn("interrupted_midstream", lit(afterPhase1 < total))
         .withColumn("no_duplicate_emissions", lit(noDupes))
-    } finally {
-      import scala.util.Try
-      Try(Files.walk(base).iterator().asScala.toSeq.reverse
-        .foreach(p => Try(Files.delete(p))))
-      ()
     }
   }
 
@@ -331,9 +302,8 @@ object StreamingCdc {
       log: graft.sources.SnapshotLog,
       maxVersionsPerTrigger: Int): (DataFrame, Boolean, Long) = {
     val spark = org.apache.spark.sql.SparkSession.active
-    val base = Files.createTempDirectory("graft_avnow_")
-    val (sinkDir, ckptDir) = (base.resolve("out"), base.resolve("ckpt"))
-    try {
+    StreamingSessionize.withTempRoot("graft_avnow_") { base =>
+      val (sinkDir, ckptDir) = (base.resolve("out"), base.resolve("ckpt"))
       val schema = log.readLatest(spark).schema
       val q = spark.readStream
         .format("graft-log").option("root", log.root)
@@ -351,11 +321,6 @@ object StreamingCdc {
       val rows = new java.util.ArrayList[org.apache.spark.sql.Row](
         out.collectAsList())
       (spark.createDataFrame(rows, schema), finished, batches)
-    } finally {
-      import scala.util.Try
-      Try(Files.walk(base).iterator().asScala.toSeq.reverse
-        .foreach(p => Try(Files.delete(p))))
-      ()
     }
   }
 

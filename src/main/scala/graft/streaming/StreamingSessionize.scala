@@ -1,11 +1,15 @@
 package graft.streaming
 
-import scala.jdk.CollectionConverters._
+import java.nio.file.{Files, Path, StandardCopyOption}
+import java.nio.file.attribute.FileTime
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import scala.jdk.CollectionConverters._
+import scala.util.Try
+
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
 /** Structured-Streaming analogs of the batch session pipeline (SURVEY §2.9 /
   * §7 stretch: the reference is batch-only; its manual cross-batch
@@ -80,40 +84,115 @@ object StreamingSessionize {
     * `spark.newSession()` (separate conf, shared catalog/state store) —
     * don't lift this helper into a parallel context as-is.
     */
-  private[graft] def withReplayStatePartitions[T](
-      spark: org.apache.spark.sql.SparkSession, n: Int = 8)(body: => T): T = {
+  private def withReplayStatePartitions[T](spark: SparkSession)(body: => T): T = {
     val key = "spark.sql.shuffle.partitions"
     val prev = spark.conf.get(key)
-    spark.conf.set(key, n.toString)
+    spark.conf.set(key, "8")
     try body finally spark.conf.set(key, prev)
   }
 
-  /** Shared replay staging: write each slice frame as ONE parquet file
-    * `part_<i>` under `streamDir` with a PINNED ascending modification
-    * time. The file source orders new files by (modified time, path);
-    * unpinned near-identical stamps can let later files (the sentinels)
-    * overtake a data slice and late-drop it — StreamingRecoverySpec
-    * documents the failure mode. Every replay harness stages through this
-    * one helper so the mtime discipline lives in one place.
+  // ── the replay harness: every replay stages, drains and cleans up
+  // through the helpers below ──
+
+  /** Run `body` on a fresh temp root `<prefix><random>` that is deleted
+    * (best effort) however `body` ends.
     */
-  private def stageSliceFiles(
-      base: java.nio.file.Path,
-      streamDir: java.nio.file.Path,
-      sliceDfs: Seq[DataFrame]): Unit = {
-    import java.nio.file.{Files, StandardCopyOption}
-    import java.nio.file.attribute.FileTime
-    sliceDfs.zipWithIndex.foreach { case (df, i) =>
-      val stage = base.resolve(s"stage_$i")
-      df.coalesce(1).write.parquet(stage.toString)
-      val part = Files.list(stage).iterator().asScala
-        .find(_.getFileName.toString.endsWith(".parquet"))
-        .getOrElse(sys.error(s"no parquet part written for slice $i"))
-      val dest = streamDir.resolve(f"part_$i%03d.parquet")
-      Files.move(part, dest, StandardCopyOption.ATOMIC_MOVE)
-      Files.setLastModifiedTime(dest, FileTime.fromMillis(1700000000000L + i * 1000L))
-      ()
-    }
+  private[graft] def withTempRoot[T](prefix: String)(body: Path => T): T = {
+    val base = Files.createTempDirectory(prefix)
+    try body(base) finally deleteTree(base)
   }
+
+  /** Best-effort recursive delete, children before parents. */
+  private[graft] def deleteTree(root: Path): Unit = {
+    Try(Files.walk(root).iterator().asScala.toSeq.reverse.foreach(p => Try(Files.delete(p))))
+    ()
+  }
+
+  /** Pin the modification time of the `i`-th published replay file. The
+    * file source orders new files by (modified time, path); unpinned
+    * near-identical stamps can let later files (the sentinels) overtake a
+    * data slice and late-drop it — StreamingRecoverySpec documents the
+    * failure mode.
+    */
+  private[graft] def pinSliceMtime(file: Path, i: Int): Unit = {
+    Files.setLastModifiedTime(file, FileTime.fromMillis(1700000000000L + i * 1000L))
+    ()
+  }
+
+  /** Write `df` as ONE parquet file under `stage` and return that file. */
+  private def stageSlice(df: DataFrame, stage: Path): Path = {
+    df.coalesce(1).write.mode("overwrite").parquet(stage.toString)
+    Files.list(stage).iterator().asScala
+      .find(_.getFileName.toString.endsWith(".parquet"))
+      .getOrElse(sys.error(s"no parquet part written under $stage"))
+  }
+
+  /** Move a staged slice file into `streamDir` as `part_<i>`, mtime pinned. */
+  private def publishSlice(staged: Path, streamDir: Path, i: Int): Unit = {
+    val dest = streamDir.resolve(f"part_$i%03d.parquet")
+    Files.move(staged, dest, StandardCopyOption.ATOMIC_MOVE)
+    pinSliceMtime(dest, i)
+  }
+
+  /** Shared replay staging: write each slice frame as ONE parquet file
+    * `part_<i>` under `streamDir` (staged through `base/stage_<i>`) with a
+    * PINNED ascending modification time ([[pinSliceMtime]]). Every replay
+    * harness stages through this one helper (the kill-restart replays
+    * through its two halves, [[stageSlice]] and [[publishSlice]]) so the
+    * mtime discipline lives in one place.
+    */
+  private[graft] def stageSliceFiles(base: Path, streamDir: Path, sliceDfs: Seq[DataFrame]): Unit =
+    sliceDfs.zipWithIndex.foreach { case (df, i) =>
+      publishSlice(stageSlice(df, base.resolve(s"stage_$i")), streamDir, i)
+    }
+
+  /** Event-time bounds `(lo, hi)` of `proj.ts` in epoch seconds; an empty
+    * input fails the replay named `who`.
+    */
+  private def epochBounds(proj: DataFrame, who: String): (Long, Long) = {
+    val bounds = proj.agg(
+      min(unix_timestamp(col("ts"))), max(unix_timestamp(col("ts")))).head()
+    require(!bounds.isNullAt(0), s"$who: empty events input")
+    (bounds.getLong(0), bounds.getLong(1))
+  }
+
+  /** The replay's time cut: `slices` equal epoch ranges of `proj`'s
+    * bounds, one frame each, followed by the replay's own sentinel frames
+    * `sentinels(hi)`. Returns `hi` with the frames.
+    */
+  private def timeSlices(proj: DataFrame, slices: Int, who: String)(
+      sentinels: Long => Seq[DataFrame]): (Long, Seq[DataFrame]) = {
+    val (lo, hi) = epochBounds(proj, who)
+    val span = hi - lo + 1
+    val e = unix_timestamp(col("ts"))
+    val cuts = (0 until slices).map { i =>
+      proj.where(e >= lo + span * i / slices && e < lo + span * (i + 1) / slices)
+    }
+    (hi, cuts ++ sentinels(hi))
+  }
+
+  /** A one-row far-future sentinel frame: every `ids` column is −1 (no
+    * real user or event), `ts` is epoch second `sec`.
+    */
+  private def sentinel(spark: SparkSession, sec: Long, ids: String*): DataFrame =
+    spark.range(1).select(ids.map(lit(-1L).as(_)) :+ lit(sec).cast("timestamp").as("ts"): _*)
+
+  /** Stage `sliceDfs` as the pinned files of `<temp root>/stream` and run
+    * `body` with a reader factory over them: one file per trigger, read
+    * with the first slice's schema. The temp root goes when `body` returns.
+    */
+  private def replaySlices[T](prefix: String, sliceDfs: Seq[DataFrame])(
+      body: (() => DataFrame) => T): T =
+    withTempRoot(prefix) { base =>
+      val streamDir = base.resolve("stream")
+      Files.createDirectories(streamDir)
+      stageSliceFiles(base, streamDir, sliceDfs)
+      val spark = sliceDfs.head.sparkSession
+      body(() => spark.readStream
+        .schema(sliceDfs.head.schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(streamDir.toString))
+    }
 
   /** Test probe: per-trigger state-operator metrics of the most recent
     * replay drain — `(numRowsTotal, numRowsRemoved,
@@ -126,7 +205,7 @@ object StreamingSessionize {
     */
   @volatile private[graft] var lastReplayStateMetrics: Seq[(Long, Long, Long)] = Nil
 
-  private def captureStateMetrics(q: org.apache.spark.sql.streaming.StreamingQuery): Unit =
+  private def captureStateMetrics(q: StreamingQuery): Unit =
     lastReplayStateMetrics = q.recentProgress.toSeq
       .filter(_.stateOperators.nonEmpty)
       .map { p =>
@@ -134,6 +213,26 @@ object StreamingSessionize {
           p.stateOperators.map(_.numRowsRemoved).sum,
           p.stateOperators.map(_.numRowsDroppedByWatermark).sum)
       }
+
+  /** The one replay drain: start the query under the replay's state
+    * partitions ([[withReplayStatePartitions]]), process everything
+    * available, record [[lastReplayStateMetrics]], and stop the query in
+    * `finally`, so a failed drain never leaves it running.
+    */
+  private[graft] def drain(spark: SparkSession)(start: => StreamingQuery): Unit =
+    withReplayStatePartitions(spark) {
+      val q = start
+      try { q.processAllAvailable(); captureStateMetrics(q) }
+      finally q.stop()
+    }
+
+  /** [[drain]] `out` into the memory sink `queryName`; returns the sink table. */
+  private[graft] def drainToMemory(
+      out: Dataset[_], queryName: String, outputMode: String = "append"): DataFrame = {
+    drain(out.sparkSession)(
+      out.writeStream.format("memory").queryName(queryName).outputMode(outputMode).start())
+    out.sparkSession.table(queryName)
+  }
 
   /** Sessionize a streaming frame with columns (event_id, user_id, ts).
     *
@@ -288,10 +387,6 @@ object StreamingSessionize {
     out.iterator
   }
 
-  /** [[rateLimit]] driven by the same multi-slice file replay as
-    * [[sessionizeReplay]] — a genuine multi-trigger streaming execution
-    * whose complete admitted set the batch window-rank oracle must equal.
-    */
   /** Watermark LATE-DATA accounting, demonstrated POSITIVELY — every other
     * replay pins ZERO watermark drops (batch parity); this one constructs
     * the drop case and MEASURES it, because a production pipeline needs to
@@ -314,77 +409,53 @@ object StreamingSessionize {
       events: DataFrame,
       watermarkDelaySec: Long = 600L,
       queryName: String = "stream_late_audit_sink"): DataFrame = {
-    import java.nio.file.Files
     val spark = events.sparkSession
-    val base = Files.createTempDirectory("graft_stream_lateaudit_")
-    val streamDir = base.resolve("stream")
-    Files.createDirectories(streamDir)
-    try {
-      val proj = events.select(
-        col("event_id").cast("long").as("event_id"),
-        col("user_id").cast("long").as("user_id"), col("ts"))
-      val bounds = proj.agg(
-        min(unix_timestamp(col("ts"))), max(unix_timestamp(col("ts")))).head()
-      require(!bounds.isNullAt(0), "lateDataAuditReplay: empty events input")
-      val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-      val firstEnd = (lo / 3600L + 1L) * 3600L
-      require(hi - watermarkDelaySec > firstEnd,
-        "lateDataAuditReplay: the on-time slice cannot advance the watermark past the first window")
-      val e = unix_timestamp(col("ts"))
-      val onTime = proj.where(e >= firstEnd)
-      val late = proj.where(e < firstEnd)
-      val nLate = late.count()
-      // the drop metric counts rows entering the STATE operator — i.e.
-      // map-side partials, one per late (window) key, not raw inputs
-      val nLateWindows = late.select((e.cast("long") / 3600L).cast("long")).distinct().count()
-      // the sentinel watermark must clear the LAST real window's end
-      // (up to hi + 3600) plus the delay; its own window then never
-      // flushes (sentinelSec sits inside a window whose end stays ahead
-      // of the final watermark), so no sentinel row can leak into output
-      val sentinelSec = hi + 3600L + 2L * watermarkDelaySec
-      import spark.implicits._
-      def marker(sec: Long): DataFrame =
-        Seq((-1L, -1L)).toDF("event_id", "user_id")
-          .select(col("event_id"), col("user_id"),
-            lit(sec).cast("timestamp").as("ts"))
-      // SPARK-40925 semantics: the LATE-event filter runs against the
-      // watermark of the PREVIOUS micro-batch (eviction runs against the
-      // current one), so the held-back slice needs one sentinel batch
-      // between it and the advancing slice for the drop to fire. Every
-      // sentinel is far-future: it advances the watermark, its own window
-      // never flushes (end > the final watermark by construction), so no
-      // sentinel row can leak into the append-mode output — a filter
-      // can't exclude them instead, because Catalyst pushes any
-      // pre-aggregation predicate below the watermark node and the
-      // filtered sentinels would then never advance it
-      val slices = Seq(onTime, marker(sentinelSec), late,
-        marker(sentinelSec + 60L), marker(sentinelSec + 120L))
-      stageSliceFiles(base, streamDir, slices)
-      val agged = spark.readStream
-        .schema(proj.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(streamDir.toString)
+    val proj = events.select(
+      col("event_id").cast("long").as("event_id"),
+      col("user_id").cast("long").as("user_id"), col("ts"))
+    val (lo, hi) = epochBounds(proj, "lateDataAuditReplay")
+    val firstEnd = (lo / 3600L + 1L) * 3600L
+    require(hi - watermarkDelaySec > firstEnd,
+      "lateDataAuditReplay: the on-time slice cannot advance the watermark past the first window")
+    val e = unix_timestamp(col("ts"))
+    val onTime = proj.where(e >= firstEnd)
+    val late = proj.where(e < firstEnd)
+    val nLate = late.count()
+    // the drop metric counts rows entering the STATE operator — i.e.
+    // map-side partials, one per late (window) key, not raw inputs
+    val nLateWindows = late.select((e.cast("long") / 3600L).cast("long")).distinct().count()
+    // the sentinel watermark must clear the LAST real window's end
+    // (up to hi + 3600) plus the delay; its own window then never
+    // flushes (sentinelSec sits inside a window whose end stays ahead
+    // of the final watermark), so no sentinel row can leak into output
+    val sentinelSec = hi + 3600L + 2L * watermarkDelaySec
+    def marker(sec: Long): DataFrame = sentinel(spark, sec, "event_id", "user_id")
+    // SPARK-40925 semantics: the LATE-event filter runs against the
+    // watermark of the PREVIOUS micro-batch (eviction runs against the
+    // current one), so the held-back slice needs one sentinel batch
+    // between it and the advancing slice for the drop to fire. Every
+    // sentinel is far-future: it advances the watermark, its own window
+    // never flushes (end > the final watermark by construction), so no
+    // sentinel row can leak into the append-mode output — a filter
+    // can't exclude them instead, because Catalyst pushes any
+    // pre-aggregation predicate below the watermark node and the
+    // filtered sentinels would then never advance it
+    val slices = Seq(onTime, marker(sentinelSec), late,
+      marker(sentinelSec + 60L), marker(sentinelSec + 120L))
+    val sink = replaySlices("graft_stream_lateaudit_", slices) { src =>
+      drainToMemory(src()
         .withWatermark("ts", s"$watermarkDelaySec seconds")
         .groupBy(window(col("ts"), "1 hour"))
         .agg(count(lit(1)).as("n_events"), sum(col("user_id")).as("sum_users"))
         .select(
           unix_timestamp(col("window.start")).as("window_start_sec"),
-          col("n_events"), col("sum_users"))
-      withReplayStatePartitions(spark) {
-        val q = agged.writeStream.format("memory")
-          .queryName(queryName).outputMode("append").start()
-        try { q.processAllAvailable(); captureStateMetrics(q) }
-        finally q.stop()
-      }
-      val dropped = lastReplayStateMetrics.map(_._3).sum
-      spark.table(queryName)
-        .where(col("window_start_sec") < sentinelSec)
-        .withColumn("late_rows_present", lit(nLate > 0L))
-        .withColumn("drops_equal_late", lit(dropped == nLateWindows))
-    } finally {
-      import scala.util.Try
-      Try(Files.walk(base).iterator().asScala.toSeq.reverse.foreach(p => Try(Files.delete(p))))
+          col("n_events"), col("sum_users")), queryName)
     }
+    val dropped = lastReplayStateMetrics.map(_._3).sum
+    sink
+      .where(col("window_start_sec") < sentinelSec)
+      .withColumn("late_rows_present", lit(nLate > 0L))
+      .withColumn("drops_equal_late", lit(dropped == nLateWindows))
   }
 
   /** COMPLETE-output-mode rollup replay — the one output mode the other
@@ -399,39 +470,25 @@ object StreamingSessionize {
       events: DataFrame,
       slices: Int = 3,
       queryName: String = "stream_complete_sink"): DataFrame = {
-    import java.nio.file.Files
     require(slices >= 2, s"need >= 2 slices for a multi-trigger replay, got $slices")
-    val spark = events.sparkSession
-    val base = Files.createTempDirectory("graft_stream_complete_")
-    val streamDir = base.resolve("stream")
-    Files.createDirectories(streamDir)
-    try {
-      val proj = events.select(
-        col("event_id").cast("long").as("event_id"),
-        col("user_id").cast("long").as("user_id"),
-        col("event_type").cast("string").as("event_type"))
-      val sliceDfs = (0 until slices).map(i =>
-        proj.where(pmod(col("event_id"), lit(slices.toLong)) === i.toLong))
-      stageSliceFiles(base, streamDir, sliceDfs)
-      val agged = spark.readStream
-        .schema(proj.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(streamDir.toString)
+    val proj = events.select(
+      col("event_id").cast("long").as("event_id"),
+      col("user_id").cast("long").as("user_id"),
+      col("event_type").cast("string").as("event_type"))
+    val sliceDfs = (0 until slices).map(i =>
+      proj.where(pmod(col("event_id"), lit(slices.toLong)) === i.toLong))
+    replaySlices("graft_stream_complete_", sliceDfs) { src =>
+      drainToMemory(src()
         .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n_events"), sum(col("user_id")).as("sum_users"))
-      withReplayStatePartitions(spark) {
-        val q = agged.writeStream.format("memory")
-          .queryName(queryName).outputMode("complete").start()
-        try { q.processAllAvailable(); captureStateMetrics(q) }
-        finally q.stop()
-      }
-      spark.table(queryName)
-    } finally {
-      import scala.util.Try
-      Try(Files.walk(base).iterator().asScala.toSeq.reverse.foreach(p => Try(Files.delete(p))))
+        .agg(count(lit(1)).as("n_events"), sum(col("user_id")).as("sum_users")),
+        queryName, "complete")
     }
   }
 
+  /** [[rateLimit]] driven by the same multi-slice file replay as
+    * [[sessionizeReplay]] — a genuine multi-trigger streaming execution
+    * whose complete admitted set the batch window-rank oracle must equal.
+    */
   def rateLimitReplay(
       events: DataFrame,
       maxPerWindow: Long,
@@ -439,51 +496,20 @@ object StreamingSessionize {
       slices: Int = 3,
       watermarkDelaySec: Long = 600L,
       queryName: String = "stream_rate_limit_sink"): DataFrame = {
-    import java.nio.file.{Files, StandardCopyOption}
-    import java.nio.file.attribute.FileTime
     require(slices >= 2, s"need >= 2 slices for the watermark to move, got $slices")
     val spark = events.sparkSession
-    import spark.implicits._
-    val base = Files.createTempDirectory("graft_stream_ratelimit_")
-    val streamDir = base.resolve("stream")
-    Files.createDirectories(streamDir)
-    try {
-      val proj = events.select(
-        col("event_id").cast("long").as("event_id"),
-        col("user_id").cast("long").as("user_id"),
-        col("ts"))
-      val bounds = proj.agg(
-        min(unix_timestamp(col("ts"))), max(unix_timestamp(col("ts")))).head()
-      require(!bounds.isNullAt(0), "rateLimitReplay: empty events input")
-      val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-      val span = hi - lo + 1
+    val proj = events.select(
+      col("event_id").cast("long").as("event_id"),
+      col("user_id").cast("long").as("user_id"),
+      col("ts"))
+    val (_, sliceDfs) = timeSlices(proj, slices, "rateLimitReplay") { hi =>
       val sentinel1 = hi + windowSec + watermarkDelaySec + 60L
-      val sentinel2 = sentinel1 + 60L
-      val sliceDfs = (0 until slices).map { i =>
-        val cutLo = lo + span * i / slices
-        val cutHi = lo + span * (i + 1) / slices
-        val e = unix_timestamp(col("ts"))
-        proj.where(e >= cutLo && e < cutHi)
-      } ++ Seq(sentinel1, sentinel2).map { sec =>
-        Seq((-1L, -1L)).toDF("event_id", "user_id")
-          .select(col("event_id"), col("user_id"), lit(sec).cast("timestamp").as("ts"))
-      }
-      stageSliceFiles(base, streamDir, sliceDfs)
-      val src = spark.readStream
-        .schema(proj.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(streamDir.toString)
-      val out = rateLimit(src, maxPerWindow, windowSec, s"$watermarkDelaySec seconds")
-      withReplayStatePartitions(spark) {
-        val q = out.writeStream.format("memory").queryName(queryName).outputMode("append").start()
-        try { q.processAllAvailable(); captureStateMetrics(q) }
-        finally q.stop()
-      }
-      spark.table(queryName).where(col("user_id") >= 0)
-    } finally {
-      import scala.util.Try
-      Try(Files.walk(base).iterator().asScala.toSeq.reverse.foreach(p => Try(Files.delete(p))))
+      Seq(sentinel1, sentinel1 + 60L).map(sentinel(spark, _, "event_id", "user_id"))
     }
+    replaySlices("graft_stream_ratelimit_", sliceDfs) { src =>
+      drainToMemory(
+        rateLimit(src(), maxPerWindow, windowSec, s"$watermarkDelaySec seconds"), queryName)
+    }.where(col("user_id") >= 0)
   }
 
   /** Replay a BOUNDED events frame through [[sessionize]] as a genuine
@@ -527,53 +553,21 @@ object StreamingSessionize {
       gapSeconds: Long = 300L,
       watermarkDelaySec: Long = 600L,
       queryName: String = "stream_sessionize_sink"): DataFrame = {
-    import java.nio.file.{Files, StandardCopyOption}
-    import java.nio.file.attribute.FileTime
     require(slices >= 2, s"need >= 2 slices for the watermark to move, got $slices")
     val spark = events.sparkSession
-    import spark.implicits._
-    val base = Files.createTempDirectory("graft_stream_sessionize_")
-    val streamDir = base.resolve("stream")
-    Files.createDirectories(streamDir)
-    try {
-      val proj = events.select(
-        col("event_id").cast("long").as("event_id"),
-        col("user_id").cast("long").as("user_id"),
-        col("ts"))
-      val bounds = proj.agg(
-        min(unix_timestamp(col("ts"))), max(unix_timestamp(col("ts")))).head()
-      require(!bounds.isNullAt(0), "sessionizeReplay: empty events input")
-      val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-      val span = hi - lo + 1
+    val proj = events.select(
+      col("event_id").cast("long").as("event_id"),
+      col("user_id").cast("long").as("user_id"),
+      col("ts"))
+    // one epoch-range slice per file, then the two sentinel files
+    val (_, sliceDfs) = timeSlices(proj, slices, "sessionizeReplay") { hi =>
       val sentinel1 = hi + gapSeconds + watermarkDelaySec + 60L
-      val sentinel2 = sentinel1 + 60L
-      // one epoch-range slice per file, then the two sentinel files
-      val sliceDfs = (0 until slices).map { i =>
-        val cutLo = lo + span * i / slices
-        val cutHi = lo + span * (i + 1) / slices
-        val e = unix_timestamp(col("ts"))
-        proj.where(e >= cutLo && e < cutHi)
-      } ++ Seq(sentinel1, sentinel2).map { sec =>
-        Seq((-1L, -1L)).toDF("event_id", "user_id")
-          .select(col("event_id"), col("user_id"), lit(sec).cast("timestamp").as("ts"))
-      }
-      stageSliceFiles(base, streamDir, sliceDfs)
-      val src = spark.readStream
-        .schema(proj.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(streamDir.toString)
-      val out = sessionize(src, gapSeconds, s"$watermarkDelaySec seconds")
-      withReplayStatePartitions(spark) {
-        val q = out.writeStream.format("memory").queryName(queryName).outputMode("append").start()
-        try q.processAllAvailable()
-        finally q.stop()
-      }
-      spark.table(queryName).where(col("user_id") >= 0)
-    } finally {
-      // the memory sink owns the rows now; the temp files can go
-      import scala.util.Try
-      Try(Files.walk(base).iterator().asScala.toSeq.reverse.foreach(p => Try(Files.delete(p))))
+      Seq(sentinel1, sentinel1 + 60L).map(sentinel(spark, _, "event_id", "user_id"))
     }
+    // the memory sink owns the rows once drained; the temp files can go
+    replaySlices("graft_stream_sessionize_", sliceDfs) { src =>
+      drainToMemory(sessionize(src(), gapSeconds, s"$watermarkDelaySec seconds"), queryName)
+    }.where(col("user_id") >= 0)
   }
 
   /** Sliding-window distinct-user counts as a CHAINED stateful streaming
@@ -604,40 +598,17 @@ object StreamingSessionize {
       slices: Int = 3,
       watermarkDelaySec: Long = 600L,
       queryName: String = "stream_sliding_wau_sink"): DataFrame = {
-    import java.nio.file.{Files, StandardCopyOption}
-    import java.nio.file.attribute.FileTime
     require(slices >= 2, s"need >= 2 slices for the watermark to move, got $slices")
     val spark = events.sparkSession
-    import spark.implicits._
-    val base = Files.createTempDirectory("graft_stream_slidingwau_")
-    val streamDir = base.resolve("stream")
-    Files.createDirectories(streamDir)
-    try {
-      val proj = events.select(col("user_id").cast("long").as("user_id"), col("ts"))
-      val bounds = proj.agg(
-        min(unix_timestamp(col("ts"))), max(unix_timestamp(col("ts")))).head()
-      require(!bounds.isNullAt(0), "slidingWauReplay: empty events input")
-      val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-      val span = hi - lo + 1
+    val proj = events.select(col("user_id").cast("long").as("user_id"), col("ts"))
+    val (hi, sliceDfs) = timeSlices(proj, slices, "slidingWauReplay") { hi =>
       // the last real window ends at day(hi) + windowDays; the sentinel must
       // push the watermark past that end for the final windows to emit
       val sentinel1 = hi + (windowDays + 1).toLong * 86400L + watermarkDelaySec + 60L
-      val sentinel2 = sentinel1 + 60L
-      val sliceDfs = (0 until slices).map { i =>
-        val cutLo = lo + span * i / slices
-        val cutHi = lo + span * (i + 1) / slices
-        val e = unix_timestamp(col("ts"))
-        proj.where(e >= cutLo && e < cutHi)
-      } ++ Seq(sentinel1, sentinel2).map { sec =>
-        Seq(-1L).toDF("user_id")
-          .select(col("user_id"), lit(sec).cast("timestamp").as("ts"))
-      }
-      stageSliceFiles(base, streamDir, sliceDfs)
-      val src = spark.readStream
-        .schema(proj.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(streamDir.toString)
-      val out = src
+      Seq(sentinel1, sentinel1 + 60L).map(sentinel(spark, _, "user_id"))
+    }
+    val sink = replaySlices("graft_stream_slidingwau_", sliceDfs) { src =>
+      drainToMemory(src()
         .withWatermark("ts", s"$watermarkDelaySec seconds")
         .groupBy(
           window(col("ts"), s"$windowDays days", s"$slideDays days").as("w"),
@@ -648,20 +619,11 @@ object StreamingSessionize {
         .select(
           to_date(col("w.start")).as("window_start"),
           to_date(col("w.end")).as("window_end"),
-          col("active_users"))
-      withReplayStatePartitions(spark) {
-        val q = out.writeStream.format("memory")
-          .queryName(queryName).outputMode("append").start()
-        try { q.processAllAvailable(); captureStateMetrics(q) }
-        finally q.stop()
-      }
-      // drop the sentinels' far-future windows: real starts end at day(hi)
-      val hiDay = java.time.LocalDate.ofEpochDay(hi / 86400L).toString
-      spark.table(queryName).where(col("window_start") <= lit(hiDay).cast("date"))
-    } finally {
-      import scala.util.Try
-      Try(Files.walk(base).iterator().asScala.toSeq.reverse.foreach(p => Try(Files.delete(p))))
+          col("active_users")), queryName)
     }
+    // drop the sentinels' far-future windows: real starts end at day(hi)
+    val hiDay = java.time.LocalDate.ofEpochDay(hi / 86400L).toString
+    sink.where(col("window_start") <= lit(hiDay).cast("date"))
   }
 
   /** Streaming SKETCH emission — the incremental-analytics loop the
@@ -731,28 +693,13 @@ object StreamingSessionize {
       slices: Int,
       watermarkDelaySec: Long,
       queryName: String): DataFrame = {
-    import java.nio.file.Files
     require(slices >= 2, s"need >= 2 slices for the watermark to move, got $slices")
     val spark = events.sparkSession
     import spark.implicits._
-    val base = Files.createTempDirectory("graft_stream_sketch_")
-    val streamDir = base.resolve("stream")
-    Files.createDirectories(streamDir)
-    try {
-      val proj = events.select(col("user_id").cast("long").as("user_id"), col("ts"))
-      val bounds = proj.agg(
-        min(unix_timestamp(col("ts"))), max(unix_timestamp(col("ts")))).head()
-      require(!bounds.isNullAt(0), "sketchRollupReplay: empty events input")
-      val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-      val span = hi - lo + 1
+    val proj = events.select(col("user_id").cast("long").as("user_id"), col("ts"))
+    val (hi, sliceDfs) = timeSlices(proj, slices, "sketchRollupReplay") { hi =>
       val sentinel1 = hi + 2L * 86400L + watermarkDelaySec + 60L
-      val sentinel2 = sentinel1 + 60L
-      val sliceDfs = (0 until slices).map { i =>
-        val cutLo = lo + span * i / slices
-        val cutHi = lo + span * (i + 1) / slices
-        val e = unix_timestamp(col("ts"))
-        proj.where(e >= cutLo && e < cutHi)
-      } ++ Seq(sentinel1, sentinel2).map { sec =>
+      Seq(sentinel1, sentinel1 + 60L).map { sec =>
         // null user: both set aggregates skip nulls, so the sentinel only
         // advances the watermark (a negative id would trip the bitmap's
         // dense-range guard)
@@ -760,28 +707,16 @@ object StreamingSessionize {
           .select(lit(null).cast("long").as("user_id"),
             lit(sec).cast("timestamp").as("ts"))
       }
-      stageSliceFiles(base, streamDir, sliceDfs)
-      val src = spark.readStream
-        .schema(proj.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(streamDir.toString)
-      val out = src
+    }
+    val sink = replaySlices("graft_stream_sketch_", sliceDfs) { src =>
+      drainToMemory(src()
         .withWatermark("ts", s"$watermarkDelaySec seconds")
         .groupBy(window(col("ts"), "1 day").as("w"))
         .agg(aggExpr.as("sk"))
-        .select(to_date(col("w.start")).as("day"), col("sk"))
-      withReplayStatePartitions(spark) {
-        val q = out.writeStream.format("memory")
-          .queryName(queryName).outputMode("append").start()
-        try { q.processAllAvailable(); captureStateMetrics(q) }
-        finally q.stop()
-      }
-      val hiDay = java.time.LocalDate.ofEpochDay(hi / 86400L).toString
-      spark.table(queryName).where(col("day") <= lit(hiDay).cast("date"))
-    } finally {
-      import scala.util.Try
-      Try(Files.walk(base).iterator().asScala.toSeq.reverse.foreach(p => Try(Files.delete(p))))
+        .select(to_date(col("w.start")).as("day"), col("sk")), queryName)
     }
+    val hiDay = java.time.LocalDate.ofEpochDay(hi / 86400L).toString
+    sink.where(col("day") <= lit(hiDay).cast("date"))
   }
 
   /** Stream-STATIC enrichment join, replayed end to end — the production
@@ -802,61 +737,28 @@ object StreamingSessionize {
       slices: Int = 3,
       watermarkDelaySec: Long = 600L,
       queryName: String = "stream_enrich_static_sink"): DataFrame = {
-    import java.nio.file.{Files, StandardCopyOption}
-    import java.nio.file.attribute.FileTime
     require(slices >= 2, s"need >= 2 slices for the watermark to move, got $slices")
     val spark = events.sparkSession
-    import spark.implicits._
-    val base = Files.createTempDirectory("graft_stream_enrich_")
-    val streamDir = base.resolve("stream")
-    Files.createDirectories(streamDir)
-    try {
-      val proj = events.select(col("user_id").cast("long").as("user_id"), col("ts"))
-      val dim = events
-        .groupBy(col("user_id").cast("long").as("user_id"))
-        .agg(sum(when(col("event_type") === "purchase", 1L).otherwise(0L)).as("np"))
-        .select(
-          col("user_id"),
-          when(col("np") >= 5L, "high")
-            .when(col("np") >= 1L, "mid")
-            .otherwise("none").as("tier"))
-      val bounds = proj.agg(
-        min(unix_timestamp(col("ts"))), max(unix_timestamp(col("ts")))).head()
-      require(!bounds.isNullAt(0), "enrichStaticReplay: empty events input")
-      val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-      val span = hi - lo + 1
+    val proj = events.select(col("user_id").cast("long").as("user_id"), col("ts"))
+    val dim = events
+      .groupBy(col("user_id").cast("long").as("user_id"))
+      .agg(sum(when(col("event_type") === "purchase", 1L).otherwise(0L)).as("np"))
+      .select(
+        col("user_id"),
+        when(col("np") >= 5L, "high")
+          .when(col("np") >= 1L, "mid")
+          .otherwise("none").as("tier"))
+    val (_, sliceDfs) = timeSlices(proj, slices, "enrichStaticReplay") { hi =>
       val sentinel1 = hi + 2L * 86400L + watermarkDelaySec + 60L
-      val sentinel2 = sentinel1 + 60L
-      val sliceDfs = (0 until slices).map { i =>
-        val cutLo = lo + span * i / slices
-        val cutHi = lo + span * (i + 1) / slices
-        val e = unix_timestamp(col("ts"))
-        proj.where(e >= cutLo && e < cutHi)
-      } ++ Seq(sentinel1, sentinel2).map { sec =>
-        Seq(-1L).toDF("user_id")
-          .select(col("user_id"), lit(sec).cast("timestamp").as("ts"))
-      }
-      stageSliceFiles(base, streamDir, sliceDfs)
-      val src = spark.readStream
-        .schema(proj.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(streamDir.toString)
-      val out = src
+      Seq(sentinel1, sentinel1 + 60L).map(sentinel(spark, _, "user_id"))
+    }
+    replaySlices("graft_stream_enrich_", sliceDfs) { src =>
+      drainToMemory(src()
         .withWatermark("ts", s"$watermarkDelaySec seconds")
         .join(broadcast(dim), Seq("user_id")) // stateless per-batch enrich
         .groupBy(window(col("ts"), "1 day").as("w"), col("tier"))
         .agg(count(lit(1)).as("n_events"))
-        .select(to_date(col("w.start")).as("day"), col("tier"), col("n_events"))
-      withReplayStatePartitions(spark) {
-        val q = out.writeStream.format("memory")
-          .queryName(queryName).outputMode("append").start()
-        try { q.processAllAvailable(); captureStateMetrics(q) }
-        finally q.stop()
-      }
-      spark.table(queryName)
-    } finally {
-      import scala.util.Try
-      Try(Files.walk(base).iterator().asScala.toSeq.reverse.foreach(p => Try(Files.delete(p))))
+        .select(to_date(col("w.start")).as("day"), col("tier"), col("n_events")), queryName)
     }
   }
 
@@ -881,40 +783,21 @@ object StreamingSessionize {
       slices: Int = 3,
       watermarkDelaySec: Long = 600L,
       queryName: String = "stream_session_window_sink"): DataFrame = {
-    import java.nio.file.{Files, StandardCopyOption}
-    import java.nio.file.attribute.FileTime
     require(slices >= 2, s"need >= 2 slices for the watermark to move, got $slices")
     val spark = events.sparkSession
     import spark.implicits._
-    val base = Files.createTempDirectory("graft_stream_sesswin_")
-    val streamDir = base.resolve("stream")
-    Files.createDirectories(streamDir)
-    try {
-      val proj = events.select(
-        col("user_id").cast("long").as("user_id"),
-        col("ts"), col("value").cast("double").as("value"))
-      val bounds = proj.agg(
-        min(unix_timestamp(col("ts"))), max(unix_timestamp(col("ts")))).head()
-      require(!bounds.isNullAt(0), "sessionWindowReplay: empty events input")
-      val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-      val span = hi - lo + 1
+    val proj = events.select(
+      col("user_id").cast("long").as("user_id"),
+      col("ts"), col("value").cast("double").as("value"))
+    val (_, sliceDfs) = timeSlices(proj, slices, "sessionWindowReplay") { hi =>
       val sentinel1 = hi + gapSeconds + watermarkDelaySec + 60L
-      val sentinel2 = sentinel1 + 60L
-      val sliceDfs = (0 until slices).map { i =>
-        val cutLo = lo + span * i / slices
-        val cutHi = lo + span * (i + 1) / slices
-        val e = unix_timestamp(col("ts"))
-        proj.where(e >= cutLo && e < cutHi)
-      } ++ Seq(sentinel1, sentinel2).map { sec =>
+      Seq(sentinel1, sentinel1 + 60L).map { sec =>
         Seq((-1L, 0.0)).toDF("user_id", "value")
           .select(col("user_id"), lit(sec).cast("timestamp").as("ts"), col("value"))
       }
-      stageSliceFiles(base, streamDir, sliceDfs)
-      val src = spark.readStream
-        .schema(proj.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(streamDir.toString)
-      val out = src
+    }
+    replaySlices("graft_stream_sesswin_", sliceDfs) { src =>
+      drainToMemory(src()
         .withWatermark("ts", s"$watermarkDelaySec seconds")
         .groupBy(col("user_id"), session_window(col("ts"), s"$gapSeconds seconds").as("w"))
         .agg(count(lit(1)).as("n_events"), round(sum(col("value")), 2).as("sum_value"))
@@ -922,18 +805,8 @@ object StreamingSessionize {
           col("user_id"),
           unix_micros(col("w.start")).as("start_us"),
           unix_micros(col("w.end")).as("end_us"),
-          col("n_events"), col("sum_value"))
-      withReplayStatePartitions(spark) {
-        val q = out.writeStream.format("memory")
-          .queryName(queryName).outputMode("append").start()
-        try { q.processAllAvailable(); captureStateMetrics(q) }
-        finally q.stop()
-      }
-      spark.table(queryName).where(col("user_id") >= 0)
-    } finally {
-      import scala.util.Try
-      Try(Files.walk(base).iterator().asScala.toSeq.reverse.foreach(p => Try(Files.delete(p))))
-    }
+          col("n_events"), col("sum_value")), queryName)
+    }.where(col("user_id") >= 0)
   }
 
   /** Streaming exact dedup over a document stream: first occurrence of each
@@ -1286,54 +1159,24 @@ object StreamingSessionize {
       joinType: String = "inner"): DataFrame = {
     require(Seq("inner", "left_outer", "full_outer").contains(joinType),
       s"stream-stream interval join supports inner/left_outer/full_outer, got $joinType")
-    import java.nio.file.{Files, StandardCopyOption}
-    import java.nio.file.attribute.FileTime
     require(slices >= 2, s"need >= 2 slices for the watermark to move, got $slices")
-    val spark = events.sparkSession
-    import spark.implicits._
-    val base = Files.createTempDirectory("graft_stream_ivjoin_")
-    val streamDir = base.resolve("stream")
-    Files.createDirectories(streamDir)
-    try {
-      val proj = events.select(
-        col("event_id").cast("long").as("event_id"),
-        col("user_id").cast("long").as("user_id"),
-        col("ts"), col("event_type").cast("string").as("event_type"))
-      val bounds = proj.agg(
-        min(unix_timestamp(col("ts"))), max(unix_timestamp(col("ts")))).head()
-      require(!bounds.isNullAt(0), "intervalJoinReplay: empty events input")
-      val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-      val span = hi - lo + 1
-      // Each stream leg FILTERS on event_type BEFORE its watermark node, so
-      // a sentinel only advances a leg's watermark if it passes that leg's
-      // filter: every sentinel batch carries one view-typed row (user -1)
-      // and one purchase-typed row (user -2) — distinct negative users, so
-      // they match nothing and the output filter drops them. The OUTER
-      // variant additionally needs the final watermark to clear every
-      // view's null-emission horizon (Spark derives it conservatively from
-      // the condition bound plus both delays) and at least one further
-      // batch to run the eviction — three far-future sentinel batches
-      // cover both.
-      val margin = 3L * (matchWindowSec + watermarkDelaySec)
-      val sentinels = Seq(
-        hi + margin, hi + margin + 60L, hi + margin + 120L)
-      val sliceDfs = (0 until slices).map { i =>
-        val cutLo = lo + span * i / slices
-        val cutHi = lo + span * (i + 1) / slices
-        val e = unix_timestamp(col("ts"))
-        proj.where(e >= cutLo && e < cutHi)
-      } ++ sentinels.map { sec =>
-        Seq((-1L, -1L, "view"), (-2L, -2L, "purchase"))
-          .toDF("event_id", "user_id", "event_type")
-          .select(
-            col("event_id"), col("user_id"),
-            lit(sec).cast("timestamp").as("ts"), col("event_type"))
-      }
-      stageSliceFiles(base, streamDir, sliceDfs)
-      def src(): DataFrame = spark.readStream
-        .schema(proj.schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(streamDir.toString)
+    val proj = events.select(
+      col("event_id").cast("long").as("event_id"),
+      col("user_id").cast("long").as("user_id"),
+      col("ts"), col("event_type").cast("string").as("event_type"))
+    // Each stream leg FILTERS on event_type BEFORE its watermark node, so
+    // a sentinel only advances a leg's watermark if it passes that leg's
+    // filter: every sentinel batch carries one view-typed row (user -1)
+    // and one purchase-typed row (user -2) — distinct negative users, so
+    // they match nothing and the output filter drops them. The OUTER
+    // variant additionally needs the final watermark to clear every
+    // view's null-emission horizon (Spark derives it conservatively from
+    // the condition bound plus both delays) and at least one further
+    // batch to run the eviction — three far-future sentinel batches
+    // cover both.
+    val (_, sliceDfs) = timeSlices(proj, slices, "intervalJoinReplay")(
+      joinSentinels(proj, matchWindowSec, watermarkDelaySec))
+    replaySlices("graft_stream_ivjoin_", sliceDfs) { src =>
       val views = src().where(col("event_type") === "view")
         .select(
           col("event_id").as("view_id"), col("user_id"), col("ts").as("view_ts"))
@@ -1359,16 +1202,24 @@ object StreamingSessionize {
           // values for inner/left, where the view side is never null)
           coalesce(col("user_id"), col("p_user")).as("user_id"),
           (unix_timestamp(col("p_ts")) - unix_timestamp(col("view_ts"))).as("gap_sec"))
-      withReplayStatePartitions(spark) {
-        val q = joined.writeStream.format("memory")
-          .queryName(queryName).outputMode("append").start()
-        try { q.processAllAvailable(); captureStateMetrics(q) }
-        finally q.stop()
-      }
-      spark.table(queryName).where(col("user_id") >= 0)
-    } finally {
-      import scala.util.Try
-      Try(Files.walk(base).iterator().asScala.toSeq.reverse.foreach(p => Try(Files.delete(p))))
+      drainToMemory(joined, queryName)
+    }.where(col("user_id") >= 0)
+  }
+
+  /** The interval-join replays' sentinel batches past `hi`: three
+    * far-future batches, each one view-typed row (user −1) and one
+    * purchase-typed row (user −2), so both legs' watermarks advance.
+    */
+  private def joinSentinels(proj: DataFrame, matchWindowSec: Long, watermarkDelaySec: Long)(
+      hi: Long): Seq[DataFrame] = {
+    import proj.sparkSession.implicits._
+    val margin = 3L * (matchWindowSec + watermarkDelaySec)
+    Seq(hi + margin, hi + margin + 60L, hi + margin + 120L).map { sec =>
+      Seq((-1L, -1L, "view"), (-2L, -2L, "purchase"))
+        .toDF("event_id", "user_id", "event_type")
+        .select(
+          col("event_id"), col("user_id"),
+          lit(sec).cast("timestamp").as("ts"), col("event_type"))
     }
   }
 
@@ -1494,138 +1345,80 @@ object StreamingSessionize {
       events: DataFrame,
       slices: Int = 4,
       watermarkDelaySec: Long = 600L): DataFrame = {
-    import java.nio.file.{Files, StandardCopyOption}
-    import java.nio.file.attribute.FileTime
     require(slices >= 3, s"recoveryReplay: need >= 3 slices to interrupt midstream, got $slices")
     val spark = events.sparkSession
     import spark.implicits._
-    val base = Files.createTempDirectory("graft_stream_recovery_")
-    val (streamDir, sinkDir, ckptDir) =
-      (base.resolve("in"), base.resolve("out"), base.resolve("ckpt"))
-    Files.createDirectories(streamDir)
-    try {
-      val proj = events.select(col("user_id").cast("long").as("user_id"), col("ts"))
-      val bounds = proj.agg(
-        min(unix_timestamp(col("ts"))), max(unix_timestamp(col("ts")))).head()
-      require(!bounds.isNullAt(0), "recoveryReplay: empty events input")
-      val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-      val span = hi - lo + 1
-      val sliceDfs = (0 until slices).map { i =>
-        val e = unix_timestamp(col("ts"))
-        proj.where(e >= lo + span * i / slices && e < lo + span * (i + 1) / slices)
-      } ++ Seq(hi + 86400L + watermarkDelaySec + 60L,
-        hi + 86400L + watermarkDelaySec + 120L).map { sec =>
-        Seq(-1L).toDF("user_id").select(col("user_id"), lit(sec).cast("timestamp").as("ts"))
-      }
-      // stage every slice up front, but PUBLISH into the source dir in two
-      // phases around the kill (mtimes pinned so the file source's
-      // (mtime, path) order can't let a sentinel overtake a data slice)
-      val staged = sliceDfs.zipWithIndex.map { case (df, i) =>
-        val stage = base.resolve(s"stage_$i")
-        df.coalesce(1).write.parquet(stage.toString)
-        Files.list(stage).iterator().asScala
-          .find(_.getFileName.toString.endsWith(".parquet"))
-          .getOrElse(sys.error(s"recoveryReplay: no parquet part for slice $i"))
-      }
-      def publish(i: Int): Unit = {
-        val dest = streamDir.resolve(f"part_$i%03d.parquet")
-        Files.copy(staged(i), dest, StandardCopyOption.REPLACE_EXISTING)
-        Files.setLastModifiedTime(dest, FileTime.fromMillis(1700000000000L + i * 1000L))
-        ()
-      }
-      def runOnce(): Unit = {
-        val q = spark.readStream.schema(proj.schema)
-          .option("maxFilesPerTrigger", "1").parquet(streamDir.toString)
+    val proj = events.select(col("user_id").cast("long").as("user_id"), col("ts"))
+    val (_, sliceDfs) = timeSlices(proj, slices, "recoveryReplay") { hi =>
+      Seq(hi + 86400L + watermarkDelaySec + 60L, hi + 86400L + watermarkDelaySec + 120L)
+        .map(sentinel(spark, _, "user_id"))
+    }
+    // phase 1: two files land, the query drains them and is KILLED;
+    // phase 2: the rest lands, a NEW instance resumes from the checkpoint
+    val (afterPhase1, rows) = killRestartDrain(
+        "graft_stream_recovery_", sliceDfs, phase1Files = 2, "day date, user_id long, n long") {
+      (inDir, outDir, ckpt) =>
+        spark.readStream.schema(proj.schema)
+          .option("maxFilesPerTrigger", "1").parquet(inDir)
           .withWatermark("ts", s"$watermarkDelaySec seconds")
           .groupBy(window(col("ts"), "1 day").as("w"), col("user_id"))
           .agg(count(lit(1)).as("n"))
           .select(to_date(col("w.start")).as("day"), col("user_id"), col("n"))
           .writeStream.format("parquet")
-          .option("path", sinkDir.toString)
-          .option("checkpointLocation", ckptDir.toString)
+          .option("path", outDir).option("checkpointLocation", ckpt)
           .outputMode("append").start()
-        try q.processAllAvailable()
-        finally q.stop()
-      }
-      val sinkSchema = "day date, user_id long, n long"
-      // phase 1: two files land, the query drains them and is KILLED
-      (0 to 1).foreach(publish)
-      withReplayStatePartitions(spark)(runOnce())
-      val afterPhase1 =
-        spark.read.schema(sinkSchema).parquet(sinkDir.toString).count()
-      // phase 2: the rest lands; a NEW instance resumes from the checkpoint
-      (2 until staged.length).foreach(publish)
-      withReplayStatePartitions(spark)(runOnce())
-      val sunk = spark.read.schema(sinkSchema).parquet(sinkDir.toString)
-        .where(col("user_id") >= 0)
-        .collect().map(r => (r.getDate(0).toString, r.getLong(1), r.getLong(2))).toSeq
-      val expectedRows = proj
-        .groupBy(to_date(col("ts")).as("day"), col("user_id")).agg(count(lit(1)))
-        .count()
-      val interrupted = afterPhase1 < expectedRows
-      val noDupes = sunk.size == sunk.distinct.size
-      // the memory copy owns the rows now; lift it back into a frame with
-      // the law columns (batch parity is the oracle hash itself)
-      sunk.toDF("day_s", "user_id", "n")
-        .select(
-          col("day_s").cast("date").as("day"), col("user_id"), col("n"),
-          lit(interrupted).as("interrupted_midstream"),
-          lit(noDupes).as("no_duplicate_emissions"))
-        .orderBy(col("day"), col("user_id"))
-    } finally {
-      import scala.util.Try
-      Try(Files.walk(base).iterator().asScala.toSeq.reverse.foreach(p => Try(Files.delete(p))))
-      ()
     }
+    val sunk = rows.map(r => (r.getDate(0).toString, r.getLong(1), r.getLong(2))).toSeq
+    val expectedRows = proj
+      .groupBy(to_date(col("ts")).as("day"), col("user_id")).agg(count(lit(1)))
+      .count()
+    val interrupted = afterPhase1 < expectedRows
+    val noDupes = sunk.size == sunk.distinct.size
+    // the memory copy owns the rows now; lift it back into a frame with
+    // the law columns (batch parity is the oracle hash itself)
+    sunk.toDF("day_s", "user_id", "n")
+      .select(
+        col("day_s").cast("date").as("day"), col("user_id"), col("n"),
+        lit(interrupted).as("interrupted_midstream"),
+        lit(noDupes).as("no_duplicate_emissions"))
+      .orderBy(col("day"), col("user_id"))
   }
 
-  /** Shared KILL-AND-RESTART scaffold for the recovery replays: stage
-    * every slice up front, publish the first `phase1Files` into the
-    * source dir (mtimes pinned), run `buildSink` to drain and STOP (the
-    * kill), publish the rest, run a brand-new instance against the SAME
-    * checkpoint, and return (rows sunk after phase 1, the final sink
-    * read). The file source's checkpointed offsets plus the file sink's
-    * commit log carry the exactly-once burden across the restart —
-    * identical machinery for every stateful operator under test.
+  /** Shared KILL-AND-RESTART scaffold for the recovery replays, on a
+    * fresh `prefix` temp root: stage every slice up front, publish the
+    * first `phase1Files` into the source dir (mtimes pinned), drain the
+    * query `buildQuery(inDir, outDir, ckptDir)` builds and STOP it (the
+    * kill), publish the rest, drain a brand-new instance against the SAME
+    * checkpoint, and return (rows sunk after phase 1, the final sink rows
+    * with `user_id >= 0`). The file source's checkpointed offsets plus the
+    * file sink's commit log carry the exactly-once burden across the
+    * restart — identical machinery for every stateful operator under test.
     */
   private def killRestartDrain(
-      spark: org.apache.spark.sql.SparkSession,
-      base: java.nio.file.Path,
+      prefix: String,
       sliceDfs: Seq[DataFrame],
       phase1Files: Int,
       sinkSchema: String)(
-      buildQuery: (String, String, String) => org.apache.spark.sql.streaming.StreamingQuery)
-      : (Long, DataFrame) = {
-    import java.nio.file.{Files, StandardCopyOption}
-    import java.nio.file.attribute.FileTime
-    val (streamDir, sinkDir, ckptDir) =
-      (base.resolve("in"), base.resolve("out"), base.resolve("ckpt"))
-    Files.createDirectories(streamDir)
-    val staged = sliceDfs.zipWithIndex.map { case (df, i) =>
-      val stage = base.resolve(s"stage_$i")
-      df.coalesce(1).write.parquet(stage.toString)
-      Files.list(stage).iterator().asScala
-        .find(_.getFileName.toString.endsWith(".parquet"))
-        .getOrElse(sys.error(s"killRestartDrain: no parquet part for slice $i"))
+      buildQuery: (String, String, String) => StreamingQuery): (Long, Array[Row]) =
+    withTempRoot(prefix) { base =>
+      val spark = sliceDfs.head.sparkSession
+      val (streamDir, sinkDir, ckptDir) =
+        (base.resolve("in"), base.resolve("out"), base.resolve("ckpt"))
+      Files.createDirectories(streamDir)
+      val staged = sliceDfs.zipWithIndex.map { case (df, i) =>
+        stageSlice(df, base.resolve(s"stage_$i"))
+      }
+      def publish(i: Int): Unit = publishSlice(staged(i), streamDir, i)
+      def runOnce(): Unit =
+        drain(spark)(buildQuery(streamDir.toString, sinkDir.toString, ckptDir.toString))
+      def sink(): DataFrame = spark.read.schema(sinkSchema).parquet(sinkDir.toString)
+      (0 until phase1Files).foreach(publish)
+      runOnce()
+      val afterPhase1 = sink().count()
+      (phase1Files until staged.length).foreach(publish)
+      runOnce()
+      (afterPhase1, sink().where(col("user_id") >= 0).collect())
     }
-    def publish(i: Int): Unit = {
-      val dest = streamDir.resolve(f"part_$i%03d.parquet")
-      Files.copy(staged(i), dest, StandardCopyOption.REPLACE_EXISTING)
-      Files.setLastModifiedTime(dest, FileTime.fromMillis(1700000000000L + i * 1000L))
-      ()
-    }
-    def runOnce(): Unit = {
-      val q = buildQuery(streamDir.toString, sinkDir.toString, ckptDir.toString)
-      try q.processAllAvailable()
-      finally q.stop()
-    }
-    (0 until phase1Files).foreach(publish)
-    withReplayStatePartitions(spark)(runOnce())
-    val afterPhase1 = spark.read.schema(sinkSchema).parquet(sinkDir.toString).count()
-    (phase1Files until staged.length).foreach(publish)
-    withReplayStatePartitions(spark)(runOnce())
-    (afterPhase1, spark.read.schema(sinkSchema).parquet(sinkDir.toString))
-  }
 
   /** CHECKPOINT RECOVERY for the STATEFUL STREAM-STREAM JOIN — the state
     * store likeliest to corrupt on resume (two-sided buffered rows plus
@@ -1643,66 +1436,44 @@ object StreamingSessionize {
       slices: Int = 4,
       matchWindowSec: Long = 1800L,
       watermarkDelaySec: Long = 600L): DataFrame = {
-    import java.nio.file.Files
     require(slices >= 3, s"recoveryJoinReplay: need >= 3 slices to interrupt midstream, got $slices")
     val spark = events.sparkSession
     import spark.implicits._
-    val base = Files.createTempDirectory("graft_stream_recov_join_")
-    try {
-      val proj = events.select(
-        col("event_id").cast("long").as("event_id"),
-        col("user_id").cast("long").as("user_id"),
-        col("ts"), col("event_type").cast("string").as("event_type"))
-      val bounds = proj.agg(
-        min(unix_timestamp(col("ts"))), max(unix_timestamp(col("ts")))).head()
-      require(!bounds.isNullAt(0), "recoveryJoinReplay: empty events input")
-      val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-      val span = hi - lo + 1
-      val margin = 3L * (matchWindowSec + watermarkDelaySec)
-      val sliceDfs = (0 until slices).map { i =>
-        val e = unix_timestamp(col("ts"))
-        proj.where(e >= lo + span * i / slices && e < lo + span * (i + 1) / slices)
-      } ++ Seq(hi + margin, hi + margin + 60L, hi + margin + 120L).map { sec =>
-        Seq((-1L, -1L, "view"), (-2L, -2L, "purchase"))
-          .toDF("event_id", "user_id", "event_type")
-          .select(col("event_id"), col("user_id"),
-            lit(sec).cast("timestamp").as("ts"), col("event_type"))
-      }
-      val sinkSchema = "view_id long, purchase_id long, user_id long, gap_sec long"
-      val (afterPhase1, sink) = killRestartDrain(
-          spark, base, sliceDfs, phase1Files = 2, sinkSchema) {
-        (inDir, outDir, ckpt) =>
-          def src(): DataFrame = spark.readStream.schema(proj.schema)
-            .option("maxFilesPerTrigger", "1").parquet(inDir)
-          val views = src().where(col("event_type") === "view")
-            .select(col("event_id").as("view_id"), col("user_id"), col("ts").as("view_ts"))
-            .withWatermark("view_ts", s"$watermarkDelaySec seconds")
-          val purchases = src().where(col("event_type") === "purchase")
-            .select(col("event_id").as("purchase_id"), col("user_id").as("p_user"),
-              col("ts").as("p_ts"))
-            .withWatermark("p_ts", s"$watermarkDelaySec seconds")
-          views.join(purchases,
-              expr(s"""user_id = p_user AND p_ts >= view_ts AND
-                       p_ts <= view_ts + interval $matchWindowSec seconds"""))
-            .select(col("view_id"), col("purchase_id"), col("user_id"),
-              (unix_timestamp(col("p_ts")) - unix_timestamp(col("view_ts"))).as("gap_sec"))
-            .writeStream.format("parquet")
-            .option("path", outDir).option("checkpointLocation", ckpt)
-            .outputMode("append").start()
-      }
-      val sunk = sink.where(col("user_id") >= 0)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
-      val interrupted = afterPhase1 < sunk.size
-      val noDupes = sunk.size == sunk.distinct.size
-      sunk.toDF("view_id", "purchase_id", "user_id", "gap_sec")
-        .withColumn("interrupted_midstream", lit(interrupted))
-        .withColumn("no_duplicate_emissions", lit(noDupes))
-        .orderBy(col("view_id"), col("purchase_id"))
-    } finally {
-      import scala.util.Try
-      Try(Files.walk(base).iterator().asScala.toSeq.reverse.foreach(p => Try(Files.delete(p))))
-      ()
+    val proj = events.select(
+      col("event_id").cast("long").as("event_id"),
+      col("user_id").cast("long").as("user_id"),
+      col("ts"), col("event_type").cast("string").as("event_type"))
+    val (_, sliceDfs) = timeSlices(proj, slices, "recoveryJoinReplay")(
+      joinSentinels(proj, matchWindowSec, watermarkDelaySec))
+    val sinkSchema = "view_id long, purchase_id long, user_id long, gap_sec long"
+    val (afterPhase1, rows) = killRestartDrain(
+        "graft_stream_recov_join_", sliceDfs, phase1Files = 2, sinkSchema) {
+      (inDir, outDir, ckpt) =>
+        def src(): DataFrame = spark.readStream.schema(proj.schema)
+          .option("maxFilesPerTrigger", "1").parquet(inDir)
+        val views = src().where(col("event_type") === "view")
+          .select(col("event_id").as("view_id"), col("user_id"), col("ts").as("view_ts"))
+          .withWatermark("view_ts", s"$watermarkDelaySec seconds")
+        val purchases = src().where(col("event_type") === "purchase")
+          .select(col("event_id").as("purchase_id"), col("user_id").as("p_user"),
+            col("ts").as("p_ts"))
+          .withWatermark("p_ts", s"$watermarkDelaySec seconds")
+        views.join(purchases,
+            expr(s"""user_id = p_user AND p_ts >= view_ts AND
+                     p_ts <= view_ts + interval $matchWindowSec seconds"""))
+          .select(col("view_id"), col("purchase_id"), col("user_id"),
+            (unix_timestamp(col("p_ts")) - unix_timestamp(col("view_ts"))).as("gap_sec"))
+          .writeStream.format("parquet")
+          .option("path", outDir).option("checkpointLocation", ckpt)
+          .outputMode("append").start()
     }
+    val sunk = rows.map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
+    val interrupted = afterPhase1 < sunk.size
+    val noDupes = sunk.size == sunk.distinct.size
+    sunk.toDF("view_id", "purchase_id", "user_id", "gap_sec")
+      .withColumn("interrupted_midstream", lit(interrupted))
+      .withColumn("no_duplicate_emissions", lit(noDupes))
+      .orderBy(col("view_id"), col("purchase_id"))
   }
 
   /** CHECKPOINT RECOVERY for the `flatMapGroupsWithState` SESSIONIZER —
@@ -1721,55 +1492,37 @@ object StreamingSessionize {
       slices: Int = 4,
       gapSeconds: Long = 300L,
       watermarkDelaySec: Long = 600L): DataFrame = {
-    import java.nio.file.Files
     require(slices >= 3, s"recoverySessionizeReplay: need >= 3 slices to interrupt midstream, got $slices")
     val spark = events.sparkSession
     import spark.implicits._
-    val base = Files.createTempDirectory("graft_stream_recov_sess_")
-    try {
-      val proj = events.select(
-        col("event_id").cast("long").as("event_id"),
-        col("user_id").cast("long").as("user_id"),
-        col("ts"))
-      val bounds = proj.agg(
-        min(unix_timestamp(col("ts"))), max(unix_timestamp(col("ts")))).head()
-      require(!bounds.isNullAt(0), "recoverySessionizeReplay: empty events input")
-      val (lo, hi) = (bounds.getLong(0), bounds.getLong(1))
-      val span = hi - lo + 1
+    val proj = events.select(
+      col("event_id").cast("long").as("event_id"),
+      col("user_id").cast("long").as("user_id"),
+      col("ts"))
+    val (_, sliceDfs) = timeSlices(proj, slices, "recoverySessionizeReplay") { hi =>
       val sentinel1 = hi + gapSeconds + watermarkDelaySec + 60L
-      val sliceDfs = (0 until slices).map { i =>
-        val e = unix_timestamp(col("ts"))
-        proj.where(e >= lo + span * i / slices && e < lo + span * (i + 1) / slices)
-      } ++ Seq(sentinel1, sentinel1 + 60L).map { sec =>
-        Seq((-1L, -1L)).toDF("event_id", "user_id")
-          .select(col("event_id"), col("user_id"), lit(sec).cast("timestamp").as("ts"))
-      }
-      val sinkSchema = "event_id long, user_id long, epoch_sec long, " +
-        "is_new_session boolean, session_start_sec long, session_id string"
-      val (afterPhase1, sink) = killRestartDrain(
-          spark, base, sliceDfs, phase1Files = 2, sinkSchema) {
-        (inDir, outDir, ckpt) =>
-          val src = spark.readStream.schema(proj.schema)
-            .option("maxFilesPerTrigger", "1").parquet(inDir)
-          sessionize(src, gapSeconds, s"$watermarkDelaySec seconds")
-            .writeStream.format("parquet")
-            .option("path", outDir).option("checkpointLocation", ckpt)
-            .outputMode("append").start()
-      }
-      val sunk = sink.where(col("user_id") >= 0)
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-          r.getBoolean(3), r.getLong(4), r.getString(5))).toSeq
-      val interrupted = afterPhase1 < sunk.size
-      val noDupes = sunk.size == sunk.distinct.size
-      sunk.toDF("event_id", "user_id", "epoch_sec",
-          "is_new_session", "session_start_sec", "session_id")
-        .withColumn("interrupted_midstream", lit(interrupted))
-        .withColumn("no_duplicate_emissions", lit(noDupes))
-        .orderBy(col("event_id"))
-    } finally {
-      import scala.util.Try
-      Try(Files.walk(base).iterator().asScala.toSeq.reverse.foreach(p => Try(Files.delete(p))))
-      ()
+      Seq(sentinel1, sentinel1 + 60L).map(sentinel(spark, _, "event_id", "user_id"))
     }
+    val sinkSchema = "event_id long, user_id long, epoch_sec long, " +
+      "is_new_session boolean, session_start_sec long, session_id string"
+    val (afterPhase1, rows) = killRestartDrain(
+        "graft_stream_recov_sess_", sliceDfs, phase1Files = 2, sinkSchema) {
+      (inDir, outDir, ckpt) =>
+        val src = spark.readStream.schema(proj.schema)
+          .option("maxFilesPerTrigger", "1").parquet(inDir)
+        sessionize(src, gapSeconds, s"$watermarkDelaySec seconds")
+          .writeStream.format("parquet")
+          .option("path", outDir).option("checkpointLocation", ckpt)
+          .outputMode("append").start()
+    }
+    val sunk = rows.map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+      r.getBoolean(3), r.getLong(4), r.getString(5))).toSeq
+    val interrupted = afterPhase1 < sunk.size
+    val noDupes = sunk.size == sunk.distinct.size
+    sunk.toDF("event_id", "user_id", "epoch_sec",
+        "is_new_session", "session_start_sec", "session_id")
+      .withColumn("interrupted_midstream", lit(interrupted))
+      .withColumn("no_duplicate_emissions", lit(noDupes))
+      .orderBy(col("event_id"))
   }
 }

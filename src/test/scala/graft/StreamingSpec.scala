@@ -477,6 +477,57 @@ class StreamingSpec extends AnyFunSuite {
     assert(got == expected)
   }
 
+  test("sessionize replay records its own state metrics: non-empty, no watermark drops") {
+    // clear the probe first: a previous replay's metrics must not pass for these
+    StreamingSessionize.lastReplayStateMetrics = Nil
+    StreamingSessionize.sessionizeReplay(Tables.events(spark, SfDir), queryName = "probe_spec_sink")
+    val m = StreamingSessionize.lastReplayStateMetrics
+    assert(m.nonEmpty, "sessionizeReplay recorded no state-operator progress")
+    assert(m.map(_._3).sum == 0L, "the time-ranged slices must produce no watermark drops")
+  }
+
+  test("replay temp roots are removed after a slice replay, a kill-restart replay and failed ones") {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def roots(): Set[String] =
+      Option(tmp.list()).getOrElse(Array.empty[String]).filter(_.startsWith("graft_stream_")).toSet
+    val ev = Tables.events(spark, SfDir)
+    def assertNoNewRoot(label: String)(run: => Unit): Unit = {
+      val before = roots()
+      run
+      val left = roots() -- before
+      assert(left.isEmpty, s"$label left temp roots behind: $left")
+    }
+    assertNoNewRoot("slice replay") {
+      StreamingSessionize.sessionizeReplay(ev, queryName = "cleanup_spec_sink").count()
+      ()
+    }
+    assertNoNewRoot("kill-restart replay") {
+      StreamingSessionize.recoveryReplay(ev).count()
+      ()
+    }
+    // the empty input fails its `require` on the data bounds, before any
+    // temp root exists: this case pins only that the failure stays clean
+    assertNoNewRoot("empty-input replay") {
+      val e = intercept[IllegalArgumentException] {
+        StreamingSessionize.sessionizeReplay(ev.limit(0), queryName = "cleanup_empty_sink")
+      }
+      assert(e.getMessage.contains("empty events input"))
+      ()
+    }
+    // a drain that fails AFTER staging: an active query already holds the
+    // sink's name, so starting the replay's query throws inside the temp root
+    val holder = spark.readStream.format("rate").option("rowsPerSecond", "1").load()
+      .writeStream.format("noop").queryName("cleanup_taken_sink").start()
+    try assertNoNewRoot("replay whose drain fails after staging") {
+      val e = intercept[Exception] {
+        StreamingSessionize.sessionizeReplay(ev, queryName = "cleanup_taken_sink")
+      }
+      assert(e.getMessage.contains("cleanup_taken_sink"), e.getMessage)
+      ()
+    }
+    finally holder.stop()
+  }
+
   test("frozen-lexicon streaming BM25 equals the batch score table") {
     import spark.implicits._
     import org.apache.spark.sql.functions._
