@@ -7,8 +7,10 @@ import org.apache.spark.sql.execution.datasources.v2.{BatchScanExec, FileScan}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.obs.Trace
 import graft.operators.{Cdc, EventsEtl, Histograms, Layout, Materialize, Privacy, Sessionize}
 import graft.sources.{CsvSource, GraftCatalog, GraftSqlDml, Incremental, JsonlSource, SnapshotLog, TableManager, TxnCatalog}
+import graft.streaming.StreamingSessionize.{deleteTree, withTempRoot, writeOneFile}
 
 /** ETL-surface queries: CSV source round-trip (S1/S2), templated-SQL entry
   * (S3), idempotent dynamic-partition-overwrite load (S4–S7), and the full
@@ -27,15 +29,6 @@ object QueriesEtl {
     StructField("event_type", StringType, nullable = true),
     StructField("value", DoubleType, nullable = true),
     StructField("props", StringType, nullable = true)))
-
-  /** Test probes: executed-plan strings captured while the special confs /
-    * runtime-filter state were active, so PlanSpec can pin
-    * `dynamicpruning` and `PushedAggregation` without replanning under
-    * its own conf (the [[graft.operators.Layout.lastManifestScanPlan]]
-    * pattern).
-    */
-  @volatile private[graft] var lastDppPlan: String = ""
-  @volatile private[graft] var lastAggPushdownPlan: String = ""
 
   private def scratch(dir: String, name: String): String =
     GraftSession.scratch("etl", dir, name)
@@ -139,14 +132,12 @@ object QueriesEtl {
       val dim = daily.crossJoin(broadcast(tot))
         .where(col("np") * col("nd") > col("tot"))
         .select(col("day"))
-      val out = fact.join(broadcast(dim), Seq("day"))
+      fact.join(broadcast(dim), Seq("day"))
         .groupBy(col("day"))
         .agg(
           count(lit(1)).as("n_events"),
           sum(floor(col("value") * 100).cast("long")).as("value_cents"))
         .orderBy(col("day"))
-      lastDppPlan = out.queryExecution.executedPlan.toString
-      out
     }),
 
     // ── parquet AGGREGATE pushdown (DSv2): COUNT/MIN/MAX answered from
@@ -154,7 +145,8 @@ object QueriesEtl {
     // returns one pre-aggregated row per file. The conf pair routes THIS
     // query's scan through the v2 source with pushdown on and restores
     // the session after planning; the plan is forced inside the window so
-    // the probe (PlanSpec pins `PushedAggregation`) sees the v2 scan ──
+    // the frame's own execution (PlanSpec pins `PushedAggregation`) runs
+    // the v2 scan ──
     "agg_pushdown_stats" -> ((s, dir) => {
       val keys = Seq("spark.sql.parquet.aggregatePushdown", "spark.sql.sources.useV1SourceList")
       val prev = keys.map(k => k -> s.conf.getOption(k))
@@ -170,7 +162,7 @@ object QueriesEtl {
             max(col("l_extendedprice")).as("max_price"))
         // force physical planning while the v2+pushdown confs are active;
         // the cached queryExecution then serves the later execution
-        lastAggPushdownPlan = out.queryExecution.executedPlan.toString
+        out.queryExecution.executedPlan
         out
       } finally prev.foreach { case (k, v) =>
         v match { case Some(x) => s.conf.set(k, x); case None => s.conf.unset(k) }
@@ -368,7 +360,7 @@ object QueriesEtl {
     // ── PARTITION-PRUNED CDC merge ([[Cdc.applyChangesPruned]]): the base
     // written as a REAL partitioned table (by o_orderpriority), a change
     // batch touching ONLY the 1-URGENT partition, the merge restricted to
-    // that partition via static PartitionFilters (PlanSpec-pinned probe),
+    // that partition via static PartitionFilters (pinned in PlanSpec),
     // and ONLY that partition rewritten through dynamic overwrite — the
     // other four partitions' files are never read and never rewritten.
     // Returned: the final table state read back from disk, so the hash
@@ -376,7 +368,9 @@ object QueriesEtl {
     // merged exactly ──
     "cdc_merge_pruned" -> ((s, dir) => {
       val base = Tables.orders(s, dir)
-      val root = java.nio.file.Files.createTempDirectory("graft-cdc-pruned").toString
+      // the returned frame reads `root` lazily: a scratch root, cleared per run
+      val root = scratch(dir, "cdc_pruned")
+      deleteTree(java.nio.file.Paths.get(root))
       base.write.partitionBy("o_orderpriority").mode("overwrite").parquet(root)
       val pbase = s.read.parquet(root)
       val urgent = pbase.where(col("o_orderpriority") === "1-URGENT")
@@ -732,7 +726,6 @@ object QueriesEtl {
           r.getAs[Long]("mxy") >= ZYLo && r.getAs[Long]("mny") <= ZYHi
       }.map(_.getAs[Int]("file_id"))
       val selected = files.where(col("file_id").isin(hit.toSeq: _*))
-      Layout.lastManifestScanPlan = selected.queryExecution.executedPlan.toString
       selected
         .where(col("x").between(ZXLo, ZXHi) && col("y").between(ZYLo, ZYHi))
         .agg(count(lit(1)).as("n_match"), sum(col("x")).as("sum_x"), sum(col("y")).as("sum_y"))
@@ -779,7 +772,6 @@ object QueriesEtl {
       val candFiles = cand.select(col("file_id")).distinct()
         .collect().map(_.getAs[Number]("file_id").longValue())
       val selected = files.where(col("file_id").isin(candFiles.toSeq: _*))
-      Layout.lastManifestScanPlan = selected.queryExecution.executedPlan.toString
       val found = selected
         .join(broadcast(probes), col("event_id") === col("probe_id"))
         .groupBy(col("probe_id"))
@@ -1557,11 +1549,10 @@ object QueriesEtl {
     // the destination must equal the source row for row
     // (`pipeline_exactly_once`, exceptAll both ways) with the watermark
     // actually recorded (`watermark_recorded`) ──
-    "stream_log_pipeline" -> ((s, dir) => {
+    "stream_log_pipeline" -> ((s, dir) => withTempRoot("graft_pipe_q_") { ckpt =>
       val src = new SnapshotLog(scratch(dir, "pipe_src"))
       val dst = new SnapshotLog(scratch(dir, "pipe_dst"))
       src.recreate(); dst.recreate()
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_pipe_q_")
       def run(): Unit = {
         val q = s.readStream
           .format("graft-log").option("root", src.root).load()
@@ -1685,7 +1676,7 @@ object QueriesEtl {
     // ways vs the relational latest-per-key). Exactly-once rides the
     // same txn watermark as the append sink; each merge's rewrite
     // scope stays stats-pruned (O(touched files), not O(table)) ──
-    "stream_upsert_sink" -> ((s, dir) => {
+    "stream_upsert_sink" -> ((s, dir) => withTempRoot("graft_ups_q_") { ckpt =>
       import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
       val src = new SnapshotLog(scratch(dir, "ups_src"))
       val dst = new SnapshotLog(scratch(dir, "ups_dst"))
@@ -1700,7 +1691,6 @@ object QueriesEtl {
       src.append(base.where(col("k") <= 200)
         .withColumn("cents", col("cents") + 1000), partitions = 1)
       src.append(base.where(col("k").between(801, 1000)), partitions = 1)
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_ups_q_")
       val q = s.readStream
         .format("graft-log").option("root", src.root)
         .option("maxVersionsPerTrigger", "1").load()
@@ -1732,7 +1722,7 @@ object QueriesEtl {
     // idempotent skip — the destination version does not move
     // (`redelivered_delete_noop`). The indicator never lands in the
     // destination schema ──
-    "stream_upsert_delete" -> ((s, dir) => {
+    "stream_upsert_delete" -> ((s, dir) => withTempRoot("graft_upsdel_q_") { ckpt =>
       val src = new SnapshotLog(scratch(dir, "upsdel_src"))
       val dst = new SnapshotLog(scratch(dir, "upsdel_dst"))
       src.recreate(); dst.recreate()
@@ -1751,7 +1741,6 @@ object QueriesEtl {
       feed(base.where(col("k").between(301, 400)), del = true)
       val lastFeed = base.where(col("k").between(801, 1000))
       feed(lastFeed, del = false)
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_upsdel_q_")
       val q = s.readStream
         .format("graft-log").option("root", src.root)
         .option("maxVersionsPerTrigger", "1").load()
@@ -1795,7 +1784,7 @@ object QueriesEtl {
     // column as pre-rename data, no fresh id minted
     // (`mapped_upsert_same_physical`), and the destination holds the
     // latest image per key (`upsert_equals_latest`) ──
-    "stream_upsert_mapped" -> ((s, dir) => {
+    "stream_upsert_mapped" -> ((s, dir) => withTempRoot("graft_um_q_") { ckpt =>
       s.conf.set("spark.sql.catalog.graftum", classOf[GraftCatalog].getName)
       s.conf.set("spark.sql.catalog.graftum.root", scratch(dir, "umroot"))
       s.sql("DROP TABLE IF EXISTS graftum.ord")
@@ -1814,7 +1803,6 @@ object QueriesEtl {
       src.append(s.table("graft_um_src").where(col("k").between(301, 1000))
         .select(col("k"), col("status"), (col("cents") + 555).as("pennies")),
         partitions = 2)
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_um_q_")
       val q = s.readStream
         .format("graft-log").option("root", src.root).load()
         .writeStream.format("graft-log")
@@ -1851,7 +1839,7 @@ object QueriesEtl {
     // the batch corpus (`compacted_equals_batch`). At 100 TB this is the
     // difference between a queryable table and a million-file listing
     // after a week of triggers ──
-    "stream_sink_autocompact" -> ((s, dir) => {
+    "stream_sink_autocompact" -> ((s, dir) => withTempRoot("graft_ac_q_") { ckpt =>
       import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
       val src = new SnapshotLog(scratch(dir, "ac_src"))
       val dst = new SnapshotLog(scratch(dir, "ac_dst"))
@@ -1866,7 +1854,6 @@ object QueriesEtl {
       (0 until 6).foreach { i =>
         src.append(base.where(col("k") % 6 === i), partitions = 1); ()
       }
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_ac_q_")
       val q = s.readStream
         .format("graft-log").option("root", src.root)
         .option("maxVersionsPerTrigger", "1").load()
@@ -1938,7 +1925,7 @@ object QueriesEtl {
     // checkpoint restarted with the evolved schema drains everything:
     // pre-evolution files serve typed NULL (counted as `n_legacy`),
     // post-evolution appends carry real values ──
-    "stream_schema_guard" -> ((s, dir) => {
+    "stream_schema_guard" -> ((s, dir) => withTempRoot("graft_evoguard_") { base =>
       import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
       val log = new SnapshotLog(scratch(dir, "logsrc_evoguard"))
       log.recreate()
@@ -1950,7 +1937,6 @@ object QueriesEtl {
       log.appendStrict(orders.where(col("k") <= 1500), partitions = 2)
       // the checkpointed phases write to a FILE sink (the memory sink
       // does not support checkpoint recovery)
-      val base = java.nio.file.Files.createTempDirectory("graft_evoguard_")
       def start() = s.readStream
         .format("graft-log").option("root", log.root).load()
         .writeStream.format("parquet")
@@ -2018,7 +2004,10 @@ object QueriesEtl {
       log.createEmpty(StructType(Seq(
         StructField("k", LongType), StructField("cents", LongType))))
       log.appendStrict(orders.where(col("k") <= 700), partitions = 2)
-      val base = java.nio.file.Files.createTempDirectory("graft_evoresume_")
+      // the returned frame reads `out` lazily, so the root is scratch,
+      // cleared per run, not a temp root deleted on return
+      val base = java.nio.file.Paths.get(scratch(dir, "evoresume_q"))
+      deleteTree(base)
       def start() = s.readStream
         .format("graft-log").option("root", log.root).load()
         .writeStream.format("parquet")
@@ -3374,8 +3363,8 @@ object QueriesEtl {
         .where(col("k") <= 1400)
         .createOrReplaceTempView("graft_an_src")
       s.sql("INSERT INTO graftan.ord SELECT * FROM graft_an_src")
-      val r = s.sql(
-        "ANALYZE TABLE graftan.ord COMPUTE STATISTICS FOR COLUMNS k, status").head()
+      val (r, analyzeTrace) = Trace.capture(s)(s.sql(
+        "ANALYZE TABLE graftan.ord COMPUTE STATISTICS FOR COLUMNS k, status").head())
       val log = new SnapshotLog(scratch(dir, "anroot") + "/ord")
       val (rows, ndvs) = log.tableStats(log.currentVersion.get).get
       val exact = s.sql(
@@ -3388,7 +3377,7 @@ object QueriesEtl {
       val statsMatch = r.getLong(1) == exact.getLong(0) &&
         rows == exact.getLong(0) && close(ndvs("k"), exact.getLong(1)) &&
         close(ndvs("status"), exact.getLong(2)) &&
-        !graft.sources.SnapshotLog.lastAnalyzePlan.contains("Expand")
+        !analyzeTrace.plans.exists(_.contains("Expand"))
       s.sql(
         """SELECT status, count(*) AS n_orders,
           |       CAST(sum(k) AS BIGINT) AS sum_key,
@@ -3413,23 +3402,12 @@ object QueriesEtl {
       s.sql("DROP TABLE IF EXISTS graftcp.ord")
       s.sql("CREATE TABLE graftcp.ord (k BIGINT, status STRING, cents BIGINT)")
       val srcDir = new java.io.File(scratch(dir, "cp_src"))
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-        f.delete(); ()
-      }
-      rm(srcDir); srcDir.mkdirs()
+      deleteTree(srcDir.toPath); srcDir.mkdirs()
       val orders = Tables.orders(s, dir).select(
         col("o_orderkey").as("k"), col("o_orderstatus").as("status"),
         floor(col("o_totalprice") * 100).cast("long").as("cents"))
-      def drop(df: DataFrame, name: String): Unit = {
-        val tmp = java.nio.file.Files.createTempDirectory("graft_cp_tmp_")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp.resolve("w").toString)
-        val part = new java.io.File(tmp.resolve("w").toString).listFiles()
-          .find(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("."))
-          .get
-        java.nio.file.Files.move(part.toPath, new java.io.File(srcDir, name).toPath)
-        ()
-      }
+      def drop(df: DataFrame, name: String): Unit =
+        writeOneFile(df, new java.io.File(srcDir, name).toPath)
       drop(orders.where(col("k") <= 500), "a.parquet")
       drop(orders.where(col("k").between(501, 1000)), "b.parquet")
       val stmt = s"COPY INTO graftcp.ord FROM '$srcDir' FILEFORMAT = PARQUET"
@@ -3804,8 +3782,7 @@ object QueriesEtl {
       (0 until 3).foreach { i =>
         src.append(rows.where(col("k") % 3 === i), partitions = 2); ()
       }
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_sid_ckpt_")
-      try {
+      withTempRoot("graft_sid_ckpt_") { ckpt =>
         val q = s.readStream
           .format("graft-log").option("root", src.root)
           .option("maxVersionsPerTrigger", "1").load()
@@ -3817,11 +3794,6 @@ object QueriesEtl {
           .outputMode("append").start()
         require(q.awaitTermination(180000L),
           "stream_identity_sink: the AvailableNow drain must self-terminate")
-      } finally {
-        import scala.jdk.CollectionConverters._
-        scala.util.Try(java.nio.file.Files.walk(ckpt).iterator().asScala
-          .toSeq.reverse.foreach(p => scala.util.Try(java.nio.file.Files.delete(p))))
-        ()
       }
       val dst = new SnapshotLog(scratch(dir, "sidroot") + "/ord")
       val wmRecorded = dst.currentVersion
@@ -3865,26 +3837,18 @@ object QueriesEtl {
         .where(col("k").between(500, 1000))
         .withColumn("cents", col("cents") + 7), partitions = 1)
       val dstRoot = scratch(dir, "srwroot") + "/ord"
-      def drain(): Unit = {
-        val ckpt = java.nio.file.Files.createTempDirectory("graft_srw_ckpt_")
-        try {
-          val q = s.readStream
-            .format("graft-log").option("root", src.root).load()
-            .writeStream.format("graft-log")
-            .option("root", dstRoot)
-            .option("checkpointLocation", ckpt.toString)
-            .option("appId", "srw")
-            .option("replaceWhere", "k BETWEEN 500 AND 1000")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .outputMode("append").start()
-          require(q.awaitTermination(180000L),
-            "stream_replace_where: the AvailableNow drain must self-terminate")
-        } finally {
-          import scala.jdk.CollectionConverters._
-          scala.util.Try(java.nio.file.Files.walk(ckpt).iterator().asScala
-            .toSeq.reverse.foreach(p => scala.util.Try(java.nio.file.Files.delete(p))))
-          ()
-        }
+      def drain(): Unit = withTempRoot("graft_srw_ckpt_") { ckpt =>
+        val q = s.readStream
+          .format("graft-log").option("root", src.root).load()
+          .writeStream.format("graft-log")
+          .option("root", dstRoot)
+          .option("checkpointLocation", ckpt.toString)
+          .option("appId", "srw")
+          .option("replaceWhere", "k BETWEEN 500 AND 1000")
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+          .outputMode("append").start()
+        require(q.awaitTermination(180000L),
+          "stream_replace_where: the AvailableNow drain must self-terminate")
       }
       drain()
       val log = new SnapshotLog(dstRoot)
@@ -4086,25 +4050,14 @@ object QueriesEtl {
       s.sql("""CREATE TABLE graftcpi.ord (id BIGINT, k BIGINT, cents BIGINT)
               |TBLPROPERTIES ('identity.id' = '1,1')""".stripMargin)
       val srcDir = new java.io.File(scratch(dir, "cpi_src"))
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-        f.delete(); ()
-      }
-      rm(srcDir); srcDir.mkdirs()
+      deleteTree(srcDir.toPath); srcDir.mkdirs()
       // the source files carry NO id column — the declared-schema read
       // serves NULL and the load mints
       val orders = Tables.orders(s, dir).select(
         col("o_orderkey").as("k"),
         floor(col("o_totalprice") * 100).cast("long").as("cents"))
-      def drop(df: DataFrame, name: String): Unit = {
-        val tmp = java.nio.file.Files.createTempDirectory("graft_cpi_tmp_")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp.resolve("w").toString)
-        val part = new java.io.File(tmp.resolve("w").toString).listFiles()
-          .find(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("."))
-          .get
-        java.nio.file.Files.move(part.toPath, new java.io.File(srcDir, name).toPath)
-        ()
-      }
+      def drop(df: DataFrame, name: String): Unit =
+        writeOneFile(df, new java.io.File(srcDir, name).toPath)
       drop(orders.where(col("k") <= 900), "a.parquet")
       drop(orders.where(col("k").between(901, 1800)), "b.parquet")
       val stmt = s"COPY INTO graftcpi.ord FROM '$srcDir' FILEFORMAT = PARQUET"
@@ -4148,20 +4101,9 @@ object QueriesEtl {
         "WHERE k <= 800")
       s.sql("ALTER TABLE graftcpm.ord RENAME COLUMN cents TO pennies")
       val srcDir = new java.io.File(scratch(dir, "cpm_src"))
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-        f.delete(); ()
-      }
-      rm(srcDir); srcDir.mkdirs()
-      def drop(df: DataFrame, name: String): Unit = {
-        val tmp = java.nio.file.Files.createTempDirectory("graft_cpm_tmp_")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp.resolve("w").toString)
-        val part = new java.io.File(tmp.resolve("w").toString).listFiles()
-          .find(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("."))
-          .get
-        java.nio.file.Files.move(part.toPath, new java.io.File(srcDir, name).toPath)
-        ()
-      }
+      deleteTree(srcDir.toPath); srcDir.mkdirs()
+      def drop(df: DataFrame, name: String): Unit =
+        writeOneFile(df, new java.io.File(srcDir, name).toPath)
       val srcRows = s.table("graft_cpm_src")
       drop(srcRows.where(col("k").between(801, 1600)), "a.parquet")
       drop(srcRows.where(col("k").between(1601, 2400)), "b.parquet")
@@ -5206,7 +5148,7 @@ object QueriesEtl {
     // same rows through SQL INSERT would fail identically, so the two
     // write paths can no longer disagree. The guard is a raise_error
     // folded into the staged batch: one evaluation, zero extra scans ──
-    "stream_constraint_sink" -> ((s, dir) => {
+    "stream_constraint_sink" -> ((s, dir) => withTempRoot("graft_chksink_") { base =>
       import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
       val src = new SnapshotLog(scratch(dir, "chksink_src"))
       val dst = new SnapshotLog(scratch(dir, "chksink_dst"))
@@ -5220,7 +5162,6 @@ object QueriesEtl {
         floor(col("o_totalprice") * 100).cast("long").as("cents"))
       src.append(orders.where(col("k") <= 500), partitions = 2)
       src.append(orders.where(col("k").between(501, 1000)), partitions = 2)
-      val base = java.nio.file.Files.createTempDirectory("graft_chksink_")
       def start() = s.readStream
         .format("graft-log").option("root", src.root).load()
         .writeStream.format("graft-log")

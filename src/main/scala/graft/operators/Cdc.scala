@@ -37,12 +37,6 @@ import org.apache.spark.sql.functions._
   */
 object Cdc {
 
-  /** Executed-plan probe for the most recent [[applyChangesPruned]] call —
-    * lets PlanSpec pin that the base scan carries PartitionFilters (the
-    * prune actually reached the source) without widening the signature.
-    */
-  @volatile private[graft] var lastPrunedMergePlan: String = ""
-
   /** PARTITION-PRUNED CDC merge: at 100 TB a CDC batch typically touches a
     * fraction of the base's partitions, and the full-outer shape of
     * [[applyChanges]] would still read (and a rewrite would rewrite) ALL of
@@ -102,9 +96,7 @@ object Cdc {
       } else {
         base.join(broadcast(touchedDf), partCols, "left_semi")
       }
-    val merged = applyChanges(restricted, changes, keyCols, opCol, validate)
-    lastPrunedMergePlan = merged.queryExecution.executedPlan.toString
-    merged
+    applyChanges(restricted, changes, keyCols, opCol, validate)
   }
 
   /** Prefix the change batch's data columns `__c_*`, carry the op column as

@@ -522,12 +522,6 @@ object Layout {
       .write.mode("overwrite").partitionBy("file_id").parquet(path)
   }
 
-  /** Executed-plan probe for the most recent manifest-driven scan — lets
-    * LayoutSpec pin that the file selection reached the read as
-    * PartitionFilters on the `file_id` directory column.
-    */
-  @volatile private[graft] var lastManifestScanPlan: String = ""
-
   /** Oracle replay for the manifest-driven scan: the same rank-bucket →
     * Morton → equal-count file assignment, the per-file zone boxes, the
     * boxes intersecting the predicate (the skip count), and the box

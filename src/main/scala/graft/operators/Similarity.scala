@@ -345,7 +345,6 @@ object Similarity {
           .groupBy(col("cluster"))
           .agg(VectorFunctions.vecSum(col("v")).as("vsum"), count(lit(1)).as("n"))
           .select(col("cluster"), transform(col("vsum"), x => round(x / col("n"), 6)).as("c"))
-        if (i == 1) lastKmeansLoopPlan = mStep.queryExecution.executedPlan.toString
         centroids = mStep
           .collect()
           .map(r => r.getLong(0) -> r.getSeq[Double](1).toArray)
@@ -454,12 +453,6 @@ object Similarity {
         col("query_id"), col("neighbor_id"),
         round(col("cos"), 6).as("cosine"), col("rank").cast("long").as("rank"))
   }
-
-  /** Test probe: executed-plan string of the first M-step of the most recent
-    * [[kmeans]] call, captured while the working set is persisted — lets
-    * PlanSpec pin the InMemoryTableScan without widening the signature.
-    */
-  @volatile private[graft] var lastKmeansLoopPlan: String = ""
 
   /** PERSIST the IVF index: a real pipeline trains the coarse quantizer
     * ONCE and probes a stored index for every query batch — re-fitting
@@ -781,11 +774,11 @@ object Similarity {
     var cur = unit.withColumn("md", lit(2.0))
       .persist(StorageLevel.MEMORY_AND_DISK)
     var centers = Vector[(Long, Long, Option[Double])]((0L, seedId, None))
-    var lastId = seedId
+    var prevId = seedId
     try {
       var i = 1
       while (i < k) {
-        val cvec = cur.where(col("id") === lastId)
+        val cvec = cur.where(col("id") === prevId)
           .select(col("v")).head().getSeq[Double](0).toArray
         val updated = cur
           .withColumn("md",
@@ -795,8 +788,8 @@ object Similarity {
           .limit(1).select(col("id"), col("md")).head()
         cur.unpersist(blocking = false)
         cur = updated
-        lastId = pick.getLong(0)
-        centers = centers :+ ((i.toLong, lastId, Some(pick.getDouble(1))))
+        prevId = pick.getLong(0)
+        centers = centers :+ ((i.toLong, prevId, Some(pick.getDouble(1))))
         i += 1
       }
     } finally cur.unpersist(blocking = false)

@@ -40,11 +40,7 @@ object BinaryFiles {
     val root = new java.io.File(dir).getCanonicalFile
     require(root.getPath.split('/').contains("target"),
       s"refusing to write binary scatter outside a target/ scratch dir: $root")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-      f.delete(); ()
-    }
-    if (root.exists()) rm(root)
+    graft.streaming.StreamingSessionize.deleteTree(root.toPath)
     root.mkdirs()
     df.select(col(idCol).cast("long").as("id"), col(payloadCol).as("payload"))
       .foreachPartition { rows: Iterator[Row] =>

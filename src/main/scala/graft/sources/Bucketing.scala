@@ -43,13 +43,8 @@ object Bucketing {
       val loc = new java.io.File(
         spark.sessionState.catalog.defaultTablePath(ident)).getCanonicalFile
       // canonicalize BEFORE the guard so target/../../x cannot pass it
-      if (loc.exists() && loc.getPath.split('/').contains("target")) {
-        def rm(f: java.io.File): Unit = {
-          if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-          f.delete(); ()
-        }
-        rm(loc)
-      }
+      if (loc.exists() && loc.getPath.split('/').contains("target"))
+        graft.streaming.StreamingSessionize.deleteTree(loc.toPath)
     }
     val w = df.write
       .mode("overwrite")

@@ -696,11 +696,7 @@ class GraftCatalog extends TableCatalog with StagingTableCatalog {
           s"${live.mkString(", ")} still read this table's data pool — " +
           "drop the clones first")
     }
-    def rm(f: File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-      f.delete(); ()
-    }
-    rm(dir)
+    graft.streaming.StreamingSessionize.deleteTree(dir.toPath)
     true
   }
 
@@ -1100,17 +1096,9 @@ object GraftCatalog {
         TableCapability.TRUNCATE)
 
     private def requireSameSchema(data: org.apache.spark.sql.DataFrame): Unit = {
-      val base = inner.schema.map(f => f.name -> f.dataType).toMap
-      val batch = data.schema.map(f => f.name -> f.dataType).toMap
-      val missing = (base.keySet -- batch.keySet).toSeq.sorted
-      val extra = (batch.keySet -- base.keySet).toSeq.sorted
-      val retyped = base.keySet.intersect(batch.keySet).toSeq.sorted
-        .filter(c => base(c) != batch(c))
-      require(missing.isEmpty && extra.isEmpty && retyped.isEmpty,
-        s"GraftCatalog: INSERT OVERWRITE batch drifts from the table schema — " +
-          s"missing=${missing.mkString("[", ",", "]")} " +
-          s"extra=${extra.mkString("[", ",", "]")} " +
-          s"retyped=${retyped.mkString("[", ",", "]")}")
+      val drift = SchemaDrift.of(inner.schema, data.schema)
+      require(drift.isEmpty,
+        s"GraftCatalog: INSERT OVERWRITE batch drifts from the table schema — $drift")
     }
 
     override def canDeleteWhere(filters: Array[Filter]): Boolean =
@@ -1297,17 +1285,9 @@ object GraftCatalog {
                   "GraftCatalog: INSERT OVERWRITE is not supported on a " +
                     "column-mapped table — use the SnapshotLog API")
                 val logical = schema()
-                val base = logical.map(f => f.name -> f.dataType).toMap
-                val batch = data.schema.map(f => f.name -> f.dataType).toMap
-                val missing = (base.keySet -- batch.keySet).toSeq.sorted
-                val extra = (batch.keySet -- base.keySet).toSeq.sorted
-                val retyped = base.keySet.intersect(batch.keySet).toSeq.sorted
-                  .filter(c => base(c) != batch(c))
-                require(missing.isEmpty && extra.isEmpty && retyped.isEmpty,
-                  s"GraftCatalog: INSERT batch drifts from the mapped table " +
-                    s"schema — missing=${missing.mkString("[", ",", "]")} " +
-                    s"extra=${extra.mkString("[", ",", "]")} " +
-                    s"retyped=${retyped.mkString("[", ",", "]")}")
+                val drift = SchemaDrift.of(logical, data.schema)
+                require(drift.isEmpty,
+                  s"GraftCatalog: INSERT batch drifts from the mapped table schema — $drift")
                 val parts = math.max(1, math.min(32,
                   data.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt))
                 // generated/identity semantics hold on the mapped insert

@@ -354,7 +354,7 @@ class GraftLogSink(
     val physProject: Option[Seq[(String, String)]] =
       log.currentVersion.flatMap { cur =>
         val mapped = log.columnMapping(cur).map(_._2)
-        val base: Map[String, org.apache.spark.sql.types.DataType] = mapped match {
+        val base: Seq[org.apache.spark.sql.types.StructField] = mapped match {
           case Some(pairs) =>
             // declared widenings ride the pinned scan (mappedSchemas
             // reports the WIDENED logical types, so enforcement expects
@@ -367,20 +367,15 @@ class GraftLogSink(
               new File(log.dataRootPath, p).toString)
             val (_, logical, _) = GraftCatalog.mappedSchemas(
               data.sparkSession, log, cur, pairs, paths)
-            logical.map(f => f.name -> f.dataType).toMap
+            logical
           case None => log.read(data.sparkSession, cur).schema
-            .map(f => f.name -> f.dataType).toMap
         }
         // the CDC delete indicator is a control column, not payload —
         // never part of the destination schema, so the drift check and
         // the mapped translation both look straight through it
-        val batchT = data.schema.map(f => f.name -> f.dataType).toMap --
-          deleteIndicator
-        val missing = (base.keySet -- batchT.keySet).toSeq.sorted
-        val extra = (batchT.keySet -- base.keySet).toSeq.sorted
-        val retyped = base.keySet.intersect(batchT.keySet).toSeq.sorted
-          .filter(c => base(c) != batchT(c))
-        if (mergeSchema && mapped.isEmpty && retyped.isEmpty && extra.nonEmpty) {
+        val drift = SchemaDrift.of(base,
+          data.schema.filterNot(f => deleteIndicator.contains(f.name)))
+        if (mergeSchema && mapped.isEmpty && drift.retyped.isEmpty && drift.extra.nonEmpty) {
           // evolve-on-write: the new columns land as one metadata-only
           // commit BEFORE the batch (schema first, data second — a crash
           // between leaves only the benign widened schema)
@@ -388,20 +383,17 @@ class GraftLogSink(
             s"graft-log sink: mergeSchema needs ${log.root}'s declared " +
               "schema (create the table first) — evolving a derived " +
               "schema would be guesswork")
-          val fields = data.schema.fields.filter(f => extra.contains(f.name))
+          val fields = data.schema.fields.filter(f => drift.extra.contains(f.name))
           log.withOccRetry()(
             log.addColumns(data.sparkSession, fields.toSeq.map(f => (f.name, f.dataType))))
           ()
         } else
-          require((missing.isEmpty || (mergeSchema && mapped.isEmpty)) &&
-              extra.isEmpty && retyped.isEmpty,
-            s"graft-log sink: batch $batchId drifts from the table schema at " +
-              s"v$cur — missing=${missing.mkString("[", ",", "]")} " +
-              s"extra=${extra.mkString("[", ",", "]")} " +
-              s"retyped=${retyped.mkString("[", ",", "]")}" +
+          require((drift.missing.isEmpty || (mergeSchema && mapped.isEmpty)) &&
+              drift.extra.isEmpty && drift.retyped.isEmpty,
+            s"graft-log sink: batch $batchId drifts from the table schema at v$cur — $drift" +
               (if (mergeSchema) "" else "; set .option(\"mergeSchema\", " +
                 "\"true\") to evolve the destination from the batch"))
-        mapped.map(_.filter { case (l, _) => base.contains(l) })
+        mapped.map(_.filter { case (l, _) => base.exists(_.name == l) })
       }
     // GENERATED/IDENTITY column semantics hold on the streaming path
     // too: generated columns fold in compute-when-NULL / enforce-else

@@ -7,6 +7,7 @@ import java.nio.file.{FileAlreadyExistsException, Files}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructField}
 
 /** A concurrent writer lost the commit race: the target manifest version
   * already exists. The loser must re-read the new current snapshot,
@@ -1023,19 +1024,9 @@ class SnapshotLog(
     currentVersion match {
       case None => append(df, partitions)
       case Some(cur) =>
-        val spark = df.sparkSession
-        val base = read(spark, cur).schema.map(f => f.name -> f.dataType).toMap
-        val batch = df.schema.map(f => f.name -> f.dataType).toMap
-        val missing = (base.keySet -- batch.keySet).toSeq.sorted
-        val extra = (batch.keySet -- base.keySet).toSeq.sorted
-        val retyped = base.keySet.intersect(batch.keySet).toSeq.sorted
-          .filter(c => base(c) != batch(c))
-          .map(c => s"$c: ${base(c).simpleString} -> ${batch(c).simpleString}")
-        require(missing.isEmpty && extra.isEmpty && retyped.isEmpty,
-          s"appendStrict: batch schema drifts from v$cur — " +
-            s"missing=${missing.mkString("[", ",", "]")} " +
-            s"extra=${extra.mkString("[", ",", "]")} " +
-            s"retyped=${retyped.mkString("[", ",", "]")}; " +
+        val drift = SchemaDrift.of(read(df.sparkSession, cur).schema, df.schema)
+        require(drift.isEmpty,
+          s"appendStrict: batch schema drifts from v$cur — $drift; " +
             "use append() if evolution is intended")
         append(df, partitions)
     }
@@ -1086,17 +1077,8 @@ class SnapshotLog(
     val spark = data.sparkSession
     val cur = currentVersion.getOrElse(
       throw new IllegalStateException(s"copyIngest: no committed snapshot at $root"))
-    val base = read(spark, cur).schema.map(f => f.name -> f.dataType).toMap
-    val batch = data.schema.map(f => f.name -> f.dataType).toMap
-    val missing = (base.keySet -- batch.keySet).toSeq.sorted
-    val extra = (batch.keySet -- base.keySet).toSeq.sorted
-    val retyped = base.keySet.intersect(batch.keySet).toSeq.sorted
-      .filter(c => base(c) != batch(c))
-    require(missing.isEmpty && extra.isEmpty && retyped.isEmpty,
-      s"copyIngest: source schema drifts from v$cur — " +
-        s"missing=${missing.mkString("[", ",", "]")} " +
-        s"extra=${extra.mkString("[", ",", "]")} " +
-        s"retyped=${retyped.mkString("[", ",", "]")}")
+    val drift = SchemaDrift.of(read(spark, cur).schema, data.schema)
+    require(drift.isEmpty, s"copyIngest: source schema drifts from v$cur — $drift")
     // stage the ledger (invisible until the meta line references it)
     import spark.implicits._
     val id = java.util.UUID.randomUUID().toString
@@ -1152,16 +1134,8 @@ class SnapshotLog(
     val ds = scanSchema(cur).getOrElse(throw new IllegalStateException(
       s"copyIngestMapped: $root uses column mapping without a declared schema"))
     val live = pairs.map(_._2)
-    require(data.columns.toSeq.sorted == live.sorted,
-      s"copyIngestMapped: source schema drifts from v$cur — " +
-        s"batch=${data.columns.toSeq.sorted.mkString("[", ",", "]")} " +
-        s"live physical=${live.sorted.mkString("[", ",", "]")}")
-    val liveT = ds.filter(f => live.contains(f.name))
-      .map(f => f.name -> f.dataType).toMap
-    val retyped = data.schema.filter(f => liveT.get(f.name).exists(_ != f.dataType))
-      .map(f => s"${f.name}: ${liveT(f.name).simpleString} -> ${f.dataType.simpleString}")
-    require(retyped.isEmpty,
-      s"copyIngestMapped: retyped column(s) ${retyped.mkString("[", ",", "]")}")
+    val drift = SchemaDrift.of(ds.filter(f => live.contains(f.name)), data.schema)
+    require(drift.isEmpty, s"copyIngestMapped: source schema drifts from v$cur — $drift")
     import spark.implicits._
     val id = java.util.UUID.randomUUID().toString
     val ledgerDir = new File(dataDir, s"_copyledger/$id")
@@ -1201,13 +1175,9 @@ class SnapshotLog(
       throw new IllegalStateException(s"copyIngestIdentity: no committed snapshot at $root"))
     require(data.columns.contains(idCol),
       s"copyIngestIdentity: identity column $idCol not in the batch")
-    val base = read(spark, cur).schema.map(f => f.name -> f.dataType).toMap
-    val batch = data.schema.map(f => f.name -> f.dataType).toMap
-    require(base.keySet == batch.keySet &&
-        base.forall { case (c, t) => c == idCol || batch(c) == t },
-      s"copyIngestIdentity: source schema drifts from v$cur — " +
-        s"missing=${(base.keySet -- batch.keySet).toSeq.sorted.mkString("[", ",", "]")} " +
-        s"extra=${(batch.keySet -- base.keySet).toSeq.sorted.mkString("[", ",", "]")}")
+    val drift = SchemaDrift.of(read(spark, cur).schema, data.schema)
+    require(drift.sameColumnsBut(idCol),
+      s"copyIngestIdentity: source schema drifts from v$cur — $drift")
     val baseCols = read(spark, cur).columns.toSeq
     val src = data.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
@@ -1276,17 +1246,9 @@ class SnapshotLog(
   def appendArrangedStrictStats(df: DataFrame): Long = {
     val spark = df.sparkSession
     currentVersion.foreach { cur =>
-      val base = read(spark, cur).schema.map(f => f.name -> f.dataType).toMap
-      val batch = df.schema.map(f => f.name -> f.dataType).toMap
-      val missing = (base.keySet -- batch.keySet).toSeq.sorted
-      val extra = (batch.keySet -- base.keySet).toSeq.sorted
-      val retyped = base.keySet.intersect(batch.keySet).toSeq.sorted
-        .filter(c => base(c) != batch(c))
-      require(missing.isEmpty && extra.isEmpty && retyped.isEmpty,
-        s"appendArrangedStrictStats: batch schema drifts from v$cur — " +
-          s"missing=${missing.mkString("[", ",", "]")} " +
-          s"extra=${extra.mkString("[", ",", "]")} " +
-          s"retyped=${retyped.mkString("[", ",", "]")}")
+      val drift = SchemaDrift.of(read(spark, cur).schema, df.schema)
+      require(drift.isEmpty,
+        s"appendArrangedStrictStats: batch schema drifts from v$cur — $drift")
     }
     val cur = currentVersion
     val staged = stageArranged(df)
@@ -2341,16 +2303,8 @@ class SnapshotLog(
       case None => read(spark, cur).schema
     }
     val baseCols = baseSchema.fieldNames.toSeq
-    val baseT = baseSchema.map(f => f.name -> f.dataType).toMap
-    val batchT = df.schema.map(f => f.name -> f.dataType).toMap
-    val retyped = baseT.keySet.intersect(batchT.keySet).toSeq.sorted
-      .filter(c => baseT(c) != batchT(c))
-      .map(c => s"$c: ${baseT(c).simpleString} -> ${batchT(c).simpleString}")
-    require(df.columns.toSeq.sorted == baseCols.sorted && retyped.isEmpty,
-      s"replaceWhere: batch schema drifts from v$cur — " +
-        s"batch=${df.columns.toSeq.sorted.mkString("[", ",", "]")} " +
-        s"table=${baseCols.sorted.mkString("[", ",", "]")} " +
-        s"retyped=${retyped.mkString("[", ",", "]")}")
+    val drift = SchemaDrift.of(baseSchema, df.schema)
+    require(drift.isEmpty, s"replaceWhere: batch schema drifts from v$cur — $drift")
     // scope guard: NULL counts as outside the scope (only TRUE admits)
     val guarded = df.withColumn(baseCols.head,
       when(coalesce(predicate, lit(false)), col(baseCols.head))
@@ -2368,7 +2322,6 @@ class SnapshotLog(
     val candidates =
       if (dataFiles(cur).isEmpty) Seq.empty[String]
       else statsCandidateFiles(spark, cur, predicate)
-    SnapshotLog.lastReplaceWhereScan = (candidates.size, dataFiles(cur).size)
     val base =
       if (candidates.isEmpty) null
       else readWithPositionsOf(spark, cur, candidates)
@@ -2943,7 +2896,6 @@ class SnapshotLog(
         (if (exact) countDistinct(c(n))
          else approx_count_distinct(c(n), 0.02)).as(s"__ndv_$n"))
     val agged = data.agg(aggs.head, aggs.tail: _*)
-    SnapshotLog.lastAnalyzePlan = agged.queryExecution.executedPlan.toString
     val row = agged.head()
     val rows = row.getLong(0)
     val ndvs = cols.zipWithIndex.map { case (n, i) => (n, row.getLong(i + 1)) }
@@ -3431,13 +3383,9 @@ class SnapshotLog(
     }
     // appendStrict's drift gate (same message shape): evolution through
     // the identity path is never intended
-    val base = read(df.sparkSession, cur).schema.map(f => f.name -> f.dataType).toMap
-    val batch = df.schema.map(f => f.name -> f.dataType).toMap
-    require(base.keySet == batch.keySet &&
-        base.forall { case (c, t) => c == idCol || batch(c) == t },
-      s"appendIdentityStats: batch schema drifts from v$cur — " +
-        s"missing=${(base.keySet -- batch.keySet).toSeq.sorted.mkString("[", ",", "]")} " +
-        s"extra=${(batch.keySet -- base.keySet).toSeq.sorted.mkString("[", ",", "]")}")
+    val drift = SchemaDrift.of(read(df.sparkSession, cur).schema, df.schema)
+    require(drift.sameColumnsBut(idCol),
+      s"appendIdentityStats: batch schema drifts from v$cur — $drift")
     val src = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       require(src.where(col(idCol).isNotNull).limit(1).count() == 0L,
@@ -4663,26 +4611,14 @@ class SnapshotLog(
     // ledger stages referenced by no retained version (aborted COPY INTO
     // attempts) are an unbounded on-disk leak without this sweep
     val deadLedgers = orphanLedgerDirs(liveLedgers)
-    deadLedgers.foreach { d =>
-      def rm(f: File): Unit = {
-        if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-        f.delete(); ()
-      }
-      rm(d)
-    }
+    deadLedgers.foreach(d => graft.streaming.StreamingSessionize.deleteTree(d.toPath))
     // a write dir with no DATA parquet left holds only markers/sidecars —
     // clear it so the data tree shrinks with the snapshots
     writeDirs.foreach { d =>
       val remaining = Option(d.listFiles()).getOrElse(Array.empty)
       if (!remaining.exists(f => f.getName.endsWith(".parquet") &&
-          !f.getName.startsWith(".") && !f.getName.startsWith("_"))) {
-        def rm(f: File): Unit = {
-          if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-          f.delete(); ()
-        }
-        remaining.foreach(rm)
-        d.delete()
-      }
+          !f.getName.startsWith(".") && !f.getName.startsWith("_")))
+        graft.streaming.StreamingSessionize.deleteTree(d.toPath)
     }
     orphans ++ deadLedgers.map(d => s"data/_copyledger/${d.getName}")
   }
@@ -4695,29 +4631,49 @@ class SnapshotLog(
     val canonical = new File(root).getCanonicalFile
     require(canonical.getPath.split('/').contains("target"),
       s"refusing to wipe a snapshot log outside a target/ scratch dir: $canonical")
-    def rm(f: File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-      f.delete(); ()
-    }
-    if (canonical.exists()) rm(canonical)
+    graft.streaming.StreamingSessionize.deleteTree(canonical.toPath)
     canonical.mkdirs()
     ()
   }
 }
 
+/** The column diff of a write batch against its table: the table's
+  * columns `missing` from the batch, the batch's `extra` columns, and the
+  * shared columns `retyped` as (name, table type, batch type), each sorted
+  * by name. Every schema gate computes it here and keeps its own accept
+  * rule and message prefix; `toString` renders the diff for the refusal.
+  */
+private[graft] final case class SchemaDrift(
+    missing: Seq[String], extra: Seq[String], retyped: Seq[(String, DataType, DataType)]) {
+  def isEmpty: Boolean = missing.isEmpty && extra.isEmpty && retyped.isEmpty
+
+  /** Same columns, and only `col` may differ in type (an identity column
+    * the batch carries as NULL).
+    */
+  def sameColumnsBut(col: String): Boolean =
+    missing.isEmpty && extra.isEmpty && retyped.forall(_._1 == col)
+
+  override def toString: String = {
+    val re = retyped.map { case (c, t, b) => s"$c: ${t.simpleString} -> ${b.simpleString}" }
+    Seq("missing" -> missing, "extra" -> extra, "retyped" -> re)
+      .map { case (k, v) => v.mkString(s"$k=[", ",", "]") }.mkString(" ")
+  }
+}
+
+private[graft] object SchemaDrift {
+  def of(table: Seq[StructField], batch: Seq[StructField]): SchemaDrift = {
+    val t = table.map(f => f.name -> f.dataType).toMap
+    val b = batch.map(f => f.name -> f.dataType).toMap
+    SchemaDrift(
+      (t.keySet -- b.keySet).toSeq.sorted,
+      (b.keySet -- t.keySet).toSeq.sorted,
+      t.keySet.intersect(b.keySet).toSeq.sorted.collect {
+        case c if t(c) != b(c) => (c, t(c), b(c))
+      })
+  }
+}
+
 object SnapshotLog {
-
-  /** Test probe: executed-plan string of the most recent [[analyze]]
-    * aggregation — lets a spec pin the single-pass (no Expand) shape of
-    * the approximate-NDV route without widening the signature.
-    */
-  @volatile private[graft] var lastAnalyzePlan: String = ""
-
-  /** Test probe: (candidateFiles, totalFiles) of the most recent
-    * [[SnapshotLog.replaceWhere]] discovery scan — lets a spec pin that
-    * out-of-scope files were never read, without widening the receipt.
-    */
-  @volatile private[graft] var lastReplaceWhereScan: (Int, Int) = (0, 0)
 
   /** Orphan collection over a SHARED data pool: the union of every
     * chain's live set protects a file if ANY ref (parent or branch)

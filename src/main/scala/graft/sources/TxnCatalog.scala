@@ -176,11 +176,7 @@ class TxnCatalog(val root: String, val tables: Map[String, SnapshotLog]) {
     val canonical = new File(root).getCanonicalFile
     require(canonical.getPath.split('/').contains("target"),
       s"refusing to wipe a txn catalog outside a target/ scratch dir: $canonical")
-    def rm(f: File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-      f.delete(); ()
-    }
-    if (canonical.exists()) rm(canonical)
+    graft.streaming.StreamingSessionize.deleteTree(canonical.toPath)
     canonical.mkdirs()
     ()
   }

@@ -6,6 +6,8 @@ import java.nio.file.attribute.FileTime
 import scala.jdk.CollectionConverters._
 import scala.util.Try
 
+import graft.obs.Trace
+
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -127,6 +129,12 @@ object StreamingSessionize {
       .getOrElse(sys.error(s"no parquet part written under $stage"))
   }
 
+  /** Write `df` as ONE parquet file at `dest`, staged under a temp root. */
+  private[graft] def writeOneFile(df: DataFrame, dest: Path): Unit =
+    withTempRoot("graft_one_file_") { tmp =>
+      Files.move(stageSlice(df, tmp.resolve("w")), dest); ()
+    }
+
   /** Move a staged slice file into `streamDir` as `part_<i>`, mtime pinned. */
   private def publishSlice(staged: Path, streamDir: Path, i: Int): Unit = {
     val dest = streamDir.resolve(f"part_$i%03d.parquet")
@@ -194,36 +202,16 @@ object StreamingSessionize {
         .parquet(streamDir.toString))
     }
 
-  /** Test probe: per-trigger state-operator metrics of the most recent
-    * replay drain — `(numRowsTotal, numRowsRemoved,
-    * numRowsDroppedByWatermark)` summed across the trigger's state
-    * operators, one entry per progress that ran one. Captured before
-    * `stop()` so specs can pin MEASURED state-boundedness — eviction
-    * actually fired, the sentinel advance actually drained the state, and
-    * batch parity was not bought by watermark drops — instead of only
-    * arguing those properties from the derived horizons.
-    */
-  @volatile private[graft] var lastReplayStateMetrics: Seq[(Long, Long, Long)] = Nil
-
-  private def captureStateMetrics(q: StreamingQuery): Unit =
-    lastReplayStateMetrics = q.recentProgress.toSeq
-      .filter(_.stateOperators.nonEmpty)
-      .map { p =>
-        (p.stateOperators.map(_.numRowsTotal).sum,
-          p.stateOperators.map(_.numRowsRemoved).sum,
-          p.stateOperators.map(_.numRowsDroppedByWatermark).sum)
-      }
-
   /** The one replay drain: start the query under the replay's state
     * partitions ([[withReplayStatePartitions]]), process everything
-    * available, record [[lastReplayStateMetrics]], and stop the query in
-    * `finally`, so a failed drain never leaves it running.
+    * available, and stop the query in `finally`, so a failed drain never
+    * leaves it running. A drain's per-trigger state metrics are read from
+    * its progress under [[graft.obs.Trace.capture]].
     */
   private[graft] def drain(spark: SparkSession)(start: => StreamingQuery): Unit =
     withReplayStatePartitions(spark) {
       val q = start
-      try { q.processAllAvailable(); captureStateMetrics(q) }
-      finally q.stop()
+      try q.processAllAvailable() finally q.stop()
     }
 
   /** [[drain]] `out` into the memory sink `queryName`; returns the sink table. */
@@ -442,16 +430,19 @@ object StreamingSessionize {
     // filtered sentinels would then never advance it
     val slices = Seq(onTime, marker(sentinelSec), late,
       marker(sentinelSec + 60L), marker(sentinelSec + 120L))
-    val sink = replaySlices("graft_stream_lateaudit_", slices) { src =>
-      drainToMemory(src()
-        .withWatermark("ts", s"$watermarkDelaySec seconds")
-        .groupBy(window(col("ts"), "1 hour"))
-        .agg(count(lit(1)).as("n_events"), sum(col("user_id")).as("sum_users"))
-        .select(
-          unix_timestamp(col("window.start")).as("window_start_sec"),
-          col("n_events"), col("sum_users")), queryName)
+    val (sink, trace) = Trace.capture(spark) {
+      replaySlices("graft_stream_lateaudit_", slices) { src =>
+        drainToMemory(src()
+          .withWatermark("ts", s"$watermarkDelaySec seconds")
+          .groupBy(window(col("ts"), "1 hour"))
+          .agg(count(lit(1)).as("n_events"), sum(col("user_id")).as("sum_users"))
+          .select(
+            unix_timestamp(col("window.start")).as("window_start_sec"),
+            col("n_events"), col("sum_users")), queryName)
+      }
     }
-    val dropped = lastReplayStateMetrics.map(_._3).sum
+    val dropped = trace.progressOf(queryName)
+      .flatMap(_.stateOperators).map(_.numRowsDroppedByWatermark).sum
     sink
       .where(col("window_start_sec") < sentinelSec)
       .withColumn("late_rows_present", lit(nLate > 0L))
@@ -775,7 +766,7 @@ object StreamingSessionize {
     * State per key is the OPEN sessions only (windows close and leave state
     * as the watermark passes `last event + gap`); the sentinel pair drives
     * the final advance so every real session flushes before the harness
-    * stops, and [[lastReplayStateMetrics]] records the drain.
+    * stops.
     */
   def sessionWindowReplay(
       events: DataFrame,

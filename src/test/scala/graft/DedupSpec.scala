@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.obs.Trace
 import graft.operators.{Dedup, Similarity}
 
 class DedupSpec extends AnyFunSuite {
@@ -183,46 +184,21 @@ class DedupSpec extends AnyFunSuite {
     import spark.implicits._
     val nodes = Seq(1L, 2L, 3L, 4L, 5L, 6L).toDF("doc_id")
     val pairs = Seq((2L, 5L), (2L, 3L), (4L, 6L)).toDF("doc_a", "doc_b")
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    // distinct SQL execution ids among the group's jobs = number of ACTIONS:
-    // lets the failure message tell "extra action entered the loop" (the r4
-    // regression class) apart from "AQE regrouped stages" (job count moves,
-    // action count doesn't)
-    val executions = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
     // suites share the session and may run in parallel: count only THIS
     // call's jobs via a job group (setJobGroup is thread-local, and the
     // components loop's actions all run on the calling thread)
     val group = "dedupspec-cc-job-pin"
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        // properties is nullable (jobs submitted without local properties,
-        // e.g. from concurrently running suites) — an NPE here is swallowed
-        // by the listener bus but corrupts the count
-        val p = js.properties
-        if (p != null && group == p.getProperty("spark.jobGroup.id")) {
-          jobs.incrementAndGet()
-          // AQE sub-executions carry their own execution.id (SPARK-41752);
-          // the ROOT id groups them back to the driving action
-          Option(Option(p.getProperty("spark.sql.execution.root.id"))
-              .getOrElse(p.getProperty("spark.sql.execution.id")))
-            .foreach(executions.add)
-        }
-        ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    val rounds = try {
+    val ((_, rounds), trace) = Trace.capture(spark) {
       spark.sparkContext.setJobGroup(group, "cc job pin")
-      val (_, r) = try Dedup.connectedComponentsWithRounds(nodes, pairs)
+      try Dedup.connectedComponentsWithRounds(nodes, pairs)
       finally spark.sparkContext.clearJobGroup()
-      // listener events are delivered async: poll until the count is stable
-      var last = -1
-      var ticks = 0
-      while (jobs.get() != last && ticks < 50) {
-        last = jobs.get(); Thread.sleep(100); ticks += 1
-      }
-      r
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    val jobs = trace.jobs.filter(_.group.contains(group))
+    // distinct root SQL execution ids among the group's jobs = number of
+    // ACTIONS: lets the failure message tell "extra action entered the loop"
+    // (the r4 regression class) apart from "AQE regrouped stages" (job count
+    // moves, action count doesn't)
+    val executions = jobs.flatMap(_.rootExecutionId).distinct
     assert(rounds == 2)
     // Each round runs EXACTLY ONE action (the convergence agg, which also
     // materializes the round's lazy local checkpoint); AQE splits that
@@ -247,8 +223,8 @@ class DedupSpec extends AnyFunSuite {
     assert(executions.size == expectedExecutions,
       s"components fixture ran ${executions.size} job-running actions, pinned $expectedExecutions — " +
         "an extra action entered the loop (the r4 regression class)")
-    assert(jobs.get() == expected,
-      s"components fixture ran ${jobs.get()} jobs across ${executions.size} actions, pinned $expected — " +
+    assert(jobs.size == expected,
+      s"components fixture ran ${jobs.size} jobs across ${executions.size} actions, pinned $expected — " +
         "action count is still one-per-round, so this is AQE stage regrouping (Spark upgrade/conf?); " +
         "investigate before re-pinning")
   }

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.obs.Trace
 import graft.operators.GraphRank
 
 /** Integer PageRank: hand-computed fixtures verify every floor-division
@@ -150,33 +151,14 @@ class GraphRankSpec extends AnyFunSuite {
     // they match exactly (2 counts + the collect, plus any lazy-checkpoint
     // materializations, all of which are per-RUN, never per-seed).
     def actionsFor(seeds: Seq[Long], group: String): Int = {
-      val executions = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          val p = js.properties
-          if (p != null && group == p.getProperty("spark.jobGroup.id")) {
-            Option(Option(p.getProperty("spark.sql.execution.root.id"))
-                .getOrElse(p.getProperty("spark.sql.execution.id")))
-              .foreach(executions.add)
-          }
-          ()
-        }
-      }
-      spark.sparkContext.addSparkListener(listener)
-      try {
+      val (_, trace) = Trace.capture(spark) {
         spark.sparkContext.setJobGroup(group, "multi-ppr action pin")
         try {
           GraphRank.personalizedPagerankMulti(bridgedPairs, seeds, iters = 2,
             scale = 1000000L).collect()
         } finally spark.sparkContext.clearJobGroup()
-        // listener events are async: poll until stable
-        var last = -1
-        var ticks = 0
-        while (executions.size != last && ticks < 50) {
-          last = executions.size; Thread.sleep(100); ticks += 1
-        }
-        executions.size
-      } finally spark.sparkContext.removeSparkListener(listener)
+      }
+      trace.jobs.filter(_.group.contains(group)).flatMap(_.rootExecutionId).distinct.size
     }
     val one = actionsFor(Seq(1L), "graphrank-multi-pin-s1")
     val three = actionsFor(Seq(1L, 4L, 6L), "graphrank-multi-pin-s3")

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.obs.{Trace, TraceSpec}
 import graft.operators.Layout
 
 class LayoutSpec extends AnyFunSuite {
@@ -155,42 +156,29 @@ class LayoutSpec extends AnyFunSuite {
   }
 
   test("manifest-driven scan: the file selection prunes at the PARTITION level") {
-    // run the declared query (it writes the layout, plans the selected
-    // read, and sets the probe) at the spec's SF
-    val r = SparkEntry.queries("zorder_manifest_scan")(spark, SparkTestSession.SfDir)
-      .collect()
+    // run the declared query (it writes the layout, fetches the manifest,
+    // and reads the selected files back) at the spec's SF
+    val (r, trace) = Trace.capture(spark)(
+      SparkEntry.queries("zorder_manifest_scan")(spark, SparkTestSession.SfDir).collect())
     assert(r.length == 1)
     val row = r.head
     assert(row.getLong(1) < row.getLong(0),
       s"the box predicate must skip files: scanned ${row.getLong(1)} of ${row.getLong(0)}")
-    val p = graft.operators.Layout.lastManifestScanPlan
-    assert(p.contains("PartitionFilters") && p.contains("file_id"),
-      s"the manifest selection must prune file_id directories, not rows:\n$p")
+    // the selected read is the one scan filtering file_id directories
+    val selected = trace.statements.flatMap(st => TraceSpec.fileScans(st.qe.executedPlan))
+      .filter(_.partitionFilters.exists(_.references.exists(_.name == "file_id")))
+    assert(selected.size == 1, "the manifest selection must prune file_id directories, " +
+      s"not rows:\n${trace.plans.mkString("\n")}")
   }
 
   test("writeLayout: Spark's pushed filters actually skip row groups when reading back") {
     val (zp, lp) = writeBoth()
-    val read = new java.util.concurrent.atomic.AtomicLong()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (t.taskMetrics != null) read.addAndGet(t.taskMetrics.inputMetrics.recordsRead)
-    }
     def recordsRead(p: String): Long = {
-      spark.sparkContext.addSparkListener(listener)
-      try {
-        read.set(0L)
-        val n = spark.read.parquet(p)
-          .where(col("x").between(bxLo, bxHi) && col("y").between(byLo, byHi))
-          .count()
-        assert(n == 64L, "predicate result must be layout-invariant")
-        // listener events drain asynchronously — wait for the adds to land
-        val deadline = System.nanoTime() + 10e9.toLong
-        var last = -1L
-        while (System.nanoTime() < deadline && read.get() != last) {
-          last = read.get(); Thread.sleep(200)
-        }
-        read.get()
-      } finally spark.sparkContext.removeSparkListener(listener)
+      val (n, trace) = Trace.capture(spark)(spark.read.parquet(p)
+        .where(col("x").between(bxLo, bxHi) && col("y").between(byLo, byHi))
+        .count())
+      assert(n == 64L, "predicate result must be layout-invariant")
+      trace.taskInputRecords.sum
     }
     val (zRead, lRead) = (recordsRead(zp), recordsRead(lp))
     // z-order reads one 64-row file; linear reads four 64-row stripes. Allow

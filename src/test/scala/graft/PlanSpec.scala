@@ -2,6 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.obs.{Trace, TraceSpec}
+
 /** Physical-plan shape assertions — the 100 TB contract is in the PLAN, not
   * the row counts: filters must reach the parquet scan, small dims must
   * broadcast, the sessionize pipeline must shuffle exactly once, and the
@@ -246,13 +248,16 @@ class PlanSpec extends AnyFunSuite {
   test("kmeans loop reads the persisted working set (InMemoryTableScan)") {
     // r6 finding: the normalize+filter working set was rescanned every
     // iteration (iters + 2 input scans). The persist is load-bearing at
-    // 100 TB — pin that the M-step plan reads the cache.
-    graft.operators.Similarity.lastKmeansLoopPlan = ""
-    SparkEntry.queries("kmeans_clusters")(spark, SfDir).collect()
-    val p = graft.operators.Similarity.lastKmeansLoopPlan
-    assert(p.nonEmpty, "kmeans did not record its loop plan")
-    assert(p.contains("InMemoryTableScan"),
-      s"M-step must read the persisted working set, not rescan the input:\n$p")
+    // 100 TB — pin that every M-step plan (the `vsum` aggregations) reads the cache.
+    val (_, trace) = Trace.capture(spark)(
+      SparkEntry.queries("kmeans_clusters")(spark, SfDir).collect())
+    val mSteps = trace.statements.filter(_.qe.analyzed.toString.contains("vsum"))
+      .map(_.qe.executedPlan.toString)
+    assert(mSteps.nonEmpty, "kmeans ran no M-step")
+    mSteps.foreach { p =>
+      assert(p.contains("InMemoryTableScan"),
+        s"M-step must read the persisted working set, not rescan the input:\n$p")
+    }
   }
 
   test("lm_perplexity: model tables broadcast; only the 1-row mean rides a BNLJ") {
@@ -302,11 +307,18 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("cdc_merge_pruned: the base scan is PARTITION-pruned to the touched partition") {
-    // run the query (it executes the pruned merge and sets the probe)
-    SparkEntry.queries("cdc_merge_pruned")(spark, SfDir).collect()
-    val p = graft.operators.Cdc.lastPrunedMergePlan
-    assert(p.contains("PartitionFilters") && p.contains("1-URGENT"),
-      s"the touched-partition predicate must prune at the partition level, not the row level:\n$p")
+    // run the query; its one partitioned write is the pruned merge, and
+    // every scan under it (base and change batch) must be partition-pruned
+    val (_, trace) = Trace.capture(spark)(
+      SparkEntry.queries("cdc_merge_pruned")(spark, SfDir).collect())
+    val merge = trace.statements.map(_.qe.executedPlan)
+      .filter(_.toString.contains("InsertIntoHadoopFsRelationCommand"))
+      .filter(_.toString.contains("1-URGENT"))
+    assert(merge.size == 1, trace.plans.mkString("\n"))
+    val scans = TraceSpec.fileScans(merge.head)
+    assert(scans.nonEmpty && scans.forall(_.partitionFilters.mkString.contains("1-URGENT")),
+      "the touched-partition predicate must prune at the partition level, not the row " +
+        s"level:\n${merge.head}")
   }
 
   test("final-r7 batch queries: equi-joins only — no cartesian, scalar BNLJs bounded") {
@@ -470,16 +482,20 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("join_dpp_prune: the runtime day-set reaches the fact scan as a dynamicpruning filter") {
-    plan("join_dpp_prune") // runs the builder, which captures its own plan
-    val p = QueriesEtl.lastDppPlan
+    val (_, trace) = Trace.capture(spark)(
+      SparkEntry.queries("join_dpp_prune")(spark, SfDir).collect())
+    val p = trace.plans.mkString("\n")
     assert(p.contains("dynamicpruning"),
       s"fact scan must carry a dynamic partition pruning subquery:\n$p")
     assert(!p.contains("CartesianProduct"), s"cartesian in dpp plan:\n$p")
   }
 
   test("agg_pushdown_stats: COUNT/MIN/MAX answered from parquet footers, not row scans") {
-    plan("agg_pushdown_stats")
-    val p = QueriesEtl.lastAggPushdownPlan
+    // the builder plans its frame inside its conf window; the frame's own
+    // execution must run that plan
+    val (_, trace) = Trace.capture(spark)(
+      SparkEntry.queries("agg_pushdown_stats")(spark, SfDir).collect())
+    val p = trace.plans.mkString("\n")
     assert(p.contains("PushedAggregation"),
       s"v2 parquet scan must push the aggregates to footer statistics:\n$p")
   }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.obs.{Trace, TraceSpec}
 import graft.sources.SnapshotLog
 
 /** r11 snapshot-log surface: column mapping (RENAME/DROP as metadata
@@ -327,18 +328,18 @@ class SnapshotDmlSpec extends AnyFunSuite {
       .repartitionByRange(3, col("k")).sortWithinPartitions(col("k")),
       Seq("k"))
     val filesBefore = log.dataFiles(log.currentVersion.get).toSet
-    val (v1, (nDel, nIns)) = log.replaceWhere(spark,
+    val ((v1, (nDel, nIns)), trace) = Trace.capture(spark)(log.replaceWhere(spark,
       (100L until 150L).map(i => (i, i * 10)).toDF("k", "v"),
-      col("k").between(100, 199))
+      col("k").between(100, 199)))
     assert((nDel, nIns) == (100L, 50L), s"got ($nDel, $nIns)")
     // the discovery scan was STATS-PRUNED: of the three range-clustered
     // files only [100,199] intersects the predicate — out-of-scope files
     // are never read, not merely never rewritten
-    assert(graft.sources.SnapshotLog.lastReplaceWhereScan == ((1, 3)),
-      s"expected a (1 of 3)-file discovery scan, got " +
-        graft.sources.SnapshotLog.lastReplaceWhereScan)
-    // the two un-grazed files are carried byte-identical
     val filesAfter = log.dataFiles(v1).toSet
+    val grazed = filesBefore -- filesAfter
+    val read = TraceSpec.filesRead(trace, filesBefore)
+    assert(grazed.size == 1 && read == grazed, s"read $read of the table's files, grazed $grazed")
+    // the two un-grazed files are carried byte-identical
     assert(filesBefore.intersect(filesAfter).size == 2,
       s"expected 2 carried files, got ${filesBefore.intersect(filesAfter).size}")
     val got = log.read(spark, v1).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap

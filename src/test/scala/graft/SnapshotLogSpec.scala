@@ -753,13 +753,9 @@ class SnapshotLogSpec extends AnyFunSuite {
     val log = freshLog("ledger_sweep")
     log.append(rows(10, "a"), partitions = 1)
     // a real COPY ledger, referenced from the commit's meta
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ledger_src_")
-    val f = tmp.resolve("x.parquet").toFile
-    rows(3, "cp").coalesce(1).write.mode("overwrite")
-      .parquet(tmp.resolve("w").toString)
-    val part = new File(tmp.resolve("w").toString).listFiles()
-      .find(x => x.getName.endsWith(".parquet") && !x.getName.startsWith(".")).get
-    java.nio.file.Files.move(part.toPath, f.toPath)
+    val f = java.nio.file.Files.createTempDirectory("graft_ledger_src_")
+      .resolve("x.parquet").toFile
+    graft.streaming.StreamingSessionize.writeOneFile(rows(3, "cp"), f.toPath)
     log.copyIngest(Seq((f.getCanonicalPath, f.length(), f.lastModified())),
       spark.read.parquet(f.toString), partitions = 1)
     val ledgerPool = new File(log.root, "data/_copyledger")

@@ -3,7 +3,9 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.obs.{Trace, TraceSpec}
 import graft.sources.{GraftCatalog, SnapshotLog}
+import graft.streaming.StreamingSessionize
 
 /** DSv2 SQL addressability of snapshot-log tables ([[GraftCatalog]]):
   * `SELECT … FROM graftsnap.t` with `VERSION AS OF` / `TIMESTAMP AS OF`
@@ -429,8 +431,8 @@ class SnapshotSqlSpec extends AnyFunSuite {
     spark.sql("DROP TABLE IF EXISTS graftsnap.anl")
     spark.sql("CREATE TABLE graftsnap.anl (id BIGINT, grp STRING)")
     spark.sql("INSERT INTO graftsnap.anl SELECT id, concat('g', id % 7) AS grp FROM range(500)")
-    val r = spark.sql(
-      "ANALYZE TABLE graftsnap.anl COMPUTE STATISTICS FOR COLUMNS id, grp").head()
+    val analyzeSql = "ANALYZE TABLE graftsnap.anl COMPUTE STATISTICS FOR COLUMNS id, grp"
+    val (r, trace) = Trace.capture(spark)(spark.sql(analyzeSql).head())
     assert(r.getLong(1) == 500L && r.getString(2) == "id,grp", r.toString)
     val log = new SnapshotLog(s"$root/anl")
     val (rows, ndvs) = log.tableStats(log.currentVersion.get).get
@@ -441,14 +443,16 @@ class SnapshotSqlSpec extends AnyFunSuite {
       math.abs(approx - exact).toDouble / exact <= 0.05
     assert(rows == 500L && close(ndvs("id"), 500L) && close(ndvs("grp"), 7L),
       ndvs.toString)
-    assert(!SnapshotLog.lastAnalyzePlan.contains("Expand"),
-      s"approx ANALYZE must plan single-pass, no Expand:\n${SnapshotLog.lastAnalyzePlan}")
+    assert(!trace.plans.exists(_.contains("Expand")),
+      s"approx ANALYZE must plan single-pass, no Expand:\n${trace.plans.mkString("\n")}")
     // the stats carry the analyzed data-state digest (staleness guard)
     assert(log.metaValues(log.currentVersion.get).contains("statsstate"))
     // EXACT route stays behind the conf — equality pinned
     spark.conf.set("spark.graft.analyze.exactNdv", "true")
     try {
-      spark.sql("ANALYZE TABLE graftsnap.anl COMPUTE STATISTICS FOR COLUMNS id, grp")
+      // ... and it plans the Expand the default avoids, so the capture sees one
+      val (_, exactTrace) = Trace.capture(spark)(spark.sql(analyzeSql))
+      assert(exactTrace.plans.exists(_.contains("Expand")))
       val (rows2, ndvs2) = log.tableStats(log.currentVersion.get).get
       assert(rows2 == 500L && ndvs2("id") == 500L && ndvs2("grp") == 7L,
         ndvs2.toString)
@@ -460,15 +464,8 @@ class SnapshotSqlSpec extends AnyFunSuite {
     spark.sql("DROP TABLE IF EXISTS graftsnap.cpy")
     spark.sql("CREATE TABLE graftsnap.cpy (id BIGINT, v BIGINT)")
     val srcDir = java.nio.file.Files.createTempDirectory("graft_copy_src_")
-    def drop(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_copy_tmp_")
-      df.coalesce(1).write.mode("overwrite").parquet(tmp.resolve("w").toString)
-      val part = new java.io.File(tmp.resolve("w").toString).listFiles()
-        .find(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("."))
-        .get
-      java.nio.file.Files.move(part.toPath, srcDir.resolve(name))
-      ()
-    }
+    def drop(df: org.apache.spark.sql.DataFrame, name: String): Unit =
+      StreamingSessionize.writeOneFile(df, srcDir.resolve(name))
     drop(spark.range(10).selectExpr("id", "id * 2 AS v"), "a.parquet")
     drop(spark.range(10, 20).selectExpr("id", "id * 2 AS v"), "b.parquet")
     val r1 = spark.sql(
@@ -697,15 +694,8 @@ class SnapshotSqlSpec extends AnyFunSuite {
     spark.sql("DROP TABLE IF EXISTS graftsnap.cpsz")
     spark.sql("CREATE TABLE graftsnap.cpsz (id BIGINT, v BIGINT)")
     val srcDir = java.nio.file.Files.createTempDirectory("graft_cpsz_")
-    def drop(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_cpsz_tmp_")
-      df.coalesce(1).write.mode("overwrite").parquet(tmp.resolve("w").toString)
-      val part = new java.io.File(tmp.resolve("w").toString).listFiles()
-        .find(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("."))
-        .get
-      java.nio.file.Files.move(part.toPath, srcDir.resolve(name))
-      ()
-    }
+    def drop(df: org.apache.spark.sql.DataFrame, name: String): Unit =
+      StreamingSessionize.writeOneFile(df, srcDir.resolve(name))
     (0 until 4).foreach(i => drop(
       spark.range(i * 200000, (i + 1) * 200000).selectExpr("id", "id * 2 AS v"),
       s"f$i.parquet"))
@@ -718,47 +708,29 @@ class SnapshotSqlSpec extends AnyFunSuite {
     // count ACTIONS whose plan scans the source directory: exactly one
     // (the staging write; the r14 shape ran a separate count() first)
     val srcTag = srcDir.getFileName.toString
-    val scans = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      private def scansSource(
-          qe: org.apache.spark.sql.execution.QueryExecution): Boolean =
-        qe.analyzed.collectFirst {
-          case l: org.apache.spark.sql.execution.datasources.LogicalRelation
-              if l.relation.isInstanceOf[
-                org.apache.spark.sql.execution.datasources.HadoopFsRelation] &&
-                l.relation.asInstanceOf[
-                    org.apache.spark.sql.execution.datasources.HadoopFsRelation]
-                  .location.rootPaths.exists(_.toString.contains(srcTag)) => ()
-        }.isDefined
-      override def onSuccess(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          durationNs: Long): Unit =
-        if (scansSource(qe)) { scans.incrementAndGet(); () }
-      override def onFailure(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          exception: Exception): Unit = ()
-    }
-    spark.listenerManager.register(listener)
+    def scansSource(qe: org.apache.spark.sql.execution.QueryExecution): Boolean =
+      qe.analyzed.collectFirst {
+        case l: org.apache.spark.sql.execution.datasources.LogicalRelation
+            if l.relation.isInstanceOf[
+              org.apache.spark.sql.execution.datasources.HadoopFsRelation] &&
+              l.relation.asInstanceOf[
+                  org.apache.spark.sql.execution.datasources.HadoopFsRelation]
+                .location.rootPaths.exists(_.toString.contains(srcTag)) => ()
+      }.isDefined
     try {
-      val r = spark.sql(
-        s"COPY INTO graftsnap.cpsz FROM '$srcDir' FILEFORMAT = PARQUET").head()
+      val (r, trace) = Trace.capture(spark)(spark.sql(
+        s"COPY INTO graftsnap.cpsz FROM '$srcDir' FILEFORMAT = PARQUET").head())
       assert(r.getInt(0) == 4 && r.getLong(1) == 800000L, r.toString)
       val log = new SnapshotLog(s"$root/cpsz")
       val staged = log.appendedFiles(log.currentVersion.get)
       val expected = ((totalBytes + target - 1) / target).toInt
       assert(staged.size == expected,
         s"staged ${staged.size} files, expected ceil(bytes/target) = $expected")
-      // the listener bus is async — poll until the write's event lands
-      var waited = 0
-      while (scans.get() == 0 && waited < 100) { Thread.sleep(100); waited += 1 }
-      Thread.sleep(1000)
-      assert(scans.get() == 1,
-        s"the source must be scanned exactly once, saw ${scans.get()} " +
+      val scans = trace.statements.count(st => scansSource(st.qe))
+      assert(scans == 1,
+        s"the source must be scanned exactly once, saw $scans " +
           "source-scanning actions (count+write would be two)")
-    } finally {
-      spark.listenerManager.unregister(listener)
-      spark.conf.unset("spark.graft.optimize.maxFileSize")
-    }
+    } finally spark.conf.unset("spark.graft.optimize.maxFileSize")
   }
 
   test("generated/identity columns: CREATE-time-fixed, guarded against rename/CTAS, watermark survives reopen") {
@@ -980,17 +952,18 @@ class SnapshotSqlSpec extends AnyFunSuite {
     spark.conf.set("spark.graft.optimize.maxFileSize", "65536")
     try {
       spark.sql("OPTIMIZE graftsnap.rwsql ZORDER BY (k)")
-      val filesBefore = log.dataFiles(log.currentVersion.get).size
-      assert(filesBefore >= 4, s"need a multi-file layout, got $filesBefore")
-      spark.sql(
+      val filesBefore = log.dataFiles(log.currentVersion.get).toSet
+      assert(filesBefore.size >= 4, s"need a multi-file layout, got $filesBefore")
+      val (_, trace) = Trace.capture(spark)(spark.sql(
         "INSERT INTO graftsnap.rwsql REPLACE WHERE k < 1000 " +
           "SELECT id AS k, concat('n-', id) AS note, id * 5 AS v " +
-          "FROM range(0, 1000)")
+          "FROM range(0, 1000)"))
       // the discovery scan was stats-pruned: only the files whose [lo, hi]
       // intersects k < 1000 were read — out-of-scope files never opened
-      val (cands, total) = graft.sources.SnapshotLog.lastReplaceWhereScan
-      assert(total == filesBefore && cands < total,
-        s"expected a pruned discovery scan, got $cands of $total")
+      val grazed = filesBefore -- log.dataFiles(log.currentVersion.get)
+      val read = TraceSpec.filesRead(trace, filesBefore)
+      assert(read.nonEmpty && read.subsetOf(grazed) && grazed.size < filesBefore.size,
+        s"read $read of ${filesBefore.size} files, grazed $grazed")
       assert(spark.sql(
         "SELECT sum(v) AS sv FROM graftsnap.rwsql WHERE k < 1000").head().getLong(0) ==
         (0L until 1000L).map(_ * 5).sum)

@@ -14,6 +14,18 @@ class SparkEntrySpec extends AnyFunSuite {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
+  test("checkpointed, partitioned-copy and COPY INTO queries leave no temp root behind") {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def roots(): Set[String] =
+      Option(tmp.list()).getOrElse(Array.empty[String]).filter(_.startsWith("graft")).toSet
+    val before = roots()
+    Seq("stream_log_pipeline", "cdc_merge_pruned", "snapshot_sql_copy_into").foreach { q =>
+      assert(SparkEntry.queries(q)(spark, SfDir).collect().nonEmpty, q)
+    }
+    val left = roots() -- before
+    assert(left.isEmpty, s"temp roots left behind: $left")
+  }
+
   test("oracle keys are exactly the query keys minus the documented rows-only set") {
     // r7: the two approximate-WAU queries became self-validating (exact count
     // + tolerance boolean), so the rows-only set is now empty — every

@@ -6,6 +6,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.obs.Trace
 import graft.operators.Sessionize
 import graft.streaming.StreamingSessionize
 
@@ -16,6 +17,16 @@ class StreamingSpec extends AnyFunSuite {
   private implicit def sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
 
   private def ts(s: String): Timestamp = Timestamp.valueOf(s)
+
+  /** `(numRowsTotal, numRowsRemoved, numRowsDroppedByWatermark)` summed over
+    * the state operators of each trigger of `queryName` in `trace` that ran one.
+    */
+  private def stateMetrics(trace: Trace, queryName: String): Seq[(Long, Long, Long)] =
+    trace.progressOf(queryName).filter(_.stateOperators.nonEmpty).map { p =>
+      (p.stateOperators.map(_.numRowsTotal).sum,
+        p.stateOperators.map(_.numRowsRemoved).sum,
+        p.stateOperators.map(_.numRowsDroppedByWatermark).sum)
+    }
 
   // (event_id, user_id, ts): user 7 has a 4-min gap (same session) then an
   // 8-min gap (new session) that STRADDLES the trigger cut; user 9 interleaves.
@@ -278,9 +289,9 @@ class StreamingSpec extends AnyFunSuite {
     import spark.implicits._
     val ev = rows.toDF("event_id", "user_id", "sec")
       .select(col("event_id"), col("user_id"), col("sec").cast("timestamp").as("ts"))
-    val got = StreamingSessionize.lateDataAuditReplay(
-      ev, watermarkDelaySec = 600L, queryName = "late_audit_spec_sink")
-      .collect()
+    val (out, trace) = Trace.capture(spark)(StreamingSessionize.lateDataAuditReplay(
+      ev, watermarkDelaySec = 600L, queryName = "late_audit_spec_sink").collect())
+    val got = out
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getBoolean(3), r.getBoolean(4)))
       .sortBy(_._1)
     assert(got.toSeq == Seq(
@@ -289,7 +300,7 @@ class StreamingSpec extends AnyFunSuite {
       (46800L, 1L, 23L, true, true)),
       s"late-audit output diverged: ${got.toSeq}")
     // the metric really counted the dropped first-window partial
-    assert(StreamingSessionize.lastReplayStateMetrics.map(_._3).sum == 1L)
+    assert(stateMetrics(trace, "late_audit_spec_sink").map(_._3).sum == 1L)
   }
 
   test("FULL OUTER stream-stream interval join emits both unmatched sides exactly once") {
@@ -342,11 +353,11 @@ class StreamingSpec extends AnyFunSuite {
 
   test("replay state metrics: eviction measured, sentinel drain empties state, no watermark drops") {
     // State-boundedness has so far been ARGUED from the derived horizons;
-    // these pins MEASURE it from the queries' own state-operator progress
-    // (captured by the replay harnesses before stop()).
+    // these pins MEASURE it from the queries' own state-operator progress.
     val ev = Tables.events(spark, SfDir)
-    StreamingSessionize.intervalJoinReplay(ev, queryName = "ivjoin_metrics_sink")
-    val ij = StreamingSessionize.lastReplayStateMetrics
+    val (_, ijTrace) = Trace.capture(spark)(
+      StreamingSessionize.intervalJoinReplay(ev, queryName = "ivjoin_metrics_sink"))
+    val ij = stateMetrics(ijTrace, "ivjoin_metrics_sink")
     assert(ij.nonEmpty, "interval-join replay recorded no state-operator progress")
     val peak = ij.map(_._1).max
     val fin = ij.last._1
@@ -360,9 +371,9 @@ class StreamingSpec extends AnyFunSuite {
     assert(ij.map(_._3).sum == 0,
       "batch parity must not be bought by watermark-dropped rows")
 
-    StreamingSessionize.rateLimitReplay(
-      ev, maxPerWindow = 2L, windowSec = 3600L, queryName = "ratelimit_metrics_sink")
-    val rl = StreamingSessionize.lastReplayStateMetrics
+    val (_, rlTrace) = Trace.capture(spark)(StreamingSessionize.rateLimitReplay(
+      ev, maxPerWindow = 2L, windowSec = 3600L, queryName = "ratelimit_metrics_sink"))
+    val rl = stateMetrics(rlTrace, "ratelimit_metrics_sink")
     assert(rl.nonEmpty, "rate-limit replay recorded no state-operator progress")
     // after the sentinel advance every real user's windows are past their
     // horizon and their state rows removed; only the sentinel user's own
@@ -375,8 +386,9 @@ class StreamingSpec extends AnyFunSuite {
 
   test("stream-static enrich: broadcast dim join equals batch, sentinels vanish in the join") {
     val ev = Tables.events(spark, SfDir)
-    val got = StreamingSessionize.enrichStaticReplay(ev, queryName = "enrich_spec_sink")
-      .collect().map(r => (r.getDate(0).toString, r.getString(1), r.getLong(2))).toSet
+    val (out, trace) = Trace.capture(spark)(
+      StreamingSessionize.enrichStaticReplay(ev, queryName = "enrich_spec_sink").collect())
+    val got = out.map(r => (r.getDate(0).toString, r.getString(1), r.getLong(2))).toSet
     val np = sum(when(col("event_type") === "purchase", 1L).otherwise(0L))
     val dim = ev.groupBy(col("user_id")).agg(np.as("np"))
       .select(col("user_id"),
@@ -389,20 +401,21 @@ class StreamingSpec extends AnyFunSuite {
     assert(expected.nonEmpty)
     assert(got == expected,
       s"enrich diverged: missing=${(expected -- got).take(3)} extra=${(got -- expected).take(3)}")
-    val m = StreamingSessionize.lastReplayStateMetrics
+    val m = stateMetrics(trace, "enrich_spec_sink")
     assert(m.nonEmpty && m.map(_._3).sum == 0, "no watermark drops expected")
   }
 
   test("chained sliding-window agg: stream equals batch, two stateful stages, drained state") {
     val ev = Tables.events(spark, SfDir)
-    val got = StreamingSessionize.slidingWauReplay(ev, queryName = "slidingwau_spec_sink")
-      .collect().map(r => (r.getDate(0).toString, r.getLong(2))).sortBy(_._1).toSeq
+    val (out, trace) = Trace.capture(spark)(
+      StreamingSessionize.slidingWauReplay(ev, queryName = "slidingwau_spec_sink").collect())
+    val got = out.map(r => (r.getDate(0).toString, r.getLong(2))).sortBy(_._1).toSeq
     val expected = graft.operators.Analytics
       .slidingActiveUsers(ev, "user_id", col("ts"))
       .collect().map(r => (r.getDate(0).toString, r.getLong(2))).sortBy(_._1).toSeq
     assert(expected.nonEmpty)
     assert(got == expected, s"chained streaming agg diverged from batch")
-    val m = StreamingSessionize.lastReplayStateMetrics
+    val m = stateMetrics(trace, "slidingwau_spec_sink")
     assert(m.nonEmpty, "sliding-wau replay recorded no state-operator progress")
     assert(m.map(_._2).sum > 0, "window state was never evicted — bound unexercised")
     assert(m.map(_._3).sum == 0, "parity must not be bought by watermark drops")
@@ -416,8 +429,9 @@ class StreamingSpec extends AnyFunSuite {
   test("sketch rollup replay: one exact-mode daily sketch row per day, drained state, no drops") {
     import graft.functions.ThetaFunctions
     val ev = Tables.events(spark, SfDir)
-    val daily = StreamingSessionize.sketchRollupReplay(ev, queryName = "sketch_spec_sink")
-      .collect().map(r => r.getDate(0).toString -> r.getAs[Array[Byte]](1)).toMap
+    val (out, trace) = Trace.capture(spark)(
+      StreamingSessionize.sketchRollupReplay(ev, queryName = "sketch_spec_sink").collect())
+    val daily = out.map(r => r.getDate(0).toString -> r.getAs[Array[Byte]](1)).toMap
     val expected = ev
       .select(to_date(col("ts")).as("day"), col("user_id"))
       .groupBy(col("day"))
@@ -430,7 +444,7 @@ class StreamingSpec extends AnyFunSuite {
     daily.foreach { case (d, bytes) =>
       assert(java.util.Arrays.equals(bytes, expected(d)), s"day $d sketch bytes diverged")
     }
-    val m = StreamingSessionize.lastReplayStateMetrics
+    val m = stateMetrics(trace, "sketch_spec_sink")
     assert(m.nonEmpty, "sketch replay recorded no state-operator progress")
     assert(m.map(_._2).sum > 0, "daily sketch state was never evicted — bound unexercised")
     assert(m.map(_._3).sum == 0, "parity must not be bought by watermark drops")
@@ -478,10 +492,11 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("sessionize replay records its own state metrics: non-empty, no watermark drops") {
-    // clear the probe first: a previous replay's metrics must not pass for these
-    StreamingSessionize.lastReplayStateMetrics = Nil
-    StreamingSessionize.sessionizeReplay(Tables.events(spark, SfDir), queryName = "probe_spec_sink")
-    val m = StreamingSessionize.lastReplayStateMetrics
+    // a capture holds only its own body's progress: no earlier replay's
+    // metrics can pass for these
+    val (_, trace) = Trace.capture(spark)(StreamingSessionize.sessionizeReplay(
+      Tables.events(spark, SfDir), queryName = "probe_spec_sink"))
+    val m = stateMetrics(trace, "probe_spec_sink")
     assert(m.nonEmpty, "sessionizeReplay recorded no state-operator progress")
     assert(m.map(_._3).sum == 0L, "the time-ranged slices must produce no watermark drops")
   }
