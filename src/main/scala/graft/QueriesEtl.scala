@@ -1785,8 +1785,7 @@ object QueriesEtl {
     // (`mapped_upsert_same_physical`), and the destination holds the
     // latest image per key (`upsert_equals_latest`) ──
     "stream_upsert_mapped" -> ((s, dir) => withTempRoot("graft_um_q_") { ckpt =>
-      s.conf.set("spark.sql.catalog.graftum", classOf[GraftCatalog].getName)
-      s.conf.set("spark.sql.catalog.graftum.root", scratch(dir, "umroot"))
+      GraftCatalog.mount(s, "graftum", scratch(dir, "umroot"))
       s.sql("DROP TABLE IF EXISTS graftum.ord")
       s.sql("CREATE TABLE graftum.ord (k BIGINT, status STRING, cents BIGINT)")
       Tables.orders(s, dir).select(
@@ -2064,8 +2063,7 @@ object QueriesEtl {
     // (`mapped_stream_equals_batch`, exceptAll both ways). Only a
     // mid-stream mapping CHANGE refuses ──
     "stream_from_log_mapped" -> ((s, dir) => {
-      s.conf.set("spark.sql.catalog.graftms", classOf[GraftCatalog].getName)
-      s.conf.set("spark.sql.catalog.graftms.root", scratch(dir, "msroot"))
+      GraftCatalog.mount(s, "graftms", scratch(dir, "msroot"))
       s.sql("DROP TABLE IF EXISTS graftms.ord")
       s.sql("CREATE TABLE graftms.ord (k BIGINT, status STRING, cents BIGINT)")
       Tables.orders(s, dir).select(
@@ -2104,8 +2102,7 @@ object QueriesEtl {
     // compose. Post-widening values exceed INT32 to prove the wide axis
     // is real ──
     "snapshot_sql_dml_widened" -> ((s, dir) => {
-      s.conf.set("spark.sql.catalog.graftdw", classOf[GraftCatalog].getName)
-      s.conf.set("spark.sql.catalog.graftdw.root", scratch(dir, "dwroot"))
+      GraftCatalog.mount(s, "graftdw", scratch(dir, "dwroot"))
       s.sql("DROP TABLE IF EXISTS graftdw.ord")
       s.sql("CREATE TABLE graftdw.ord (k BIGINT, status STRING, cents INT)")
       Tables.orders(s, dir).select(
@@ -2148,8 +2145,7 @@ object QueriesEtl {
     // (`widened_stream_equals_batch`); post-widening values exceed INT32
     // to prove the wide axis is real ──
     "stream_from_log_mapped_widened" -> ((s, dir) => {
-      s.conf.set("spark.sql.catalog.graftwm", classOf[GraftCatalog].getName)
-      s.conf.set("spark.sql.catalog.graftwm.root", scratch(dir, "wmroot"))
+      GraftCatalog.mount(s, "graftwm", scratch(dir, "wmroot"))
       s.sql("DROP TABLE IF EXISTS graftwm.ord")
       s.sql("CREATE TABLE graftwm.ord (k BIGINT, status STRING, cents INT)")
       Tables.orders(s, dir).select(
@@ -2195,8 +2191,7 @@ object QueriesEtl {
     // through the catalog after a compact (the SQL scan's documented
     // mask-free scope) ──
     "snapshot_sql_dml_mapped" -> ((s, dir) => {
-      s.conf.set("spark.sql.catalog.graftdm", classOf[GraftCatalog].getName)
-      s.conf.set("spark.sql.catalog.graftdm.root", scratch(dir, "dmroot"))
+      GraftCatalog.mount(s, "graftdm", scratch(dir, "dmroot"))
       s.sql("DROP TABLE IF EXISTS graftdm.ord")
       s.sql("CREATE TABLE graftdm.ord (k BIGINT, status STRING, cents BIGINT)")
       Tables.orders(s, dir).select(
@@ -3165,8 +3160,7 @@ object QueriesEtl {
         col("o_orderkey"), col("o_orderpriority"),
         floor(col("o_totalprice") * 100).cast("long").as("cents"))
       log.append(base, partitions = 4)
-      s.conf.set("spark.sql.catalog.graftsnap", classOf[GraftCatalog].getName)
-      s.conf.set("spark.sql.catalog.graftsnap.root", scratch(dir, ""))
+      GraftCatalog.mount(s, "graftsnap", scratch(dir, ""))
       val df = s.sql(
         """SELECT o_orderpriority, count(*) AS n_orders,
           |       CAST(sum(o_orderkey) AS BIGINT) AS sum_key,
@@ -3202,8 +3196,7 @@ object QueriesEtl {
       val docs = Tables.documents(s, dir).select(
         col("doc_id"), col("lang"), col("n_chars"))
       log.append(docs.where(col("doc_id") % 2 === 0), partitions = 2)
-      s.conf.set("spark.sql.catalog.graftsnap", classOf[GraftCatalog].getName)
-      s.conf.set("spark.sql.catalog.graftsnap.root", scratch(dir, ""))
+      GraftCatalog.mount(s, "graftsnap", scratch(dir, ""))
       docs.where(col("doc_id") % 2 =!= 0).createOrReplaceTempView("sql_ins_src")
       val vBefore = log.currentVersion.get
       s.sql("INSERT INTO graftsnap.snap_sqlins SELECT doc_id, lang, n_chars FROM sql_ins_src")
@@ -3252,8 +3245,7 @@ object QueriesEtl {
       val lowFiles = log.dataFiles(vLow).toSet
       val vHigh = log.append(orders.where(col("o_orderkey") > 1500), partitions = 2)
       val highFiles = log.dataFiles(vHigh).toSet -- lowFiles
-      s.conf.set("spark.sql.catalog.graftsnap", classOf[GraftCatalog].getName)
-      s.conf.set("spark.sql.catalog.graftsnap.root", scratch(dir, ""))
+      GraftCatalog.mount(s, "graftsnap", scratch(dir, ""))
       s.sql("DELETE FROM graftsnap.snap_sqldel WHERE o_orderkey <= 700")
       val vDel = log.currentVersion.get
       val singleCommit = vDel == vHigh + 1L
@@ -3289,8 +3281,7 @@ object QueriesEtl {
         floor(col("o_totalprice") * 100).cast("long").as("cents"))
       val v0 = log.append(orders, partitions = 4)
       val baseFiles = log.dataFiles(v0).toSet
-      s.conf.set("spark.sql.catalog.graftupd", classOf[GraftCatalog].getName)
-      s.conf.set("spark.sql.catalog.graftupd.root", scratch(dir, ""))
+      GraftCatalog.mount(s, "graftupd", scratch(dir, ""))
       val r = GraftSqlDml.exec(s,
         "UPDATE graftupd.snap_squpd AS t SET t.cents = t.cents + 100, " +
           "o_orderstatus = lower(o_orderstatus) WHERE t.o_orderkey % 10 = 0")
@@ -3323,8 +3314,7 @@ object QueriesEtl {
       base.where(col("o_orderkey").between(1001, 3000))
         .withColumn("cents", col("cents") + 7)
         .createOrReplaceTempView("graft_mrg_src")
-      s.conf.set("spark.sql.catalog.graftmrg", classOf[GraftCatalog].getName)
-      s.conf.set("spark.sql.catalog.graftmrg.root", scratch(dir, ""))
+      GraftCatalog.mount(s, "graftmrg", scratch(dir, ""))
       val r = GraftSqlDml.exec(s,
         """MERGE INTO graftmrg.snap_sqlmrg AS t USING graft_mrg_src AS s
           |ON t.o_orderkey = s.o_orderkey
@@ -3353,8 +3343,7 @@ object QueriesEtl {
     // cross-checked against recomputed exact values
     // (`stats_match_recount`) ──
     "snapshot_sql_analyze" -> ((s, dir) => {
-      s.conf.set("spark.sql.catalog.graftan", classOf[GraftCatalog].getName)
-      s.conf.set("spark.sql.catalog.graftan.root", scratch(dir, "anroot"))
+      GraftCatalog.mount(s, "graftan", scratch(dir, "anroot"))
       s.sql("DROP TABLE IF EXISTS graftan.ord")
       s.sql("CREATE TABLE graftan.ord (k BIGINT, status STRING, cents BIGINT)")
       Tables.orders(s, dir).select(
@@ -3397,8 +3386,7 @@ object QueriesEtl {
     // schedule-it-and-forget ingest loop where every source file lands
     // exactly once, crash or no crash ──
     "snapshot_sql_copy_into" -> ((s, dir) => {
-      s.conf.set("spark.sql.catalog.graftcp", classOf[GraftCatalog].getName)
-      s.conf.set("spark.sql.catalog.graftcp.root", scratch(dir, "cproot"))
+      GraftCatalog.mount(s, "graftcp", scratch(dir, "cproot"))
       s.sql("DROP TABLE IF EXISTS graftcp.ord")
       s.sql("CREATE TABLE graftcp.ord (k BIGINT, status STRING, cents BIGINT)")
       val srcDir = new java.io.File(scratch(dir, "cp_src"))
@@ -3438,8 +3426,7 @@ object QueriesEtl {
     // NULL in the new column, exactly what a batch read after ALTER ADD
     // COLUMNS serves ──
     "snapshot_sql_merge_evolve" -> ((s, dir) => {
-      s.conf.set("spark.sql.catalog.graftme", classOf[GraftCatalog].getName)
-      s.conf.set("spark.sql.catalog.graftme.root", scratch(dir, "meroot"))
+      GraftCatalog.mount(s, "graftme", scratch(dir, "meroot"))
       s.sql("DROP TABLE IF EXISTS graftme.ord")
       s.sql("CREATE TABLE graftme.ord (k BIGINT, status STRING, cents BIGINT)")
       Tables.orders(s, dir).select(
@@ -3480,8 +3467,7 @@ object QueriesEtl {
     // the log merge joins/uniquifies/anti-joins on the column TUPLE.
     // Receipt counts pinned (`compound_receipt_ok`) ──
     "snapshot_sql_merge_compound" -> ((s, dir) => {
-      s.conf.set("spark.sql.catalog.graftmck", classOf[GraftCatalog].getName)
-      s.conf.set("spark.sql.catalog.graftmck.root", scratch(dir, "mckroot"))
+      GraftCatalog.mount(s, "graftmck", scratch(dir, "mckroot"))
       s.sql("DROP TABLE IF EXISTS graftmck.ord")
       s.sql("CREATE TABLE graftmck.ord (k BIGINT, grp STRING, cents BIGINT)")
       Tables.orders(s, dir).select(
@@ -3518,8 +3504,7 @@ object QueriesEtl {
     // widened physical names — pre-evolution unmatched rows serve typed
     // NULL exactly as the unmapped evolve does ──
     "snapshot_sql_merge_evolve_mapped" -> ((s, dir) => {
-      s.conf.set("spark.sql.catalog.graftmem", classOf[GraftCatalog].getName)
-      s.conf.set("spark.sql.catalog.graftmem.root", scratch(dir, "memroot"))
+      GraftCatalog.mount(s, "graftmem", scratch(dir, "memroot"))
       s.sql("DROP TABLE IF EXISTS graftmem.ord")
       s.sql("CREATE TABLE graftmem.ord (k BIGINT, status STRING, cents BIGINT)")
       Tables.orders(s, dir).select(
@@ -3564,8 +3549,7 @@ object QueriesEtl {
     // inside the merge's one evaluation. A condition referencing TARGET
     // columns still refuses (ANSI: those are NULL on not-matched rows) ──
     "snapshot_sql_merge_cond" -> ((s, dir) => {
-      s.conf.set("spark.sql.catalog.graftmcd", classOf[GraftCatalog].getName)
-      s.conf.set("spark.sql.catalog.graftmcd.root", scratch(dir, "mcdroot"))
+      GraftCatalog.mount(s, "graftmcd", scratch(dir, "mcdroot"))
       s.sql("DROP TABLE IF EXISTS graftmcd.ord")
       s.sql("CREATE TABLE graftmcd.ord (k BIGINT, status STRING, cents BIGINT)")
       Tables.orders(s, dir).select(
@@ -3608,8 +3592,7 @@ object QueriesEtl {
     // source column reference inside an NMBS clause refuses loudly
     // (such rows have no source image) ──
     "snapshot_sql_merge_nmbs" -> ((s, dir) => {
-      s.conf.set("spark.sql.catalog.graftnmb", classOf[GraftCatalog].getName)
-      s.conf.set("spark.sql.catalog.graftnmb.root", scratch(dir, "nmbroot"))
+      GraftCatalog.mount(s, "graftnmb", scratch(dir, "nmbroot"))
       s.sql("DROP TABLE IF EXISTS graftnmb.ord")
       s.sql("CREATE TABLE graftnmb.ord (k BIGINT, status STRING, cents BIGINT)")
       Tables.orders(s, dir).select(
@@ -3659,8 +3642,7 @@ object QueriesEtl {
     // source's solo VACUUM refuses while clones live — stricter than
     // Delta, which lets that vacuum break its clones silently ──
     "snapshot_sql_clone" -> ((s, dir) => {
-      s.conf.set("spark.sql.catalog.graftcln", classOf[GraftCatalog].getName)
-      s.conf.set("spark.sql.catalog.graftcln.root", scratch(dir, "clnroot"))
+      GraftCatalog.mount(s, "graftcln", scratch(dir, "clnroot"))
       s.sql("DROP TABLE IF EXISTS graftcln.dev")
       s.sql("DROP TABLE IF EXISTS graftcln.dev_v1")
       s.sql("DROP TABLE IF EXISTS graftcln.base")
@@ -3711,8 +3693,7 @@ object QueriesEtl {
     // predicate fails the write with nothing committed
     // (`scope_guarded`) ──
     "snapshot_sql_replace_where" -> ((s, dir) => {
-      s.conf.set("spark.sql.catalog.graftrw", classOf[GraftCatalog].getName)
-      s.conf.set("spark.sql.catalog.graftrw.root", scratch(dir, "rwroot"))
+      GraftCatalog.mount(s, "graftrw", scratch(dir, "rwroot"))
       s.sql("DROP TABLE IF EXISTS graftrw.ord")
       s.sql("CREATE TABLE graftrw.ord (k BIGINT, status STRING, cents BIGINT)")
       Tables.orders(s, dir).select(
@@ -3767,8 +3748,7 @@ object QueriesEtl {
     // the identity sink; laws: ids are exactly 1..N across the
     // multi-trigger run and the watermark is recorded ──
     "stream_identity_sink" -> ((s, dir) => {
-      s.conf.set("spark.sql.catalog.graftsid", classOf[GraftCatalog].getName)
-      s.conf.set("spark.sql.catalog.graftsid.root", scratch(dir, "sidroot"))
+      GraftCatalog.mount(s, "graftsid", scratch(dir, "sidroot"))
       s.sql("DROP TABLE IF EXISTS graftsid.ord")
       s.sql("""CREATE TABLE graftsid.ord (id BIGINT, k BIGINT, cents BIGINT)
               |TBLPROPERTIES ('identity.id' = '1,1')""".stripMargin)
@@ -3820,8 +3800,7 @@ object QueriesEtl {
     // (`redelivery_skipped`: the version is unchanged, the watermark
     // made the trigger a structural skip) ──
     "stream_replace_where" -> ((s, dir) => {
-      s.conf.set("spark.sql.catalog.graftsrw", classOf[GraftCatalog].getName)
-      s.conf.set("spark.sql.catalog.graftsrw.root", scratch(dir, "srwroot"))
+      GraftCatalog.mount(s, "graftsrw", scratch(dir, "srwroot"))
       s.sql("DROP TABLE IF EXISTS graftsrw.ord")
       s.sql("CREATE TABLE graftsrw.ord (k BIGINT, status STRING, cents BIGINT)")
       Tables.orders(s, dir).select(
@@ -3876,8 +3855,7 @@ object QueriesEtl {
     // flow through the anti-join to the parquet scans
     // (`filters_reached_scan`, pinned off the executed plan) ──
     "snapshot_sql_read_mor" -> ((s, dir) => {
-      s.conf.set("spark.sql.catalog.graftmor", classOf[GraftCatalog].getName)
-      s.conf.set("spark.sql.catalog.graftmor.root", scratch(dir, "morroot"))
+      GraftCatalog.mount(s, "graftmor", scratch(dir, "morroot"))
       s.sql("DROP TABLE IF EXISTS graftmor.ord")
       s.sql("CREATE TABLE graftmor.ord (k BIGINT, status STRING, cents BIGINT)")
       Tables.orders(s, dir).select(
@@ -3907,8 +3885,7 @@ object QueriesEtl {
     // and a narrower version window returns exactly that window's
     // changes (`window_composes`) ──
     "snapshot_sql_cdf_tvf" -> ((s, dir) => {
-      s.conf.set("spark.sql.catalog.graftcft", classOf[GraftCatalog].getName)
-      s.conf.set("spark.sql.catalog.graftcft.root", scratch(dir, "cftroot"))
+      GraftCatalog.mount(s, "graftcft", scratch(dir, "cftroot"))
       s.sql("DROP TABLE IF EXISTS graftcft.ord")
       s.sql("CREATE TABLE graftcft.ord (k BIGINT, status STRING, cents BIGINT)")
       Tables.orders(s, dir).select(
@@ -3945,8 +3922,7 @@ object QueriesEtl {
     // plan's file index), and a lookup of an absent key returns empty.
     // This is the high-NDV skipping route a 100 TB id-lookup needs ──
     "snapshot_sql_bloom_scan" -> ((s, dir) => {
-      s.conf.set("spark.sql.catalog.graftblm", classOf[GraftCatalog].getName)
-      s.conf.set("spark.sql.catalog.graftblm.root", scratch(dir, "blmroot"))
+      GraftCatalog.mount(s, "graftblm", scratch(dir, "blmroot"))
       s.sql("DROP TABLE IF EXISTS graftblm.ord")
       s.sql("""CREATE TABLE graftblm.ord (k BIGINT, status STRING, cents BIGINT)
               |TBLPROPERTIES ('bloomBy' = 'k')""".stripMargin)
@@ -3987,8 +3963,7 @@ object QueriesEtl {
     // including UPDATE's staged images — carries a filter entry
     // (`dml_files_bloomed`) ──
     "snapshot_sql_bloom_dml" -> ((s, dir) => {
-      s.conf.set("spark.sql.catalog.graftbdm", classOf[GraftCatalog].getName)
-      s.conf.set("spark.sql.catalog.graftbdm.root", scratch(dir, "bdmroot"))
+      GraftCatalog.mount(s, "graftbdm", scratch(dir, "bdmroot"))
       s.sql("DROP TABLE IF EXISTS graftbdm.ord")
       s.sql("""CREATE TABLE graftbdm.ord (k BIGINT, status STRING, cents BIGINT)
               |TBLPROPERTIES ('bloomBy' = 'k')""".stripMargin)
@@ -4044,8 +4019,7 @@ object QueriesEtl {
     // prove the ids are exactly 1..N across the whole multi-statement
     // load ──
     "snapshot_sql_copy_identity" -> ((s, dir) => {
-      s.conf.set("spark.sql.catalog.graftcpi", classOf[GraftCatalog].getName)
-      s.conf.set("spark.sql.catalog.graftcpi.root", scratch(dir, "cpiroot"))
+      GraftCatalog.mount(s, "graftcpi", scratch(dir, "cpiroot"))
       s.sql("DROP TABLE IF EXISTS graftcpi.ord")
       s.sql("""CREATE TABLE graftcpi.ord (id BIGINT, k BIGINT, cents BIGINT)
               |TBLPROPERTIES ('identity.id' = '1,1')""".stripMargin)
@@ -4088,8 +4062,7 @@ object QueriesEtl {
     // inserts used (`mapped_physical_landed` inspects the staged file's
     // own footer). The ledger idempotency law carries over verbatim ──
     "snapshot_sql_copy_into_mapped" -> ((s, dir) => {
-      s.conf.set("spark.sql.catalog.graftcpm", classOf[GraftCatalog].getName)
-      s.conf.set("spark.sql.catalog.graftcpm.root", scratch(dir, "cpmroot"))
+      GraftCatalog.mount(s, "graftcpm", scratch(dir, "cpmroot"))
       s.sql("DROP TABLE IF EXISTS graftcpm.ord")
       s.sql("CREATE TABLE graftcpm.ord (k BIGINT, status STRING, cents BIGINT)")
       Tables.orders(s, dir).select(
@@ -4136,8 +4109,7 @@ object QueriesEtl {
     // the pre-rename PHYSICAL column (`mapped_physical_landed`), and
     // the re-run stays idempotent ──
     "snapshot_sql_replace_where_mapped" -> ((s, dir) => {
-      s.conf.set("spark.sql.catalog.graftrwp", classOf[GraftCatalog].getName)
-      s.conf.set("spark.sql.catalog.graftrwp.root", scratch(dir, "rwproot"))
+      GraftCatalog.mount(s, "graftrwp", scratch(dir, "rwproot"))
       s.sql("DROP TABLE IF EXISTS graftrwp.ord")
       s.sql("CREATE TABLE graftrwp.ord (k BIGINT, status STRING, cents BIGINT)")
       Tables.orders(s, dir).select(
@@ -4185,8 +4157,7 @@ object QueriesEtl {
     // table-sized compact() required first, and the re-run stays
     // idempotent ──
     "snapshot_sql_replace_where_mor" -> ((s, dir) => {
-      s.conf.set("spark.sql.catalog.graftrwt", classOf[GraftCatalog].getName)
-      s.conf.set("spark.sql.catalog.graftrwt.root", scratch(dir, "rwtroot"))
+      GraftCatalog.mount(s, "graftrwt", scratch(dir, "rwtroot"))
       s.sql("DROP TABLE IF EXISTS graftrwt.ord")
       s.sql("CREATE TABLE graftrwt.ord (k BIGINT, status STRING, cents BIGINT)")
       Tables.orders(s, dir).select(
@@ -4233,8 +4204,7 @@ object QueriesEtl {
     // reads its bytes (`survives_source_vacuum_and_drop`); contrast the
     // SHALLOW clone, whose guards must refuse exactly that sweep ──
     "snapshot_sql_clone_deep" -> ((s, dir) => {
-      s.conf.set("spark.sql.catalog.graftcld", classOf[GraftCatalog].getName)
-      s.conf.set("spark.sql.catalog.graftcld.root", scratch(dir, "cldroot"))
+      GraftCatalog.mount(s, "graftcld", scratch(dir, "cldroot"))
       s.sql("DROP TABLE IF EXISTS graftcld.dev")
       s.sql("DROP TABLE IF EXISTS graftcld.base")
       s.sql("CREATE TABLE graftcld.base (k BIGINT, status STRING, cents BIGINT)")
@@ -4283,8 +4253,7 @@ object QueriesEtl {
     // instead of silently de-deriving). Because the column is
     // materialized, the footer stats sidecars skip on it for free ──
     "snapshot_sql_generated" -> ((s, dir) => {
-      s.conf.set("spark.sql.catalog.graftgen", classOf[GraftCatalog].getName)
-      s.conf.set("spark.sql.catalog.graftgen.root", scratch(dir, "genroot"))
+      GraftCatalog.mount(s, "graftgen", scratch(dir, "genroot"))
       s.sql("DROP TABLE IF EXISTS graftgen.ord")
       s.sql("""CREATE TABLE graftgen.ord (k BIGINT, cents BIGINT, bucket BIGINT)
               |TBLPROPERTIES ('generate.bucket' = 'k % 8')""".stripMargin)
@@ -4336,8 +4305,7 @@ object QueriesEtl {
     // 1..N across two inserts (min/max/distinct/sum all pinned) and an
     // explicit id refuses loudly ──
     "snapshot_sql_identity" -> ((s, dir) => {
-      s.conf.set("spark.sql.catalog.graftidn", classOf[GraftCatalog].getName)
-      s.conf.set("spark.sql.catalog.graftidn.root", scratch(dir, "idnroot"))
+      GraftCatalog.mount(s, "graftidn", scratch(dir, "idnroot"))
       s.sql("DROP TABLE IF EXISTS graftidn.ord")
       s.sql("""CREATE TABLE graftidn.ord (id BIGINT, k BIGINT, cents BIGINT)
               |TBLPROPERTIES ('identity.id' = '1,1')""".stripMargin)
@@ -4382,8 +4350,7 @@ object QueriesEtl {
         col("o_orderkey"), col("o_orderstatus"),
         floor(col("o_totalprice") * 100).cast("long").as("cents"))
       val v0 = log.append(base.where(col("o_orderkey") <= 2000), partitions = 3)
-      s.conf.set("spark.sql.catalog.graftnat", classOf[GraftCatalog].getName)
-      s.conf.set("spark.sql.catalog.graftnat.root", scratch(dir, ""))
+      GraftCatalog.mount(s, "graftnat", scratch(dir, ""))
       val upd = s.sql(
         "UPDATE graftnat.snap_sqnat SET cents = cents + 100 " +
           "WHERE o_orderkey % 10 = 0").head()
@@ -4418,8 +4385,7 @@ object QueriesEtl {
     // whole create→insert→ctas chain is tracked commits, never a raw
     // file write ──
     "snapshot_sql_ddl" -> ((s, dir) => {
-      s.conf.set("spark.sql.catalog.graftddl", classOf[GraftCatalog].getName)
-      s.conf.set("spark.sql.catalog.graftddl.root", scratch(dir, "ddlroot"))
+      GraftCatalog.mount(s, "graftddl", scratch(dir, "ddlroot"))
       s.sql("DROP TABLE IF EXISTS graftddl.ord")
       s.sql("DROP TABLE IF EXISTS graftddl.ord_sum")
       s.sql("CREATE TABLE graftddl.ord (o_orderkey BIGINT, o_orderstatus STRING, cents BIGINT)")
@@ -4452,8 +4418,7 @@ object QueriesEtl {
     // values; the pinned declared schema makes old and new files scan as
     // one relation with no mergeSchema footer walk ──
     "snapshot_sql_alter" -> ((s, dir) => {
-      s.conf.set("spark.sql.catalog.graftalter", classOf[GraftCatalog].getName)
-      s.conf.set("spark.sql.catalog.graftalter.root", scratch(dir, "alterroot"))
+      GraftCatalog.mount(s, "graftalter", scratch(dir, "alterroot"))
       s.sql("DROP TABLE IF EXISTS graftalter.ord")
       s.sql("CREATE TABLE graftalter.ord (o_orderkey BIGINT, o_orderstatus STRING)")
       Tables.orders(s, dir).select(col("o_orderkey"), col("o_orderstatus"))
@@ -4489,8 +4454,7 @@ object QueriesEtl {
     // INSERT refills — the returned rollup is the refill the oracle
     // replays ──
     "snapshot_sql_overwrite" -> ((s, dir) => {
-      s.conf.set("spark.sql.catalog.graftow", classOf[GraftCatalog].getName)
-      s.conf.set("spark.sql.catalog.graftow.root", scratch(dir, "owroot"))
+      GraftCatalog.mount(s, "graftow", scratch(dir, "owroot"))
       val prevMode = s.conf.get("spark.sql.sources.partitionOverwriteMode")
       s.conf.set("spark.sql.sources.partitionOverwriteMode", "static")
       try {
@@ -4546,8 +4510,7 @@ object QueriesEtl {
       (0 until 3).foreach { i =>
         log.append(orders.where(col("k") % 3 === i), partitions = 2); ()
       }
-      s.conf.set("spark.sql.catalog.graftmnt", classOf[GraftCatalog].getName)
-      s.conf.set("spark.sql.catalog.graftmnt.root", root)
+      GraftCatalog.mount(s, "graftmnt", root)
       val opt = s.sql("OPTIMIZE graftmnt.ord").head()
       val packed = opt.getString(1) == "bin_pack" &&
         opt.getInt(2) >= 2 && opt.getInt(3) < opt.getInt(2)
@@ -4585,8 +4548,7 @@ object QueriesEtl {
     // time travel to the pre-rename vintage serves the OLD name
     // (`old_name_time_travels`) ──
     "snapshot_sql_rename" -> ((s, dir) => {
-      s.conf.set("spark.sql.catalog.graftren", classOf[GraftCatalog].getName)
-      s.conf.set("spark.sql.catalog.graftren.root", scratch(dir, "renroot"))
+      GraftCatalog.mount(s, "graftren", scratch(dir, "renroot"))
       s.sql("DROP TABLE IF EXISTS graftren.ord")
       s.sql("CREATE TABLE graftren.ord (k BIGINT, status STRING, cents BIGINT)")
       Tables.orders(s, dir).select(
@@ -4627,8 +4589,7 @@ object QueriesEtl {
     // analyzer, bigint→double (an "up-cast" to Spark, precision loss past
     // 2^53) dies in the engine's lossless allow-list (`lossy_refused`) ──
     "snapshot_sql_widen" -> ((s, dir) => {
-      s.conf.set("spark.sql.catalog.graftwid", classOf[GraftCatalog].getName)
-      s.conf.set("spark.sql.catalog.graftwid.root", scratch(dir, "widroot"))
+      GraftCatalog.mount(s, "graftwid", scratch(dir, "widroot"))
       s.sql("DROP TABLE IF EXISTS graftwid.ord")
       s.sql("CREATE TABLE graftwid.ord (k INT, status STRING, cents BIGINT)")
       Tables.orders(s, dir).select(
@@ -4670,8 +4631,7 @@ object QueriesEtl {
     // (`failed_ctas_left_no_table`), where Spark's non-atomic fallback
     // leaves an empty committed husk ──
     "snapshot_sql_ctas_atomic" -> ((s, dir) => {
-      s.conf.set("spark.sql.catalog.graftctas", classOf[GraftCatalog].getName)
-      s.conf.set("spark.sql.catalog.graftctas.root", scratch(dir, "ctasroot"))
+      GraftCatalog.mount(s, "graftctas", scratch(dir, "ctasroot"))
       s.sql("DROP TABLE IF EXISTS graftctas.ord_sum")
       s.sql("DROP TABLE IF EXISTS graftctas.boom")
       Tables.orders(s, dir).select(
@@ -4716,8 +4676,7 @@ object QueriesEtl {
     // (`set_default_metadata_only`) without touching existing rows, and
     // explicit values always win ──
     "snapshot_sql_defaults" -> ((s, dir) => {
-      s.conf.set("spark.sql.catalog.graftdef", classOf[GraftCatalog].getName)
-      s.conf.set("spark.sql.catalog.graftdef.root", scratch(dir, "defroot"))
+      GraftCatalog.mount(s, "graftdef", scratch(dir, "defroot"))
       s.sql("DROP TABLE IF EXISTS graftdef.ord")
       s.sql("CREATE TABLE graftdef.ord (k BIGINT, " +
         "status STRING DEFAULT 'NONE', cents BIGINT DEFAULT 0)")
@@ -4754,8 +4713,7 @@ object QueriesEtl {
     // the DETAIL row's version/file-count/size fields agree with the log
     // (`detail_consistent`) ──
     "snapshot_sql_rtas_detail" -> ((s, dir) => {
-      s.conf.set("spark.sql.catalog.graftrtas", classOf[GraftCatalog].getName)
-      s.conf.set("spark.sql.catalog.graftrtas.root", scratch(dir, "rtasroot"))
+      GraftCatalog.mount(s, "graftrtas", scratch(dir, "rtasroot"))
       s.sql("DROP TABLE IF EXISTS graftrtas.ord_sum")
       Tables.orders(s, dir).select(
           col("o_orderkey").as("k"), col("o_orderstatus").as("status"),
@@ -4844,8 +4802,7 @@ object QueriesEtl {
     // CONSTRAINT` lifts the gate as one metadata commit
     // (`constraint_dropped`) ──
     "snapshot_sql_constraint" -> ((s, dir) => {
-      s.conf.set("spark.sql.catalog.graftchk", classOf[GraftCatalog].getName)
-      s.conf.set("spark.sql.catalog.graftchk.root", scratch(dir, "chkroot"))
+      GraftCatalog.mount(s, "graftchk", scratch(dir, "chkroot"))
       s.sql("DROP TABLE IF EXISTS graftchk.ord")
       s.sql("CREATE TABLE graftchk.ord (k BIGINT, status STRING, cents BIGINT)")
       Tables.orders(s, dir).select(
@@ -4886,8 +4843,7 @@ object QueriesEtl {
     // key-range SQL predicate plans over a strict subset of files
     // (`files_skipped_after_optimize`) ──
     "snapshot_sql_cluster" -> ((s, dir) => {
-      s.conf.set("spark.sql.catalog.graftclu", classOf[GraftCatalog].getName)
-      s.conf.set("spark.sql.catalog.graftclu.root", scratch(dir, "cluroot"))
+      GraftCatalog.mount(s, "graftclu", scratch(dir, "cluroot"))
       s.sql("DROP TABLE IF EXISTS graftclu.ord")
       s.sql("CREATE TABLE graftclu.ord (k BIGINT, status STRING, cents BIGINT) " +
         "TBLPROPERTIES ('clusterBy' = 'k')")
@@ -4933,8 +4889,7 @@ object QueriesEtl {
     // Skipping still plans over a strict file subset after the
     // incremental pass (`files_skipped_after_incr`) ──
     "snapshot_sql_cluster_incr" -> ((s, dir) => {
-      s.conf.set("spark.sql.catalog.graftci", classOf[GraftCatalog].getName)
-      s.conf.set("spark.sql.catalog.graftci.root", scratch(dir, "ciroot"))
+      GraftCatalog.mount(s, "graftci", scratch(dir, "ciroot"))
       s.sql("DROP TABLE IF EXISTS graftci.ord")
       s.sql("CREATE TABLE graftci.ord (k BIGINT, status STRING, cents BIGINT) " +
         "TBLPROPERTIES ('clusterBy' = 'k')")
@@ -4984,8 +4939,7 @@ object QueriesEtl {
     // so every file's cents range would stay full-width). The leading
     // dimension keeps skipping too (`leading_dim_skips`) ──
     "snapshot_sql_zorder_2d" -> ((s, dir) => {
-      s.conf.set("spark.sql.catalog.graftz2", classOf[GraftCatalog].getName)
-      s.conf.set("spark.sql.catalog.graftz2.root", scratch(dir, "z2root"))
+      GraftCatalog.mount(s, "graftz2", scratch(dir, "z2root"))
       s.sql("DROP TABLE IF EXISTS graftz2.ord")
       s.sql("CREATE TABLE graftz2.ord (k BIGINT, status STRING, cents BIGINT)")
       Tables.orders(s, dir).select(
@@ -5025,8 +4979,7 @@ object QueriesEtl {
     // index). The steady-state ingest→query loop needs no maintenance
     // tick before freshly-landed data prunes ──
     "snapshot_sql_cluster_on_write" -> ((s, dir) => {
-      s.conf.set("spark.sql.catalog.graftcw", classOf[GraftCatalog].getName)
-      s.conf.set("spark.sql.catalog.graftcw.root", scratch(dir, "cwroot"))
+      GraftCatalog.mount(s, "graftcw", scratch(dir, "cwroot"))
       s.sql("DROP TABLE IF EXISTS graftcw.ord")
       s.sql("CREATE TABLE graftcw.ord (k BIGINT, status STRING, cents BIGINT) " +
         "TBLPROPERTIES ('clusterBy' = 'k')")
@@ -5061,8 +5014,7 @@ object QueriesEtl {
     // relative path (`out_of_scope_carried`). Maintenance cost scales
     // with the matched slice, never the table ──
     "snapshot_sql_optimize_where" -> ((s, dir) => {
-      s.conf.set("spark.sql.catalog.graftow", classOf[GraftCatalog].getName)
-      s.conf.set("spark.sql.catalog.graftow.root", scratch(dir, "owroot"))
+      GraftCatalog.mount(s, "graftow", scratch(dir, "owroot"))
       s.sql("DROP TABLE IF EXISTS graftow.ord")
       s.sql("CREATE TABLE graftow.ord (k BIGINT, status STRING, cents BIGINT) " +
         "TBLPROPERTIES ('clusterBy' = 'k')")
@@ -5105,8 +5057,7 @@ object QueriesEtl {
     // Files whose recorded date range misses the scope are carried
     // byte-identical (`date_scope_pruned`) ──
     "snapshot_sql_optimize_where_date" -> ((s, dir) => {
-      s.conf.set("spark.sql.catalog.graftod", classOf[GraftCatalog].getName)
-      s.conf.set("spark.sql.catalog.graftod.root", scratch(dir, "odroot"))
+      GraftCatalog.mount(s, "graftod", scratch(dir, "odroot"))
       s.sql("DROP TABLE IF EXISTS graftod.ord")
       s.sql("CREATE TABLE graftod.ord (k BIGINT, d DATE, cents BIGINT)")
       val log = new SnapshotLog(scratch(dir, "odroot") + "/ord")
@@ -5205,8 +5156,7 @@ object QueriesEtl {
     // constrained tables lost MERGE entirely. The guard rides the
     // merge's ONE evaluation: no second scan, no partial commit ──
     "snapshot_sql_merge_constraint" -> ((s, dir) => {
-      s.conf.set("spark.sql.catalog.graftmc", classOf[GraftCatalog].getName)
-      s.conf.set("spark.sql.catalog.graftmc.root", scratch(dir, "mcroot"))
+      GraftCatalog.mount(s, "graftmc", scratch(dir, "mcroot"))
       s.sql("DROP TABLE IF EXISTS graftmc.ord")
       s.sql("CREATE TABLE graftmc.ord (k BIGINT, status STRING, cents BIGINT, " +
         "CONSTRAINT cents_nonneg CHECK (cents >= 0))")
@@ -5260,8 +5210,7 @@ object QueriesEtl {
           .repartitionByRange(8, col("o_orderkey"))
           .sortWithinPartitions(col("o_orderkey")),
         statsCols = Seq("o_orderkey"))
-      s.conf.set("spark.sql.catalog.graftskip", classOf[GraftCatalog].getName)
-      s.conf.set("spark.sql.catalog.graftskip.root", root)
+      GraftCatalog.mount(s, "graftskip", root)
       val q = s.sql(
         """SELECT o_orderstatus, count(*) AS n_orders,
           |       CAST(sum(o_orderkey) AS BIGINT) AS sum_key,
@@ -5295,8 +5244,7 @@ object QueriesEtl {
       log.append(orders.where(col("k").between(1001, 2000)), partitions = 2)
       log.deleteWhere(s, col("k") <= 200)
       log.compact(s, partitions = 1)
-      s.conf.set("spark.sql.catalog.graftmeta", classOf[GraftCatalog].getName)
-      s.conf.set("spark.sql.catalog.graftmeta.root", root)
+      GraftCatalog.mount(s, "graftmeta", root)
       val hist = s.sql(
         """SELECT version, operation, added_data, added_tombstones,
           |       removed, files_total
@@ -5321,8 +5269,7 @@ object QueriesEtl {
     // (`resurrection_refused`) — the ghost-value hazard Delta needs
     // column mapping for, made loud here ──
     "snapshot_sql_drop" -> ((s, dir) => {
-      s.conf.set("spark.sql.catalog.graftdrop", classOf[GraftCatalog].getName)
-      s.conf.set("spark.sql.catalog.graftdrop.root", scratch(dir, "droproot"))
+      GraftCatalog.mount(s, "graftdrop", scratch(dir, "droproot"))
       s.sql("DROP TABLE IF EXISTS graftdrop.ord")
       s.sql("CREATE TABLE graftdrop.ord (o_orderkey BIGINT, o_orderstatus STRING, cents BIGINT)")
       Tables.orders(s, dir).select(col("o_orderkey"), col("o_orderstatus"),
@@ -5434,8 +5381,7 @@ object QueriesEtl {
         col("doc_id"), col("lang"), col("n_chars"))
       val v0 = log.append(docs.where(col("doc_id") % 2 === 0), partitions = 2)
       log.append(docs.where(col("doc_id") % 2 =!= 0), partitions = 2)
-      s.conf.set("spark.sql.catalog.graftsnap", classOf[GraftCatalog].getName)
-      s.conf.set("spark.sql.catalog.graftsnap.root", scratch(dir, ""))
+      GraftCatalog.mount(s, "graftsnap", scratch(dir, ""))
       def rollup(fromClause: String): DataFrame = s.sql(
         s"""SELECT lang, count(*) AS n_docs,
            |       CAST(sum(n_chars) AS BIGINT) AS sum_chars

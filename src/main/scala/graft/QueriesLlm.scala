@@ -2385,7 +2385,9 @@ object QueriesLlm {
       }
       val (idfMap, avgdl) = Retrieval.frozenLexicon(docs, qterms.flatMap(_._2))
       val idx = StreamingSessionize.corpusBandIndex(docs, bands = MhBands)
-      val base = java.nio.file.Files.createTempDirectory("graft_ingest_batch_")
+      // the returned frame reads `out/` lazily: a scratch root, cleared per run
+      val base = java.nio.file.Paths.get(scratch(dir, "ingest_batch"))
+      StreamingSessionize.deleteTree(base)
       val streamDir = base.resolve("stream")
       java.nio.file.Files.createDirectories(streamDir)
       val accumDir = base.resolve("out").toString
@@ -2447,9 +2449,8 @@ object QueriesLlm {
             lit(cmsOk).as("cms_ok"))
           .orderBy(col("doc_id"))
       } finally {
-        // the returned plan reads accumDir lazily, so `out/` must survive
-        // the return; the staged and streamed copies of the documents are
-        // dead once the drain ends
+        // `out/` must survive the return; the staged and streamed copies
+        // of the documents are dead once the drain ends
         (0 until 3).foreach(i => StreamingSessionize.deleteTree(base.resolve(s"stage_$i")))
         StreamingSessionize.deleteTree(streamDir)
       }

@@ -192,21 +192,6 @@ object Multimodal {
         .cast("double") / lit(4294967296.0) - lit(0.5)
     }: _*)
 
-  /** Resize metadata: target-box dimensions preserving aspect ratio
-    * (floor'd), from the decoded width/height (null dims — audio, truncated
-    * headers — propagate to null outputs). A real implementation resamples
-    * pixels; the metadata contract — what a pipeline actually joins on — is
-    * identical.
-    */
-  def resizeMeta(meta: Column, targetW: Int, targetH: Int): Column = {
-    val w = meta.getField("width").cast("double")
-    val h = meta.getField("height").cast("double")
-    val scale = least(lit(targetW) / w, lit(targetH) / h)
-    struct(
-      floor(w * scale).cast("long").as("out_width"),
-      floor(h * scale).cast("long").as("out_height"))
-  }
-
   /** Synthesize a REAL animated GIF89a container per row for the frame
     * iteration path ([[graft.functions.VideoKernels]]): spec-complete
     * logical screen descriptor, `1 + id % 6` frames each announced by a

@@ -133,44 +133,6 @@ object Packing {
         least(col("n_tokens"), (col("seq_in_shard") + lit(1L)) * b - col("start_tok")).as("tok_to"))
   }
 
-  /** One row per (shard, sequence): the ordered document slices that fill
-    * it, as an array of `(slice_idx, doc_id, tok_from, tok_to)` structs,
-    * plus the sequence's total token count. This is [[packedSequenceSlices]]
-    * re-grouped — the exact manifest a training loader consumes per
-    * sequence. Array columns don't cross the DuckDB hash-compare, so this
-    * view is pinned by PackingSpec invariants while the flat slice table
-    * carries the oracle.
-    */
-  def packedSequenceManifest(
-      docs: DataFrame,
-      budgetTokens: Int,
-      nShards: Int,
-      idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame =
-    packedSequenceSlices(docs, budgetTokens, nShards, idCol, textCol)
-      .groupBy(col("shard"), col("seq_in_shard"))
-      .agg(
-        sort_array(collect_list(struct(
-          col("slice_idx"), col(idCol), col("tok_from"), col("tok_to")))).as("slices"),
-        sum(col("tok_to") - col("tok_from")).as("seq_tokens"))
-
-  /** The manifest CONSUMED: what a training loader actually executes — join
-    * the slice table back to the documents, cut each document's token array
-    * to its `[tok_from, tok_to)` slice, and reassemble every sequence's text
-    * in `slice_idx` order. Output, one row per (shard, sequence):
-    * `(shard, seq_in_shard, seq_text, seq_tokens, n_slices)` — flat and
-    * engine-replayable, so this is the hashable surface the array-typed
-    * manifest can't be (and the reassembled `seq_text` is exactly the
-    * shard's token stream re-cut, which PackingSpec pins).
-    *
-    * Scale shape: one equi-join of the metadata-scale slice table against
-    * the corpus on the doc id (the text column moves ONCE, map-side after
-    * the join), then one aggregation per (shard, seq). The per-sequence
-    * collect_list holds ~budget/doc-length slices of already-cut text — a
-    * few KB per group — never a whole document set. At 100 TB the join
-    * co-partitions on the same md5 id the layout sharded by, so AQE plans
-    * it shuffle-or-broadcast as the slice side's size dictates.
-    */
   /** Per-epoch loader plan: for each of `epochs` epochs, a DETERMINISTIC
     * pseudo-random permutation of every packed sequence, dealt across
     * `nWorkers` data-loader ranks — the "global shuffle each epoch" a
@@ -211,6 +173,23 @@ object Packing {
         col("shard"), col("seq_in_shard"))
   }
 
+  /** The manifest CONSUMED: what a training loader actually executes — join
+    * the slice table back to the documents, cut each document's token array
+    * to its `[tok_from, tok_to)` slice, and reassemble every sequence's text
+    * in `slice_idx` order. Output, one row per (shard, sequence):
+    * `(shard, seq_in_shard, seq_text, seq_tokens, n_slices)` — flat and
+    * engine-replayable, so this is the hashable surface an array-typed
+    * manifest can't be (and the reassembled `seq_text` is exactly the
+    * shard's token stream re-cut, which PackingSpec pins).
+    *
+    * Scale shape: one equi-join of the metadata-scale slice table against
+    * the corpus on the doc id (the text column moves ONCE, map-side after
+    * the join), then one aggregation per (shard, seq). The per-sequence
+    * collect_list holds ~budget/doc-length slices of already-cut text — a
+    * few KB per group — never a whole document set. At 100 TB the join
+    * co-partitions on the same md5 id the layout sharded by, so AQE plans
+    * it shuffle-or-broadcast as the slice side's size dictates.
+    */
   def gatherSequenceText(
       docs: DataFrame,
       budgetTokens: Int,

@@ -378,7 +378,6 @@ object TextAnalysis {
     val punctPenalty = greatest(lit(1.0) - punctRatio(text) * lit(5.0), lit(0.0))
     (lenScore * lit(0.4) + stopScore * lit(0.3) + punctPenalty * lit(0.3))
   }
-  def qualityScore(text: Column): Column = qualityScoreOf(text, tokens(text))
 
   /** Marker-word language-ID heuristic: count hits from a tiny per-language
     * marker list over the token set; argmax with a fixed priority tie-break.
@@ -430,8 +429,6 @@ object TextAnalysis {
     * there and the `lang_id` query in QueriesLlm.
     */
   def langIdOf(toks: Column): Column = langIdFromScores(langScores(toks))
-
-  def langId(text: Column): Column = langIdOf(tokens(text))
 
   /** Document fingerprint: md5 of the normalized text — identical across
     * engines, the key for exact dedup.

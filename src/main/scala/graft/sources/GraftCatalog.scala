@@ -25,8 +25,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *
   * Register per session:
   * {{{
-  *   spark.conf.set("spark.sql.catalog.graftsnap", classOf[GraftCatalog].getName)
-  *   spark.conf.set("spark.sql.catalog.graftsnap.root", "/path/to/logs")
+  *   GraftCatalog.mount(spark, "graftsnap", "/path/to/logs")
   *   spark.sql("SELECT * FROM graftsnap.t VERSION AS OF 3")
   * }}}
   * Each subdirectory of `root` holding a `_log` is a table. The `root`
@@ -706,6 +705,14 @@ class GraftCatalog extends TableCatalog with StagingTableCatalog {
 
 object GraftCatalog {
 
+  /** Mount a graft catalog named `name` on `spark`, its tables under
+    * `root` (`spark.sql.catalog.<name>` + `.root`).
+    */
+  def mount(spark: SparkSession, name: String, root: String): Unit = {
+    spark.conf.set(s"spark.sql.catalog.$name", classOf[GraftCatalog].getName)
+    spark.conf.set(s"spark.sql.catalog.$name.root", root)
+  }
+
   /** GENERATED ALWAYS AS (expr) columns (`prop.generate.<col>`): the
     * write contract folded into the batch as one expression per column —
     * computed where the batch provides NULL, kept where it provides the
@@ -1101,6 +1108,10 @@ object GraftCatalog {
         s"GraftCatalog: INSERT OVERWRITE batch drifts from the table schema — $drift")
     }
 
+    /** The table's declared `clusterBy` keys present in `data`. */
+    private def clusterKeys(data: org.apache.spark.sql.DataFrame): Seq[String] =
+      log.currentVersion.toSeq.flatMap(log.clusterColumns).filter(data.columns.contains)
+
     override def canDeleteWhere(filters: Array[Filter]): Boolean =
       filters.forall(f => GraftCatalog.filterToColumn(f).isDefined)
 
@@ -1119,10 +1130,7 @@ object GraftCatalog {
         log.deleteWhereCow(SparkSession.active, cond))
       // `bloomBy` maintenance over the survivor files the rewrite staged
       // (the INSERT-path hook; absence only reads conservatively)
-      val bcDel = log.bloomColumns(vDel)
-      if (bcDel.nonEmpty)
-        log.writeBloomSidecarFor(SparkSession.active, vDel, bcDel)
-      ()
+      log.writeBloomSidecarFor(SparkSession.active, vDel)
     }
     override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
       new WriteBuilder with org.apache.spark.sql.connector.write.SupportsTruncate {
@@ -1158,24 +1166,11 @@ object GraftCatalog {
                   // clusterBy tables cluster the replacement on write,
                   // same as the append path.
                   requireSameSchema(data)
-                  val session = data.sparkSession
-                  val ck =
-                    if (!session.conf.getOption("spark.graft.insert.clusterOnWrite")
-                        .forall(_.toBoolean)) Nil
-                    else log.currentVersion
-                      .flatMap(v => log.property(v, "clusterBy")).toSeq
-                      .flatMap(_.split(',').map(_.trim).filter(_.nonEmpty))
-                      .filter(data.columns.contains)
+                  val ck = clusterKeys(data)
                   val vNew =
                     if (ck.isEmpty) log.overwrite(data, parts)
-                    else log.overwriteArrangedStats(
-                      data.repartitionByRange(parts,
-                          ck.map(org.apache.spark.sql.functions.col): _*)
-                        .sortWithinPartitions(
-                          ck.map(org.apache.spark.sql.functions.col): _*))
-                  val bloomCols = log.bloomColumns(vNew)
-                  if (bloomCols.nonEmpty)
-                    log.writeBloomSidecarFor(session, vNew, bloomCols)
+                    else log.overwriteArrangedStats(log.rangeArrange(data, ck, parts))
+                  log.writeBloomSidecarFor(data.sparkSession, vNew)
                 } else {
                   // CLUSTER ON WRITE (the liquid-clustering ingest half):
                   // a table with DECLARED clusterBy keys range-arranges
@@ -1183,36 +1178,23 @@ object GraftCatalog {
                   // footer min/max stats below give DISJOINT per-file
                   // ranges and the skipping scan prunes freshly-inserted
                   // data immediately — no OPTIMIZE pass needed first.
-                  // One batch-sized range shuffle; disable with
-                  // spark.graft.insert.clusterOnWrite=false.
-                  val session = data.sparkSession
-                  val clusterKeys =
-                    if (!session.conf.getOption("spark.graft.insert.clusterOnWrite")
-                        .forall(_.toBoolean)) Nil
-                    else log.currentVersion
-                      .flatMap(v => log.property(v, "clusterBy")).toSeq
-                      .flatMap(_.split(',').map(_.trim).filter(_.nonEmpty))
-                      .filter(data.columns.contains)
+                  // One batch-sized range shuffle.
+                  val ck = clusterKeys(data)
                   val (vNew, _) = ident match {
                     case Some((idc, st, sp)) =>
                       log.withOccRetry()(log.appendIdentityStats(
-                        data, idc, st, sp, parts, clusterKeys))
-                    case None if clusterKeys.isEmpty =>
+                        data, idc, st, sp, parts, ck))
+                    case None if ck.isEmpty =>
                       log.withOccRetry()(log.appendStrictStats(data, parts))
                     case None =>
-                      val arranged = data.repartitionByRange(parts,
-                          clusterKeys.map(org.apache.spark.sql.functions.col): _*)
-                        .sortWithinPartitions(clusterKeys.map(
-                          org.apache.spark.sql.functions.col): _*)
-                      log.withOccRetry()(log.appendArrangedStrictStats(arranged))
+                      log.withOccRetry()(log.appendArrangedStrictStats(
+                        log.rangeArrange(data, ck, parts)))
                   }
                   // `bloomBy` maintenance: extend the Bloom sidecars over
                   // the freshly-committed files (post-commit is safe —
                   // a reader planning in the window just keeps the new
                   // files conservatively)
-                  val bloomCols = log.bloomColumns(vNew)
-                  if (bloomCols.nonEmpty)
-                    log.writeBloomSidecarFor(session, vNew, bloomCols)
+                  log.writeBloomSidecarFor(data.sparkSession, vNew)
                 }
                 ()
               }
@@ -1269,10 +1251,7 @@ object GraftCatalog {
         log.deleteWhereCow(SparkSession.active, cond))
       // `bloomBy` maintenance over the survivor files the rewrite staged
       // (the INSERT-path hook; absence only reads conservatively)
-      val bcDel = log.bloomColumns(vDel)
-      if (bcDel.nonEmpty)
-        log.writeBloomSidecarFor(SparkSession.active, vDel, bcDel)
-      ()
+      log.writeBloomSidecarFor(SparkSession.active, vDel)
     }
     override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
       new WriteBuilder {

@@ -483,11 +483,7 @@ class GraftLogSink(
           val (vRw, _) = log.replaceWhere(data.sparkSession, staged,
             org.apache.spark.sql.functions.expr(sql),
             targetBytes = target, txn = Some((appId, batchId)))
-          if (vRw != before) {
-            val bc = log.bloomColumns(vRw)
-            if (bc.nonEmpty)
-              log.writeBloomSidecarFor(data.sparkSession, vRw, bc)
-          }
+          if (vRw != before) log.writeBloomSidecarFor(data.sparkSession, vRw)
           vRw != before
         }._1
       case None => mergeKey match {
@@ -573,10 +569,7 @@ class GraftLogSink(
         // (same discipline as OPTIMIZE — maintenance must not silently
         // degrade the point-lookup skip it coexists with). A no-op pass
         // (nothing repacked) rebuilds nothing.
-        if (repacked > 0) {
-          val bc = log.bloomColumns(vc)
-          if (bc.nonEmpty) log.writeBloomSidecarFor(data.sparkSession, vc, bc)
-        }
+        if (repacked > 0) log.writeBloomSidecarFor(data.sparkSession, vc)
         batchesSinceCompact = 0
       }
     }

@@ -244,18 +244,8 @@ object GraftSqlDml {
     val checks = storedChecks(spark, t)
     val ((v, n), retries) =
       t.log.withOccRetry()(t.log.updateWhere(spark, cond, set, checks = checks))
-    maintainBlooms(spark, t.log, v)
+    t.log.writeBloomSidecarFor(spark, v)
     DmlResult("UPDATE", t.name, v, n, 0L, 0L, retries)
-  }
-
-  /** `bloomBy` maintenance over the data files a DML commit staged —
-    * the same post-commit hook INSERT/OVERWRITE/OPTIMIZE/COPY INTO run
-    * (absence only reads conservatively, but point-lookup skipping must
-    * not silently degrade on exactly the hot DML tables that need it).
-    */
-  private def maintainBlooms(spark: SparkSession, log: SnapshotLog, v: Long): Unit = {
-    val bc = log.bloomColumns(v)
-    if (bc.nonEmpty) log.writeBloomSidecarFor(spark, v, bc)
   }
 
   /** The table's stored `prop.check.<name>` CHECK constraints as
@@ -293,7 +283,7 @@ object GraftSqlDml {
       case c => toColumn(translatePhys(stripQualifiers(c, t.quals), t.physMap))
     }
     val ((v, n), retries) = t.log.withOccRetry()(t.log.deleteWhereCow(spark, cond))
-    maintainBlooms(spark, t.log, v)
+    t.log.writeBloomSidecarFor(spark, v)
     DmlResult("DELETE", t.name, v, 0L, n, 0L, retries)
   }
 
@@ -591,7 +581,7 @@ object GraftSqlDml {
         insertNotMatched, deleteNmbs, checks = storedChecks(spark, t),
         insertWhen = insertWhen,
         nmbsUpdateWhen = nmbsUpdateWhen, nmbsUpdateSet = nmbsUpdateSet))
-    maintainBlooms(spark, log, v)
+    log.writeBloomSidecarFor(spark, v)
     DmlResult("MERGE", name, v, nUpd, nDel, nIns, retries)
   }
 }

@@ -460,9 +460,7 @@ object GraftSqlParser {
       val log = logFor(spark, cat, table)
       val declared =
         if (zorderCols.nonEmpty) Nil
-        else log.currentVersion
-          .flatMap(v => log.property(v, "clusterBy")).toSeq
-          .flatMap(_.split(',').map(_.trim).filter(_.nonEmpty))
+        else log.currentVersion.toSeq.flatMap(log.clusterColumns)
       val keys = if (zorderCols.nonEmpty) zorderCols else declared
       // a column-mapped table's WHERE speaks LOGICAL names; the stats
       // sidecars are keyed by PHYSICAL ids — translate the parsed scope
@@ -524,9 +522,7 @@ object GraftSqlParser {
       // rewritten outputs so point-lookup skipping survives OPTIMIZE
       // (absence is only conservative, but a maintenance op must not
       // silently degrade the scan plan it exists to improve)
-      val vOut = out.head.getLong(0)
-      val bloomCols = log.bloomColumns(vOut)
-      if (bloomCols.nonEmpty) log.writeBloomSidecarFor(spark, vOut, bloomCols)
+      log.writeBloomSidecarFor(spark, out.head.getLong(0))
       out
     }
   }
@@ -723,10 +719,7 @@ object GraftSqlParser {
       }
       // bloomBy maintenance over the freshly-loaded files (post-commit
       // is safe: absence reads conservatively)
-      if (loaded > 0) {
-        val bc = log.bloomColumns(v)
-        if (bc.nonEmpty) log.writeBloomSidecarFor(spark, v, bc)
-      }
+      if (loaded > 0) log.writeBloomSidecarFor(spark, v)
       Seq(Row(loaded, rows, cands.size - loaded, v))
     }
   }
@@ -884,8 +877,7 @@ object GraftSqlParser {
       }
       val ((v, (nDel, nIns)), _) = log.withOccRetry()(
         log.replaceWhere(spark, df, expr(condPhys), target))
-      val bc = log.bloomColumns(v)
-      if (bc.nonEmpty) log.writeBloomSidecarFor(spark, v, bc)
+      log.writeBloomSidecarFor(spark, v)
       Seq(Row("REPLACE WHERE", s"$cat.$table", v, nDel, nIns))
     }
   }

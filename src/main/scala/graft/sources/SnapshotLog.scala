@@ -202,6 +202,12 @@ class SnapshotLog(
 
   def currentVersion: Option[Long] = versions.lastOption
 
+  /** [[currentVersion]] for an operation that needs a committed
+    * snapshot: refuses with `caller`'s name on an empty log.
+    */
+  private def committedVersion(caller: String): Long = currentVersion.getOrElse(
+    throw new IllegalStateException(s"$caller: no committed snapshot at $root"))
+
   /** Commit wall-clock of a version (epoch millis) — the `#ts=` header
     * RECORDED INSIDE the commit anchor at commit time (the Delta
     * `commitInfo.timestamp` discipline): it survives log compaction,
@@ -323,16 +329,7 @@ class SnapshotLog(
     */
   def stageData(df: DataFrame, partitions: Int, allowEmpty: Boolean = false): Seq[String] = {
     require(partitions >= 1, s"stageData: partitions must be >= 1, got $partitions")
-    val id = java.util.UUID.randomUUID().toString
-    val dir = new File(dataDir, id)
-    df.repartition(partitions).write.mode("error").parquet(dir.toString)
-    val staged = Option(dir.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("."))
-      .map(f => s"data/$id/${f.getName}")
-      .toSeq.sorted
-    require(allowEmpty || staged.nonEmpty,
-      s"stageData: write produced no parquet files under $dir")
-    staged
+    stage("stageData", df.repartition(partitions), allowEmpty)
   }
 
   /** [[stageData]] with BYTE-SIZED output partitioning for a frame whose
@@ -351,23 +348,37 @@ class SnapshotLog(
     val key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
     val prev = spark.conf.getOption(key)
     spark.conf.set(key, targetBytes.toString)
-    try {
-      val id = java.util.UUID.randomUUID().toString
-      val dir = new File(dataDir, id)
-      df.hint("rebalance").write.mode("error").parquet(dir.toString)
-      val staged = Option(dir.listFiles()).getOrElse(Array.empty)
-        .filter(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("."))
-        .map(f => s"data/$id/${f.getName}")
-        .toSeq.sorted
-      require(allowEmpty || staged.nonEmpty,
-        s"stageDataSized: write produced no parquet files under $dir")
-      staged
-    } finally {
+    try stage("stageDataSized", df.hint("rebalance"), allowEmpty)
+    finally {
       prev match {
         case Some(v) => spark.conf.set(key, v)
         case None => spark.conf.unset(key)
       }
     }
+  }
+
+  /** [[stageData]] minus the repartition: write `df` EXACTLY as arranged
+    * (the caller owns partitioning/order — [[optimize]]'s clustering
+    * would be destroyed by a hash repartition).
+    */
+  private def stageArranged(df: DataFrame): Seq[String] =
+    stage("stageArranged", df, allowEmpty = false)
+
+  /** The one staging step under every write: `df` as written lands in a
+    * fresh `data/<uuid>/` directory; returns its `*.parquet` files as
+    * relative paths, sorted, refusing an empty result unless allowed.
+    */
+  private def stage(caller: String, df: DataFrame, allowEmpty: Boolean): Seq[String] = {
+    val id = java.util.UUID.randomUUID().toString
+    val dir = new File(dataDir, id)
+    df.write.mode("error").parquet(dir.toString)
+    val staged = Option(dir.listFiles()).getOrElse(Array.empty)
+      .filter(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("."))
+      .map(f => s"data/$id/${f.getName}")
+      .toSeq.sorted
+    require(allowEmpty || staged.nonEmpty,
+      s"$caller: write produced no parquet files under $dir")
+    staged
   }
 
   /** Phase 2: atomically publish `fileList` as the next version after
@@ -410,8 +421,12 @@ class SnapshotLog(
   def append(df: DataFrame, partitions: Int): Long = {
     val cur = currentVersion
     val staged = stageData(df, partitions)
-    commit(cur, cur.map(files).getOrElse(Nil) ++ staged)
+    commit(cur, appendLines(cur, staged))
   }
+
+  /** The listing of an append commit: `cur`'s lines plus `staged`. */
+  private def appendLines(cur: Option[Long], staged: Seq[String]): Seq[String] =
+    cur.map(files).getOrElse(Nil) ++ staged
 
   /** [[append]] carrying a STREAMING-TRANSACTION WATERMARK (the Delta
     * `SetTransaction` shape, the write-side half of exactly-once): the
@@ -419,10 +434,10 @@ class SnapshotLog(
     * at or below the recorded watermark is SKIPPED idempotently — the
     * redelivery a crashed streaming query makes after its sink commit
     * but before its checkpoint advance. Staging happens only for batches
-    * that will commit; a skip stages nothing. Commit races retry
-    * metadata-only against the re-read watermark (an append commutes;
-    * the staged files are reused), so N racing sinks converge without
-    * re-staging data.
+    * that will commit; a skip stages nothing. Commit races retry through
+    * [[withOccRetry]], metadata-only against the re-read watermark (an
+    * append commutes; the staged files are reused), so N racing sinks
+    * converge without re-staging data.
     *
     * @return (current version after the call, true iff this batch
     *         committed — false = idempotent skip)
@@ -433,29 +448,19 @@ class SnapshotLog(
     val key = s"txn.$appId"
     def watermark(v: Option[Long]): Long =
       v.flatMap(x => metaValues(x).get(key)).map(_.toLong).getOrElse(-1L)
-    var cur = currentVersion
-    if (batchId <= watermark(cur)) return (cur.get, false)
+    val before = currentVersion
+    if (batchId <= watermark(before)) return (before.get, false)
     val staged = stageData(df, partitions)
-    var attempt = 0
-    while (attempt <= maxRetries) {
+    withOccRetry(maxRetries) {
+      val cur = currentVersion
       if (batchId <= watermark(cur)) {
         // another instance of the SAME query won the race with this very
         // batch — drop the duplicate staging, nothing to commit
         staged.foreach(p => new File(dataRootPath, p).delete())
-        return (cur.get, false)
-      }
-      try {
-        val lines = withMeta(
-          cur.map(files).getOrElse(Nil) ++ staged, key, batchId.toString)
-        return (commit(cur, lines), true)
-      } catch {
-        case e: ConcurrentCommitException =>
-          if (attempt >= maxRetries) throw e
-          attempt += 1
-          cur = currentVersion
-      }
-    }
-    sys.error("unreachable")
+        (cur.get, false)
+      } else
+        (commit(cur, withMeta(appendLines(cur, staged), key, batchId.toString)), true)
+    }._1
   }
 
   /** [[overwrite]] under the [[appendTxn]] watermark discipline — the
@@ -494,30 +499,24 @@ class SnapshotLog(
     * lost race needs no conflict analysis: re-read the (now newer) current
     * listing, re-attach the SAME staged files, commit again. The data is
     * staged exactly ONCE; every retry is metadata-only (one change-sized
-    * delta write), which is what makes N racing appenders converge in
-    * O(N²) tiny commit attempts rather than re-staging data. Non-commuting
-    * operations (overwrite/delete/merge/compact) deliberately do NOT get a
-    * blind retry — their parent snapshot may have changed meaning, so the
-    * [[ConcurrentCommitException]] stays the caller's signal to re-derive
-    * (the Delta/Iceberg distinction between blind appends and conflicting
-    * transactions).
+    * delta write through [[withOccRetry]]), which is what makes N racing
+    * appenders converge in O(N²) tiny commit attempts rather than
+    * re-staging data. Non-commuting operations
+    * (overwrite/delete/merge/compact) deliberately do NOT get a blind
+    * re-attach — their parent snapshot may have changed meaning, so they
+    * re-derive their whole change per attempt instead (the Delta/Iceberg
+    * distinction between blind appends and conflicting transactions). An
+    * exhausted budget rethrows the last [[ConcurrentCommitException]].
     *
     * @return (committed version, retries consumed)
     */
   def appendWithRetry(
       df: DataFrame, partitions: Int, maxRetries: Int = 50): (Long, Int) = {
     val staged = stageData(df, partitions)
-    var attempt = 0
-    while (attempt <= maxRetries) {
+    withOccRetry(maxRetries) {
       val cur = currentVersion
-      try {
-        return (commit(cur, cur.map(files).getOrElse(Nil) ++ staged), attempt)
-      } catch {
-        case _: ConcurrentCommitException => attempt += 1
-      }
+      commit(cur, appendLines(cur, staged))
     }
-    throw new ConcurrentCommitException(
-      s"appendWithRetry: exhausted $maxRetries retries at $root")
   }
 
   // ── named refs: immutable tags + zero-copy branches (the Iceberg
@@ -576,8 +575,7 @@ class SnapshotLog(
     */
   def fork(name: String): SnapshotLog = {
     validateRefName(name)
-    val cur = currentVersion.getOrElse(
-      throw new IllegalStateException(s"fork: no committed snapshot at $root"))
+    val cur = committedVersion("fork")
     val child = new SnapshotLog(
       s"$root/branches/$name", checkpointInterval, Some(dataRootPath))
     require(child.currentVersion.isEmpty,
@@ -618,8 +616,7 @@ class SnapshotLog(
     * default the current one.
     */
   def cloneShallow(dstRoot: String, version: Option[Long] = None): SnapshotLog = {
-    val cur = currentVersion.getOrElse(
-      throw new IllegalStateException(s"cloneShallow: no committed snapshot at $root"))
+    val cur = committedVersion("cloneShallow")
     val v = version.getOrElse(cur)
     require(versions.contains(v),
       s"cloneShallow: version $v does not exist at $root (have ${versions.mkString(", ")})")
@@ -660,8 +657,7 @@ class SnapshotLog(
       dstRoot: String,
       version: Option[Long] = None,
       parallelCopyWith: Option[SparkSession] = None): SnapshotLog = {
-    val cur = currentVersion.getOrElse(
-      throw new IllegalStateException(s"cloneDeep: no committed snapshot at $root"))
+    val cur = committedVersion("cloneDeep")
     val v = version.getOrElse(cur)
     require(versions.contains(v),
       s"cloneDeep: version $v does not exist at $root (have ${versions.mkString(", ")})")
@@ -775,8 +771,7 @@ class SnapshotLog(
     * semantics, kept deliberately simple: no per-file sequence numbers).
     */
   def deleteRows(keys: DataFrame, partitions: Int): Long = {
-    val cur = currentVersion.getOrElse(
-      throw new IllegalStateException(s"deleteRows: no committed snapshot at $root"))
+    val cur = committedVersion("deleteRows")
     val staged = stageData(keys, partitions)
     commit(Some(cur), files(cur) ++ staged.map(DelPrefix + _))
   }
@@ -842,8 +837,7 @@ class SnapshotLog(
     */
   def deletePositions(positions: DataFrame): Long = {
     import org.apache.spark.sql.functions.col
-    val cur = currentVersion.getOrElse(
-      throw new IllegalStateException(s"deletePositions: no committed snapshot at $root"))
+    val cur = committedVersion("deletePositions")
     require(positions.columns.sorted.toSeq == Seq("_file", "_pos"),
       s"deletePositions: positions must be exactly (_file, _pos), got " +
         positions.columns.toSeq.mkString(", "))
@@ -890,8 +884,7 @@ class SnapshotLog(
     */
   def writeDeleteVectors(spark: SparkSession): (Long, Int) = {
     import org.apache.spark.sql.functions.col
-    val cur = currentVersion.getOrElse(
-      throw new IllegalStateException(s"writeDeleteVectors: no committed snapshot at $root"))
+    val cur = committedVersion("writeDeleteVectors")
     val pos = posDeleteFiles(cur)
     if (pos.isEmpty) return (cur, dvFiles(cur).size)
     val fromPos = spark.read
@@ -1075,39 +1068,46 @@ class SnapshotLog(
       partitions: Int): Long = {
     require(sources.nonEmpty, "copyIngest: no source files to load")
     val spark = data.sparkSession
-    val cur = currentVersion.getOrElse(
-      throw new IllegalStateException(s"copyIngest: no committed snapshot at $root"))
+    val cur = committedVersion("copyIngest")
     val drift = SchemaDrift.of(read(spark, cur).schema, data.schema)
     require(drift.isEmpty, s"copyIngest: source schema drifts from v$cur — $drift")
-    // stage the ledger (invisible until the meta line references it)
-    import spark.implicits._
-    val id = java.util.UUID.randomUUID().toString
-    val ledgerDir = new File(dataDir, s"_copyledger/$id")
-    sources.toDF("path", "size", "mtime")
-      .coalesce(1).write.mode("error").parquet(ledgerDir.toString)
+    val id = stageLedger(spark, sources)
     import org.apache.spark.sql.functions.col
     val projected =
       data.select(read(spark, cur).columns.map(col).toSeq: _*)
     // cluster-on-write (the INSERT discipline): a clusterBy table's bulk
     // backfill lands range-arranged so its footer stats give disjoint
     // per-file ranges immediately — no OPTIMIZE pass needed first
-    val clusterKeys =
-      if (!spark.conf.getOption("spark.graft.insert.clusterOnWrite")
-          .forall(_.toBoolean)) Nil
-      else property(cur, "clusterBy").toSeq
-        .flatMap(_.split(',').map(_.trim).filter(_.nonEmpty))
-        .filter(projected.columns.contains)
+    val clusterKeys = clusterColumns(cur).filter(projected.columns.contains)
     val staged =
       if (clusterKeys.isEmpty) stageData(projected, partitions)
-      else stageArranged(projected
-        .repartitionByRange(partitions, clusterKeys.map(col): _*)
-        .sortWithinPartitions(clusterKeys.map(col): _*))
+      else stageArranged(rangeArrange(projected, clusterKeys, partitions))
     // footer-derived min/max sidecars (zero extra data pass) — COPY'd
     // data skips like INSERTed data does
     writeFooterStatsSidecar(spark, staged)
+    commit(Some(cur), ledgerLines(cur, staged, id))
+  }
+
+  /** Stage a COPY batch's ledger file — the `sources` identities under
+    * `data/_copyledger/<id>/`, invisible until a commit's meta line
+    * references it. Returns the ledger id.
+    */
+  private def stageLedger(spark: SparkSession, sources: Seq[(String, Long, Long)]): String = {
+    import spark.implicits._
+    val id = java.util.UUID.randomUUID().toString
+    sources.toDF("path", "size", "mtime")
+      .coalesce(1).write.mode("error")
+      .parquet(new File(dataDir, s"_copyledger/$id").toString)
+    id
+  }
+
+  /** The listing of a COPY commit: `cur`'s lines plus `staged`, with
+    * ledger `id` appended to the `copyledgers` meta value — data and
+    * ledger reference land in the same version.
+    */
+  private def ledgerLines(cur: Long, staged: Seq[String], id: String): Seq[String] = {
     val prev = metaValues(cur).get(CopyLedgerKey).filter(_.nonEmpty)
-    commit(Some(cur), withMeta(files(cur) ++ staged, CopyLedgerKey,
-      prev.map(_ + ",").getOrElse("") + id))
+    withMeta(files(cur) ++ staged, CopyLedgerKey, prev.map(_ + ",").getOrElse("") + id)
   }
 
   /** [[copyIngest]] for a COLUMN-MAPPED table: `data` arrives already in
@@ -1124,8 +1124,7 @@ class SnapshotLog(
     import org.apache.spark.sql.functions.col
     require(sources.nonEmpty, "copyIngestMapped: no source files to load")
     val spark = data.sparkSession
-    val cur = currentVersion.getOrElse(
-      throw new IllegalStateException(s"copyIngestMapped: no committed snapshot at $root"))
+    val cur = committedVersion("copyIngestMapped")
     val (_, pairs) = columnMapping(cur).getOrElse(throw new IllegalStateException(
       s"copyIngestMapped: column mapping is not enabled at $root — use copyIngest"))
     require(wideningsPinnable(cur),
@@ -1136,16 +1135,10 @@ class SnapshotLog(
     val live = pairs.map(_._2)
     val drift = SchemaDrift.of(ds.filter(f => live.contains(f.name)), data.schema)
     require(drift.isEmpty, s"copyIngestMapped: source schema drifts from v$cur — $drift")
-    import spark.implicits._
-    val id = java.util.UUID.randomUUID().toString
-    val ledgerDir = new File(dataDir, s"_copyledger/$id")
-    sources.toDF("path", "size", "mtime")
-      .coalesce(1).write.mode("error").parquet(ledgerDir.toString)
+    val id = stageLedger(spark, sources)
     val staged = stageData(data.select(live.map(col): _*), partitions)
     writeFooterStatsSidecar(spark, staged)
-    val prev = metaValues(cur).get(CopyLedgerKey).filter(_.nonEmpty)
-    commit(Some(cur), withMeta(files(cur) ++ staged, CopyLedgerKey,
-      prev.map(_ + ",").getOrElse("") + id))
+    commit(Some(cur), ledgerLines(cur, staged, id))
   }
 
   /** [[copyIngest]] into a GENERATED ALWAYS AS IDENTITY table (the Delta
@@ -1166,59 +1159,28 @@ class SnapshotLog(
       start: Long,
       step: Long,
       partitions: Int): Long = {
-    import org.apache.spark.sql.functions.{broadcast, col, lit,
-      monotonically_increasing_id, row_number, spark_partition_id}
     require(sources.nonEmpty, "copyIngestIdentity: no source files to load")
     require(step != 0L, "copyIngestIdentity: step must be non-zero")
     val spark = data.sparkSession
-    val cur = currentVersion.getOrElse(
-      throw new IllegalStateException(s"copyIngestIdentity: no committed snapshot at $root"))
+    val cur = committedVersion("copyIngestIdentity")
     require(data.columns.contains(idCol),
       s"copyIngestIdentity: identity column $idCol not in the batch")
     val drift = SchemaDrift.of(read(spark, cur).schema, data.schema)
     require(drift.sameColumnsBut(idCol),
       s"copyIngestIdentity: source schema drifts from v$cur — $drift")
-    val baseCols = read(spark, cur).columns.toSeq
-    val src = data.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      require(src.where(col(idCol).isNotNull).limit(1).count() == 0L,
-        s"copyIngestIdentity: $idCol is GENERATED ALWAYS AS IDENTITY — " +
-          "source files must not provide values for it")
-      val hwm = property(cur, s"idhwm.$idCol").map(_.toLong)
-        .getOrElse(start - step)
-      val withPid = src.withColumn("__pid", spark_partition_id())
-      val counts = withPid.groupBy("__pid").count().collect()
-        .map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
-      val n = counts.map(_._2).sum
-      var acc = 0L
-      val offs = counts.map { case (pid, c) => val o = acc; acc += c; (pid, o) }
-      import spark.implicits._
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("__pid").orderBy(monotonically_increasing_id())
-      val assigned =
-        if (n == 0L) src.select(baseCols.map(col): _*)
-        else withPid
-          .join(broadcast(offs.toSeq.toDF("__pid", "__off")), "__pid")
-          .withColumn(idCol,
-            lit(hwm) + lit(step) * (col("__off") + row_number().over(w)))
-          .select(baseCols.map(col): _*)
+    withMintedIds(data, cur, idCol, start, step, read(spark, cur).columns.toSeq,
+      s"copyIngestIdentity: $idCol is GENERATED ALWAYS AS IDENTITY — " +
+        "source files must not provide values for it") { (assigned, n, hwm) =>
       // ledger staged first (invisible until the meta line references it)
-      val id = java.util.UUID.randomUUID().toString
-      val ledgerDir = new File(dataDir, s"_copyledger/$id")
-      sources.toDF("path", "size", "mtime")
-        .coalesce(1).write.mode("error").parquet(ledgerDir.toString)
+      val id = stageLedger(spark, sources)
       val staged =
         if (n == 0L) Seq.empty[String]
         else stageData(assigned, partitions)
-      if (staged.nonEmpty) writeFooterStatsSidecar(spark, staged)
-      val prev = metaValues(cur).get(CopyLedgerKey).filter(_.nonEmpty)
-      val lines0 = withMeta(files(cur) ++ staged, CopyLedgerKey,
-        prev.map(_ + ",").getOrElse("") + id)
-      val lines =
-        if (n == 0L) lines0
-        else withMeta(lines0, s"prop.idhwm.$idCol", (hwm + step * n).toString)
-      commit(Some(cur), lines)
-    } finally { src.unpersist(); () }
+      writeFooterStatsSidecar(spark, staged)
+      val lines = ledgerLines(cur, staged, id)
+      commit(Some(cur),
+        if (n == 0L) lines else withMeta(lines, s"prop.idhwm.$idCol", hwm.toString))
+    }
   }
 
   /** [[overwrite]] staging the frame's OWN partitioning plus footer
@@ -1252,7 +1214,7 @@ class SnapshotLog(
     }
     val cur = currentVersion
     val staged = stageArranged(df)
-    val v = commit(cur, cur.map(files).getOrElse(Nil) ++ staged)
+    val v = commit(cur, appendLines(cur, staged))
     writeFooterStatsSidecar(spark, staged)
     v
   }
@@ -1282,8 +1244,7 @@ class SnapshotLog(
       maxSmallFiles: Int,
       maxTombstoneFiles: Int,
       maxVersions: Int): Seq[(String, Long)] = {
-    val cur = currentVersion.getOrElse(
-      throw new IllegalStateException(s"maintenancePlan: no committed snapshot at $root"))
+    val cur = committedVersion("maintenancePlan")
     val nSmall = dataFiles(cur)
       .count(p => new File(dataRootPath, p).length() < smallBytes).toLong
     val nTombs = (tombstoneFiles(cur).size + posDeleteFiles(cur).size).toLong
@@ -1332,8 +1293,7 @@ class SnapshotLog(
     * expire).
     */
   def compact(spark: SparkSession, partitions: Int): Long = {
-    val cur = currentVersion.getOrElse(
-      throw new IllegalStateException(s"compact: no committed snapshot at $root"))
+    val cur = committedVersion("compact")
     // table metadata (column mapping, optimize pointers) survives the
     // rewrite; tombstones are absorbed (read() is the merge-on-read view)
     commit(Some(cur), metaLines(cur) ++ stageData(read(spark, cur), partitions))
@@ -1551,8 +1511,7 @@ class SnapshotLog(
     * refused — a no-op commit would only fog the history.
     */
   def restoreTo(version: Long): Long = {
-    val cur = currentVersion.getOrElse(
-      throw new IllegalStateException(s"restoreTo: no committed snapshot at $root"))
+    val cur = committedVersion("restoreTo")
     require(versions.contains(version),
       s"restoreTo: version $version is not committed at $root (have $versions)")
     val target = files(version)
@@ -1581,8 +1540,7 @@ class SnapshotLog(
       targetBytes: Long,
       scope: Option[Set[String]] = None): (Long, (Int, Int)) = {
     require(targetBytes >= 1L, s"compactSmall: targetBytes must be >= 1, got $targetBytes")
-    val cur = currentVersion.getOrElse(
-      throw new IllegalStateException(s"compactSmall: no committed snapshot at $root"))
+    val cur = committedVersion("compactSmall")
     // position deletes / deletion vectors address physical (file,
     // ordinal) rows, and the repack reads its candidates RAW — so files
     // a mask addresses are simply NOT candidates: they carry untouched
@@ -1619,17 +1577,6 @@ class SnapshotLog(
     (commit(Some(cur), carried ++ staged), (smalls.size, staged.size))
   }
 
-  /** OPTIMIZE under the log (the Delta `OPTIMIZE ... ZORDER/ORDER BY`
-    * shape): rewrite the current snapshot RANGE-CLUSTERED on `sortCols` —
-    * `repartitionByRange` gives every output file a disjoint key range
-    * (Spark's range partitioner maps each key to exactly one partition)
-    * and `sortWithinPartitions` orders rows inside each file, so
-    * min/max-based scan planning (zone maps, parquet footer stats) prunes
-    * to the few files whose range matches instead of sampling every file.
-    * Committed atomically like any rewrite; pinned readers of the
-    * unclustered versions are untouched. The staged files are written
-    * WITHOUT the generic re-repartition (it would destroy the clustering).
-    */
   /** Range-cluster `df` on `sortCols` — ONE column sorts directly; TWO
     * or more interleave as a Z-ORDER curve (true multi-dimensional
     * clustering, the Delta ZORDER shape): each column linearly buckets
@@ -1709,13 +1656,33 @@ class SnapshotLog(
     }
   }
 
+  /** The cluster-on-write arrangement: `df` range-partitioned into
+    * `partitions` on `keys`, each partition sorted by them, so footer
+    * stats give disjoint per-file ranges.
+    */
+  private[sources] def rangeArrange(df: DataFrame, keys: Seq[String], partitions: Int): DataFrame = {
+    import org.apache.spark.sql.functions.col
+    df.repartitionByRange(partitions, keys.map(col): _*)
+      .sortWithinPartitions(keys.map(col): _*)
+  }
+
+  /** OPTIMIZE under the log (the Delta `OPTIMIZE ... ZORDER/ORDER BY`
+    * shape): rewrite the current snapshot RANGE-CLUSTERED on `sortCols` —
+    * `repartitionByRange` gives every output file a disjoint key range
+    * (Spark's range partitioner maps each key to exactly one partition)
+    * and `sortWithinPartitions` orders rows inside each file, so
+    * min/max-based scan planning (zone maps, parquet footer stats) prunes
+    * to the few files whose range matches instead of sampling every file.
+    * Committed atomically like any rewrite; pinned readers of the
+    * unclustered versions are untouched. The staged files are written
+    * WITHOUT the generic re-repartition (it would destroy the clustering).
+    */
   def optimize(
       spark: SparkSession,
       partitions: Int,
       sortCols: Seq[org.apache.spark.sql.Column]): Long = {
     require(sortCols.nonEmpty, "optimize: need at least one clustering column")
-    val cur = currentVersion.getOrElse(
-      throw new IllegalStateException(s"optimize: no committed snapshot at $root"))
+    val cur = committedVersion("optimize")
     val arranged = clusterArrange(read(spark, cur), sortCols, partitions)
     // read() is the merge-on-read view, and ONLY the staged rewrite is
     // committed — outstanding key tombstones and position deletes are
@@ -1768,8 +1735,7 @@ class SnapshotLog(
       partitions: Int,
       sortCols: Seq[org.apache.spark.sql.Column]): (Long, (Int, Int)) = {
     require(sortCols.nonEmpty, "optimizeIncremental: need at least one clustering column")
-    val cur = currentVersion.getOrElse(
-      throw new IllegalStateException(s"optimizeIncremental: no committed snapshot at $root"))
+    val cur = committedVersion("optimizeIncremental")
     val lastOpt = metaValues(cur).get("lastopt").map(_.toLong).filter(versions.contains)
     lastOpt match {
       case None =>
@@ -1822,8 +1788,7 @@ class SnapshotLog(
       sortCols: Seq[org.apache.spark.sql.Column],
       subset: Seq[String]): (Long, (Int, Int)) = {
     require(sortCols.nonEmpty, "optimizeFiles: need at least one clustering column")
-    val cur = currentVersion.getOrElse(
-      throw new IllegalStateException(s"optimizeFiles: no committed snapshot at $root"))
+    val cur = committedVersion("optimizeFiles")
     val live = dataFiles(cur).toSet
     val dangling = subset.filterNot(live)
     require(dangling.isEmpty,
@@ -1858,8 +1823,7 @@ class SnapshotLog(
       spark: SparkSession,
       predicate: org.apache.spark.sql.Column): (Long, Long) = {
     import org.apache.spark.sql.functions.col
-    val cur = currentVersion.getOrElse(
-      throw new IllegalStateException(s"deleteWhere: no committed snapshot at $root"))
+    val cur = committedVersion("deleteWhere")
     if (dataFiles(cur).isEmpty) return (cur, 0L) // declared-empty table
     // Stage FIRST (the updateWhere discipline): the predicate scan is the
     // ONLY evaluation of the matched set — the old shape pre-counted with
@@ -1916,8 +1880,7 @@ class SnapshotLog(
       checks: Seq[(String, org.apache.spark.sql.Column)] = Nil): (Long, Long) = {
     import org.apache.spark.sql.functions.col
     require(set.nonEmpty, "updateWhere: need at least one SET assignment")
-    val cur = currentVersion.getOrElse(
-      throw new IllegalStateException(s"updateWhere: no committed snapshot at $root"))
+    val cur = committedVersion("updateWhere")
     if (dataFiles(cur).isEmpty) return (cur, 0L) // declared-empty table
     val base = readWithPositions(spark, cur)
     val baseCols = base.columns.toSeq.filterNot(c => c == "_file" || c == "_pos")
@@ -2179,8 +2142,7 @@ class SnapshotLog(
       spark: SparkSession,
       predicate: org.apache.spark.sql.Column): (Long, Long) = {
     import org.apache.spark.sql.functions.col
-    val cur = currentVersion.getOrElse(
-      throw new IllegalStateException(s"deleteWhereCow: no committed snapshot at $root"))
+    val cur = committedVersion("deleteWhereCow")
     if (dataFiles(cur).isEmpty) return (cur, 0L) // declared-empty table
     val base = readWithPositions(spark, cur)
     val addrStaged = stageData(
@@ -2264,8 +2226,7 @@ class SnapshotLog(
       // scope is a structural no-op, not a hopeful one
       txn: Option[(String, Long)] = None): (Long, (Long, Long)) = {
     import org.apache.spark.sql.functions.{coalesce, col, lit, raise_error, when}
-    val cur = currentVersion.getOrElse(
-      throw new IllegalStateException(s"replaceWhere: no committed snapshot at $root"))
+    val cur = committedVersion("replaceWhere")
     txn.foreach { case (app, b) =>
       val wm = metaValues(cur).get(s"txn.$app").map(_.toLong).getOrElse(-1L)
       if (b <= wm) return (cur, (0L, 0L))
@@ -2440,17 +2401,19 @@ class SnapshotLog(
     (v, (nDel, nIns))
   }
 
-  /** Optimistic-concurrency RETRY for the NON-COMMUTING DML class
-    * ([[deleteWhere]]/[[updateWhere]]/[[mergeInto]]/[[optimize]] — the
-    * ops [[appendWithRetry]] deliberately excludes): re-runs `op` after
-    * each lost commit race. Correct because every DML entry point here
-    * RE-DERIVES its whole change from `currentVersion` at invocation —
-    * the retry doesn't re-attach stale staged files to a moved table, it
-    * re-resolves the predicate/source against the NEW snapshot (the
-    * Delta conflict-resolution model: logical intent retries, physical
-    * plans don't). The op's semantic intent must itself be
-    * retry-stable (a predicate, a source batch — not "whatever rows I
-    * staged last time").
+  /** The one optimistic-concurrency RETRY loop: re-runs `op` after each
+    * lost commit race, rethrowing the last [[ConcurrentCommitException]]
+    * once `maxRetries` retries are spent. For the NON-COMMUTING DML class
+    * ([[deleteWhere]]/[[updateWhere]]/[[mergeInto]]/[[optimize]]) it is
+    * correct because every DML entry point here RE-DERIVES its whole
+    * change from `currentVersion` at invocation — the retry doesn't
+    * re-attach stale staged files to a moved table, it re-resolves the
+    * predicate/source against the NEW snapshot (the Delta
+    * conflict-resolution model: logical intent retries, physical plans
+    * don't). The op's semantic intent must itself be retry-stable (a
+    * predicate, a source batch — not "whatever rows I staged last
+    * time"). The commuting appends ([[appendWithRetry]], [[appendTxn]])
+    * stage once outside it and retry only their metadata commit.
     *
     * @return (op result, retries consumed)
     */
@@ -2511,8 +2474,7 @@ class SnapshotLog(
     * [[readMapped]]; [[renameColumn]]/[[dropColumn]] are metadata-only.
     */
   def enableColumnMapping(spark: SparkSession): Long = {
-    val cur = currentVersion.getOrElse(
-      throw new IllegalStateException(s"enableColumnMapping: no committed snapshot at $root"))
+    val cur = committedVersion("enableColumnMapping")
     require(columnMapping(cur).isEmpty,
       s"enableColumnMapping: column mapping is already enabled at $root")
     require(tombstoneFiles(cur).isEmpty,
@@ -2565,8 +2527,7 @@ class SnapshotLog(
     * vintage under its own mapping.
     */
   def renameColumn(from: String, to: String): Long = {
-    val cur = currentVersion.getOrElse(
-      throw new IllegalStateException(s"renameColumn: no committed snapshot at $root"))
+    val cur = committedVersion("renameColumn")
     val (next, pairs) = columnMapping(cur).getOrElse(throw new IllegalStateException(
       s"renameColumn: column mapping is not enabled at $root (enableColumnMapping first)"))
     require(pairs.exists(_._1 == from), s"renameColumn: no column named $from " +
@@ -2582,8 +2543,7 @@ class SnapshotLog(
     * physical id, so the dropped column's old values never resurrect.
     */
   def dropColumn(name: String): Long = {
-    val cur = currentVersion.getOrElse(
-      throw new IllegalStateException(s"dropColumn: no committed snapshot at $root"))
+    val cur = committedVersion("dropColumn")
     val (next, pairs) = columnMapping(cur).getOrElse(throw new IllegalStateException(
       s"dropColumn: column mapping is not enabled at $root (enableColumnMapping first)"))
     require(pairs.exists(_._1 == name), s"dropColumn: no column named $name " +
@@ -2601,8 +2561,7 @@ class SnapshotLog(
     */
   def appendMapped(df: DataFrame, partitions: Int): Long = {
     import org.apache.spark.sql.functions.col
-    val cur = currentVersion.getOrElse(
-      throw new IllegalStateException(s"appendMapped: no committed snapshot at $root"))
+    val cur = committedVersion("appendMapped")
     val (next0, pairs0) = columnMapping(cur).getOrElse(throw new IllegalStateException(
       s"appendMapped: column mapping is not enabled at $root (enableColumnMapping first)"))
     val known = pairs0.toMap
@@ -2669,8 +2628,7 @@ class SnapshotLog(
       spark: SparkSession,
       cols: Seq[(String, org.apache.spark.sql.types.DataType)]): Long = {
     require(cols.nonEmpty, "addColumnsMapped: need at least one column to add")
-    val cur = currentVersion.getOrElse(
-      throw new IllegalStateException(s"addColumnsMapped: no committed snapshot at $root"))
+    val cur = committedVersion("addColumnsMapped")
     val (next0, pairs) = columnMapping(cur).getOrElse(throw new IllegalStateException(
       s"addColumnsMapped: column mapping is not enabled at $root — use addColumns"))
     val ds = declaredSchema(cur).getOrElse(throw new IllegalStateException(
@@ -2807,8 +2765,7 @@ class SnapshotLog(
     * those on read. No data rewrite, no precision trap.
     */
   def widenColumn(spark: SparkSession, logicalName: String, toType: String): Long = {
-    val cur = currentVersion.getOrElse(
-      throw new IllegalStateException(s"widenColumn: no committed snapshot at $root"))
+    val cur = committedVersion("widenColumn")
     val (_, pairs) = columnMapping(cur).getOrElse(throw new IllegalStateException(
       s"widenColumn: column mapping is not enabled at $root (enableColumnMapping first)"))
     val phys = pairs.collectFirst { case (l, p) if l == logicalName => p }
@@ -2882,8 +2839,7 @@ class SnapshotLog(
   def analyze(spark: SparkSession, cols: Seq[String], exact: Boolean = false): Long = {
     import org.apache.spark.sql.functions.{approx_count_distinct, count, countDistinct, lit, col => c}
     require(cols.nonEmpty, "analyze: need at least one column")
-    val cur = currentVersion.getOrElse(
-      throw new IllegalStateException(s"analyze: no committed snapshot at $root"))
+    val cur = committedVersion("analyze")
     val data = read(spark, cur)
     // DEFAULT APPROXIMATE (HLL++, ~2% rsd): multi-column EXACT NDVs plan
     // as an Expand — N copies of every input row through the aggregate,
@@ -2968,7 +2924,7 @@ class SnapshotLog(
   def appendIndexed(df: DataFrame, statsCols: Seq[String]): Long = {
     val cur = currentVersion
     val staged = stageIndexed(df, statsCols)
-    commit(cur, cur.map(files).getOrElse(Nil) ++ staged)
+    commit(cur, appendLines(cur, staged))
   }
 
   /** Stage + commit `df` EXACTLY as arranged with PER-FILE DISTINCT-VALUE
@@ -3010,7 +2966,7 @@ class SnapshotLog(
       .coalesce(1).write.mode("overwrite")
       .parquet(new File(dir, "_values.parquet").toString)
     val cur = currentVersion
-    commit(cur, cur.map(files).getOrElse(Nil) ++ staged)
+    commit(cur, appendLines(cur, staged))
   }
 
   /** Equality-predicate read over a snapshot whose files carry
@@ -3025,31 +2981,32 @@ class SnapshotLog(
       version: Long,
       valueCol: String,
       value: String): (DataFrame, (Int, Int)) = {
-    import org.apache.spark.sql.functions.{col, lit}
+    import org.apache.spark.sql.functions.col
     val data = dataFiles(version)
-    val keep = data.groupBy(p => new File(dataRootPath, p).getParent).toSeq.flatMap {
-      case (dir, paths) =>
-        val sidecar = new File(dir, "_values.parquet")
-        if (!sidecar.exists()) paths
-        else {
-          val byFile = spark.read.parquet(sidecar.toString)
-            .where(col("col") === valueCol).collect()
-            .map(r => (r.getString(0), Option(r.getString(2)), r.getBoolean(3)))
-            .groupBy(_._1)
-          paths.filter { p =>
-            byFile.get(p) match {
-              case None => true // no entries for this file+column: conservative
-              case Some(es) => es.exists(_._3) || es.exists(_._2.contains(value))
-            }
-          }
-        }
-    }.sorted
+    val sets = fileValueSetsForColumn(spark, version, valueCol).getOrElse(Map.empty)
+    // no entries for a file+column or a FULL marker: kept, conservative
+    val keep = data.filter(p =>
+      sets.get(new File(dataRootPath, p).toString).forall(_.forall(_.contains(value))))
+    readKept(spark, version, keep, data.size, col(valueCol).cast("string") === value)
+  }
+
+  /** The tail of every sidecar-pruned read: `keep` (relative data paths
+    * of `version`) read under the snapshot's masks and filtered by
+    * `pred` — the empty relation when nothing is kept — plus
+    * (filesOpened, filesTotal).
+    */
+  private def readKept(
+      spark: SparkSession,
+      version: Long,
+      keep: Seq[String],
+      total: Int,
+      pred: org.apache.spark.sql.Column): (DataFrame, (Int, Int)) = {
     val pruned =
-      if (keep.isEmpty) read(spark, version).where(lit(false))
+      if (keep.isEmpty) read(spark, version).where(org.apache.spark.sql.functions.lit(false))
       else applyMasks(spark, version,
-        spark.read.parquet(keep.map(p => new File(dataRootPath, p).toString): _*)
-          .where(col(valueCol).cast("string") === value))
-    (pruned, (keep.size, data.size))
+        spark.read.parquet(keep.sorted.map(p => new File(dataRootPath, p).toString): _*)
+          .where(pred))
+    (pruned, (keep.size, total))
   }
 
   /** Stage + commit `df` EXACTLY as arranged with a PER-FILE BLOOM
@@ -3089,8 +3046,24 @@ class SnapshotLog(
     val staged = stageArranged(df)
     writeBloomSidecar(spark, staged, bloomCols, expectedItemsPerFile, fpp)
     val cur = currentVersion
-    commit(cur, cur.map(files).getOrElse(Nil) ++ staged)
+    commit(cur, appendLines(cur, staged))
   }
+
+  /** The `clusterBy` table-property columns of a version, parsed — the
+    * declared clustering keys cluster-on-write (INSERT, INSERT
+    * OVERWRITE, COPY INTO) and a bare `OPTIMIZE` use.
+    */
+  def clusterColumns(version: Long): Seq[String] = columnList(version, "clusterBy")
+
+  /** The `bloomBy` table-property columns of a version, parsed — the
+    * columns [[writeBloomSidecarFor]] keeps Bloom sidecars for.
+    */
+  private def bloomColumns(version: Long): Seq[String] = columnList(version, "bloomBy")
+
+  /** The one parse of a comma-list table property. */
+  private def columnList(version: Long, key: String): Seq[String] =
+    property(version, key).toSeq
+      .flatMap(_.split(',').map(_.trim).filter(_.nonEmpty))
 
   /** Build the `_blooms.parquet` sidecar for a set of staged files in
     * ONE distributed pass (group by `input_file_name` → Bloom aggregate
@@ -3100,14 +3073,6 @@ class SnapshotLog(
     * that plans before the sidecar lands just keeps every file
     * (conservative), never wrong.
     */
-  /** The `bloomBy` table-property columns of a version, parsed — the one
-    * place the comma list is interpreted (INSERT, OVERWRITE, and
-    * OPTIMIZE maintenance all consume this).
-    */
-  def bloomColumns(version: Long): Seq[String] =
-    property(version, "bloomBy").toSeq
-      .flatMap(_.split(',').map(_.trim).filter(_.nonEmpty))
-
   private[sources] def writeBloomSidecar(
       spark: SparkSession,
       staged: Seq[String],
@@ -3144,17 +3109,20 @@ class SnapshotLog(
   }
 
   /** Extend the bloom sidecars to cover the files a COMMITTED version
-    * appended — the `bloomBy` table-property maintenance hook the SQL
-    * INSERT path calls after its commit. Stage-dir-grouped; existing
-    * sidecar rows for OTHER stages are untouched (each stage dir owns
-    * its own sidecar).
+    * added, for the version's `bloomBy` columns — the table-property
+    * maintenance hook every SQL write path (INSERT, OVERWRITE, DELETE,
+    * UPDATE, MERGE, COPY INTO, REPLACE WHERE, OPTIMIZE, the log sink's
+    * REPLACE WHERE and auto-compaction) calls after its commit; a no-op
+    * on a table without `bloomBy`. A file without a filter only reads
+    * conservatively, but point-lookup skipping must not silently degrade
+    * on exactly the hot DML tables that need it. Stage-dir-grouped;
+    * existing sidecar rows for OTHER stages are untouched (each stage dir
+    * owns its own sidecar). Filters are sized for 100k items per file at
+    * 1% fpp.
     */
-  def writeBloomSidecarFor(
-      spark: SparkSession,
-      version: Long,
-      bloomCols: Seq[String],
-      expectedItemsPerFile: Long = 100000L,
-      fpp: Double = 0.01): Unit = {
+  def writeBloomSidecarFor(spark: SparkSession, version: Long): Unit = {
+    val bloomCols = bloomColumns(version)
+    if (bloomCols.isEmpty) return
     // the ADDED data files of `version` as a manifest diff — unlike
     // [[appendedFiles]] this serves rewrite commits too (OPTIMIZE
     // replaces files; its outputs are exactly what needs fresh filters)
@@ -3164,7 +3132,7 @@ class SnapshotLog(
       .filterNot(before).filter(_.endsWith(".parquet"))
     appended.groupBy(p => new File(dataRootPath, p).getParent).foreach {
       case (_, staged) =>
-        writeBloomSidecar(spark, staged.toSeq, bloomCols, expectedItemsPerFile, fpp)
+        writeBloomSidecar(spark, staged.toSeq, bloomCols, 100000L, 0.01)
     }
   }
 
@@ -3202,9 +3170,7 @@ class SnapshotLog(
     // sidecar's `file` column carries the stage-qualified relative path,
     // so rows stay unambiguous across directories)
     val data = dataFiles(version)
-    val sidecars = data.map(p => new File(dataRootPath, p).getParent).distinct
-      .map(dir => new File(dir, "_blooms.parquet")).filter(_.exists())
-      .map(_.toString)
+    val sidecars = stageSidecars(version, "_blooms.parquet").flatMap(_._2).map(_.toString)
     if (sidecars.isEmpty) return None
     val byFile = spark.read.parquet(sidecars: _*)
       .where(col("col") === bloomCol)
@@ -3229,18 +3195,13 @@ class SnapshotLog(
       version: Long,
       bloomCol: String,
       value: String): (DataFrame, (Int, Int)) = {
-    import org.apache.spark.sql.functions.{col, lit}
+    import org.apache.spark.sql.functions.col
     val data = dataFiles(version)
     val might = fileBloomProbe(spark, version, bloomCol, Seq(value))
       .getOrElse(Map.empty)
     val keep = data.filter(p =>
-      might.getOrElse(new File(dataRootPath, p).toString, true)).sorted
-    val pruned =
-      if (keep.isEmpty) read(spark, version).where(lit(false))
-      else applyMasks(spark, version,
-        spark.read.parquet(keep.map(p => new File(dataRootPath, p).toString): _*)
-          .where(col(bloomCol).cast("string") === value))
-    (pruned, (keep.size, data.size))
+      might.getOrElse(new File(dataRootPath, p).toString, true))
+    readKept(spark, version, keep, data.size, col(bloomCol).cast("string") === value)
   }
 
   /** Per-file `[lo, hi]` for every INTEGRAL column of the staged files,
@@ -3308,12 +3269,21 @@ class SnapshotLog(
     }
   }
 
-  /** Write (or extend) the staged directory's `_stats.parquet` sidecar
-    * from [[footerStats]] — the zero-scan path SQL INSERTs take so a
-    * plain `INSERT INTO` gets manifest-level file skipping for free.
+  /** [[writeStatsSidecar]] from [[footerStats]] — the zero-scan path SQL
+    * INSERTs take so a plain `INSERT INTO` gets manifest-level file
+    * skipping for free.
     */
-  private def writeFooterStatsSidecar(spark: SparkSession, staged: Seq[String]): Unit = {
-    val rows = footerStats(staged)
+  private def writeFooterStatsSidecar(spark: SparkSession, staged: Seq[String]): Unit =
+    writeStatsSidecar(spark, staged, footerStats(staged))
+
+  /** Write the staged directory's `_stats.parquet` sidecar: one
+    * (file, col, lo, hi) row per recorded range; nothing when `rows` is
+    * empty.
+    */
+  private def writeStatsSidecar(
+      spark: SparkSession,
+      staged: Seq[String],
+      rows: Seq[(String, String, Long, Long)]): Unit =
     if (rows.nonEmpty) {
       import spark.implicits._
       val dir = new File(dataRootPath, staged.head).getParentFile
@@ -3321,7 +3291,6 @@ class SnapshotLog(
         .coalesce(1).write.mode("overwrite")
         .parquet(new File(dir, "_stats.parquet").toString)
     }
-  }
 
   /** [[appendStrict]] + footer-derived stats sidecars — the SQL INSERT
     * path: schema enforcement, then min/max for every integral column
@@ -3364,14 +3333,11 @@ class SnapshotLog(
       // ONE commit, so a redelivered batch can neither re-mint nor skip
       // the watermark separately
       txn: Option[(String, Long)] = None): Long = {
-    import org.apache.spark.sql.functions.{broadcast, col, lit,
-      monotonically_increasing_id, row_number, spark_partition_id}
     val spark = df.sparkSession
     require(df.columns.contains(idCol),
       s"appendIdentityStats: identity column $idCol not in the batch")
     require(step != 0L, "appendIdentityStats: step must be non-zero")
-    val cur = currentVersion.getOrElse(
-      throw new IllegalStateException(s"appendIdentityStats: no committed snapshot at $root"))
+    val cur = committedVersion("appendIdentityStats")
     // the watermark check anchors to the SAME `cur` the commit below
     // targets (the [[appendTxn]] discipline): a racing instance's commit
     // between check and commit raises ConcurrentCommitException, the
@@ -3386,24 +3352,61 @@ class SnapshotLog(
     val drift = SchemaDrift.of(read(df.sparkSession, cur).schema, df.schema)
     require(drift.sameColumnsBut(idCol),
       s"appendIdentityStats: batch schema drifts from v$cur — $drift")
+    withMintedIds(df, cur, idCol, start, step, df.columns.toSeq,
+      s"appendIdentityStats: $idCol is GENERATED ALWAYS AS IDENTITY — " +
+        "provide NULL (or omit the column via an INSERT column list)") {
+      (assigned, n, hwm) =>
+        if (n == 0L)
+          // an empty batch mints nothing, but a WATERMARKED empty batch
+          // still records its txn mark (metadata-only commit) — the
+          // watermark must never lag a processed batch
+          txn.fold(cur) { case (app, b) =>
+            commit(Some(cur), withMeta(files(cur), s"txn.$app", b.toString))
+          }
+        else {
+          val staged = stageArranged(
+            if (clusterKeys.isEmpty) assigned.repartition(partitions)
+            else rangeArrange(assigned, clusterKeys, partitions))
+          writeFooterStatsSidecar(spark, staged)
+          val lines0 = withMeta(files(cur), s"prop.idhwm.$idCol", hwm.toString)
+          val lines = txn.fold(lines0) { case (app, b) =>
+            withMeta(lines0, s"txn.$app", b.toString) }
+          commit(Some(cur), lines ++ staged)
+        }
+    }
+  }
+
+  /** The identity-minting step of [[appendIdentityStats]] and
+    * [[copyIngestIdentity]]: pins `df` to ONE evaluation (persist),
+    * refuses any non-NULL `idCol` with `nonNullMsg` (ALWAYS semantics),
+    * counts rows per partition (one partition-count-sized pass) and
+    * hands `use` three things: the batch projected to `cols` with `idCol`
+    * = `hwm + step · (offset + rank)` (a per-partition `row_number`
+    * above per-partition offsets — no global sort, no single-partition
+    * window), the row count `n`, and the advanced watermark
+    * `hwm + step · n`, where `hwm` is `cur`'s `prop.idhwm.<idCol>`. The
+    * batch stays persisted until `use` returns.
+    */
+  private def withMintedIds[T](
+      df: DataFrame,
+      cur: Long,
+      idCol: String,
+      start: Long,
+      step: Long,
+      cols: Seq[String],
+      nonNullMsg: => String)(use: (DataFrame, Long, Long) => T): T = {
+    import org.apache.spark.sql.functions.{broadcast, col, lit,
+      monotonically_increasing_id, row_number, spark_partition_id}
+    val spark = df.sparkSession
     val src = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      require(src.where(col(idCol).isNotNull).limit(1).count() == 0L,
-        s"appendIdentityStats: $idCol is GENERATED ALWAYS AS IDENTITY — " +
-          "provide NULL (or omit the column via an INSERT column list)")
+      require(src.where(col(idCol).isNotNull).limit(1).count() == 0L, nonNullMsg)
       val hwm = property(cur, s"idhwm.$idCol").map(_.toLong)
         .getOrElse(start - step)
       val withPid = src.withColumn("__pid", spark_partition_id())
       val counts = withPid.groupBy("__pid").count().collect()
         .map(r => (r.getInt(0), r.getLong(1))).sortBy(_._1)
       val n = counts.map(_._2).sum
-      if (n == 0L)
-        // an empty batch mints nothing, but a WATERMARKED empty batch
-        // still records its txn mark (metadata-only commit) — the
-        // watermark must never lag a processed batch
-        return txn.fold(cur) { case (app, b) =>
-          commit(Some(cur), withMeta(files(cur), s"txn.$app", b.toString))
-        }
       var acc = 0L
       val offs = counts.map { case (pid, c) => val o = acc; acc += c; (pid, o) }
       import spark.implicits._
@@ -3413,18 +3416,8 @@ class SnapshotLog(
         .join(broadcast(offs.toSeq.toDF("__pid", "__off")), "__pid")
         .withColumn(idCol,
           lit(hwm) + lit(step) * (col("__off") + row_number().over(w)))
-        .select(df.columns.toSeq.map(col): _*)
-      val arranged =
-        if (clusterKeys.isEmpty) assigned.repartition(partitions)
-        else assigned.repartitionByRange(partitions, clusterKeys.map(col): _*)
-          .sortWithinPartitions(clusterKeys.map(col): _*)
-      val staged = stageArranged(arranged)
-      writeFooterStatsSidecar(spark, staged)
-      val lines0 = withMeta(files(cur), s"prop.idhwm.$idCol",
-        (hwm + step * n).toString)
-      val lines = txn.fold(lines0) { case (app, b) =>
-        withMeta(lines0, s"txn.$app", b.toString) }
-      commit(Some(cur), lines ++ staged)
+        .select(cols.map(col): _*)
+      use(assigned, n, hwm + step * n)
     } finally { src.unpersist(); () }
   }
 
@@ -3476,12 +3469,7 @@ class SnapshotLog(
         }
       }
     }
-    val stats = fromFooters ++ fallback
-    val dir = new File(dataRootPath, staged.head).getParentFile
-    if (stats.nonEmpty)
-      stats.toDF("file", "col", "lo", "hi")
-        .coalesce(1).write.mode("overwrite")
-        .parquet(new File(dir, "_stats.parquet").toString)
+    writeStatsSidecar(spark, staged, fromFooters ++ fallback)
     staged
   }
 
@@ -3495,18 +3483,25 @@ class SnapshotLog(
       version: Long,
       keyCol: String): Seq[(String, Option[(Long, Long)])] = {
     import org.apache.spark.sql.functions.col
-    dataFiles(version).groupBy(p => new File(dataRootPath, p).getParent).toSeq.flatMap {
-      case (dir, paths) =>
-        val sidecar = new File(dir, "_stats.parquet")
-        if (!sidecar.exists()) paths.map(_ -> None)
-        else {
-          val st = spark.read.parquet(sidecar.toString)
-            .where(col("col") === keyCol)
-            .collect().map(r => r.getString(0) -> (r.getLong(2), r.getLong(3))).toMap
-          paths.map(p => p -> st.get(p))
-        }
+    stageSidecars(version, "_stats.parquet").flatMap {
+      case (paths, None) => paths.map(_ -> None)
+      case (paths, Some(sidecar)) =>
+        val st = spark.read.parquet(sidecar.toString)
+          .where(col("col") === keyCol)
+          .collect().map(r => r.getString(0) -> (r.getLong(2), r.getLong(3))).toMap
+        paths.map(p => p -> st.get(p))
     }
   }
+
+  /** The data files of `version` grouped by stage directory, each group
+    * with that directory's `name` sidecar (`_stats.parquet`,
+    * `_values.parquet`, `_blooms.parquet`) when one exists — the one
+    * place readers locate sidecars.
+    */
+  private def stageSidecars(version: Long, name: String): Seq[(Seq[String], Option[File])] =
+    dataFiles(version).groupBy(p => new File(dataRootPath, p).getParent).toSeq.map {
+      case (dir, paths) => (paths, Some(new File(dir, name)).filter(_.exists()))
+    }
 
   /** [[fileRanges]] for consumers outside the log (the DSv2 catalog's
     * file-skipping scan): per-data-file `[lo, hi]` of `keyCol`, keyed by
@@ -3535,25 +3530,21 @@ class SnapshotLog(
       version: Long,
       valueCol: String): Option[Map[String, Option[Set[String]]]] = {
     import org.apache.spark.sql.functions.col
-    val entries = dataFiles(version)
-      .groupBy(p => new File(dataRootPath, p).getParent).toSeq.flatMap {
-        case (dir, paths) =>
-          val sidecar = new File(dir, "_values.parquet")
-          if (!sidecar.exists()) Nil
-          else {
-            val byFile = spark.read.parquet(sidecar.toString)
-              .where(col("col") === valueCol).collect()
-              .map(r => (r.getString(0), Option(r.getString(2)), r.getBoolean(3)))
-              .groupBy(_._1)
-            paths.flatMap { p =>
-              byFile.get(p).map { es =>
-                val abs = new File(dataRootPath, p).toString
-                abs -> (if (es.exists(_._3)) None
-                        else Some(es.flatMap(_._2).toSet))
-              }
-            }
+    val entries = stageSidecars(version, "_values.parquet").flatMap {
+      case (_, None) => Nil
+      case (paths, Some(sidecar)) =>
+        val byFile = spark.read.parquet(sidecar.toString)
+          .where(col("col") === valueCol).collect()
+          .map(r => (r.getString(0), Option(r.getString(2)), r.getBoolean(3)))
+          .groupBy(_._1)
+        paths.flatMap { p =>
+          byFile.get(p).map { es =>
+            val abs = new File(dataRootPath, p).toString
+            abs -> (if (es.exists(_._3)) None
+                    else Some(es.flatMap(_._2).toSet))
           }
-      }
+        }
+    }
     if (entries.isEmpty) None else Some(entries.toMap)
   }
 
@@ -3718,8 +3709,7 @@ class SnapshotLog(
   def mergeCopyOnWrite(updates: DataFrame, keyCol: String): (Long, (Int, Int)) = {
     import org.apache.spark.sql.functions.{broadcast, col}
     val spark = updates.sparkSession
-    val cur = currentVersion.getOrElse(
-      throw new IllegalStateException(s"mergeCopyOnWrite: no committed snapshot at $root"))
+    val cur = committedVersion("mergeCopyOnWrite")
     require(tombstoneFiles(cur).isEmpty && posDeleteFiles(cur).isEmpty,
       "mergeCopyOnWrite: compact() merge-on-read tombstones/position deletes before merging")
     val ranges = fileRanges(spark, cur, keyCol)
@@ -3869,8 +3859,7 @@ class SnapshotLog(
     require(updateWhen.isDefined || deleteWhen.isDefined || insertNotMatched ||
         deleteNotMatchedBySource.isDefined || nmbsUpdateWhen.isDefined,
       "mergeInto: at least one clause required")
-    val cur = currentVersion.getOrElse(
-      throw new IllegalStateException(s"mergeInto: no committed snapshot at $root"))
+    val cur = committedVersion("mergeInto")
     // position deletes COMPOSE (merge-on-read merge): the rewrite-scope
     // scan is masked, so a deleteWhere → mergeInto sequence needs no
     // compact between two otherwise delete-sized operations; the
@@ -4084,29 +4073,7 @@ class SnapshotLog(
       case (p, None) => p // stats-free stage: keep conservatively
       case (p, Some((lo, hi))) if hi >= pLo && lo <= pHi => p
     }
-    val pruned =
-      if (keep.isEmpty)
-        read(spark, version).where(org.apache.spark.sql.functions.lit(false))
-      else applyMasks(spark, version,
-        spark.read.parquet(keep.map(p => new File(dataRootPath, p).toString): _*)
-          .where(col(statsCol) >= pLo && col(statsCol) <= pHi))
-    (pruned, (keep.size, data.size))
-  }
-
-  /** [[stageData]] minus the repartition: write `df` EXACTLY as arranged
-    * (the caller owns partitioning/order — [[optimize]]'s clustering
-    * would be destroyed by a hash repartition).
-    */
-  private def stageArranged(df: DataFrame): Seq[String] = {
-    val id = java.util.UUID.randomUUID().toString
-    val dir = new File(dataDir, id)
-    df.write.mode("error").parquet(dir.toString)
-    val staged = Option(dir.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("."))
-      .map(f => s"data/$id/${f.getName}")
-      .toSeq.sorted
-    require(staged.nonEmpty, s"stageArranged: write produced no parquet files under $dir")
-    staged
+    readKept(spark, version, keep, data.size, col(statsCol) >= pLo && col(statsCol) <= pHi)
   }
 
   /** Snapshot-pinned read of version `v`: exactly the manifest's files,
@@ -4189,8 +4156,7 @@ class SnapshotLog(
       schema: org.apache.spark.sql.types.StructType,
       staged: Seq[String],
       properties: Map[String, String] = Map.empty): Long = {
-    val cur = currentVersion.getOrElse(
-      throw new IllegalStateException(s"commitReplace: no committed snapshot at $root"))
+    val cur = committedVersion("commitReplace")
     commit(Some(cur), definitionMeta(schema, properties) ++ staged)
   }
 
@@ -4198,8 +4164,7 @@ class SnapshotLog(
     * `ALTER TABLE … SET TBLPROPERTIES` route).
     */
   def setProperty(key: String, value: String): Long = {
-    val cur = currentVersion.getOrElse(
-      throw new IllegalStateException(s"setProperty: no committed snapshot at $root"))
+    val cur = committedVersion("setProperty")
     commit(Some(cur), withMeta(files(cur), s"prop.$key", value))
   }
 
@@ -4212,8 +4177,7 @@ class SnapshotLog(
     * current version unchanged when the property was never set.
     */
   def removeProperty(key: String): Long = {
-    val cur = currentVersion.getOrElse(
-      throw new IllegalStateException(s"removeProperty: no committed snapshot at $root"))
+    val cur = committedVersion("removeProperty")
     if (property(cur, key).isEmpty) cur
     else commit(Some(cur),
       files(cur).filterNot(_.startsWith(s"${MetaPrefix}prop.$key=")))
@@ -4235,8 +4199,7 @@ class SnapshotLog(
       name: String,
       sqlText: Option[String],
       forExistingRows: Boolean = false): Long = {
-    val cur = currentVersion.getOrElse(
-      throw new IllegalStateException(s"setColumnDefault: no committed snapshot at $root"))
+    val cur = committedVersion("setColumnDefault")
     require(columnMapping(cur).isEmpty,
       s"setColumnDefault: $root uses column mapping — defaults ride the " +
         "declared schema, which mapping supersedes")
@@ -4267,8 +4230,7 @@ class SnapshotLog(
     * column mapping.
     */
   def renameEmptyDeclared(from: String, to: String): Long = {
-    val cur = currentVersion.getOrElse(
-      throw new IllegalStateException(s"renameEmptyDeclared: no committed snapshot at $root"))
+    val cur = committedVersion("renameEmptyDeclared")
     require(dataFiles(cur).isEmpty,
       s"renameEmptyDeclared: $root has data files — rename under column mapping")
     require(columnMapping(cur).isEmpty,
@@ -4352,8 +4314,7 @@ class SnapshotLog(
       spark: SparkSession,
       cols: Seq[(String, org.apache.spark.sql.types.DataType)]): Long = {
     require(cols.nonEmpty, "addColumns: need at least one column to add")
-    val cur = currentVersion.getOrElse(
-      throw new IllegalStateException(s"addColumns: no committed snapshot at $root"))
+    val cur = committedVersion("addColumns")
     require(columnMapping(cur).isEmpty,
       s"addColumns: $root uses column mapping — evolve its physical schema " +
         "through the mapping-aware path (renameColumn/widenColumn)")
@@ -4401,8 +4362,7 @@ class SnapshotLog(
     */
   def dropColumns(spark: SparkSession, names: Seq[String]): Long = {
     require(names.nonEmpty, "dropColumns: need at least one column to drop")
-    val cur = currentVersion.getOrElse(
-      throw new IllegalStateException(s"dropColumns: no committed snapshot at $root"))
+    val cur = committedVersion("dropColumns")
     require(columnMapping(cur).isEmpty,
       s"dropColumns: $root uses column mapping — evolve its physical schema " +
         "through the mapping-aware path")
@@ -4427,8 +4387,7 @@ class SnapshotLog(
   }
 
   def readLatest(spark: SparkSession): DataFrame =
-    read(spark, currentVersion.getOrElse(
-      throw new IllegalStateException(s"read: no committed snapshot at $root")))
+    read(spark, committedVersion("read"))
 
   /** Drop commits strictly below `keepFrom` (their exclusive files
     * become orphans for [[vacuum]]). Before deleting, a checkpoint is

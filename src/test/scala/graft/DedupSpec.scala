@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.obs.Trace
 import graft.operators.{Dedup, Similarity}
 
-class DedupSpec extends AnyFunSuite {
+class DedupSpec extends AnyFunSuite with TempRoots {
   import SparkTestSession._
 
   // Measured on the 2-round star fixture below (stable across runs): each
@@ -239,7 +239,7 @@ class DedupSpec extends AnyFunSuite {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration._
     import scala.concurrent.ExecutionContext.Implicits.global
-    val dir = java.nio.file.Files.createTempDirectory("graft-cc-race").toString
+    val dir = tempRoot("graft-cc-race").toString
     val nodesA = Seq(1L, 2L, 3L, 4L, 5L, 6L).toDF("doc_id")
     val pairsA = Seq((2L, 5L), (2L, 3L), (4L, 6L)).toDF("doc_a", "doc_b")
     val nodesB = (10L to 16L).toDF("doc_id")
@@ -285,7 +285,7 @@ class DedupSpec extends AnyFunSuite {
 
   test("connected components: reliable-checkpoint path matches the local path") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-cc-ckpt").toString
+    val dir = tempRoot("graft-cc-ckpt").toString
     val nodes = Seq(1L, 2L, 3L, 4L, 5L, 6L).toDF("doc_id")
     val pairs = Seq((2L, 5L), (2L, 3L), (4L, 6L)).toDF("doc_a", "doc_b")
     val local = Dedup.connectedComponents(nodes, pairs).collect()

@@ -11,7 +11,7 @@ import graft.streaming.StreamingCdc
   * micro-batches with VERSION-valued offsets — checkpoint-recoverable,
   * append-contract-enforcing, zero staging.
   */
-class GraftLogSourceSpec extends AnyFunSuite {
+class GraftLogSourceSpec extends AnyFunSuite with TempRoots {
   private val spark = SparkTestSession.spark
   import spark.implicits._
 
@@ -69,7 +69,7 @@ class GraftLogSourceSpec extends AnyFunSuite {
   test("an expire under a running checkpoint refuses instead of re-emitting") {
     val log = freshLog("t_expire")
     log.append((0 until 10).map(i => (i.toLong, 0L)).toDF("id", "v"), partitions = 1)
-    val base = java.nio.file.Files.createTempDirectory("graft_expire_ckpt_")
+    val base = tempRoot("graft_expire_ckpt_")
     val (sinkDir, ckptDir) = (base.resolve("out"), base.resolve("ckpt"))
     def run(): Unit = {
       val q = spark.readStream
@@ -148,7 +148,7 @@ class GraftLogSourceSpec extends AnyFunSuite {
   test("readChangeFeed resumes from the checkpoint exactly-once across kill/restart") {
     val log = freshLog("t_cdf_rec")
     log.append((0 until 20).map(i => (i.toLong, i.toLong * 10)).toDF("id", "v"), partitions = 1)
-    val base = java.nio.file.Files.createTempDirectory("graft_cdf_rec_")
+    val base = tempRoot("graft_cdf_rec_")
     val (sinkDir, ckptDir) = (base.resolve("out"), base.resolve("ckpt"))
     def run(): Unit = {
       val q = spark.readStream
@@ -198,7 +198,7 @@ class GraftLogSourceSpec extends AnyFunSuite {
   test("log-to-log pipeline streams exactly-once end to end across a kill/restart") {
     val src = freshLog("t_pipe_src")
     val dst = freshLog("t_pipe_dst")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_pipe_ckpt_")
+    val ckpt = tempRoot("graft_pipe_ckpt_")
     def run(): Unit = {
       val q = spark.readStream
         .format("graft-log").option("root", src.root).load()
@@ -234,7 +234,7 @@ class GraftLogSourceSpec extends AnyFunSuite {
     dst.append((0 until 10).map(i => (i.toLong, i.toLong)).toDF("id", "v"), partitions = 1)
     src.append((3 until 6).map(i => (i.toLong, i.toLong * 100)).toDF("id", "v"), partitions = 1)
     def drain(ckptName: String, appId: String, pred: String): Unit = {
-      val ckpt = java.nio.file.Files.createTempDirectory(ckptName)
+      val ckpt = tempRoot(ckptName)
       val q = spark.readStream
         .format("graft-log").option("root", src.root).load()
         .writeStream.format("graft-log")
@@ -266,7 +266,7 @@ class GraftLogSourceSpec extends AnyFunSuite {
     assert(dst.currentVersion.get == vAfter, "a violating trigger must not commit")
     // a drained resume (no new source versions → zero triggers) commits
     // nothing and leaves the scope untouched
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_rwsink_c_")
+    val ckpt = tempRoot("graft_rwsink_c_")
     def drainFrom(root: String): Unit = {
       val q = spark.readStream
         .format("graft-log").option("root", root).load()
@@ -291,7 +291,7 @@ class GraftLogSourceSpec extends AnyFunSuite {
   test("the sink refuses a schema-drifting batch loudly") {
     val src = freshLog("t_drift_src")
     val dst = freshLog("t_drift_dst")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_drift_ckpt_")
+    val ckpt = tempRoot("graft_drift_ckpt_")
     // the destination already holds (id, tag); the stream emits (id, other)
     dst.append(Seq((1L, "a")).toDF("id", "tag"), partitions = 1)
     src.append(Seq((2L, 9L)).toDF("id", "other"), partitions = 1)
@@ -319,7 +319,7 @@ class GraftLogSourceSpec extends AnyFunSuite {
     dst.setProperty("check.v_nonneg", "v >= 0")
     val vPre = dst.currentVersion.get
     src.append(Seq((2L, -7L)).toDF("id", "v"), partitions = 1)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_chk_ckpt_")
+    val ckpt = tempRoot("graft_chk_ckpt_")
     val q = spark.readStream
       .format("graft-log").option("root", src.root).load()
       .writeStream.format("graft-log")
@@ -339,7 +339,7 @@ class GraftLogSourceSpec extends AnyFunSuite {
     // the failed trigger's offset is already claimed by the old one)
     val src2 = freshLog("t_chk_src2")
     src2.append(Seq((3L, 9L), (4L, 0L)).toDF("id", "v"), partitions = 1)
-    val ckpt2 = java.nio.file.Files.createTempDirectory("graft_chk_ckpt2_")
+    val ckpt2 = tempRoot("graft_chk_ckpt2_")
     val q2 = spark.readStream
       .format("graft-log").option("root", src2.root).load()
       .writeStream.format("graft-log")
@@ -351,7 +351,7 @@ class GraftLogSourceSpec extends AnyFunSuite {
     // NULL passes (ANSI three-valued CHECK semantics)
     val src3 = freshLog("t_chk_src3")
     src3.append(Seq((5L, Option.empty[Long])).toDF("id", "v"), partitions = 1)
-    val ckpt3 = java.nio.file.Files.createTempDirectory("graft_chk_ckpt3_")
+    val ckpt3 = tempRoot("graft_chk_ckpt3_")
     val q3 = spark.readStream
       .format("graft-log").option("root", src3.root).load()
       .writeStream.format("graft-log")
@@ -368,7 +368,7 @@ class GraftLogSourceSpec extends AnyFunSuite {
     dst.append(Seq(("g0", 1L)).toDF("tag", "n"), partitions = 1)
     dst.setProperty("check.n_small", "n < 5")
     src.append((0 until 9).map(i => (i.toLong, s"g${i % 3}")).toDF("id", "tag"), 1)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_chkmv_ckpt_")
+    val ckpt = tempRoot("graft_chkmv_ckpt_")
     def start() = spark.readStream
       .format("graft-log").option("root", src.root).load()
       .groupBy(col("tag")).agg(count(lit(1)).as("n"))
@@ -452,7 +452,7 @@ class GraftLogSourceSpec extends AnyFunSuite {
       .format("graft-log").option("root", src.root).load()
       .writeStream.format("graft-log").option("root", dst.root)
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft_ms1_").toString)
+        tempRoot("graft_ms1_").toString)
       .outputMode("append").start()
     val ex = intercept[Exception] {
       try q1.processAllAvailable() finally q1.stop()
@@ -466,7 +466,7 @@ class GraftLogSourceSpec extends AnyFunSuite {
       .writeStream.format("graft-log").option("root", dst.root)
       .option("mergeSchema", "true")
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft_ms2_").toString)
+        tempRoot("graft_ms2_").toString)
       .outputMode("append").start()
     try q2.processAllAvailable() finally q2.stop()
     val got = dst.readLatest(spark)
@@ -481,7 +481,7 @@ class GraftLogSourceSpec extends AnyFunSuite {
     val dst = freshLog("t_ups_dst")
     dst.appendIndexed(Seq((1L, 10L), (2L, 20L)).toDF("id", "v"), Seq("id"))
     src.append(Seq((2L, 200L), (3L, 300L)).toDF("id", "v"), partitions = 1)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ups_ckpt_")
+    val ckpt = tempRoot("graft_ups_ckpt_")
     def start() = spark.readStream
       .format("graft-log").option("root", src.root).load()
       .writeStream.format("graft-log")
@@ -526,7 +526,7 @@ class GraftLogSourceSpec extends AnyFunSuite {
     (1 to 6).foreach { i =>
       src.append(Seq((i.toLong, i.toLong)).toDF("id", "v"), partitions = 1); ()
     }
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ac_ckpt_")
+    val ckpt = tempRoot("graft_ac_ckpt_")
     val q = spark.readStream
       .format("graft-log").option("root", src.root)
       .option("maxVersionsPerTrigger", "1").load()
@@ -550,7 +550,7 @@ class GraftLogSourceSpec extends AnyFunSuite {
   test("complete-mode sink maintains a materialized aggregate table per batch") {
     val src = freshLog("t_mv_src")
     val dst = freshLog("t_mv_dst")
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_mv_ckpt_")
+    val ckpt = tempRoot("graft_mv_ckpt_")
     src.append((0 until 12).map(i => (i.toLong, s"g${i % 3}")).toDF("id", "tag"), partitions = 1)
     val q = spark.readStream
       .format("graft-log").option("root", src.root).load()
@@ -644,8 +644,8 @@ class GraftLogSourceSpec extends AnyFunSuite {
       log.append((i * 5 until (i + 1) * 5).map(j => (j.toLong, i.toLong))
         .toDF("id", "v"), partitions = 1)
     }
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_bytes_ckpt_")
-    val dest = java.nio.file.Files.createTempDirectory("graft_bytes_out_")
+    val ckpt = tempRoot("graft_bytes_ckpt_")
+    val dest = tempRoot("graft_bytes_out_")
     def run(max: String): Unit = {
       val q = spark.readStream
         .format("graft-log").option("root", log.root)
@@ -841,7 +841,7 @@ class GraftLogSourceSpec extends AnyFunSuite {
     (0 until 4).foreach { i =>
       src.append(Seq((i.toLong, i.toLong)).toDF("id", "v"), 1); ()
     }
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_acname_")
+    val ckpt = tempRoot("graft_acname_")
     val q = spark.readStream
       .format("graft-log").option("root", src.root)
       .option("maxVersionsPerTrigger", "1").load()
@@ -871,7 +871,7 @@ class GraftLogSourceSpec extends AnyFunSuite {
     feed((4L until 7L).map(i => (i, 0L, true)))
     feed(Seq((20L, 200L, false), (21L, 210L, false), (22L, 220L, false),
       (99L, 0L, true)))
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_cdcdel_")
+    val ckpt = tempRoot("graft_cdcdel_")
     val q = spark.readStream
       .format("graft-log").option("root", src.root)
       .option("maxVersionsPerTrigger", "1").load()
@@ -922,7 +922,7 @@ class GraftLogSourceSpec extends AnyFunSuite {
     val src = freshLog("t_upsmap_src")
     // the feed speaks the LOGICAL post-rename name
     src.append((5L until 12L).map(i => (i, i * 1000L)).toDF("id", "w"), 1)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_upsmap_")
+    val ckpt = tempRoot("graft_upsmap_")
     val q = spark.readStream
       .format("graft-log").option("root", src.root).load()
       .writeStream.format("graft-log")
@@ -993,7 +993,7 @@ class GraftLogSourceSpec extends AnyFunSuite {
       src.append((i * 10 until i * 10 + 10).map(j => (j.toLong, j.toLong))
         .toDF("id", "v"), 1); ()
     }
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_acdml_")
+    val ckpt = tempRoot("graft_acdml_")
     def drain(): Unit = {
       val q = spark.readStream
         .format("graft-log").option("root", src.root)
@@ -1039,7 +1039,7 @@ class GraftLogSourceSpec extends AnyFunSuite {
       (1L, 5000000001L, false), (3L, 0L, true),
       (99L, 0L, true), (20L, 5000000020L, false))
       .toDF("id", "amount", "_del"), 1)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_cdm_")
+    val ckpt = tempRoot("graft_cdm_")
     val q = spark.readStream
       .format("graft-log").option("root", src.root).load()
       .writeStream.format("graft-log")

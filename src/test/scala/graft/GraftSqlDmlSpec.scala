@@ -23,8 +23,7 @@ class GraftSqlDmlSpec extends AnyFunSuite {
   }
 
   private def registerCatalog(): Unit = {
-    spark.conf.set("spark.sql.catalog.graftdml", classOf[GraftCatalog].getName)
-    spark.conf.set("spark.sql.catalog.graftdml.root", root)
+    GraftCatalog.mount(spark, "graftdml", root)
   }
 
   test("SQL UPDATE: qualified and self-referential SET, WHERE honored, one atomic commit") {

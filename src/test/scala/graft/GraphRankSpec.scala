@@ -11,7 +11,7 @@ import graft.operators.GraphRank
   * structural invariants (mass bound, symmetry, isolated-node exclusion,
   * reliable-checkpoint path agreement).
   */
-class GraphRankSpec extends AnyFunSuite {
+class GraphRankSpec extends AnyFunSuite with TempRoots {
   import SparkTestSession._
 
   private def pathPairs = {
@@ -80,7 +80,7 @@ class GraphRankSpec extends AnyFunSuite {
 
   test("reliable-checkpoint path agrees with the local lineage-truncation path") {
     val local = ranksOf(GraphRank.pagerank(pathPairs, iters = 3, scale = 1000000L))
-    val dir = java.nio.file.Files.createTempDirectory("graft-pr-ckpt").toString
+    val dir = tempRoot("graft-pr-ckpt").toString
     val durable = ranksOf(GraphRank.pagerank(
       pathPairs, iters = 3, scale = 1000000L, checkpointDir = Some(dir)))
     assert(local == durable)

@@ -62,7 +62,7 @@ object HiveTestSession {
   * overwritePartitions / MSCK-on-create) hold when the catalog is a real
   * Hive metastore.
   */
-class HiveTableManagerSpec extends AnyFunSuite {
+class HiveTableManagerSpec extends AnyFunSuite with TempRoots {
   import HiveTestSession._
 
   test("session really runs on the Hive catalog") {
@@ -100,7 +100,7 @@ class HiveTableManagerSpec extends AnyFunSuite {
 
   test("external table at a pinned location: DROP keeps data, MSCK-on-create recovers it") {
     import spark.implicits._
-    val loc = java.nio.file.Files.createTempDirectory("h_ext_spec").toString
+    val loc = tempRoot("h_ext_spec").toString
     val schema = StructType(Seq(
       StructField("k", LongType, nullable = false),
       StructField("d", StringType, nullable = false)))

@@ -30,26 +30,6 @@ class MultimodalSpec extends AnyFunSuite {
     assert(got.toSeq == expected)
   }
 
-  test("resize fits the target box and preserves aspect ratio") {
-    val d = Multimodal.withMediaPayload(Tables.documents(spark, SfDir).limit(100))
-      .select(
-        col("doc_id"),
-        graft.functions.MediaKernels.decodeHeaderCol(col("payload")).as("m"))
-      .where(col("m.width").isNotNull) // audio rows carry no dims
-      .select(
-        col("m.width").as("w"), col("m.height").as("h"),
-        Multimodal.resizeMeta(col("m"), 640, 480).as("r"))
-      .select(col("w"), col("h"), col("r.out_width"), col("r.out_height"))
-      .collect()
-    d.foreach { row =>
-      val (w, h, ow, oh) = (row.getLong(0), row.getLong(1), row.getLong(2), row.getLong(3))
-      assert(ow <= 640 && oh <= 480)
-      val scale = math.min(640.0 / w, 480.0 / h)
-      assert(ow == math.floor(w * scale).toLong && oh == math.floor(h * scale).toLong)
-    }
-    assert(d.nonEmpty)
-  }
-
   test("frame sampling covers every payload byte exactly once") {
     val withP = Multimodal.withPayload(Tables.documents(spark, SfDir).limit(50))
     val frames = Multimodal.frameHashes(withP, frameBytes = 256)

@@ -136,23 +136,6 @@ class PackingSpec extends AnyFunSuite {
     }
   }
 
-  test("manifest: grouped view agrees with the flat slice table") {
-    val manifest = Packing.packedSequenceManifest(fixture, Budget, Shards).collect()
-    val slices = Packing.packedSequenceSlices(fixture, Budget, Shards).collect()
-      .groupBy(r => (r.getAs[Long]("shard"), r.getAs[Long]("seq_in_shard")))
-    assert(manifest.length == slices.size)
-    manifest.foreach { m =>
-      val key = (m.getAs[Long]("shard"), m.getAs[Long]("seq_in_shard"))
-      val expected = slices(key).sortBy(_.getAs[Long]("slice_idx"))
-        .map(r => (r.getAs[Long]("slice_idx"), r.getAs[Long]("doc_id"),
-          r.getAs[Long]("tok_from"), r.getAs[Long]("tok_to"))).toSeq
-      val got = m.getAs[scala.collection.Seq[org.apache.spark.sql.Row]]("slices")
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
-      assert(got == expected, s"sequence $key manifest must list slices in order")
-      assert(m.getAs[Long]("seq_tokens") == expected.map(s => s._4 - s._3).sum)
-    }
-  }
-
   test("epochPlan: every epoch is a complete permutation with per-worker dense ranks") {
     val slices = Packing.packedSequenceSlices(fixture, Budget, Shards)
     val allSeqs = slices.select("shard", "seq_in_shard").distinct().collect()

@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.{ConcurrentCommitException, SnapshotLog}
 
-class SnapshotLogSpec extends AnyFunSuite {
+class SnapshotLogSpec extends AnyFunSuite with TempRoots {
   private val spark = SparkTestSession.spark
   import spark.implicits._
 
@@ -753,7 +753,7 @@ class SnapshotLogSpec extends AnyFunSuite {
     val log = freshLog("ledger_sweep")
     log.append(rows(10, "a"), partitions = 1)
     // a real COPY ledger, referenced from the commit's meta
-    val f = java.nio.file.Files.createTempDirectory("graft_ledger_src_")
+    val f = tempRoot("graft_ledger_src_")
       .resolve("x.parquet").toFile
     graft.streaming.StreamingSessionize.writeOneFile(rows(3, "cp"), f.toPath)
     log.copyIngest(Seq((f.getCanonicalPath, f.length(), f.lastModified())),

@@ -13,15 +13,14 @@ import graft.sources.{GraftCatalog, SnapshotLog}
   * and published as ONE commit so a crashed CTAS leaves no table; the
   * `clusterBy` property as OPTIMIZE's default keys.
   */
-class SnapshotSqlEvolutionSpec extends AnyFunSuite {
+class SnapshotSqlEvolutionSpec extends AnyFunSuite with TempRoots {
   private val spark = SparkTestSession.spark
   import spark.implicits._
 
   private val root = "/root/repo/target/snapsql_evo_spec"
 
   private def register(): Unit = {
-    spark.conf.set("spark.sql.catalog.graftevo", classOf[GraftCatalog].getName)
-    spark.conf.set("spark.sql.catalog.graftevo.root", root)
+    GraftCatalog.mount(spark, "graftevo", root)
   }
 
   private def logOf(table: String) = new SnapshotLog(s"$root/$table")
@@ -510,7 +509,7 @@ class SnapshotSqlEvolutionSpec extends AnyFunSuite {
       .writeStream.format("graft-log")
       .option("root", s"$root/mapstream")
       .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft_mapsink_").toString)
+        tempRoot("graft_mapsink_").toString)
       .outputMode("append").start()
     try q3.processAllAvailable() finally q3.stop()
     assert(spark.sql("SELECT a2, b2 FROM graftevo.mapstream ORDER BY a2").collect()

@@ -11,7 +11,7 @@ import graft.streaming.StreamingSessionize
   * `SELECT … FROM graftsnap.t` with `VERSION AS OF` / `TIMESTAMP AS OF`
   * riding Spark's native time-travel syntax into the log's pinned reads.
   */
-class SnapshotSqlSpec extends AnyFunSuite {
+class SnapshotSqlSpec extends AnyFunSuite with TempRoots {
   private val spark = SparkTestSession.spark
   import spark.implicits._
 
@@ -24,8 +24,7 @@ class SnapshotSqlSpec extends AnyFunSuite {
   }
 
   private def registerCatalog(): Unit = {
-    spark.conf.set("spark.sql.catalog.graftsnap", classOf[GraftCatalog].getName)
-    spark.conf.set("spark.sql.catalog.graftsnap.root", root)
+    GraftCatalog.mount(spark, "graftsnap", root)
   }
 
   /** Files the executed plan's V2 scan actually lists. */
@@ -463,7 +462,7 @@ class SnapshotSqlSpec extends AnyFunSuite {
     registerCatalog()
     spark.sql("DROP TABLE IF EXISTS graftsnap.cpy")
     spark.sql("CREATE TABLE graftsnap.cpy (id BIGINT, v BIGINT)")
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_copy_src_")
+    val srcDir = tempRoot("graft_copy_src_")
     def drop(df: org.apache.spark.sql.DataFrame, name: String): Unit =
       StreamingSessionize.writeOneFile(df, srcDir.resolve(name))
     drop(spark.range(10).selectExpr("id", "id * 2 AS v"), "a.parquet")
@@ -504,7 +503,7 @@ class SnapshotSqlSpec extends AnyFunSuite {
     }
     assert(badFmt.getMessage.contains("FILEFORMAT"), badFmt.getMessage)
     // CSV loads under the DECLARED schema (header + typed columns)
-    val csvDir = java.nio.file.Files.createTempDirectory("graft_copy_csv_")
+    val csvDir = tempRoot("graft_copy_csv_")
     java.nio.file.Files.write(csvDir.resolve("d.csv"),
       "id,v\n100,1\n101,2\n".getBytes("UTF-8"))
     val rc = spark.sql(
@@ -693,7 +692,7 @@ class SnapshotSqlSpec extends AnyFunSuite {
     registerCatalog()
     spark.sql("DROP TABLE IF EXISTS graftsnap.cpsz")
     spark.sql("CREATE TABLE graftsnap.cpsz (id BIGINT, v BIGINT)")
-    val srcDir = java.nio.file.Files.createTempDirectory("graft_cpsz_")
+    val srcDir = tempRoot("graft_cpsz_")
     def drop(df: org.apache.spark.sql.DataFrame, name: String): Unit =
       StreamingSessionize.writeOneFile(df, srcDir.resolve(name))
     (0 until 4).foreach(i => drop(

@@ -19,9 +19,10 @@ class SparkEntrySpec extends AnyFunSuite {
     def roots(): Set[String] =
       Option(tmp.list()).getOrElse(Array.empty[String]).filter(_.startsWith("graft")).toSet
     val before = roots()
-    Seq("stream_log_pipeline", "cdc_merge_pruned", "snapshot_sql_copy_into").foreach { q =>
-      assert(SparkEntry.queries(q)(spark, SfDir).collect().nonEmpty, q)
-    }
+    Seq("stream_log_pipeline", "cdc_merge_pruned", "snapshot_sql_copy_into", "ingest_batch")
+      .foreach { q =>
+        assert(SparkEntry.queries(q)(spark, SfDir).collect().nonEmpty, q)
+      }
     val left = roots() -- before
     assert(left.isEmpty, s"temp roots left behind: $left")
   }

@@ -16,3 +16,24 @@ object SparkTestSession {
 
   val SfDir = "/root/testdata/sf0.001"
 }
+
+/** Scratch directories that live for one test: [[tempRoot]] creates one
+  * under `java.io.tmpdir`, and every root a test created is deleted when
+  * that test ends, pass or fail.
+  */
+trait TempRoots extends org.scalatest.TestSuiteMixin { this: org.scalatest.TestSuite =>
+  private val roots = scala.collection.mutable.Buffer.empty[java.nio.file.Path]
+
+  protected def tempRoot(prefix: String): java.nio.file.Path = roots.synchronized {
+    val p = java.nio.file.Files.createTempDirectory(prefix)
+    roots += p
+    p
+  }
+
+  abstract override def withFixture(test: NoArgTest): org.scalatest.Outcome =
+    try super.withFixture(test)
+    finally roots.synchronized {
+      roots.foreach(graft.streaming.StreamingSessionize.deleteTree)
+      roots.clear()
+    }
+}

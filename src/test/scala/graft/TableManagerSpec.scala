@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.EventsEtl
 import graft.sources.{CsvSource, TableManager}
 
-class TableManagerSpec extends AnyFunSuite {
+class TableManagerSpec extends AnyFunSuite with TempRoots {
   import SparkTestSession._
 
   test("dynamic partition overwrite load is idempotent") {
@@ -140,7 +140,7 @@ class TableManagerSpec extends AnyFunSuite {
 
   test("external table: data survives DROP and is recovered at the pinned location") {
     import spark.implicits._
-    val loc = java.nio.file.Files.createTempDirectory("t_ext_spec").toString
+    val loc = tempRoot("t_ext_spec").toString
     val schema = StructType(Seq(
       StructField("k", LongType, nullable = false),
       StructField("d", StringType, nullable = false)))

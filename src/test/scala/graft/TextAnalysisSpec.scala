@@ -33,7 +33,7 @@ class TextAnalysisSpec extends AnyFunSuite {
       (1L, "der hund und die katze ist da"),
       (2L, "le chat et la maison est grande"),
       (3L, "xyzzy plugh qwerty")).toDF("doc_id", "text")
-    val got = df.select(col("doc_id"), TextAnalysis.langId(col("text")).as("l"))
+    val got = df.select(col("doc_id"), TextAnalysis.langIdOf(TextAnalysis.tokens(col("text"))).as("l"))
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(got(1L) == "de")
     assert(got(2L) == "fr")
@@ -90,7 +90,7 @@ class TextAnalysisSpec extends AnyFunSuite {
     val clean = "the cat sat on the mat and looked at the dog in the garden " * 4
     val soup = "!!! ??? *** $$$ %%% ### @@@ &&&"
     val q = Seq((1L, clean), (2L, soup)).toDF("doc_id", "text")
-      .select(col("doc_id"), TextAnalysis.qualityScore(col("text")).as("q"))
+      .select(col("doc_id"), TextAnalysis.qualityScoreOf(col("text"), TextAnalysis.tokens(col("text"))).as("q"))
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(q.values.forall(v => v >= 0.0 && v <= 1.0))
     assert(q(1L) > q(2L))
