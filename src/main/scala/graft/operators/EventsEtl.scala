@@ -22,9 +22,12 @@ import graft.sources.TableManager
   * batch converges to the same table.
   *
   * Scale notes: the continuity tail is bounded by `gapSeconds` of wall-clock
-  * data → broadcast join. The boundary-preserve reads touch exactly two
-  * partitions (pruned via `event_date_kst` equality predicates). Everything
-  * else is the single-shuffle sessionize window + the partitioned write.
+  * data and rides the sessionize window's user exchange. The
+  * boundary-preserve reads touch exactly two partitions (pruned via
+  * `event_date_kst` equality predicates). The rows to write are then
+  * hash-routed by `event_date_kst` into `spark.sql.shuffle.partitions`
+  * tasks, so the write runs on every core and each KST partition is
+  * written by exactly one task (one file per partition per load).
   */
 object EventsEtl {
   val GapSeconds = 300L
@@ -91,7 +94,8 @@ object EventsEtl {
     val cols = tableSchema.fieldNames.map(col).toSeq
     table.overwritePartitions(
       spark,
-      sessionized.select(cols: _*).unionByName(preserved.select(cols: _*)))
+      sessionized.select(cols: _*).unionByName(preserved.select(cols: _*))
+        .repartition(spark.sessionState.conf.numShufflePartitions, col("event_date_kst")))
   }
 
   /** Load a SET of `[start, end)` UTC ranges, grouping them into contiguous

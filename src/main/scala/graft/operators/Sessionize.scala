@@ -111,16 +111,27 @@ object Sessionize {
     * (`DataLoadTransformer.scala:94-159` — `replaceWithExistingSessionId`).
     *
     * `tail` is the previously-loaded data's boundary slice (each user's rows
-    * within `gapSeconds` before the new batch starts). A user's FIRST event in
-    * the new batch continues their existing open session when the gap from
-    * that user's last prior event is `< gapSeconds`; it then inherits the
-    * existing `session_id` (which encodes the ORIGINAL session start, so ids
-    * are identical to what a single-batch sessionization of the full stream
-    * would produce — the split-invariance property tested in SessionizeSpec).
+    * within `gapSeconds` before the new batch starts), carrying its stored
+    * `session_start_sec`. A user's FIRST event in the new batch continues
+    * their existing open session when the gap from that user's last prior
+    * event is `< gapSeconds`; it then inherits the existing session start, so
+    * ids are identical to what a single-batch sessionization of the full
+    * stream would produce (the split-invariance property tested in
+    * SessionizeSpec).
     *
-    * Scale: the tail frame covers only `gapSeconds` of wall-clock data, so it
-    * is broadcast-joined (explicit hint) — no shuffle added to the main frame
-    * beyond the sessionize window exchange.
+    * One window pass over `batch ∪ tail`: tail rows are flagged and seed the
+    * running max with their stored start, so `lag` reaches a user's last tail
+    * event from the first batch row and the max carries the open session's
+    * start forward; the tail rows are then dropped. Precondition: per user,
+    * every tail row orders before every batch row by `(ts, tieBreak)` — true
+    * of any tail cut before the batch's start. Unlike [[sessionize]], a
+    * continuing user's first batch row gets the tail event's epoch as
+    * `prev_epoch_sec` instead of null.
+    *
+    * Scale: the union is hash-partitioned by user into
+    * `spark.sql.shuffle.partitions` partitions — an explicit count, which AQE
+    * does not coalesce — so the window runs on every core; the tail adds only
+    * `gapSeconds` of wall-clock rows to that one exchange.
     */
   def sessionizeWithContinuity(
       batch: DataFrame,
@@ -129,42 +140,24 @@ object Sessionize {
       tsCol: String = "ts",
       tieBreakCol: String = "event_id",
       gapSeconds: Long = 300L): DataFrame = {
-    val w = Window.partitionBy(col(userCol)).orderBy(col(tsCol), col(tieBreakCol))
-    val running = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-
-    // Each user's LAST boundary event — argmax via max-over-partition + filter,
-    // the reference's W3+P5 idiom (`DataLoadTransformer.scala:122-126`), with a
-    // tie-break on the sequence column so duplicate timestamps don't fan out
-    // the join (a latent bug in the reference we do not reproduce).
-    val wTail = Window.partitionBy(col(userCol))
-    val lastExisting = tail
-      .withColumn("__last_ts", max(col(tsCol)).over(wTail))
-      .filter(col(tsCol) === col("__last_ts"))
-      .withColumn("__last_seq", max(col(tieBreakCol)).over(wTail))
-      .filter(col(tieBreakCol) === col("__last_seq"))
-      .select(
-        col(userCol),
-        col("session_id").as("existing_session_id"),
-        col("session_start_sec").as("existing_session_start_sec"),
-        unix_timestamp(col(tsCol)).as("last_existing_sec"))
-
-    sessionize(batch, userCol, tsCol, tieBreakCol, gapSeconds)
-      .join(broadcast(lastExisting), Seq(userCol), "left")
-      // The batch's first row per user continues the open session when within gap.
-      .withColumn(
-        "__continues",
-        col("prev_epoch_sec").isNull && col("last_existing_sec").isNotNull &&
-          (col("epoch_sec") - col("last_existing_sec") < gapSeconds))
-      .withColumn(
-        "is_new_session",
-        when(col("__continues"), lit(false)).otherwise(col("is_new_session")))
+    val running = Window.partitionBy(col(userCol)).orderBy(col(tsCol), col(tieBreakCol))
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val carried = tail.select(
+      col(userCol), col(tsCol), col(tieBreakCol),
+      lit(true).as("__tail"), col("session_start_sec").as("__tail_start"))
+    val union = batch.withColumn("__tail", lit(false))
+      .unionByName(carried, allowMissingColumns = true)
+      .repartition(batch.sparkSession.sessionState.conf.numShufflePartitions, col(userCol))
+    sessionize(union, userCol, tsCol, tieBreakCol, gapSeconds)
+      // tail rows seed the running max with their stored start
       .withColumn(
         "session_start_sec",
-        max(when(col("__continues"), col("existing_session_start_sec"))
+        max(when(col("__tail"), col("__tail_start"))
           .when(col("is_new_session"), col("epoch_sec"))).over(running))
       .withColumn(
         "session_id",
         concat_ws("#", col(userCol), col("session_start_sec")))
-      .drop("existing_session_id", "existing_session_start_sec", "last_existing_sec", "__continues")
+      .where(!col("__tail"))
+      .drop("__tail", "__tail_start")
   }
 }

@@ -19,10 +19,11 @@ import org.apache.spark.sql.types.StructType
   *   semantics, one less metastore round-trip and no temp-table window).
   *
   * Scale notes: dynamic overwrite writes each partition exactly once per
-  * batch; re-running a failed backfill converges (idempotent). The write
-  * shuffle routes rows by partition key, so one task owns one output
-  * partition's files — no small-file explosion at 1000 executors when
-  * combined with AQE coalescing.
+  * batch; re-running a failed backfill converges (idempotent).
+  * [[overwritePartitions]] writes the frame as it is partitioned: every task
+  * holding rows of an output partition writes its own file there. A caller
+  * that wants one file per output partition routes rows by partition key
+  * first (`EventsEtl.loadBatch` hash-repartitions by `event_date_kst`).
   *
   * `location` pins the table to an explicit path, giving the reference's
   * EXTERNAL-table semantics (`HiveConnector.scala:17-27` creates the Hive

@@ -12,9 +12,9 @@ import graft.sources.TableManager
   * is a STATIC conf, fixed by the first SparkSession of the JVM, so this
   * cannot share [[SparkTestSession]]'s in-memory-catalog instance.
   *
-  * Metastore + warehouse live under target/ and are wiped per run — Derby
-  * leaves lock files behind, and a stale metastore would turn create-if-
-  * not-exists assertions into no-ops.
+  * Metastore, warehouse and Hive's resources dir live under target/ and
+  * are wiped per run — Derby leaves lock files behind, and a stale
+  * metastore would turn create-if-not-exists assertions into no-ops.
   */
 object HiveTestSession {
   private def wipe(p: String): Unit = {
@@ -32,10 +32,15 @@ object HiveTestSession {
     new java.io.File("target/hive-test-warehouse").getAbsolutePath
   private val metastoreDir =
     new java.io.File("target/hive-test-metastore").getAbsolutePath
+  // Hive's session start makes `<session uuid>_resources` here; its default
+  // is java.io.tmpdir, where one such directory was left behind per run
+  private val resourcesDir =
+    new java.io.File("target/hive-test-resources").getAbsolutePath
 
   lazy val spark: SparkSession = {
     wipe(warehouseDir)
     wipe(metastoreDir)
+    wipe(resourcesDir)
     val s = SparkSession.builder()
       .master("local[4]")
       .appName("graft-hive-test")
@@ -47,6 +52,7 @@ object HiveTestSession {
       .config(
         "javax.jdo.option.ConnectionURL",
         s"jdbc:derby:;databaseName=$metastoreDir;create=true")
+      .config("hive.downloaded.resources.dir", resourcesDir)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")

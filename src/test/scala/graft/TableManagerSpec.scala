@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.operators.EventsEtl
+import graft.operators.{EventsEtl, Sessionize}
 import graft.sources.{CsvSource, TableManager}
 
 class TableManagerSpec extends AnyFunSuite with TempRoots {
@@ -80,6 +80,32 @@ class TableManagerSpec extends AnyFunSuite with TempRoots {
     assert(rows.length == 2, "batch-2 overwrite must not drop batch-1's KST spill row")
     // 3-minute gap → continuity carries ONE session across the batch cut
     assert(rows.map(_.getString(1)).distinct.length == 1)
+    t.drop(spark)
+  }
+
+  test("3-batch load chain: one parquet file per KST partition, table == single-batch sessionize") {
+    // cuts off the KST midnight (15:00 UTC), so both cuts split a KST date
+    // between two loads and those edge partitions are rewritten with the
+    // preserved rows of the other batch
+    val ev = Tables.events(spark, SfDir)
+    val t = EventsEtl.manager("t_chain_spec")
+    t.recreate(spark)
+    val bounds = Seq("2024-01-01 00:00:00", "2024-01-10 03:17:29", "2024-01-21 11:45:03",
+      "2024-02-01 00:00:00")
+    bounds.sliding(2).foreach { case Seq(s, e) => EventsEtl.loadBatch(spark, t, ev, s, e) }
+
+    val root = new java.io.File(spark.sessionState.catalog.defaultTablePath(
+      org.apache.spark.sql.catalyst.TableIdentifier(t.name)))
+    val files = root.listFiles().filter(_.getName.startsWith("event_date_kst="))
+      .map(d => d.getName -> d.listFiles().count(_.getName.endsWith(".parquet"))).toMap
+    assert(files.size >= 30, s"the chain must span the month: $files")
+    assert(files.values.forall(_ == 1), s"each KST partition is written by one task: $files")
+
+    val cols = Seq("event_id", "user_id", "epoch_sec", "session_id", "session_start_sec", "event_date_kst")
+    val whole = Sessionize.sessionize(ev).withColumn("event_date_kst", EventsEtl.kstDate(col("ts")))
+    val loaded = t.read(spark).select(cols.map(col): _*)
+    assert(loaded.count() == ev.count())
+    assert(loaded.exceptAll(whole.select(cols.map(col): _*)).isEmpty)
     t.drop(spark)
   }
 
