@@ -34,7 +34,7 @@ object QueriesEtl {
     GraftSession.scratch("etl", dir, name)
 
   /** Files the first file scan of an executed plan reads. */
-  private def scanFiles(p: SparkPlan): Option[Int] =
+  private[graft] def scanFiles(p: SparkPlan): Option[Int] =
     p.collectLeaves().flatMap {
       case a: AdaptiveSparkPlanExec =>
         scanFiles(a.executedPlan) // AQE wraps the scan behind a leaf

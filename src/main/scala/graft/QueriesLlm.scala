@@ -4970,13 +4970,15 @@ object QueriesLlm {
     // IEEE doubles agree before floor; constant dims encode as 0.
     // knn_mmr_rerank: identical quantization fragment, integer dots,
     // and the greedy unrolled to its five picks — each pick is an
-    // argmax over (7·rel − 3·max_sim_to_selected, vec_id)
+    // argmax over (7·rel − 3·max_sim_to_selected, vec_id). The CTEs the
+    // picks re-read are MATERIALIZED: inlined, each pick re-expands the
+    // chain before it and DuckDB runs out of memory at sf0.01.
     "knn_mmr_rerank" -> {
       val q = QuantLevels
       val dotCv = "CAST(list_sum([a.cv[i] * b.cv[i] " +
         "for i in range(1, len(a.cv) + 1)]) AS BIGINT)"
       def pick(n: Int): String =
-        s"""p$n AS (
+        s"""p$n AS MATERIALIZED (
            |  SELECT * FROM (
            |    SELECT p.vec_id, p.rel,
            |      (SELECT max(pr.sim) FROM pairs pr
@@ -4985,7 +4987,7 @@ object QueriesLlm {
            |    FROM pool p
            |    WHERE p.vec_id NOT IN (SELECT vec_id FROM s${n - 1}))
            |  ORDER BY 7 * rel - 3 * ms DESC, vec_id LIMIT 1
-           |), s$n AS (SELECT vec_id FROM s${n - 1}
+           |), s$n AS MATERIALIZED (SELECT vec_id FROM s${n - 1}
            |           UNION ALL SELECT vec_id FROM p$n)""".stripMargin
       s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
          |ex AS (SELECT vec_id, i, v[i] AS x
@@ -4998,7 +5000,7 @@ object QueriesLlm {
          |                              ${q - 1}) AS BIGINT) END AS c
          |  FROM ex JOIN stats s USING (i)
          |),
-         |cvl AS (SELECT vec_id, list(c ORDER BY i) AS cv FROM codes GROUP BY vec_id),
+         |cvl AS MATERIALIZED (SELECT vec_id, list(c ORDER BY i) AS cv FROM codes GROUP BY vec_id),
          |qv AS (SELECT cv FROM cvl WHERE vec_id = 0),
          |rel AS (
          |  SELECT a.vec_id,
@@ -5006,11 +5008,11 @@ object QueriesLlm {
          |           for i in range(1, len(a.cv) + 1)]) AS BIGINT) AS rel
          |  FROM cvl a, qv b WHERE a.vec_id != 0
          |),
-         |pool AS (
+         |pool AS MATERIALIZED (
          |  SELECT r.vec_id, r.rel, c.cv FROM rel r JOIN cvl c USING (vec_id)
          |  ORDER BY r.rel DESC, r.vec_id LIMIT 40
          |),
-         |pairs AS (
+         |pairs AS MATERIALIZED (
          |  SELECT a.vec_id AS pa, b.vec_id AS pb, $dotCv AS sim
          |  FROM pool a JOIN pool b ON a.vec_id != b.vec_id
          |),

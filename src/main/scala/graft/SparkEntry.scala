@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.operators._
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract — see `SURVEY.md` §7.
   *
   * Every entry in [[queries]] is a pure `(SparkSession, sfDir) => DataFrame`
   * over the driver's parquet tables; [[oracleSql]] carries the equivalent

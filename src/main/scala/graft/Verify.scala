@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,39 +6,22 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      .config("spark.sql.warehouse.dir", "/root/repo/target/warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus.toInt)
     // Wipe the previous dump FIRST: a query that fails this run must leave a
     // hole the compare flags, not last run's stale parquet silently passing
     // for it. (A COMPILE failure still leaves the previous dump untouched —
     // that case is only catchable by gating on the sbt exit code; see the
     // verify skill note.)
     val root = new java.io.File(outDir)
-    def rm(f: java.io.File): Unit = {
-      // listFiles() is null (not empty) for unreadable/racing dirs
-      if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-      f.delete(); ()
-    }
     // Wipe guard: a swapped/mistyped CLI arg must not erase an arbitrary
     // tree. Deleting is allowed only when the target is (a) empty, (b) a
     // previous dump (carries oracle_sql.json), or (c) under a target/ dir.
     if (root.exists()) {
       val entries = Option(root.listFiles()).getOrElse(Array.empty)
       val isPriorDump = entries.exists(_.getName == "oracle_sql.json")
-      // canonicalize FIRST: "target/../.." must not pass as "under target/"
-      val underTarget = root.getCanonicalFile.getPath.split('/').contains("target")
-      require(entries.isEmpty || isPriorDump || underTarget,
+      require(entries.isEmpty || isPriorDump || GraftSession.underTarget(root),
         s"refusing to wipe $outDir: non-empty, not under target/, and not a previous verify dump")
-      rm(root)
+      graft.streaming.StreamingSessionize.deleteTree(root.toPath)
     }
     root.mkdirs()
     // SPARK_GRAFT_ONLY=q1,q2 restricts the dump AND the oracle json to the

@@ -35,13 +35,7 @@ object BinaryFiles {
       payloadCol: String,
       dir: String,
       ext: String = "bin"): Unit = {
-    // canonicalize BEFORE the guard: a path like target/../../etc would pass
-    // a raw-segment check while the wipe resolves outside the scratch tree
-    val root = new java.io.File(dir).getCanonicalFile
-    require(root.getPath.split('/').contains("target"),
-      s"refusing to write binary scatter outside a target/ scratch dir: $root")
-    graft.streaming.StreamingSessionize.deleteTree(root.toPath)
-    root.mkdirs()
+    graft.GraftSession.wipe(dir, "refusing to write binary scatter outside a target/ scratch dir")
     df.select(col(idCol).cast("long").as("id"), col(payloadCol).as("payload"))
       .foreachPartition { rows: Iterator[Row] =>
         rows.foreach { r =>

@@ -42,8 +42,7 @@ object Bucketing {
       val ident = spark.sessionState.sqlParser.parseTableIdentifier(table)
       val loc = new java.io.File(
         spark.sessionState.catalog.defaultTablePath(ident)).getCanonicalFile
-      // canonicalize BEFORE the guard so target/../../x cannot pass it
-      if (loc.exists() && loc.getPath.split('/').contains("target"))
+      if (loc.exists() && graft.GraftSession.underTarget(loc))
         graft.streaming.StreamingSessionize.deleteTree(loc.toPath)
     }
     val w = df.write

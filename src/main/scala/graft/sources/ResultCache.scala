@@ -4,6 +4,8 @@ import java.io.File
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.streaming.StreamingSessionize.deleteTree
+
 /** VERSION-KEYED QUERY RESULT CACHE over a [[SnapshotLog]] table — the
   * lakehouse result-cache design (Databricks/Snowflake publish the same
   * contract): a cached result is valid exactly as long as the table
@@ -56,7 +58,7 @@ class ResultCache(val root: String) {
       if (!tmp.renameTo(dir)) {
         // a racer published the same (tag, version) first — both computed
         // the identical deterministic result; drop ours, serve theirs
-        delete(tmp)
+        deleteTree(tmp.toPath)
       }
       (spark.read.parquet(dir.toString), false)
     }
@@ -82,25 +84,13 @@ class ResultCache(val root: String) {
           (d.getName.startsWith("v") && !live.contains(d.getName))
       }
     }.toSeq
-    dead.foreach(delete)
+    dead.foreach(d => deleteTree(d.toPath))
     dead.map(_.toString).sorted
   }
 
-  private def delete(f: File): Unit = {
-    Option(f.listFiles()).getOrElse(Array.empty).foreach(delete)
-    f.delete()
-    ()
-  }
-
-  /** Wipe and re-init the store (tests/demos; the [[SnapshotLog.recreate]]
-    * guard — refuses to delete outside a target/ scratch tree).
+  /** Wipe and re-init the store (tests/demos; refuses to delete outside a
+    * target/ scratch tree, like [[SnapshotLog.recreate]]).
     */
-  def recreate(): Unit = {
-    val canonical = new File(root).getCanonicalFile
-    require(canonical.getPath.split('/').contains("target"),
-      s"refusing to wipe a result cache outside a target/ scratch dir: $canonical")
-    if (canonical.exists()) delete(canonical)
-    canonical.mkdirs()
-    ()
-  }
+  def recreate(): Unit =
+    graft.GraftSession.wipe(root, "refusing to wipe a result cache outside a target/ scratch dir")
 }

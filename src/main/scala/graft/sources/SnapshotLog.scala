@@ -4586,14 +4586,8 @@ class SnapshotLog(
     * re-run discipline). Canonicalized and guarded to `target/` scratch
     * paths like every other destructive helper in this package.
     */
-  def recreate(): Unit = {
-    val canonical = new File(root).getCanonicalFile
-    require(canonical.getPath.split('/').contains("target"),
-      s"refusing to wipe a snapshot log outside a target/ scratch dir: $canonical")
-    graft.streaming.StreamingSessionize.deleteTree(canonical.toPath)
-    canonical.mkdirs()
-    ()
-  }
+  def recreate(): Unit =
+    graft.GraftSession.wipe(root, "refusing to wipe a snapshot log outside a target/ scratch dir")
 }
 
 /** The column diff of a write batch against its table: the table's

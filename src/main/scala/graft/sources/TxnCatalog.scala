@@ -172,14 +172,8 @@ class TxnCatalog(val root: String, val tables: Map[String, SnapshotLog]) {
     * Verify re-run discipline), canonicalized and guarded to `target/`
     * scratch paths like every destructive helper in this package.
     */
-  def recreate(): Unit = {
-    val canonical = new File(root).getCanonicalFile
-    require(canonical.getPath.split('/').contains("target"),
-      s"refusing to wipe a txn catalog outside a target/ scratch dir: $canonical")
-    graft.streaming.StreamingSessionize.deleteTree(canonical.toPath)
-    canonical.mkdirs()
-    ()
-  }
+  def recreate(): Unit =
+    graft.GraftSession.wipe(root, "refusing to wipe a txn catalog outside a target/ scratch dir")
 
   /** Table-log versions no committed txn references — the catalog-level
     * orphan report (crashed half-published writes, superseded-but-never-

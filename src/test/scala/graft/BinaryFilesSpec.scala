@@ -8,7 +8,7 @@ import graft.sources.BinaryFiles
 class BinaryFilesSpec extends AnyFunSuite {
   import SparkTestSession._
 
-  private val dir = "/root/repo/target/test-binfiles"
+  private val dir = s"${GraftSession.target}/test-binfiles"
 
   private def payloads(rows: (Long, Array[Byte])*) = {
     import spark.implicits._

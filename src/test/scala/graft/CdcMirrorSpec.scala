@@ -15,10 +15,10 @@ class CdcMirrorSpec extends AnyFunSuite {
   import spark.implicits._
 
   test("mirror tracks append / update / delete; crash re-derives exactly once; net-zero advances") {
-    val src = new SnapshotLog("/root/repo/target/mirror_spec/src")
-    val out = new SnapshotLog("/root/repo/target/mirror_spec/out")
+    val src = new SnapshotLog(s"${GraftSession.target}/mirror_spec/src")
+    val out = new SnapshotLog(s"${GraftSession.target}/mirror_spec/out")
     src.recreate(); out.recreate()
-    val cat = new TxnCatalog("/root/repo/target/mirror_spec/cat",
+    val cat = new TxnCatalog(s"${GraftSession.target}/mirror_spec/cat",
       Map("src" -> src, "mir" -> out))
     cat.recreate()
     def run() = Incremental.mirror(spark, cat, "src", "mir", Seq("id"), partitions = 1)

@@ -486,7 +486,7 @@ class DedupSpec extends AnyFunSuite with TempRoots {
     val corpus = all.where(u < 0.8)
     val fresh = all.where(u >= 0.8)
     val index = Dedup.withBandKeys(Dedup.minhashSignatures(corpus), bands = 8)
-    val path = "target/test-scratch/inc_index"
+    val path = s"${GraftSession.target}/test-scratch/inc_index"
     index.write.mode("overwrite").parquet(path)
     val loaded = spark.read.parquet(path)
     // the geometry stamp survives the parquet round-trip

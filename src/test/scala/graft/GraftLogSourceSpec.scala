@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.SnapshotLog
-import graft.streaming.StreamingCdc
+import graft.streaming.{StreamingCdc, StreamingSessionize}
 
 /** The native `graft-log` streaming source
   * ([[graft.sources.GraftLogSourceProvider]]): snapshot-log commits as
@@ -15,7 +15,7 @@ class GraftLogSourceSpec extends AnyFunSuite with TempRoots {
   private val spark = SparkTestSession.spark
   import spark.implicits._
 
-  private val root = "/root/repo/target/logsource_spec"
+  private val root = s"${GraftSession.target}/logsource_spec"
 
   private def freshLog(name: String): SnapshotLog = {
     val log = new SnapshotLog(s"$root/$name")
@@ -1081,11 +1081,7 @@ class GraftLogSourceSpec extends AnyFunSuite with TempRoots {
     }
     val sink = s"$root/t_avnow_sink"
     val ckpt = s"$root/t_avnow_ckpt"
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-      f.delete(); ()
-    }
-    rm(new java.io.File(sink)); rm(new java.io.File(ckpt))
+    Seq(sink, ckpt).foreach(d => StreamingSessionize.deleteTree(java.nio.file.Paths.get(d)))
     def drainOnce(): (Boolean, Long) = {
       val q = spark.readStream
         .format("graft-log").option("root", log.root)

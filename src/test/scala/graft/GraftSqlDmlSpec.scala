@@ -14,7 +14,7 @@ class GraftSqlDmlSpec extends AnyFunSuite {
   private val spark = SparkTestSession.spark
   import spark.implicits._
 
-  private val root = "/root/repo/target/sqldml_spec"
+  private val root = s"${GraftSession.target}/sqldml_spec"
 
   private def freshLog(name: String): SnapshotLog = {
     val log = new SnapshotLog(s"$root/$name")

@@ -6,6 +6,7 @@ import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.TableManager
+import graft.streaming.StreamingSessionize
 
 /** A real Hive-metastore session (embedded Derby), isolated in its own
   * forked JVM (build.sbt `Test / testGrouping`): the catalog implementation
@@ -17,43 +18,22 @@ import graft.sources.TableManager
   * metastore would turn create-if-not-exists assertions into no-ops.
   */
 object HiveTestSession {
-  private def wipe(p: String): Unit = {
-    val f = new java.io.File(p)
-    if (f.exists()) {
-      java.nio.file.Files.walk(f.toPath)
-        .sorted(java.util.Comparator.reverseOrder())
-        .forEach(q => java.nio.file.Files.deleteIfExists(q))
-    }
-  }
-
-  // Checkout-relative (the forked test JVM's cwd is the project root):
-  // hardcoded absolute paths would break the suite on any other checkout.
-  private val warehouseDir =
-    new java.io.File("target/hive-test-warehouse").getAbsolutePath
-  private val metastoreDir =
-    new java.io.File("target/hive-test-metastore").getAbsolutePath
+  private val warehouseDir = s"${GraftSession.target}/hive-test-warehouse"
+  private val metastoreDir = s"${GraftSession.target}/hive-test-metastore"
   // Hive's session start makes `<session uuid>_resources` here; its default
   // is java.io.tmpdir, where one such directory was left behind per run
-  private val resourcesDir =
-    new java.io.File("target/hive-test-resources").getAbsolutePath
+  private val resourcesDir = s"${GraftSession.target}/hive-test-resources"
 
   lazy val spark: SparkSession = {
-    wipe(warehouseDir)
-    wipe(metastoreDir)
-    wipe(resourcesDir)
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-hive-test")
+    Seq(warehouseDir, metastoreDir, resourcesDir)
+      .foreach(d => StreamingSessionize.deleteTree(java.nio.file.Paths.get(d)))
+    val s = GraftSession.builder(4, "graft-hive-test")
       .enableHiveSupport()
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
       .config("spark.sql.warehouse.dir", warehouseDir)
       .config(
         "javax.jdo.option.ConnectionURL",
         s"jdbc:derby:;databaseName=$metastoreDir;create=true")
       .config("hive.downloaded.resources.dir", resourcesDir)
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -11,7 +11,7 @@ class JsonlSourceSpec extends AnyFunSuite {
   import SparkTestSession._
 
   private def scratch(name: String): String = {
-    val p = s"/root/repo/target/jsonl_spec/$name"
+    val p = s"${GraftSession.target}/jsonl_spec/$name"
     p
   }
 

@@ -74,7 +74,7 @@ class LayoutSpec extends AnyFunSuite {
 
   // ── physical write path: REAL parquet files, REAL footer stats ──
 
-  private val zRoot = "/root/repo/target/layout_spec"
+  private val zRoot = s"${GraftSession.target}/layout_spec"
   private val (dimBits, fileBits) = (5, 4)
   private val (bxLo, bxHi, byLo, byHi) = (8L, 15L, 8L, 15L)
   // same 32x32 uniform grid as the simulation test, so the expected file

@@ -12,9 +12,9 @@ class ResultCacheSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def fresh(name: String): (SnapshotLog, ResultCache) = {
-    val log = new SnapshotLog(s"/root/repo/target/rescache_spec/$name/log")
+    val log = new SnapshotLog(s"${GraftSession.target}/rescache_spec/$name/log")
     log.recreate()
-    val cache = new ResultCache(s"/root/repo/target/rescache_spec/$name/cache")
+    val cache = new ResultCache(s"${GraftSession.target}/rescache_spec/$name/cache")
     cache.recreate()
     (log, cache)
   }
@@ -59,7 +59,7 @@ class ResultCacheSpec extends AnyFunSuite {
     val (log, cache) = fresh("tempgrace")
     log.append(Seq((1L, 1L)).toDF("k", "v"), partitions = 1)
     cache.resultFor(spark, log, "t")(df => df.agg(count(lit(1))))
-    val tagDir = new java.io.File("/root/repo/target/rescache_spec/tempgrace/cache/t")
+    val tagDir = new java.io.File(s"${GraftSession.target}/rescache_spec/tempgrace/cache/t")
     val young = new java.io.File(tagDir, ".v00000001.tmp-inflight")
     val old = new java.io.File(tagDir, ".v00000001.tmp-crashed")
     assert(young.mkdirs() && old.mkdirs())
@@ -79,7 +79,7 @@ class ResultCacheSpec extends AnyFunSuite {
       cache.resultFor(spark, log, "../escape")(df => df)
     }
     intercept[IllegalArgumentException] {
-      new ResultCache("/root/repo/target/../rescache_escape").recreate()
+      new ResultCache(s"${GraftSession.target}/../rescache_escape").recreate()
     }
   }
 }

@@ -44,7 +44,7 @@ class RetrievalSpec extends AnyFunSuite {
 
   test("persisted bm25 index: stored probe is bitwise the in-query ranker; bad params fail loudly") {
     val docs = Tables.documents(spark, SfDir)
-    val idx = "/root/repo/target/retrieval_spec/bm25_index"
+    val idx = s"${GraftSession.target}/retrieval_spec/bm25_index"
     Retrieval.bm25IndexWrite(docs, idx)
     val queries = Seq("q1" -> "alpha data common", "q2" -> "model training")
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
@@ -69,8 +69,8 @@ class RetrievalSpec extends AnyFunSuite {
 
   test("bm25 index merge: merged index is table-for-table the from-scratch union build") {
     val docs = Tables.documents(spark, SfDir)
-    val idxIncr = "/root/repo/target/retrieval_spec/bm25_incr"
-    val idxFull = "/root/repo/target/retrieval_spec/bm25_full"
+    val idxIncr = s"${GraftSession.target}/retrieval_spec/bm25_incr"
+    val idxFull = s"${GraftSession.target}/retrieval_spec/bm25_full"
     Retrieval.bm25IndexWrite(docs.where(pmod(col("doc_id"), lit(5)) =!= 0), idxIncr)
     Retrieval.bm25IndexMerge(docs.where(pmod(col("doc_id"), lit(5)) === 0), idxIncr)
     Retrieval.bm25IndexWrite(docs, idxFull)

@@ -344,7 +344,7 @@ class SimilaritySpec extends AnyFunSuite {
 
   test("persisted ivf index: parquet round-trip is bitwise the fit; probe without re-fit matches") {
     val emb = Tables.embeddings(spark, SfDir)
-    val idx = "/root/repo/target/similarity_spec/ivf_index"
+    val idx = s"${GraftSession.target}/similarity_spec/ivf_index"
     Similarity.ivfIndexWrite(emb, cells = 4, iters = 2, indexPath = idx)
     // stored centroids == a fresh deterministic fit's centroids, bitwise
     // (doubles round-trip parquet exactly)
@@ -372,7 +372,7 @@ class SimilaritySpec extends AnyFunSuite {
 
   test("ivf index append: write(A)+append(B) equals assigning A∪B against A's frozen centroids") {
     val emb = Tables.embeddings(spark, SfDir)
-    val idx = "/root/repo/target/similarity_spec/ivf_index_incr"
+    val idx = s"${GraftSession.target}/similarity_spec/ivf_index_incr"
     val a = emb.where(pmod(col("vec_id"), lit(5)) =!= 0)
     val b = emb.where(pmod(col("vec_id"), lit(5)) === 0)
     Similarity.ivfIndexWrite(a, cells = 4, iters = 2, indexPath = idx)
@@ -443,8 +443,8 @@ class SimilaritySpec extends AnyFunSuite {
 
   test("snapshot ivf index: generations commit atomically; a pinned probe never sees the append") {
     val emb = Tables.embeddings(spark, SfDir)
-    val idx = "/root/repo/target/similarity_spec/ivf_index_snap"
-    val idxPlain = "/root/repo/target/similarity_spec/ivf_index_snap_plain"
+    val idx = s"${GraftSession.target}/similarity_spec/ivf_index_snap"
+    val idxPlain = s"${GraftSession.target}/similarity_spec/ivf_index_snap_plain"
     new graft.sources.SnapshotLog(s"$idx/assignments_log").recreate()
     val a = emb.where(pmod(col("vec_id"), lit(5)) =!= 0)
     val b = emb.where(pmod(col("vec_id"), lit(5)) === 0)
@@ -473,7 +473,7 @@ class SimilaritySpec extends AnyFunSuite {
   test("ivf index append: overlapping ids fail loudly; drift gate fires on an out-of-distribution batch") {
     val emb = Tables.embeddings(spark, SfDir)
     import spark.implicits._
-    val idx = "/root/repo/target/similarity_spec/ivf_index_drift"
+    val idx = s"${GraftSession.target}/similarity_spec/ivf_index_drift"
     Similarity.ivfIndexWrite(emb, cells = 4, iters = 2, indexPath = idx)
     // re-ingesting an indexed id must fail, not silently duplicate probes
     val e = intercept[IllegalArgumentException] {
@@ -508,7 +508,7 @@ class SimilaritySpec extends AnyFunSuite {
 
   test("persisted ivf index: probing with mismatched geometry fails loudly") {
     val emb = Tables.embeddings(spark, SfDir)
-    val idx = "/root/repo/target/similarity_spec/ivf_index_geom"
+    val idx = s"${GraftSession.target}/similarity_spec/ivf_index_geom"
     Similarity.ivfIndexWrite(emb, cells = 4, iters = 2, indexPath = idx)
     val queries = emb.where(col("vec_id") < 5)
     val e = intercept[IllegalArgumentException] {

@@ -14,7 +14,7 @@ class SnapshotCdfSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def freshLog(name: String): SnapshotLog = {
-    val log = new SnapshotLog(s"/root/repo/target/cdf_spec/$name")
+    val log = new SnapshotLog(s"${GraftSession.target}/cdf_spec/$name")
     log.recreate()
     log
   }

@@ -18,7 +18,7 @@ class SnapshotDmlSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def freshLog(name: String): SnapshotLog = {
-    val log = new SnapshotLog(s"/root/repo/target/snapdml_spec/$name")
+    val log = new SnapshotLog(s"${GraftSession.target}/snapdml_spec/$name")
     log.recreate()
     log
   }

@@ -6,13 +6,14 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.{ConcurrentCommitException, SnapshotLog}
+import graft.streaming.StreamingSessionize
 
 class SnapshotLogSpec extends AnyFunSuite with TempRoots {
   private val spark = SparkTestSession.spark
   import spark.implicits._
 
   private def freshLog(name: String): SnapshotLog = {
-    val log = new SnapshotLog(s"/root/repo/target/snaplog_spec/$name")
+    val log = new SnapshotLog(s"${GraftSession.target}/snaplog_spec/$name")
     log.recreate()
     log
   }
@@ -123,7 +124,7 @@ class SnapshotLogSpec extends AnyFunSuite with TempRoots {
 
   test("delta-log metadata: change-sized anchors, periodic checkpoints, chains reconstruct") {
     val log = freshLog("delta") // checkpointInterval = 4
-    val logDir = new File("/root/repo/target/snaplog_spec/delta/_log")
+    val logDir = new File(s"${GraftSession.target}/snaplog_spec/delta/_log")
     def logName(v: Long, ext: String) = new File(logDir, f"v$v%08d.$ext")
     def rawLines(f: File) =
       java.nio.file.Files.readAllLines(f.toPath).toArray.map(_.toString).filter(_.nonEmpty)
@@ -377,12 +378,8 @@ class SnapshotLogSpec extends AnyFunSuite with TempRoots {
   }
 
   test("cloneDeep: materialized at the pinned version, zero lifetime coupling to the source") {
-    def rmTree(f: File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rmTree)
-      f.delete(); ()
-    }
-    val dst = new File("/root/repo/target/snaplog_spec/deep_clone_dst")
-    rmTree(dst)
+    val dst = new File(s"${GraftSession.target}/snaplog_spec/deep_clone_dst")
+    StreamingSessionize.deleteTree(dst.toPath)
     val log = freshLog("deep_clone_src")
     log.append(rows(10, "a"), partitions = 2) // v0
     log.append(rows(5, "b"), partitions = 1) // v1: 15 rows
@@ -401,14 +398,14 @@ class SnapshotLogSpec extends AnyFunSuite with TempRoots {
       "the deep clone reads through the source's expire+vacuum")
     // reopening by bare root (the catalog handle) sees its own pool
     assert(new SnapshotLog(dst.toString).readLatest(spark).count() == 10L)
-    rmTree(dst)
+    StreamingSessionize.deleteTree(dst.toPath)
   }
 
   test("cloneShallow: zero-copy, time-travel-pinned, independent, self-describing, vacuum-safe") {
     val log = freshLog("clone_src")
     log.append(rows(10, "a"), partitions = 2) // v0
     log.append(rows(5, "b"), partitions = 1) // v1: 15 rows
-    val dst = "/root/repo/target/snaplog_spec/clone_dst"
+    val dst = s"${GraftSession.target}/snaplog_spec/clone_dst"
     new SnapshotLog(dst).recreate() // clear any prior run
     val clone = log.cloneShallow(dst, version = Some(0L))
     // pinned at v0: 10 rows, and NO bytes under the clone root
@@ -554,12 +551,8 @@ class SnapshotLogSpec extends AnyFunSuite with TempRoots {
   }
 
   test("vacuumShared checks its contract: a forgotten clone or branch refuses; an empty _pool marker is loud") {
-    def rmTree(f: File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rmTree)
-      f.delete(); ()
-    }
-    val dst = new File("/root/repo/target/snaplog_spec/sharedvac_guard_clone")
-    rmTree(dst)
+    val dst = new File(s"${GraftSession.target}/snaplog_spec/sharedvac_guard_clone")
+    StreamingSessionize.deleteTree(dst.toPath)
     val log = freshLog("sharedvac_guard")
     log.append(rows(4, "base"), partitions = 1)
     val dev = log.fork("guarddev")
@@ -582,7 +575,7 @@ class SnapshotLogSpec extends AnyFunSuite with TempRoots {
     java.nio.file.Files.write(new File(dst, "_pool").toPath, Array.empty[Byte])
     val e3 = intercept[IllegalStateException](new SnapshotLog(dst.toString))
     assert(e3.getMessage.contains("_pool marker"), e3.getMessage)
-    rmTree(dst)
+    StreamingSessionize.deleteTree(dst.toPath)
   }
 
   test("shared-pool vacuum: solo vacuum refuses, vacuumShared keeps every chain readable") {
@@ -663,7 +656,7 @@ class SnapshotLogSpec extends AnyFunSuite with TempRoots {
 
   test("recreate refuses to wipe outside target/ scratch") {
     intercept[IllegalArgumentException] {
-      new SnapshotLog("/root/repo/target/../snaplog_escape").recreate()
+      new SnapshotLog(s"${GraftSession.target}/../snaplog_escape").recreate()
     }
   }
 
@@ -755,7 +748,7 @@ class SnapshotLogSpec extends AnyFunSuite with TempRoots {
     // a real COPY ledger, referenced from the commit's meta
     val f = tempRoot("graft_ledger_src_")
       .resolve("x.parquet").toFile
-    graft.streaming.StreamingSessionize.writeOneFile(rows(3, "cp"), f.toPath)
+    StreamingSessionize.writeOneFile(rows(3, "cp"), f.toPath)
     log.copyIngest(Seq((f.getCanonicalPath, f.length(), f.lastModified())),
       spark.read.parquet(f.toString), partitions = 1)
     val ledgerPool = new File(log.root, "data/_copyledger")

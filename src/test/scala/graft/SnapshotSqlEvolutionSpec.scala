@@ -17,7 +17,7 @@ class SnapshotSqlEvolutionSpec extends AnyFunSuite with TempRoots {
   private val spark = SparkTestSession.spark
   import spark.implicits._
 
-  private val root = "/root/repo/target/snapsql_evo_spec"
+  private val root = s"${GraftSession.target}/snapsql_evo_spec"
 
   private def register(): Unit = {
     GraftCatalog.mount(spark, "graftevo", root)
@@ -188,17 +188,7 @@ class SnapshotSqlEvolutionSpec extends AnyFunSuite with TempRoots {
     assert(receipt.getString(1) == "cluster_by", receipt.toString)
     // the clustered scan skips files on a k-range predicate
     val q = spark.sql("SELECT sum(v) AS s FROM graftevo.clu WHERE k BETWEEN 0 AND 99")
-    def scanFiles(p: org.apache.spark.sql.execution.SparkPlan): Option[Int] =
-      p.collectLeaves().flatMap {
-        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-          scanFiles(a.executedPlan)
-        case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
-          Some(b.scan
-            .asInstanceOf[org.apache.spark.sql.execution.datasources.v2.FileScan]
-            .fileIndex.inputFiles.length)
-        case _ => None
-      }.headOption
-    val planned = scanFiles(q.queryExecution.executedPlan).getOrElse(-1)
+    val planned = QueriesEtl.scanFiles(q.queryExecution.executedPlan).getOrElse(-1)
     val total = log.dataFiles(log.currentVersion.get).size
     assert(planned >= 1 && planned < total,
       s"expected manifest-level skipping after OPTIMIZE: planned $planned of $total")

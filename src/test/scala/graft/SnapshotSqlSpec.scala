@@ -15,7 +15,7 @@ class SnapshotSqlSpec extends AnyFunSuite with TempRoots {
   private val spark = SparkTestSession.spark
   import spark.implicits._
 
-  private val root = "/root/repo/target/snapsql_spec"
+  private val root = s"${GraftSession.target}/snapsql_spec"
 
   private def freshLog(name: String): SnapshotLog = {
     val log = new SnapshotLog(s"$root/$name")
@@ -407,18 +407,8 @@ class SnapshotSqlSpec extends AnyFunSuite with TempRoots {
       case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
     }
     val q = spark.sql("SELECT sum(v) AS s FROM graftsnap.cw WHERE k BETWEEN 0 AND 99")
-    def scanFiles(p: org.apache.spark.sql.execution.SparkPlan): Option[Int] =
-      p.collectLeaves().flatMap {
-        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-          scanFiles(a.executedPlan)
-        case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
-          Some(b.scan
-            .asInstanceOf[org.apache.spark.sql.execution.datasources.v2.FileScan]
-            .fileIndex.inputFiles.length)
-        case _ => None
-      }.headOption
     val log = new SnapshotLog(s"$root/cw")
-    val planned = scanFiles(q.queryExecution.executedPlan).getOrElse(-1)
+    val planned = QueriesEtl.scanFiles(q.queryExecution.executedPlan).getOrElse(-1)
     val total = log.dataFiles(log.currentVersion.get).size
     assert(planned >= 1 && planned < total,
       s"overwritten content must skip on write-clustered ranges: $planned of $total")

@@ -38,4 +38,25 @@ class SparkEntrySpec extends AnyFunSuite {
     assert(unoracled == rowsOnly,
       s"queries without oracles beyond the documented rows-only set: ${(unoracled -- rowsOnly).toSeq.sorted}")
   }
+
+  test("no source names a checkout: every root hangs off the working directory's target/") {
+    import java.nio.file.{Files, Path, Paths}
+    import scala.jdk.CollectionConverters._
+    // the checkout the engine once hard-coded, spelled in parts so this
+    // file does not match itself; the regex is any absolute literal into
+    // a target/ dir, whichever checkout it names
+    val checkout = Seq("root", "repo").mkString("/", "/", "/")
+    val absoluteTarget = "\"/[^\"$]*/target/".r
+    val files = Files.walk(Paths.get("src")).iterator().asScala.filter(Files.isRegularFile(_)).toSeq
+    val hits = files.flatMap { (f: Path) =>
+      Files.readAllLines(f, java.nio.charset.StandardCharsets.ISO_8859_1).asScala.zipWithIndex.collect {
+        case (line, i) if line.contains(checkout) || absoluteTarget.findFirstIn(line).nonEmpty =>
+          s"$f:${i + 1}: ${line.trim}"
+      }
+    }
+    assert(files.size > 100 && hits.isEmpty, s"${hits.size} hard-coded paths:\n${hits.mkString("\n")}")
+    val target = new java.io.File("target").getCanonicalPath
+    val scratch = new java.io.File(GraftSession.scratch("spec", SfDir, "x")).getCanonicalPath
+    assert(scratch.startsWith(target + "/"), s"$scratch is not under $target")
+  }
 }

@@ -3,12 +3,14 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for the whole test run (Test/fork gives the
-  * suite its own JVM; suites share this lazy instance).
+  * suite its own JVM; suites share this lazy instance). It is
+  * [[GraftSession.builder]]'s session with its own warehouse under the
+  * checkout's `target/`, so specs never touch the engine's warehouse.
   */
 object SparkTestSession {
   lazy val spark: SparkSession = {
     val s = GraftSession.builder(4, "graft-test")
-      .config("spark.sql.warehouse.dir", "/root/repo/target/test-warehouse")
+      .config("spark.sql.warehouse.dir", s"${GraftSession.target}/test-warehouse")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

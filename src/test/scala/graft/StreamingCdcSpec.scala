@@ -9,7 +9,7 @@ import graft.streaming.StreamingCdc
 class StreamingCdcSpec extends AnyFunSuite {
   import SparkTestSession._
 
-  private def root(name: String) = s"/root/repo/target/test-stream-cdc/$name"
+  private def root(name: String) = s"${GraftSession.target}/test-stream-cdc/$name"
 
   private def fixture = {
     import spark.implicits._

@@ -193,8 +193,8 @@ class TableManagerSpec extends AnyFunSuite with TempRoots {
 
   test("compaction: fragmented write collapses to the file-count target, bytes unchanged") {
     val docs = Tables.documents(spark, SfDir)
-    val frag = "/root/repo/target/etl_scratch/spec/fragmented"
-    val comp = "/root/repo/target/etl_scratch/spec/compacted"
+    val frag = s"${GraftSession.target}/etl_scratch/spec/fragmented"
+    val comp = s"${GraftSession.target}/etl_scratch/spec/compacted"
     def parquetFiles(p: String): Int =
       Option(new java.io.File(p).listFiles()).getOrElse(Array.empty)
         .count(_.getName.endsWith(".parquet"))

@@ -9,10 +9,10 @@ class TxnCatalogSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def fixture(name: String): (TxnCatalog, SnapshotLog, SnapshotLog) = {
-    val a = new SnapshotLog(s"/root/repo/target/txn_spec/$name/a")
-    val b = new SnapshotLog(s"/root/repo/target/txn_spec/$name/b")
+    val a = new SnapshotLog(s"${GraftSession.target}/txn_spec/$name/a")
+    val b = new SnapshotLog(s"${GraftSession.target}/txn_spec/$name/b")
     a.recreate(); b.recreate()
-    val cat = new TxnCatalog(s"/root/repo/target/txn_spec/$name/cat",
+    val cat = new TxnCatalog(s"${GraftSession.target}/txn_spec/$name/cat",
       Map("a" -> a, "b" -> b))
     cat.recreate()
     (cat, a, b)
@@ -90,10 +90,10 @@ class TxnCatalogSpec extends AnyFunSuite {
   test("incremental consume: increments compose, no-op commits nothing, a crashed run re-processes exactly once") {
     import graft.sources.Incremental
     import org.apache.spark.sql.functions.col
-    val src = new SnapshotLog("/root/repo/target/txn_spec/incr/src")
-    val out = new SnapshotLog("/root/repo/target/txn_spec/incr/out")
+    val src = new SnapshotLog(s"${GraftSession.target}/txn_spec/incr/src")
+    val out = new SnapshotLog(s"${GraftSession.target}/txn_spec/incr/out")
     src.recreate(); out.recreate()
-    val cat = new TxnCatalog("/root/repo/target/txn_spec/incr/cat",
+    val cat = new TxnCatalog(s"${GraftSession.target}/txn_spec/incr/cat",
       Map("src" -> src, "out" -> out))
     cat.recreate()
     val double = (df: org.apache.spark.sql.DataFrame) =>
