@@ -1038,7 +1038,7 @@ object QueriesEtl {
     }),
 
     // ── CATEGORICAL VALUE-SET PRUNING ([[SnapshotLog.appendValueIndexed]]
-    // / [[readPrunedByValue]]): per-file DISTINCT-VALUE sidecars — the
+    // / [[SnapshotLog.readWhere]]): per-file DISTINCT-VALUE sidecars — the
     // categorical complement of min/max stats — prune a point query on
     // o_orderpriority to the files actually carrying the literal;
     // laws: the skip fired AND the pruned read equals the full filtered
@@ -1053,9 +1053,9 @@ object QueriesEtl {
         .repartitionByRange(5, col("o_orderpriority"))
         .sortWithinPartitions(col("o_orderpriority"))
       val v0 = log.appendValueIndexed(base, Seq("o_orderpriority"))
-      val (pruned, (opened, total)) =
-        log.readPrunedByValue(s, v0, "o_orderpriority", "1-URGENT")
-      val full = log.read(s, v0).where(col("o_orderpriority") === "1-URGENT")
+      val urgent = col("o_orderpriority") === "1-URGENT"
+      val (pruned, (opened, total)) = log.readWhere(s, v0, urgent)
+      val full = log.read(s, v0).where(urgent)
       val equal = Proofs.sameMultiset(pruned, full)
       pruned
         .agg(count(lit(1)).as("n_orders"), sum(col("cents")).as("sum_cents"))
@@ -1064,7 +1064,7 @@ object QueriesEtl {
     }),
 
     // ── BLOOM-FILTER FILE SKIPPING ([[SnapshotLog.appendBloomIndexed]]
-    // / [[readPrunedByBloom]]): per-file Bloom sidecars — the
+    // / [[SnapshotLog.readWhere]]): per-file Bloom sidecars — the
     // HIGH-CARDINALITY complement of the value-set sidecar (the Delta
     // Bloom index / Iceberg Puffin shape). The table is hash-scattered
     // on o_orderkey so min/max ranges are useless and a distinct-value
@@ -1083,8 +1083,7 @@ object QueriesEtl {
         expectedItemsPerFile = 50000L)
       val k = base.agg(org.apache.spark.sql.functions.min(col("o_orderkey")))
         .head().getLong(0)
-      val (pruned, (opened, total)) =
-        log.readPrunedByBloom(s, v0, "o_orderkey", k.toString)
+      val (pruned, (opened, total)) = log.readWhere(s, v0, col("o_orderkey") === k)
       val full = log.read(s, v0).where(col("o_orderkey") === k)
       val equal = Proofs.sameMultiset(pruned, full)
       pruned
@@ -1164,7 +1163,7 @@ object QueriesEtl {
     }),
 
     // ── STATS-BASED FILE PRUNING under the snapshot log ([[SnapshotLog
-    // .appendIndexed]] / [[SnapshotLog.readPruned]], the Delta
+    // .appendIndexed]] / [[SnapshotLog.readWhere]], the Delta
     // add-file-stats shape): the commit records per-file min/max for the
     // price key, a range read opens ONLY the files whose recorded range
     // intersects the predicate (metadata-sized planning), and the laws —
@@ -1186,8 +1185,9 @@ object QueriesEtl {
       val (mn, mx) = (b.getLong(0), b.getLong(1))
       val pLo = mn + (mx - mn) / 3
       val pHi = mn + 2 * (mx - mn) / 3
-      val (pruned, (opened, total)) = log.readPruned(s, v0, "cents", pLo, pHi)
-      val full = log.read(s, v0).where(col("cents") >= pLo && col("cents") <= pHi)
+      val inRange = col("cents") >= pLo && col("cents") <= pHi
+      val (pruned, (opened, total)) = log.readWhere(s, v0, inRange)
+      val full = log.read(s, v0).where(inRange)
       val equal = Proofs.sameMultiset(pruned, full)
       pruned
         .groupBy(col("o_orderpriority"))

@@ -3480,7 +3480,9 @@ object QueriesRelational {
          |FROM e, x, nn""".stripMargin,
 
     // survival_km: the identical life-table arithmetic — integer risk
-    // sets and the same exp-sum-ln product-limit at 6 dp
+    // sets and the same exp-sum-ln product-limit at 6 dp, exactly 0 from
+    // the first time every subject at risk has the event (`nullif` keeps
+    // `ln` off that zero)
     "survival_km" ->
       """WITH d AS (
         |  SELECT datediff('day', o.o_orderdate, l.l_shipdate) AS t,
@@ -3500,10 +3502,13 @@ object QueriesRelational {
         |  FROM byt
         |)
         |SELECT t, n_at_risk, d_events, c_censored,
-        |       round(exp(sum(ln(CAST(n_at_risk - d_events AS DOUBLE)
-        |                        / CAST(n_at_risk AS DOUBLE)))
-        |         OVER (ORDER BY t ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)), 6)
-        |         AS survival_6dp,
+        |       CASE WHEN min(n_at_risk - d_events)
+        |              OVER (ORDER BY t ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) = 0
+        |            THEN CAST(0.0 AS DOUBLE)
+        |            ELSE round(exp(sum(ln(CAST(nullif(n_at_risk - d_events, 0) AS DOUBLE)
+        |                                  / CAST(n_at_risk AS DOUBLE)))
+        |              OVER (ORDER BY t ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)), 6)
+        |       END AS survival_6dp,
         |       round(sum(CAST(d_events AS DOUBLE) / CAST(n_at_risk AS DOUBLE))
         |         OVER (ORDER BY t ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 6)
         |         AS cumhaz_6dp

@@ -389,10 +389,14 @@ object Analytics {
       .withColumn("n_at_risk",
         sum(col("n_t")).over(wAll) - coalesce(
           sum(col("n_t")).over(wAsc) - col("n_t"), lit(0L)))
+      // from the first time every subject at risk has the event the
+      // product-limit is exactly 0 (`log(0)` is null and the running sum
+      // would skip it)
       .withColumn("survival_6dp",
-        round(exp(sum(
-          log((col("n_at_risk") - col("d_events")).cast("double") /
-            col("n_at_risk").cast("double"))).over(wAsc)), 6))
+        when(min(col("n_at_risk") - col("d_events")).over(wAsc) === 0L, lit(0.0))
+          .otherwise(round(exp(sum(
+            log((col("n_at_risk") - col("d_events")).cast("double") /
+              col("n_at_risk").cast("double"))).over(wAsc)), 6)))
       // Nelson-Aalen cumulative hazard: Σ dᵢ/nᵢ — the additive
       // counterpart of the product-limit, same float discipline
       .withColumn("cumhaz_6dp",

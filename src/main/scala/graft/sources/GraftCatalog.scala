@@ -5,6 +5,7 @@ import java.util
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.{NoSuchNamespaceException, NoSuchTableException}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.connector.catalog.{Identifier, StagedTable, StagingTableCatalog, SupportsDelete, SupportsRead, SupportsWrite, Table, TableCapability, TableCatalog, TableChange}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.ScanBuilder
@@ -185,6 +186,10 @@ class GraftCatalog extends TableCatalog with StagingTableCatalog {
     val tableProps = log.metaValues(v).collect {
       case (k, pv) if k.startsWith("prop.") => k.stripPrefix("prop.") -> pv
     }
+    // file skipping: the files the pushed filters may match, through the
+    // log's one rule
+    def keep(conjuncts: Seq[Expression]): Seq[String] =
+      log.candidateFiles(spark, v, conjuncts).map(p => new File(log.dataRootPath, p).toString)
     log.columnMapping(v) match {
       case Some((_, pairs)) =>
         // COLUMN-MAPPED snapshot: the parquet scan runs over the PHYSICAL
@@ -199,12 +204,10 @@ class GraftCatalog extends TableCatalog with StagingTableCatalog {
           tname, spark, opts, paths, Some(physSchema), classOf[ParquetFileFormat])
         val pruner = GraftCatalog.Pruner(
           paths,
-          c => log.fileStatsForColumn(spark, v, c),
-          c => log.fileValueSetsForColumn(spark, v, c),
+          keep,
           kept => ParquetTable(tname, spark, opts, kept, Some(physSchema),
             classOf[ParquetFileFormat]),
-          l2p, Some(logSchema), tableProps,
-          bloomProbe = (c, lits) => log.fileBloomProbe(spark, v, c, lits))
+          l2p, Some(logSchema), tableProps)
         if (version.isEmpty) new GraftCatalog.MappedWritableTable(inner, log, pruner)
         else new GraftCatalog.ReadOnlyTable(inner, pruner)
       case None =>
@@ -217,18 +220,16 @@ class GraftCatalog extends TableCatalog with StagingTableCatalog {
           s"GraftCatalog: snapshot v$v of ${ident.name()} has no data files")
         val inner = ParquetTable(
           tname, spark, opts, paths, declared, classOf[ParquetFileFormat])
-        // file-skipping context: stats sidecars keyed per column, and a
-        // rebuild of the parquet table over the surviving paths (the
-        // resolved schema pins rebuilds, so even an all-pruned scan plans)
+        // file-skipping context: a rebuild of the parquet table over the
+        // surviving paths (the resolved schema pins rebuilds, so even an
+        // all-pruned scan plans)
         val resolved = inner.schema
         val pruner = GraftCatalog.Pruner(
           paths,
-          c => log.fileStatsForColumn(spark, v, c),
-          c => log.fileValueSetsForColumn(spark, v, c),
+          keep,
           kept => ParquetTable(tname, spark, opts, kept, Some(resolved),
             classOf[ParquetFileFormat]),
-          tableProps = tableProps,
-          bloomProbe = (c, lits) => log.fileBloomProbe(spark, v, c, lits))
+          tableProps = tableProps)
         if (version.isEmpty) new GraftCatalog.WritableTable(inner, log, pruner)
         else new GraftCatalog.ReadOnlyTable(inner, pruner)
     }
@@ -884,23 +885,21 @@ object GraftCatalog {
   }
 
   /** File-skipping context for a loaded snapshot: the full path list,
-    * the per-column stats-sidecar fetch, and a parquet-table rebuild
-    * over pruned paths — everything [[org.apache.spark.sql.graftshim
-    * .PruningScanBuilder]] needs. For COLUMN-MAPPED snapshots,
-    * `logicalToPhysical` drives the builder's name translation and
-    * `reportedSchema` is the LOGICAL schema the table presents (the
-    * delegate parquet table holds the physical one).
+    * the log's file-skipping rule over pushed filters
+    * ([[SnapshotLog.candidateFiles]], absolute paths out), and a
+    * parquet-table rebuild over pruned paths — everything
+    * [[org.apache.spark.sql.graftshim.PruningScanBuilder]] needs. For
+    * COLUMN-MAPPED snapshots, `logicalToPhysical` drives the builder's
+    * name translation and `reportedSchema` is the LOGICAL schema the
+    * table presents (the delegate parquet table holds the physical one).
     */
   private[sources] final case class Pruner(
       paths: Seq[String],
-      statsFor: String => Option[Map[String, (Long, Long)]],
-      valuesFor: String => Option[Map[String, Option[Set[String]]]],
+      keep: Seq[Expression] => Seq[String],
       rebuildTable: Seq[String] => ParquetTable,
       logicalToPhysical: Map[String, String] = Map.empty,
       reportedSchema: Option[StructType] = None,
-      tableProps: Map[String, String] = Map.empty,
-      bloomProbe: (String, Seq[String]) => Option[Map[String, Boolean]] =
-        (_, _) => None)
+      tableProps: Map[String, String] = Map.empty)
 
   /** The PHYSICAL scan schema, the LOGICAL table schema, and the
     * logical→physical name map of a column-mapped snapshot. Types come
@@ -1077,12 +1076,10 @@ object GraftCatalog {
         inner.newScanBuilder(options)
           .asInstanceOf[org.apache.spark.sql.execution.datasources.v2.FileScanBuilder],
         pruner.paths,
-        pruner.statsFor,
-        pruner.valuesFor,
+        pruner.keep,
         kept => pruner.rebuildTable(kept).newScanBuilder(options)
           .asInstanceOf[org.apache.spark.sql.execution.datasources.v2.FileScanBuilder],
-        pruner.logicalToPhysical,
-        pruner.bloomProbe)
+        pruner.logicalToPhysical)
   }
 
   /** The CURRENT snapshot's table: readable as [[ReadOnlyTable]] and

@@ -293,120 +293,34 @@ object GraftSqlParser {
   private def attrs(fields: (String, org.apache.spark.sql.types.DataType)*): Seq[Attribute] =
     fields.map { case (n, t) => AttributeReference(n, t, nullable = false)() }
 
-  /** One term of an `OPTIMIZE … WHERE` predicate: a closed interval
-    * over an integral column, or a string equality over a categorical
-    * one.
+  /** The data files of the current snapshot an `OPTIMIZE … WHERE pred`
+    * may rewrite: the log's one file-skipping rule
+    * ([[SnapshotLog.candidateFiles]]) over the predicate's conjuncts —
+    * files without sidecar entries are kept (rewriting more than asked
+    * is safe; skipping a matching file would betray the WHERE). A
+    * conjunct the rule cannot read refuses loudly: the statement would
+    * otherwise rewrite files outside the scope it names. A column-mapped
+    * table's WHERE speaks LOGICAL names; the sidecars are keyed by
+    * PHYSICAL ids, so names are translated first.
     */
-  private val WhereBetween =
-    """(?i)(\w+)\s+BETWEEN\s+(-?\d+)\s+AND\s+(-?\d+)""".r
-  private val WhereCmp = """(\w+)\s*(<=|>=|=|<|>)\s*(-?\d+)""".r
-  private val WhereStrEq = """(\w+)\s*=\s*'([^']*)'""".r
-  // DATE literals map to the epoch-day axis parquet stores a date as —
-  // the same integral [lo, hi] machinery then prunes date-partitioned
-  // history (the commonest OPTIMIZE WHERE scope of all)
-  private val WhereDateBetween =
-    """(?i)(\w+)\s+BETWEEN\s+DATE\s*'(\d{4}-\d{2}-\d{2})'\s+AND\s+DATE\s*'(\d{4}-\d{2}-\d{2})'""".r
-  private val WhereDateCmp =
-    """(?i)(\w+)\s*(<=|>=|=|<|>)\s*DATE\s*'(\d{4}-\d{2}-\d{2})'""".r
-
-  private def epochDay(d: String): Long = java.time.LocalDate.parse(d).toEpochDay
-
-  /** The parsed scope of an OPTIMIZE WHERE predicate: per-column
-    * [lo, hi] intervals (pruned via the min/max stats sidecars) and
-    * per-column required string values (pruned via the distinct-value
-    * sidecars).
-    */
-  private[sources] final case class OptimizeScope(
-      intervals: Map[String, (Long, Long)],
-      values: Map[String, Set[String]])
-
-  /** Parse an OPTIMIZE WHERE predicate — conjunctions of integral range
-    * terms (`k >= 5`, `k BETWEEN 2 AND 9`) and string equalities
-    * (`lang = 'en'`). Anything not expressible against a stats sidecar
-    * refuses loudly (never a silent full-table rewrite under a narrower
-    * promise).
-    */
-  private[sources] def parseOptimizeWhere(pred: String): OptimizeScope = {
-    val dateBetweens = WhereDateBetween.findAllMatchIn(pred).map(m =>
-      (m.group(1), (epochDay(m.group(2)), epochDay(m.group(3))))).toSeq
-    val pred1 = WhereDateBetween.replaceAllIn(pred, " TRUE ")
-    val betweens = dateBetweens ++ WhereBetween.findAllMatchIn(pred1).map(m =>
-      (m.group(1), (m.group(2).toLong, m.group(3).toLong))).toSeq
-    val rest = WhereBetween.replaceAllIn(pred1, " TRUE ")
-    val parts = rest.split("(?i)\\bAND\\b").map(_.trim).filter(_.nonEmpty)
-    def interval(c: String, op: String, v: Long): (String, (Long, Long)) =
-      op match {
-        case ">=" => (c, (v, Long.MaxValue))
-        case ">" => (c, (v + 1L, Long.MaxValue))
-        case "<=" => (c, (Long.MinValue, v))
-        case "<" => (c, (Long.MinValue, v - 1L))
-        case _ => (c, (v, v))
-      }
-    val terms = parts.filterNot(_.equalsIgnoreCase("TRUE")).map {
-      case WhereDateCmp(c, op, d) => Left(interval(c, op, epochDay(d)))
-      case WhereStrEq(c, v) => Right((c, v))
-      case WhereCmp(c, op, n) => Left(interval(c, op, n.toLong))
-      case other => throw new IllegalArgumentException(
-        s"OPTIMIZE WHERE: cannot express '$other' as a file-stats range — " +
-          "use conjunctions of <col> <=|>=|<|>|= <int>|DATE '<date>', " +
-          "BETWEEN, or <col> = '<string>'")
-    }
-    OptimizeScope(
-      // BETWEEN terms fold in with the comparison terms (r14 parsed them
-      // and then dropped them — a BETWEEN-only WHERE silently widened to
-      // the full table; safe direction, but not what was asked)
-      (betweens ++ terms.collect { case Left(t) => t })
-        .groupBy(_._1).map { case (c, ts) =>
-          c -> ts.map(_._2).reduce { (a, b) =>
-            (math.max(a._1, b._1), math.min(a._2, b._2))
-          }
-        },
-      terms.collect { case Right((c, v)) => (c, v) }.groupBy(_._1)
-        .map { case (c, vs) => c -> vs.map(_._2).toSet })
-  }
-
-  /** The data files of the current snapshot that MAY satisfy the scope:
-    * the recorded stats range must intersect every interval and the
-    * recorded distinct-value set must contain every required value —
-    * files without sidecar entries for a predicate column are kept
-    * conservatively (rewriting more than asked is safe; skipping a
-    * matching file would betray the WHERE). File-count-sized metadata
-    * work (one sidecar read per column).
-    */
-  private def scopeFiles(
-      spark: SparkSession, log: SnapshotLog,
-      scope: OptimizeScope): Set[String] = {
+  private def whereFiles(spark: SparkSession, log: SnapshotLog, pred: String): Set[String] = {
     val cur = log.currentVersion.getOrElse(throw new IllegalStateException(
       s"OPTIMIZE WHERE: no committed snapshot at ${log.root}"))
-    val all = log.dataFiles(cur)
-    def rel(abs: String): String = abs.stripPrefix(log.dataRootPath + "/")
-    val afterIntervals =
-      scope.intervals.foldLeft(all.toSet) { case (keep, (c, (pLo, pHi))) =>
-        log.fileStatsForColumn(spark, cur, c) match {
-          case None => keep // no stats anywhere for this column: keep all
-          case Some(byAbs) =>
-            val byRel = byAbs.map { case (abs, r) => rel(abs) -> r }
-            keep.filter { p =>
-              byRel.get(p) match {
-                case Some((lo, hi)) => lo <= pHi && hi >= pLo
-                case None => true // this file recorded no stats: conservative
-              }
-            }
+    val physMap = log.columnMapping(cur).map(_._2.toMap).getOrElse(Map.empty[String, String])
+    val phys = GraftSqlDml.translatePhys(
+      spark.sessionState.sqlParser.parseExpression(pred), physMap)
+    log.skipConjuncts(spark, cur, org.apache.spark.sql.functions.expr(phys.sql)) match {
+      case None => Set.empty // no row can match
+      case Some(conjuncts) =>
+        // the optimizer adds `c IS NOT NULL` for every compared column c
+        conjuncts.find(c => SkipBound.of(c).isEmpty &&
+          !c.isInstanceOf[org.apache.spark.sql.catalyst.expressions.IsNotNull]).foreach { c =>
+          throw new IllegalArgumentException(
+            s"OPTIMIZE WHERE: cannot express '${c.sql}' as a file-stats range — use " +
+              "conjunctions of comparisons, BETWEEN or IN over integral/date columns, " +
+              "or = / IN over string columns")
         }
-      }
-    scope.values.foldLeft(afterIntervals) { case (keep, (c, required)) =>
-      log.fileValueSetsForColumn(spark, cur, c) match {
-        case None => keep // no value sidecar anywhere: keep all
-        case Some(byAbs) =>
-          val byRel = byAbs.map { case (abs, r) => rel(abs) -> r }
-          keep.filter { p =>
-            byRel.get(p) match {
-              case Some(Some(set)) => required.subsetOf(set)
-              case Some(None) => true // FULL marker: distincts overflowed
-              case None => true // no entries recorded: conservative
-            }
-          }
-      }
+        log.candidateFiles(spark, cur, conjuncts).toSet
     }
   }
 
@@ -424,9 +338,8 @@ object GraftSqlParser {
     * ([[SnapshotLog.compactSmall]], 128 MiB target).
     *
     * `WHERE <pred>` (the Delta partition-scoped OPTIMIZE, generalized
-    * to stats ranges) limits every route to the files whose recorded
-    * [lo, hi] stats intersect the predicate — out-of-scope files are
-    * carried byte-identical.
+    * to file sidecars) limits every route to [[whereFiles]] —
+    * out-of-scope files are carried byte-identical.
     *
     * Output partitions are sized by the STAGED BYTES (128 MiB target),
     * not a fixed cap — a fixed 32 would mean ~3 TB files at 100 TB.
@@ -462,19 +375,7 @@ object GraftSqlParser {
         if (zorderCols.nonEmpty) Nil
         else log.currentVersion.toSeq.flatMap(log.clusterColumns)
       val keys = if (zorderCols.nonEmpty) zorderCols else declared
-      // a column-mapped table's WHERE speaks LOGICAL names; the stats
-      // sidecars are keyed by PHYSICAL ids — translate the parsed scope
-      // (names outside the mapping pass through, conservative)
-      val physMap: Map[String, String] = log.currentVersion
-        .flatMap(v => log.columnMapping(v).map(_._2.toMap))
-        .getOrElse(Map.empty)
-      def toPhys(sc: OptimizeScope): OptimizeScope =
-        if (physMap.isEmpty) sc
-        else OptimizeScope(
-          sc.intervals.map { case (c, iv) => physMap.getOrElse(c, c) -> iv },
-          sc.values.map { case (c, vs) => physMap.getOrElse(c, c) -> vs })
-      val scope = wherePred.map(p =>
-        scopeFiles(spark, log, toPhys(parseOptimizeWhere(p))))
+      val scope = wherePred.map(p => whereFiles(spark, log, p))
       val out = if (keys.isEmpty) {
         val (v, (packed, written)) =
           log.compactSmall(spark, targetBytes(spark), scope)

@@ -2333,10 +2333,11 @@ class SnapshotLog(
         val keys = spark.read.parquet(
           tombs.map(p => new File(dataRootPath, p).toString): _*)
         // the conversion scan is STATS-PRUNED too: a carried file whose
-        // recorded [lo, hi] for an integral/date tombstone key column
-        // cannot contain ANY tombstoned key owes no masking — bounds
-        // come from one tombstone-sized aggregate, so a narrow delete
-        // over a range-clustered table converts O(touched files)
+        // recorded [lo, hi] for an integral tombstone key column cannot
+        // contain ANY tombstoned key owes no masking — the key bounds
+        // come from one tombstone-sized aggregate and go through
+        // [[statsCandidateFiles]], so a narrow delete over a
+        // range-clustered table converts O(touched files)
         val integral = keys.schema.filter(f => f.dataType match {
           case _: org.apache.spark.sql.types.ByteType => true
           case _: org.apache.spark.sql.types.ShortType => true
@@ -2347,27 +2348,12 @@ class SnapshotLog(
         val carriedData =
           if (carriedData0.isEmpty || integral.isEmpty) carriedData0
           else {
-            val aggs = integral.flatMap(c => Seq(
-              smin(col(c).cast("long")).as(s"lo_$c"),
-              smax(col(c).cast("long")).as(s"hi_$c")))
+            val aggs = integral.flatMap(c => Seq(smin(col(c)), smax(col(c))))
             val row = keys.agg(aggs.head, aggs.tail: _*).head()
-            def rel(abs: String): String = abs.stripPrefix(dataRootPath + "/")
-            integral.zipWithIndex.foldLeft(carriedData0.toSet) {
-              case (keep, (c, i)) =>
-                if (row.isNullAt(2 * i)) keep
-                else {
-                  val (kLo, kHi) = (row.getLong(2 * i), row.getLong(2 * i + 1))
-                  fileStatsForColumn(spark, cur, c) match {
-                    case None => keep
-                    case Some(byAbs) =>
-                      val byRel = byAbs.map { case (a, r) => rel(a) -> r }
-                      keep.filter(p => byRel.get(p) match {
-                        case Some((lo, hi)) => lo <= kHi && hi >= kLo
-                        case None => true
-                      })
-                  }
-                }
-            }.toSeq.sorted
+            val bounds = integral.indices.filterNot(i => row.isNullAt(2 * i)).map(i =>
+              col(integral(i)).between(lit(row.get(2 * i)), lit(row.get(2 * i + 1))))
+            if (bounds.isEmpty) carriedData0
+            else carriedData0.filter(statsCandidateFiles(spark, cur, bounds.reduce(_ && _)).toSet)
           }
         if (carriedData.isEmpty) Seq.empty
         else {
@@ -2912,7 +2898,7 @@ class SnapshotLog(
 
   /** Stage + commit `df` EXACTLY as arranged, with PER-FILE MIN/MAX
     * STATS for `statsCols` recorded in a `_stats.parquet` sidecar beside
-    * the staged files (the Delta add-file-stats shape): [[readPruned]]
+    * the staged files (the Delta add-file-stats shape): [[readWhere]]
     * then answers a range predicate by opening only the files whose
     * recorded range intersects it — metadata-sized scan planning under
     * the transaction log. The caller owns the arrangement
@@ -2937,7 +2923,7 @@ class SnapshotLog(
     * exceeds `maxDistinctPerFile` records a FULL marker instead, so the
     * sidecar stays bounded per file per column and such files read
     * conservatively. Values are recorded in STRING form (the sidecar is
-    * type-erased; [[readPrunedByValue]] compares the string cast). The
+    * type-erased; [[readWhere]] probes it with string literals). The
     * caller owns the arrangement — cluster by the column first, or every
     * file carries every value and nothing prunes.
     */
@@ -2969,46 +2955,6 @@ class SnapshotLog(
     commit(cur, appendLines(cur, staged))
   }
 
-  /** Equality-predicate read over a snapshot whose files carry
-    * [[appendValueIndexed]] value sets: open only the files whose
-    * recorded set contains `value` (FULL-marked and sidecar-free files
-    * kept conservatively), then apply the predicate. Returns the frame
-    * plus (filesOpened, filesTotal). Planning is one sidecar read per
-    * staged directory — file-count-sized, never row-count-sized.
-    */
-  def readPrunedByValue(
-      spark: SparkSession,
-      version: Long,
-      valueCol: String,
-      value: String): (DataFrame, (Int, Int)) = {
-    import org.apache.spark.sql.functions.col
-    val data = dataFiles(version)
-    val sets = fileValueSetsForColumn(spark, version, valueCol).getOrElse(Map.empty)
-    // no entries for a file+column or a FULL marker: kept, conservative
-    val keep = data.filter(p =>
-      sets.get(new File(dataRootPath, p).toString).forall(_.forall(_.contains(value))))
-    readKept(spark, version, keep, data.size, col(valueCol).cast("string") === value)
-  }
-
-  /** The tail of every sidecar-pruned read: `keep` (relative data paths
-    * of `version`) read under the snapshot's masks and filtered by
-    * `pred` — the empty relation when nothing is kept — plus
-    * (filesOpened, filesTotal).
-    */
-  private def readKept(
-      spark: SparkSession,
-      version: Long,
-      keep: Seq[String],
-      total: Int,
-      pred: org.apache.spark.sql.Column): (DataFrame, (Int, Int)) = {
-    val pruned =
-      if (keep.isEmpty) read(spark, version).where(org.apache.spark.sql.functions.lit(false))
-      else applyMasks(spark, version,
-        spark.read.parquet(keep.sorted.map(p => new File(dataRootPath, p).toString): _*)
-          .where(pred))
-    (pruned, (keep.size, total))
-  }
-
   /** Stage + commit `df` EXACTLY as arranged with a PER-FILE BLOOM
     * FILTER for each of `bloomCols` recorded in a `_blooms.parquet`
     * sidecar — the HIGH-CARDINALITY complement of [[appendValueIndexed]]:
@@ -3026,7 +2972,7 @@ class SnapshotLog(
     * `input_file_name` → [[graft.functions.BloomFunctions.bloomAgg]] per
     * column — mergeable map-side partials, never a per-file driver
     * loop); values hash in STRING form (the sidecar is type-erased, like
-    * [[appendValueIndexed]]) so [[readPrunedByBloom]] probes with the
+    * [[appendValueIndexed]]) so [[readWhere]] probes with the
     * same cast. `fpp` trades sidecar bytes for re-opened files (1% ≈
     * 9.6 bits per row); `expectedItemsPerFile` sizes each filter — an
     * overfull file degrades toward more false positives (more files
@@ -3134,74 +3080,6 @@ class SnapshotLog(
       case (_, staged) =>
         writeBloomSidecar(spark, staged.toSeq, bloomCols, 100000L, 0.01)
     }
-  }
-
-  /** Bloom membership of `values` per data file of `version`, keyed by
-    * ABSOLUTE path — the [[GraftCatalog]] scan-pruning feed. Membership
-    * is evaluated INSIDE the sidecar read (a deserialize-and-probe UDF
-    * over the file-count-sized sidecar rows), so only per-file BOOLEANS
-    * ever reach the driver — at 100 TB the filters themselves are
-    * GB-scale in aggregate and must never be collected. None when no
-    * sidecar anywhere carries the column; files without an entry are
-    * simply absent (readers keep them conservatively). The probe hash is
-    * the build side's `xxhash64(cast(c as string))`, computed through
-    * the same Catalyst expression.
-    */
-  def fileBloomProbe(
-      spark: SparkSession,
-      version: Long,
-      bloomCol: String,
-      values: Seq[String]): Option[Map[String, Boolean]] = {
-    if (values.isEmpty) return None
-    val hashes = values.map(s =>
-      new org.apache.spark.sql.catalyst.expressions.XxHash64(Seq(
-        org.apache.spark.sql.catalyst.expressions.Literal.create(
-          s, org.apache.spark.sql.types.StringType))).eval(null)
-        .asInstanceOf[Long])
-    import org.apache.spark.sql.functions.{col, udf}
-    val hit = udf((bits: Array[Byte]) =>
-      bits == null || {
-        val f = org.apache.spark.util.sketch.BloomFilter.readFrom(
-          new java.io.ByteArrayInputStream(bits))
-        hashes.exists(f.mightContainLong)
-      })
-    // ONE union read over every stage directory's sidecar — planning
-    // stays a single job however many commits built the table (the
-    // sidecar's `file` column carries the stage-qualified relative path,
-    // so rows stay unambiguous across directories)
-    val data = dataFiles(version)
-    val sidecars = stageSidecars(version, "_blooms.parquet").flatMap(_._2).map(_.toString)
-    if (sidecars.isEmpty) return None
-    val byFile = spark.read.parquet(sidecars: _*)
-      .where(col("col") === bloomCol)
-      .select(col("file"), hit(col("bits")).as("hit"))
-      .collect().map(r => r.getString(0) -> r.getBoolean(1)).toMap
-    val entries = data.flatMap(p =>
-      byFile.get(p).map(h => new File(dataRootPath, p).toString -> h))
-    if (entries.isEmpty) None else Some(entries.toMap)
-  }
-
-  /** Point-equality read over a snapshot whose files carry
-    * [[appendBloomIndexed]] filters: open only the files whose Bloom
-    * filter might contain `value` (sidecar-free files and files with no
-    * recorded filter kept conservatively — false positives re-open, false
-    * negatives cannot happen), then apply the predicate. Returns the
-    * frame plus (filesOpened, filesTotal) so callers can assert the skip
-    * fired. Planning is one sidecar read per staged directory —
-    * file-count-sized metadata work, never a data scan.
-    */
-  def readPrunedByBloom(
-      spark: SparkSession,
-      version: Long,
-      bloomCol: String,
-      value: String): (DataFrame, (Int, Int)) = {
-    import org.apache.spark.sql.functions.col
-    val data = dataFiles(version)
-    val might = fileBloomProbe(spark, version, bloomCol, Seq(value))
-      .getOrElse(Map.empty)
-    val keep = data.filter(p =>
-      might.getOrElse(new File(dataRootPath, p).toString, true))
-    readKept(spark, version, keep, data.size, col(bloomCol).cast("string") === value)
   }
 
   /** Per-file `[lo, hi]` for every INTEGRAL column of the staged files,
@@ -3473,25 +3351,7 @@ class SnapshotLog(
     staged
   }
 
-  /** Per-file `[lo, hi]` stats of `keyCol` for a snapshot's data files,
-    * read from the [[stageIndexed]] sidecars: `Some((lo, hi))` when the
-    * file's stage recorded stats for the column, `None` otherwise
-    * (stats-free files must be treated as full-range). File-count-sized.
-    */
-  private def fileRanges(
-      spark: SparkSession,
-      version: Long,
-      keyCol: String): Seq[(String, Option[(Long, Long)])] = {
-    import org.apache.spark.sql.functions.col
-    stageSidecars(version, "_stats.parquet").flatMap {
-      case (paths, None) => paths.map(_ -> None)
-      case (paths, Some(sidecar)) =>
-        val st = spark.read.parquet(sidecar.toString)
-          .where(col("col") === keyCol)
-          .collect().map(r => r.getString(0) -> (r.getLong(2), r.getLong(3))).toMap
-        paths.map(p => p -> st.get(p))
-    }
-  }
+  // ─────────────────────────── file skipping ───────────────────────────
 
   /** The data files of `version` grouped by stage directory, each group
     * with that directory's `name` sidecar (`_stats.parquet`,
@@ -3503,11 +3363,57 @@ class SnapshotLog(
       case (dir, paths) => (paths, Some(new File(dir, name)).filter(_.exists()))
     }
 
-  /** [[fileRanges]] for consumers outside the log (the DSv2 catalog's
-    * file-skipping scan): per-data-file `[lo, hi]` of `keyCol`, keyed by
-    * ABSOLUTE path, for exactly the files whose stage recorded stats.
-    * `None` when no file carries stats for the column (nothing to prune
-    * by). File-count-sized metadata work.
+  /** The rows of `version`'s `name` sidecars (`_stats`, `_values`: file
+    * first, column second) that describe its live data files — one read
+    * per stage directory that has the sidecar, nothing without one.
+    */
+  private def sidecarRows(
+      spark: SparkSession, version: Long, name: String): Seq[org.apache.spark.sql.Row] =
+    stageSidecars(version, name).flatMap {
+      case (_, None) => Nil
+      case (paths, Some(sidecar)) =>
+        val live = paths.toSet
+        spark.read.parquet(sidecar.toString).collect().toSeq.filter(r => live(r.getString(0)))
+    }
+
+  /** Per-file `[lo, hi]` ranges from the `_stats.parquet` sidecars
+    * ([[stageIndexed]], footer stats): relative path → column → range. A
+    * file or column without an entry has no recorded range (full-range).
+    */
+  private def fileStats(
+      spark: SparkSession, version: Long): Map[String, Map[String, (Long, Long)]] =
+    sidecarRows(spark, version, "_stats.parquet").groupBy(_.getString(0)).map {
+      case (p, rs) => p -> rs.map(r => r.getString(1) -> (r.getLong(2), r.getLong(3))).toMap
+    }
+
+  /** Per-file distinct-value sets from the `_values.parquet` sidecars
+    * ([[appendValueIndexed]]): relative path → column → `Some(set)`, or
+    * `None` where the file's distinct count overflowed the bound (FULL).
+    */
+  private def fileValueSets(
+      spark: SparkSession, version: Long): Map[String, Map[String, Option[Set[String]]]] =
+    sidecarRows(spark, version, "_values.parquet").groupBy(_.getString(0)).map {
+      case (p, rs) => p -> rs.groupBy(_.getString(1)).map { case (c, es) =>
+        c -> (if (es.exists(_.getBoolean(3))) None
+              else Some(es.flatMap(r => Option(r.getString(2))).toSet))
+      }
+    }
+
+  /** Per-file `[lo, hi]` of `keyCol` for every data file of `version`:
+    * `None` where the file's stage recorded no stats for the column.
+    */
+  private def fileRanges(
+      spark: SparkSession,
+      version: Long,
+      keyCol: String): Seq[(String, Option[(Long, Long)])] = {
+    val stats = fileStats(spark, version)
+    dataFiles(version).map(p => p -> stats.get(p).flatMap(_.get(keyCol)))
+  }
+
+  /** [[fileRanges]] for consumers outside the log: per-data-file
+    * `[lo, hi]` of `keyCol`, keyed by ABSOLUTE path, for exactly the files
+    * whose stage recorded stats. `None` when no file carries stats for
+    * the column. File-count-sized metadata work.
     */
   def fileStatsForColumn(
       spark: SparkSession, version: Long, keyCol: String): Option[Map[String, (Long, Long)]] = {
@@ -3517,173 +3423,199 @@ class SnapshotLog(
     if (present.isEmpty) None else Some(present.toMap)
   }
 
-  /** The categorical complement of [[fileStatsForColumn]] for outside
-    * consumers: per-data-file DISTINCT-VALUE SETS of `valueCol` from the
-    * [[appendValueIndexed]] sidecars, keyed by ABSOLUTE path. `None` for
-    * a file means FULL (its distinct count overflowed the sidecar bound
-    * — prune conservatively); a file absent from the map recorded no
-    * entries for the column. Outer `None` when no sidecar carries the
-    * column at all. File-count-sized metadata work.
+  /** Bloom membership per data file of `version`, one map (relative path
+    * → might contain a value) per `(column, values)` probe. Membership
+    * is evaluated INSIDE one union read of every stage's
+    * `_blooms.parquet` (a deserialize-and-probe UDF over the
+    * file-count-sized sidecar rows), so only per-file BOOLEANS reach the
+    * driver — at 100 TB the filters are GB-scale in aggregate and must
+    * never be collected. Files without a filter for the column are
+    * absent. The probe hash is the build side's
+    * `xxhash64(cast(c as string))`, computed through the same Catalyst
+    * expression.
     */
-  def fileValueSetsForColumn(
+  private def bloomHits(
       spark: SparkSession,
       version: Long,
-      valueCol: String): Option[Map[String, Option[Set[String]]]] = {
-    import org.apache.spark.sql.functions.col
-    val entries = stageSidecars(version, "_values.parquet").flatMap {
-      case (_, None) => Nil
-      case (paths, Some(sidecar)) =>
-        val byFile = spark.read.parquet(sidecar.toString)
-          .where(col("col") === valueCol).collect()
-          .map(r => (r.getString(0), Option(r.getString(2)), r.getBoolean(3)))
-          .groupBy(_._1)
-        paths.flatMap { p =>
-          byFile.get(p).map { es =>
-            val abs = new File(dataRootPath, p).toString
-            abs -> (if (es.exists(_._3)) None
-                    else Some(es.flatMap(_._2).toSet))
-          }
-        }
+      probes: Seq[(String, Seq[String])]): Seq[Map[String, Boolean]] = {
+    val sidecars = stageSidecars(version, "_blooms.parquet").flatMap(_._2).map(_.toString)
+    if (probes.isEmpty || sidecars.isEmpty) return probes.map(_ => Map.empty[String, Boolean])
+    import org.apache.spark.sql.catalyst.expressions.{Literal, XxHash64}
+    import org.apache.spark.sql.functions.{col, udf}
+    val hashes = probes.map { case (c, vs) =>
+      c -> vs.map(s => new XxHash64(Seq(Literal.create(s, org.apache.spark.sql.types.StringType)))
+        .eval(null).asInstanceOf[Long])
     }
-    if (entries.isEmpty) None else Some(entries.toMap)
+    val hit = udf((c: String, bits: Array[Byte]) => {
+      val f = Option(bits).map(b => org.apache.spark.util.sketch.BloomFilter.readFrom(
+        new java.io.ByteArrayInputStream(b)))
+      hashes.map { case (pc, hs) => pc == c && f.forall(bf => hs.exists(bf.mightContainLong)) }
+    })
+    val live = dataFiles(version).toSet
+    val rows = spark.read.parquet(sidecars: _*)
+      .where(col("col").isin(probes.map(_._1).distinct: _*))
+      .select(col("file"), col("col"), hit(col("col"), col("bits")))
+      .collect().filter(r => live(r.getString(0)))
+    probes.indices.map { i =>
+      rows.collect { case r if r.getString(1) == probes(i)._1 =>
+        r.getString(0) -> r.getSeq[Boolean](2)(i) }.toMap
+    }
+  }
+
+  /** [[bloomHits]] of one probe for consumers outside the log, keyed by
+    * ABSOLUTE path. `None` when no filter anywhere covers the column.
+    */
+  def fileBloomProbe(
+      spark: SparkSession,
+      version: Long,
+      bloomCol: String,
+      values: Seq[String]): Option[Map[String, Boolean]] =
+    if (values.isEmpty) None
+    else Some(bloomHits(spark, version, Seq(bloomCol -> values)).head.map {
+      case (p, h) => new File(dataRootPath, p).toString -> h
+    }).filter(_.nonEmpty)
+
+  /** One pruning call's sidecars: each kind is read at most once, and
+    * only when the rule first asks for it; the bloom read probes every
+    * bound's keys together.
+    */
+  private final class Sidecars(spark: SparkSession, version: Long, bounds: Seq[SkipBound]) {
+    lazy val stats: Map[String, Map[String, (Long, Long)]] = fileStats(spark, version)
+    lazy val values: Map[String, Map[String, Option[Set[String]]]] = fileValueSets(spark, version)
+    lazy val blooms: Map[(String, Seq[String]), Map[String, Boolean]] = {
+      val probes = bounds.filter(_.bloomKeys.nonEmpty).map(b => (b.col, b.bloomKeys)).distinct
+      probes.zip(bloomHits(spark, version, probes)).toMap
+    }
+  }
+
+  /** THE file-skipping rule: false only when `file`'s sidecars PROVE no
+    * row can satisfy `b`. A file or column without a sidecar entry and a
+    * FULL value set keep the file; a Bloom false positive only re-opens
+    * it. Checks run cheapest first and stop at the first proof.
+    */
+  private def mayMatch(b: SkipBound, sc: Sidecars, file: String): Boolean =
+    (b.ranges.isEmpty || sc.stats.get(file).flatMap(_.get(b.col)).forall {
+      case (lo, hi) => b.ranges.exists { case (from, to) => from <= hi && to >= lo }
+    }) &&
+      (b.strings.isEmpty || sc.values.get(file).flatMap(_.get(b.col)).flatten
+        .forall(set => b.strings.exists(set))) &&
+      (b.bloomKeys.isEmpty || sc.blooms((b.col, b.bloomKeys)).getOrElse(file, true))
+
+  /** The data files of `version` that MAY hold a row satisfying every one
+    * of `conjuncts` — resolved Catalyst expressions in PHYSICAL column
+    * names, as a catalog scan pushes them
+    * ([[org.apache.spark.sql.graftshim.PruningScanBuilder]]). A conjunct
+    * the rule cannot read keeps every file. Sidecar-sized metadata work,
+    * never a data scan.
+    */
+  private[sources] def candidateFiles(
+      spark: SparkSession,
+      version: Long,
+      conjuncts: Seq[org.apache.spark.sql.catalyst.expressions.Expression]): Seq[String] = {
+    val bounds = conjuncts.flatMap(SkipBound.of)
+    val sc = new Sidecars(spark, version, bounds)
+    dataFiles(version).filter(p => bounds.forall(mayMatch(_, sc, p)))
+  }
+
+  /** `predicate`'s top-level conjuncts in the form a catalog scan pushes
+    * them: resolved against `version`'s schema (physical names) and run
+    * through the session optimizer, which folds literal casts and turns
+    * BETWEEN, NOT over a comparison and one-element IN into plain
+    * comparisons. `None` when the optimizer proves no row can match. No
+    * Spark job: the relation is an empty RDD and the schema comes from
+    * the declared one or the footers.
+    */
+  private[sources] def skipConjuncts(
+      spark: SparkSession,
+      version: Long,
+      predicate: org.apache.spark.sql.Column)
+      : Option[Seq[org.apache.spark.sql.catalyst.expressions.Expression]] = {
+    import org.apache.spark.sql.catalyst.expressions.{And, Expression}
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation}
+    def split(e: Expression): Seq[Expression] = e match {
+      case And(l, r) => split(l) ++ split(r)
+      case other => Seq(other)
+    }
+    val schema = scanSchema(version).getOrElse(footerSchema(version))
+    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+      .where(predicate).queryExecution.optimizedPlan match {
+      case Filter(cond, child) if child.children.isEmpty => Some(split(cond))
+      case _: LocalRelation => None
+      case _ => Some(Nil)
+    }
+  }
+
+  /** The union of `version`'s data-file schemas from one parquet footer
+    * per stage directory (one write, one schema) — driver-side, never a
+    * Spark job.
+    */
+  private def footerSchema(version: Long): org.apache.spark.sql.types.StructType = {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val conf = new org.apache.hadoop.conf.Configuration()
+    val converter = new org.apache.spark.sql.execution.datasources.parquet
+      .ParquetToSparkSchemaConverter(org.apache.spark.sql.internal.SQLConf.get)
+    val fields = dataFiles(version).groupBy(p => new File(dataRootPath, p).getParent)
+      .toSeq.sortBy(_._1).flatMap { case (_, ps) =>
+        val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(new File(dataRootPath, ps.head).toString), conf))
+        try converter.convert(reader.getFooter.getFileMetaData.getSchema).fields.toSeq
+        finally reader.close()
+      }
+    org.apache.spark.sql.types.StructType(fields.distinctBy(_.name))
   }
 
   /** The data files of `version` that MAY hold a row satisfying
-    * `predicate` — the stats-pruned DML discovery set. The predicate's
-    * TOP-LEVEL CONJUNCTS are walked on the Catalyst tree (never regex —
-    * a `NOT (a AND b)` must not leak `b` as a prunable term): each
-    * `col <cmp> literal` over an integral/date column becomes an
-    * interval probe against the footer-stats sidecars
-    * ([[fileStatsForColumn]]), each `col = 'string'` a membership probe
-    * against the distinct-value sidecars ([[fileValueSetsForColumn]]),
-    * and EVERY other conjunct is simply not pruned by (conservative —
-    * dropping a conjunct only widens the candidate set, since any row
-    * satisfying the whole AND satisfies each kept term). Files without
-    * sidecar entries for a probed column are kept. File-count-sized
-    * metadata work; never a data scan.
+    * `predicate` — the one pruning entry for reads, DML scopes and
+    * OPTIMIZE WHERE: its top-level conjuncts ([[skipConjuncts]]) through
+    * the one rule ([[candidateFiles]]). Dropping a conjunct the rule
+    * cannot read only widens the set, since a row satisfying the whole
+    * AND satisfies each kept term.
     */
   def statsCandidateFiles(
       spark: SparkSession,
       version: Long,
-      predicate: org.apache.spark.sql.Column): Seq[String] = {
-    import org.apache.spark.sql.catalyst.expressions._
-    import org.apache.spark.sql.types.StringType
-    // the Column may come from the SQL path (a real Catalyst comparison
-    // tree) or from the Column API (UnresolvedFunction("and"/">="/...)
-    // nodes that only the analyzer would resolve) — both shapes match
-    def fname(f: org.apache.spark.sql.catalyst.analysis.UnresolvedFunction): String =
-      f.nameParts.last.toLowerCase(java.util.Locale.ROOT)
-    def conjuncts(e: Expression): Seq[Expression] = e match {
-      case And(l, r) => conjuncts(l) ++ conjuncts(r)
-      case f: org.apache.spark.sql.catalyst.analysis.UnresolvedFunction
-          if fname(f) == "and" && f.arguments.size == 2 =>
-        conjuncts(f.arguments(0)) ++ conjuncts(f.arguments(1))
-      // SQL BETWEEN parses to a between node (RuntimeReplaceable or the
-      // unresolved function, depending on the path), not an And —
-      // desugar to its two bounds so the interval machinery sees them
-      case Between(in, lo, hi, _) =>
-        Seq(GreaterThanOrEqual(in, lo), LessThanOrEqual(in, hi))
-      case f: org.apache.spark.sql.catalyst.analysis.UnresolvedFunction
-          if fname(f) == "between" && f.arguments.size == 3 =>
-        Seq(GreaterThanOrEqual(f.arguments(0), f.arguments(1)),
-          LessThanOrEqual(f.arguments(0), f.arguments(2)))
-      case other => Seq(other)
-    }
-    // (op, left, right) of a binary comparison, op in =, >=, <=, >, <
-    def cmpOf(e: Expression): Option[(String, Expression, Expression)] = e match {
-      case EqualTo(l, r) => Some(("=", l, r))
-      case GreaterThanOrEqual(l, r) => Some((">=", l, r))
-      case LessThanOrEqual(l, r) => Some(("<=", l, r))
-      case GreaterThan(l, r) => Some((">", l, r))
-      case LessThan(l, r) => Some(("<", l, r))
-      case f: org.apache.spark.sql.catalyst.analysis.UnresolvedFunction
-          if f.arguments.size == 2 &&
-            Set("=", "==", ">=", "<=", ">", "<").contains(fname(f)) =>
-        Some((if (fname(f) == "==") "=" else fname(f), f.arguments(0), f.arguments(1)))
-      case _ => None
-    }
-    def attrOf(e: Expression): Option[String] = e match {
-      case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-          if a.nameParts.length == 1 => Some(a.nameParts.head)
-      case a: AttributeReference => Some(a.name)
-      case _ => None
-    }
-    def longOf(e: Expression): Option[Long] = e match {
-      case Literal(v: Byte, _) => Some(v.toLong)
-      case Literal(v: Short, _) => Some(v.toLong)
-      case Literal(v: Int, _) => Some(v.toLong) // DateType stores epoch days
-      case Literal(v: Long, _) => Some(v)
-      case _ => None
-    }
-    def strOf(e: Expression): Option[String] = e match {
-      case Literal(s, StringType) if s != null => Some(s.toString)
-      case _ => None
-    }
-    // `col <op> lit` normalized so the attribute is on the left
-    def flip(op: String): String = op match {
-      case ">=" => "<="
-      case "<=" => ">="
-      case ">" => "<"
-      case "<" => ">"
-      case o => o
-    }
-    def interval(op: String, v: Long): (Long, Long) = op match {
-      case "=" => (v, v)
-      case ">=" => (v, Long.MaxValue)
-      case ">" => (v + 1L, Long.MaxValue)
-      case "<=" => (Long.MinValue, v)
-      case _ => (Long.MinValue, v - 1L) // "<"
-    }
-    val terms: Seq[Either[(String, (Long, Long)), (String, String)]] =
-      conjuncts(
-        org.apache.spark.sql.graftshim.StreamingShims.expressionOf(predicate))
-        .flatMap(cmpOf).flatMap { case (op, l, r) =>
-          (attrOf(l), attrOf(r)) match {
-            case (Some(c), None) =>
-              longOf(r).map(v => scala.util.Left((c, interval(op, v))))
-                .orElse(if (op == "=") strOf(r).map(s => scala.util.Right((c, s)))
-                        else None).toSeq
-            case (None, Some(c)) =>
-              longOf(l).map(v => scala.util.Left((c, interval(flip(op), v))))
-                .orElse(if (op == "=") strOf(l).map(s => scala.util.Right((c, s)))
-                        else None).toSeq
-            case _ => Nil // col-col or lit-lit term: no pruning by it
-          }
-        }
-    val intervals = terms.collect { case scala.util.Left(t) => t }
-      .groupBy(_._1).map { case (c, ts) =>
-        c -> ts.map(_._2).reduce { (a, b) =>
-          (math.max(a._1, b._1), math.min(a._2, b._2)) } }
-    val values = terms.collect { case scala.util.Right(t) => t }
-      .groupBy(_._1).map { case (c, vs) => c -> vs.map(_._2).toSet }
-    val all = dataFiles(version)
-    def rel(abs: String): String = abs.stripPrefix(dataRootPath + "/")
-    val afterIntervals = intervals.foldLeft(all.toSet) { case (keep, (c, (pLo, pHi))) =>
-      fileStatsForColumn(spark, version, c) match {
-        case None => keep
-        case Some(byAbs) =>
-          val byRel = byAbs.map { case (abs, r) => rel(abs) -> r }
-          keep.filter(p => byRel.get(p) match {
-            case Some((lo, hi)) => lo <= pHi && hi >= pLo
-            case None => true
-          })
-      }
-    }
-    val afterValues = values.foldLeft(afterIntervals) { case (keep, (c, required)) =>
-      fileValueSetsForColumn(spark, version, c) match {
-        case None => keep
-        case Some(byAbs) =>
-          val byRel = byAbs.map { case (abs, r) => rel(abs) -> r }
-          keep.filter(p => byRel.get(p) match {
-            // an AND of equalities over one column needs every value in
-            // the file's recorded set; the sidecar records full distincts
-            case Some(Some(set)) => required.subsetOf(set)
-            case Some(None) => true // FULL marker: distincts overflowed
-            case None => true
-          })
-      }
-    }
-    all.filter(afterValues)
+      predicate: org.apache.spark.sql.Column): Seq[String] =
+    if (dataFiles(version).isEmpty) Nil
+    else skipConjuncts(spark, version, predicate)
+      .fold(Seq.empty[String])(candidateFiles(spark, version, _))
+
+  /** A predicate read that opens only [[statsCandidateFiles]]: the kept
+    * files read under the snapshot's masks and filtered by `predicate`
+    * (the empty relation when nothing is kept), plus (filesOpened,
+    * filesTotal) so callers can assert the skip fired.
+    */
+  def readWhere(
+      spark: SparkSession,
+      version: Long,
+      predicate: org.apache.spark.sql.Column): (DataFrame, (Int, Int)) = {
+    val keep = statsCandidateFiles(spark, version, predicate)
+    val pruned =
+      if (keep.isEmpty) read(spark, version).where(org.apache.spark.sql.functions.lit(false))
+      else applyMasks(spark, version,
+        spark.read.parquet(keep.sorted.map(p => new File(dataRootPath, p).toString): _*)
+          .where(predicate))
+    (pruned, (keep.size, dataFiles(version).size))
+  }
+
+  /** The data files of `cur` whose recorded `keyCol` range holds one of
+    * `source`'s distinct keys, plus every file without a recorded range
+    * — exact merge candidacy: the distinct keys range-join the broadcast
+    * file ranges, so the output is file-count-sized. Sorted.
+    */
+  private def keyCandidates(
+      spark: SparkSession, cur: Long, source: DataFrame, keyCol: String): Seq[String] = {
+    import org.apache.spark.sql.functions.{broadcast, col}
+    import spark.implicits._
+    val ranges = fileRanges(spark, cur, keyCol)
+    val statted = ranges.collect { case (p, Some((lo, hi))) => (p, lo, hi) }
+    val hit =
+      if (statted.isEmpty) Seq.empty[String]
+      else source.select(col(keyCol).cast("long").as("k")).distinct()
+        .join(broadcast(statted.toDF("file", "lo", "hi")),
+          col("k") >= col("lo") && col("k") <= col("hi"))
+        .select("file").distinct().as[String].collect().toSeq
+    (ranges.collect { case (p, None) => p } ++ hit).sorted
   }
 
   /** MERGE (upsert) under the log, COPY-ON-WRITE with stats-pruned
@@ -3707,24 +3639,12 @@ class SnapshotLog(
     * one commit would hide which mechanism masked a key.
     */
   def mergeCopyOnWrite(updates: DataFrame, keyCol: String): (Long, (Int, Int)) = {
-    import org.apache.spark.sql.functions.{broadcast, col}
+    import org.apache.spark.sql.functions.col
     val spark = updates.sparkSession
     val cur = committedVersion("mergeCopyOnWrite")
     require(tombstoneFiles(cur).isEmpty && posDeleteFiles(cur).isEmpty,
       "mergeCopyOnWrite: compact() merge-on-read tombstones/position deletes before merging")
-    val ranges = fileRanges(spark, cur, keyCol)
-    val alwaysRewrite = ranges.collect { case (p, None) => p }
-    val statted = ranges.collect { case (p, Some((lo, hi))) => (p, lo, hi) }
-    import spark.implicits._
-    // exact candidacy: distinct update keys range-join the broadcast
-    // file-range frame; output is file-count-sized
-    val hit =
-      if (statted.isEmpty) Seq.empty[String]
-      else updates.select(col(keyCol).cast("long").as("k")).distinct()
-        .join(broadcast(statted.toDF("file", "lo", "hi")),
-          col("k") >= col("lo") && col("k") <= col("hi"))
-        .select("file").distinct().as[String].collect().toSeq
-    val rewrite = (alwaysRewrite ++ hit).sorted
+    val rewrite = keyCandidates(spark, cur, updates, keyCol)
     val untouched = dataFiles(cur).filterNot(rewrite.toSet)
     val baseCols = read(spark, cur).columns.toSeq
     require(updates.columns.toSeq.sorted == baseCols.sorted,
@@ -3846,7 +3766,7 @@ class SnapshotLog(
       nmbsUpdateWhen: Option[org.apache.spark.sql.Column] = None,
       nmbsUpdateSet: Seq[(String, org.apache.spark.sql.Column)] = Nil)
       : (Long, (Long, Long, Long), (Int, Int)) = {
-    import org.apache.spark.sql.functions.{broadcast, coalesce, col, count, lit, sum, when}
+    import org.apache.spark.sql.functions.{coalesce, col, count, lit, sum, when}
     val spark = source.sparkSession
     require(keyCols.nonEmpty, "mergeInto: need at least one key column")
     require(keyCols.distinct == keyCols,
@@ -3906,19 +3826,7 @@ class SnapshotLog(
     val rewrite: Seq[String] =
       if (deleteNotMatchedBySource.isDefined || nmbsUpdateWhen.isDefined ||
           !headNumeric) dataFiles(cur)
-      else {
-        val ranges = fileRanges(spark, cur, keyCols.head)
-        val alwaysRewrite = ranges.collect { case (p, None) => p }
-        val statted = ranges.collect { case (p, Some((lo, hi))) => (p, lo, hi) }
-        import spark.implicits._
-        val hit =
-          if (statted.isEmpty) Seq.empty[String]
-          else src.select(col(keyCols.head).cast("long").as("k")).distinct()
-            .join(broadcast(statted.toDF("file", "lo", "hi")),
-              col("k") >= col("lo") && col("k") <= col("hi"))
-            .select("file").distinct().as[String].collect().toSeq
-        (alwaysRewrite ++ hit).sorted
-      }
+      else keyCandidates(spark, cur, src, keyCols.head)
     val untouched = dataFiles(cur).filterNot(rewrite.toSet)
 
     val srcPref = src.columns.foldLeft(src: DataFrame) { (d, c) =>
@@ -4051,29 +3959,6 @@ class SnapshotLog(
     }
     } finally { inserts.foreach(_.unpersist()); () }
     } finally { joined.unpersist(); src.unpersist(); () }
-  }
-
-  /** Range-predicate read over a snapshot whose files carry
-    * [[appendIndexed]] stats: prune to the files whose recorded
-    * `[lo, hi]` intersects `[pLo, pHi]` (files from stats-free stages are
-    * kept conservatively), then scan exactly those. Returns the frame
-    * plus (filesOpened, filesTotal) so callers can assert the skip
-    * actually happened. Planning cost is one sidecar read per staged
-    * directory — file-count-sized metadata, never row-count-sized.
-    */
-  def readPruned(
-      spark: SparkSession,
-      version: Long,
-      statsCol: String,
-      pLo: Long,
-      pHi: Long): (DataFrame, (Int, Int)) = {
-    import org.apache.spark.sql.functions.col
-    val data = dataFiles(version)
-    val keep = fileRanges(spark, version, statsCol).collect {
-      case (p, None) => p // stats-free stage: keep conservatively
-      case (p, Some((lo, hi))) if hi >= pLo && lo <= pHi => p
-    }
-    readKept(spark, version, keep, data.size, col(statsCol) >= pLo && col(statsCol) <= pHi)
   }
 
   /** Snapshot-pinned read of version `v`: exactly the manifest's files,
@@ -4624,6 +4509,70 @@ private[graft] object SchemaDrift {
         case c if t(c) != b(c) => (c, t(c), b(c))
       })
   }
+}
+
+/** One conjunct in a shape the file-skipping rule reads, over the
+  * PHYSICAL column `col`: the value lies in one of the closed
+  * integral/date intervals `ranges` (checked against `_stats`), is one
+  * of `strings` (checked against `_values`), and hashes like one of
+  * `bloomKeys` (checked against `_blooms`, which hash the value's
+  * string form). An empty list checks nothing.
+  */
+private[sources] final case class SkipBound(
+    col: String, ranges: Seq[(Long, Long)], strings: Seq[String], bloomKeys: Seq[String])
+
+private[sources] object SkipBound {
+  import org.apache.spark.sql.catalyst.expressions._
+  import org.apache.spark.sql.types._
+
+  /** The bound `e` states when its shape is one the rule reads: a
+    * comparison of a column with a literal (either side) or `IN`
+    * literals, over integral and date columns; `=` or `IN` over string
+    * columns. Every other shape (OR, NOT, a function of a column,
+    * column against column, non-integral numbers) prunes nothing.
+    */
+  def of(e: Expression): Option[SkipBound] = e match {
+    case EqualTo(a: Attribute, l: Literal) => oneOf(a, Seq(l))
+    case EqualTo(l: Literal, a: Attribute) => oneOf(a, Seq(l))
+    case In(a: Attribute, vs) if vs.nonEmpty && vs.forall(_.isInstanceOf[Literal]) =>
+      oneOf(a, vs.map(_.asInstanceOf[Literal]))
+    case GreaterThan(a: Attribute, l: Literal) => from(a, l, 1L)
+    case LessThan(l: Literal, a: Attribute) => from(a, l, 1L)
+    case GreaterThanOrEqual(a: Attribute, l: Literal) => from(a, l, 0L)
+    case LessThanOrEqual(l: Literal, a: Attribute) => from(a, l, 0L)
+    case LessThan(a: Attribute, l: Literal) => upTo(a, l, 1L)
+    case GreaterThan(l: Literal, a: Attribute) => upTo(a, l, 1L)
+    case LessThanOrEqual(a: Attribute, l: Literal) => upTo(a, l, 0L)
+    case GreaterThanOrEqual(l: Literal, a: Attribute) => upTo(a, l, 0L)
+    case _ => None
+  }
+
+  // the axis the stats record: integers as themselves, a DATE as its
+  // epoch day. A step past Long's end wraps to the full range — the
+  // bound widens, never narrows.
+  private def axis(l: Literal): Option[Long] = l.dataType match {
+    case ByteType | ShortType | IntegerType | LongType | DateType =>
+      Option(l.value).map(_.toString.toLong)
+    case _ => None
+  }
+
+  private def from(a: Attribute, l: Literal, step: Long): Option[SkipBound] =
+    axis(l).map(v => SkipBound(a.name, Seq((v + step, Long.MaxValue)), Nil, Nil))
+
+  private def upTo(a: Attribute, l: Literal, step: Long): Option[SkipBound] =
+    axis(l).map(v => SkipBound(a.name, Seq((Long.MinValue, v - step)), Nil, Nil))
+
+  private def oneOf(a: Attribute, ls: Seq[Literal]): Option[SkipBound] =
+    if (ls.forall(axis(_).isDefined)) {
+      val vs = ls.flatMap(axis)
+      // a DATE's bloom key is its ISO string, not its epoch day: only
+      // integral points probe the filters
+      val keys = if (ls.exists(_.dataType == DateType)) Nil else vs.map(_.toString)
+      Some(SkipBound(a.name, vs.map(v => (v, v)), Nil, keys))
+    } else if (ls.forall(l => l.dataType == StringType && l.value != null)) {
+      val ss = ls.map(_.value.toString)
+      Some(SkipBound(a.name, Nil, ss, ss))
+    } else None
 }
 
 object SnapshotLog {

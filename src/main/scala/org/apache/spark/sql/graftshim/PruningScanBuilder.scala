@@ -1,21 +1,21 @@
 package org.apache.spark.sql.graftshim
 
-import org.apache.spark.sql.catalyst.expressions.{Attribute, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, LessThan, LessThanOrEqual, Literal}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.connector.expressions.filter.Predicate
 import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.execution.datasources.v2.FileScanBuilder
 import org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters
-import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StringType, StructType}
+import org.apache.spark.sql.types.StructType
 
 /** MANIFEST-LEVEL FILE SKIPPING for DSv2 SQL scans (the Delta/Iceberg
-  * data-skipping shape): a ScanBuilder wrapper that watches the catalyst
-  * filters Spark pushes, consults the snapshot log's per-file min/max
-  * stats sidecars, and — when the conjunction excludes files — REBUILDS
-  * the parquet scan over only the surviving paths. Planning cost is
-  * file-count-sized (one sidecar read per referenced column); the win at
-  * 100 TB is that a key-range predicate never even LISTS the excluded
-  * files into the scan, where parquet row-group stats alone would still
-  * open every footer.
+  * data-skipping shape): a ScanBuilder wrapper that hands the catalyst
+  * filters Spark pushes to the snapshot log's one file-skipping rule
+  * ([[graft.sources.SnapshotLog.candidateFiles]]) and — when it drops
+  * files — REBUILDS the parquet scan over only the surviving paths.
+  * Planning cost is sidecar-sized (each sidecar kind read at most once);
+  * the win at 100 TB is that a selective predicate never even LISTS the
+  * excluded files into the scan, where parquet row-group stats alone
+  * would still open every footer.
   *
   * Lives in this package because Spark's file sources receive their
   * filters through the `private[sql]` catalyst-filter channel
@@ -23,21 +23,16 @@ import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, S
   * itself implements); delegation is total, so pushdown/pruning behave
   * exactly as the wrapped parquet builder decides.
   *
-  * Pruning is CONSERVATIVE by construction: only integral-typed
-  * equality/range/IN predicates against recorded per-file `[lo, hi]`
-  * ranges drop a file; any file without stats for the column, any
-  * non-integral literal (a long-cast double bound would truncate and
-  * over-prune), and any other predicate shape keeps the file.
+  * Pruning is CONSERVATIVE by construction: a file drops only when its
+  * `_stats` ranges (integral and date comparisons, `IN`), `_values` sets
+  * (string `=`/`IN`) or `_blooms` filters (integral and string `=`/`IN`)
+  * prove no row can match; a file without a sidecar entry and every
+  * other predicate shape keep the file.
   *
   * @param inner     the parquet builder over the snapshot's FULL file list
   * @param paths     absolute path of every data file in the snapshot
-  * @param statsFor  per-column absolute-path → (lo, hi) from the log's
-  *                  stats sidecars; None when the column has no stats
-  * @param valuesFor per-column absolute-path → distinct-value set from
-  *                  the log's categorical sidecars (inner None = the
-  *                  file's set overflowed — keep it); string equality/IN
-  *                  prunes to exactly the files whose set holds the
-  *                  literal
+  * @param keep      the absolute paths, in `paths` order, of the files
+  *                  the pushed filters (PHYSICAL names) may match
   * @param rebuild   builds a fresh parquet ScanBuilder over a pruned list
   * @param logicalToPhysical COLUMN-MAPPING translation (empty = identity):
   *                  the snapshot's logical→physical name pairs. Pushed
@@ -54,19 +49,9 @@ import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, S
 class PruningScanBuilder(
     inner: FileScanBuilder,
     paths: Seq[String],
-    statsFor: String => Option[Map[String, (Long, Long)]],
-    valuesFor: String => Option[Map[String, Option[Set[String]]]],
+    keep: Seq[Expression] => Seq[String],
     rebuild: Seq[String] => FileScanBuilder,
-    logicalToPhysical: Map[String, String] = Map.empty,
-    // per-(column, literals) Bloom membership keyed by absolute path
-    // (the `_blooms.parquet` sidecars, probed INSIDE the sidecar read so
-    // only booleans reach the planner): equality/IN point lookups on a
-    // HIGH-NDV column prune to the files whose filter might contain a
-    // literal — where min/max ranges overlap completely and value sets
-    // overflow. False positives only re-open files; a file with no
-    // recorded filter keeps.
-    bloomProbe: (String, Seq[String]) => Option[Map[String, Boolean]] =
-      (_, _) => None)
+    logicalToPhysical: Map[String, String] = Map.empty)
   extends ScanBuilder
   with SupportsPushDownCatalystFilters with SupportsPushDownRequiredColumns {
 
@@ -86,10 +71,6 @@ class PruningScanBuilder(
 
   private var pushedExprs: Seq[Expression] = Nil
   private var required: Option[StructType] = None
-  private val statsCache =
-    scala.collection.mutable.Map.empty[String, Option[Map[String, (Long, Long)]]]
-  private val valuesCache =
-    scala.collection.mutable.Map.empty[String, Option[Map[String, Option[Set[String]]]]]
 
   override def pushFilters(filters: Seq[Expression]): Seq[Expression] = {
     pushedExprs = filters.map(toPhysical)
@@ -104,7 +85,7 @@ class PruningScanBuilder(
   }
 
   override def build(): Scan = {
-    val kept = paths.filter(p => pushedExprs.forall(e => mayMatch(e, p)))
+    val kept = keep(pushedExprs)
     val built =
       if (kept.size == paths.size) inner.build()
       else {
@@ -131,109 +112,4 @@ class PruningScanBuilder(
         built.columnarSupportMode()
     }
   }
-
-  private def ranges(col: String): Option[Map[String, (Long, Long)]] =
-    statsCache.getOrElseUpdate(col, statsFor(col))
-
-  private def valueSets(col: String): Option[Map[String, Option[Set[String]]]] =
-    valuesCache.getOrElseUpdate(col, valuesFor(col))
-
-  // one probe job per (column, literal-set) per build — results cached;
-  // the sidecar read evaluates membership distributed and hands back
-  // only per-file booleans (never filter bits)
-  private val bloomProbeCache = scala.collection.mutable.Map
-    .empty[(String, Seq[String]), Option[Map[String, Boolean]]]
-
-  /** Keep unless the file's Bloom filter PROVES every literal absent —
-    * no filter recorded (for the column or the file) keeps, and an
-    * empty literal list (a non-probeable literal type) keeps.
-    */
-  private def bloomKeeps(a: Attribute, path: String, lits: Seq[String]): Boolean =
-    lits.isEmpty || (bloomProbeCache
-      .getOrElseUpdate((a.name, lits), bloomProbe(a.name, lits)) match {
-      case Some(byFile) => byFile.getOrElse(path, true)
-      case None => true
-    })
-
-  private def longLit(l: Literal): Option[Long] = l.dataType match {
-    case ByteType | ShortType | IntegerType | LongType =>
-      Option(l.value).map(_.toString.toLong)
-    case _ => None
-  }
-
-  private def stringLit(l: Literal): Option[String] = l.dataType match {
-    case StringType => Option(l.value).map(_.toString)
-    case _ => None
-  }
-
-  /** Keep unless the file's recorded value set PROVES the string literal
-    * absent: an overflowed (FULL) set and a file with no entry both keep.
-    */
-  private def valueKeeps(a: Attribute, path: String, lits: Seq[String]): Boolean =
-    valueSets(a.name) match {
-      case Some(byFile) => byFile.get(path) match {
-        case Some(Some(set)) => lits.exists(set.contains)
-        case _ => true // FULL marker or no entry for this file
-      }
-      case None => true
-    }
-
-  /** False ONLY when the file's recorded range PROVES no row can match
-    * `e` — everything unprovable keeps the file.
-    */
-  private def mayMatch(e: Expression, path: String): Boolean = {
-    def range(a: Attribute): Option[(Long, Long)] =
-      ranges(a.name).flatMap(_.get(path))
-    e match {
-      case EqualTo(a: Attribute, l: Literal) if stringLit(l).isDefined =>
-        valueKeeps(a, path, stringLit(l).toSeq) &&
-          bloomKeeps(a, path, stringLit(l).toSeq)
-      case EqualTo(l: Literal, a: Attribute) if stringLit(l).isDefined =>
-        valueKeeps(a, path, stringLit(l).toSeq) &&
-          bloomKeeps(a, path, stringLit(l).toSeq)
-      case In(a: Attribute, vs) if vs.nonEmpty &&
-          vs.forall(v => v.isInstanceOf[Literal] &&
-            stringLit(v.asInstanceOf[Literal]).isDefined) =>
-        val lits = vs.flatMap(v => stringLit(v.asInstanceOf[Literal]))
-        valueKeeps(a, path, lits) && bloomKeeps(a, path, lits)
-      case EqualTo(a: Attribute, l: Literal) =>
-        eqKeeps(range(a), longLit(l)) &&
-          bloomKeeps(a, path, longLit(l).map(_.toString).toSeq)
-      case EqualTo(l: Literal, a: Attribute) =>
-        eqKeeps(range(a), longLit(l)) &&
-          bloomKeeps(a, path, longLit(l).map(_.toString).toSeq)
-      case GreaterThan(a: Attribute, l: Literal) => cmpKeeps(range(a), longLit(l))(_._2 > _)
-      case LessThan(l: Literal, a: Attribute) => cmpKeeps(range(a), longLit(l))(_._2 > _)
-      case GreaterThanOrEqual(a: Attribute, l: Literal) => cmpKeeps(range(a), longLit(l))(_._2 >= _)
-      case LessThanOrEqual(l: Literal, a: Attribute) => cmpKeeps(range(a), longLit(l))(_._2 >= _)
-      case LessThan(a: Attribute, l: Literal) => cmpKeeps(range(a), longLit(l))(_._1 < _)
-      case GreaterThan(l: Literal, a: Attribute) => cmpKeeps(range(a), longLit(l))(_._1 < _)
-      case LessThanOrEqual(a: Attribute, l: Literal) => cmpKeeps(range(a), longLit(l))(_._1 <= _)
-      case GreaterThanOrEqual(l: Literal, a: Attribute) => cmpKeeps(range(a), longLit(l))(_._1 <= _)
-      case In(a: Attribute, vs) if vs.forall(_.isInstanceOf[Literal]) =>
-        val lits = vs.map(v => longLit(v.asInstanceOf[Literal]))
-        val rangeKeeps = range(a) match {
-          case Some((lo, hi)) =>
-            // any non-integral member keeps the file conservatively
-            lits.exists(_.isEmpty) || lits.flatten.exists(v => v >= lo && v <= hi)
-          case None => true
-        }
-        rangeKeeps && (lits.exists(_.isEmpty) ||
-          bloomKeeps(a, path, lits.flatten.map(_.toString)))
-      case _ => true
-    }
-  }
-
-  private def eqKeeps(r: Option[(Long, Long)], v: Option[Long]): Boolean =
-    (r, v) match {
-      case (Some((lo, hi)), Some(x)) => x >= lo && x <= hi
-      case _ => true
-    }
-
-  private def cmpKeeps(r: Option[(Long, Long)], v: Option[Long])(
-      ok: ((Long, Long), Long) => Boolean): Boolean =
-    (r, v) match {
-      case (Some(range), Some(x)) => ok(range, x)
-      case _ => true
-    }
 }

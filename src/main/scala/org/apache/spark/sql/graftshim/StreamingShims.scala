@@ -49,14 +49,4 @@ object StreamingShims {
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[SparkSession], plan)
-
-  /** A [[org.apache.spark.sql.Column]]'s Catalyst expression tree — the
-    * Spark-4 classic bridge ([[org.apache.spark.sql.classic
-    * .ExpressionUtils]] is `private[sql]`); used by [[graft.sources
-    * .SnapshotLog.statsCandidateFiles]] to walk a DML predicate's
-    * conjuncts for sidecar-stats pruning.
-    */
-  def expressionOf(c: org.apache.spark.sql.Column):
-      org.apache.spark.sql.catalyst.expressions.Expression =
-    org.apache.spark.sql.classic.ColumnNodeToExpressionConverter(c.node)
 }

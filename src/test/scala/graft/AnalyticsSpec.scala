@@ -703,6 +703,22 @@ class AnalyticsSpec extends AnyFunSuite {
     assert(clean.length == 1 && clean.head.getLong(1) == 2L)
   }
 
+  test("kaplanMeier: a terminal time where every subject at risk has the event survives at exactly 0") {
+    import spark.implicits._
+    // durations: 1(event), 2(censored), 3(event), 3(event) — at t=3 the
+    // risk set is the two events, so S(3) = 0.75 · (2 − 2)/2 = 0
+    val durs = Seq((1L, 1L), (2L, 0L), (3L, 1L), (3L, 1L)).toDF("dur", "ev")
+    val got = Analytics.kaplanMeier(durs, col("dur"), col("ev"))
+      .orderBy(col("t")).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
+        r.getDouble(4), r.getDouble(5)))
+    assert(got.toSeq == Seq(
+      (1L, 4L, 1L, 0L, 0.75, 0.25),
+      (2L, 3L, 0L, 1L, 0.75, 0.25),
+      (3L, 2L, 2L, 0L, 0.0, 1.25)),
+      s"got ${got.toSeq}")
+  }
+
   test("logRankTest: hand-computed Mantel-Cox O/E/variance; miscoded groups refuse") {
     import spark.implicits._
     // g0: events at 1 and 3; g1: event at 2, censored at 3

@@ -106,19 +106,20 @@ class SnapshotLogSpec extends AnyFunSuite with TempRoots {
     val clustered = (0L until 120L).map(i => (i, s"p$i")).toDF("k", "payload")
       .repartitionByRange(4, col("k")).sortWithinPartitions(col("k"))
     val v0 = log.appendIndexed(clustered, Seq("k"))
-    val (pruned, (opened, total)) = log.readPruned(spark, v0, "k", 40L, 70L)
+    val (pruned, (opened, total)) = log.readWhere(spark, v0, col("k").between(40L, 70L))
     assert(total == 4 && opened < total, s"expected a real skip, got $opened/$total")
     assert(pruned.select("k").as[Long].collect().toSet == (40L to 70L).toSet)
     // an out-of-range predicate opens nothing
-    val (none, (opened0, _)) = log.readPruned(spark, v0, "k", 5000L, 6000L)
+    val (none, (opened0, _)) = log.readWhere(spark, v0, col("k").between(5000L, 6000L))
     assert(opened0 == 0 && none.count() == 0L)
     // vacuum must not collect the _stats sidecar while its files are live
     assert(log.vacuum().isEmpty)
-    assert(log.readPruned(spark, v0, "k", 40L, 70L)._2._1 == opened,
+    assert(log.readWhere(spark, v0, col("k").between(40L, 70L))._2._1 == opened,
       "stats must survive vacuum while their stage is live")
     // a stats-free append is kept conservatively
     log.append(Seq((200L, "late")).toDF("k", "payload"), partitions = 1)
-    val (withLate, (o2, t2)) = log.readPruned(spark, log.currentVersion.get, "k", 199L, 201L)
+    val (withLate, (o2, t2)) =
+      log.readWhere(spark, log.currentVersion.get, col("k").between(199L, 201L))
     assert(withLate.count() == 1L && o2 >= 1 && t2 == 5)
   }
 
@@ -185,7 +186,7 @@ class SnapshotLogSpec extends AnyFunSuite with TempRoots {
     assert(log.read(spark, v0).where(col("k") === 15L)
       .select("payload").as[String].head() == "p15")
     // the merged stage carries its own stats: a post-merge pruned read skips
-    val (_, (opened, total)) = log.readPruned(spark, v1, "k", 40L, 70L)
+    val (_, (opened, total)) = log.readWhere(spark, v1, col("k").between(40L, 70L))
     assert(opened < total, s"post-merge stats must still prune, got $opened/$total")
     // a schema-mismatched update batch fails loudly
     intercept[IllegalArgumentException] {
@@ -329,17 +330,17 @@ class SnapshotLogSpec extends AnyFunSuite with TempRoots {
       .toDF("id", "tier")
       .repartitionByRange(3, col("tier")).sortWithinPartitions(col("tier"))
     val v0 = log.appendValueIndexed(clustered, Seq("tier"))
-    val (pruned, (opened, total)) = log.readPrunedByValue(spark, v0, "tier", "B")
+    val (pruned, (opened, total)) = log.readWhere(spark, v0, col("tier") === "B")
     assert(total == 3 && opened == 1, s"expected 1/3 files, got $opened/$total")
     assert(pruned.select("id").as[Long].collect().toSet == (10L until 20L).toSet)
     // an absent value opens nothing
-    assert(log.readPrunedByValue(spark, v0, "tier", "Z")._2._1 == 0)
+    assert(log.readWhere(spark, v0, col("tier") === "Z")._2._1 == 0)
     // a high-cardinality file exceeds the cap → FULL marker → kept
     // conservatively for every probe
     log.append(Seq((100L, "Q")).toDF("id", "tier"), partitions = 1) // sidecar-free: conservative
     val wide = (0L until 50L).map(i => (1000L + i, s"t$i")).toDF("id", "tier").coalesce(1)
     log.appendValueIndexed(wide, Seq("tier"), maxDistinctPerFile = 8)
-    val (all, (o2, t2)) = log.readPrunedByValue(spark, log.currentVersion.get, "tier", "B")
+    val (all, (o2, t2)) = log.readWhere(spark, log.currentVersion.get, col("tier") === "B")
     // value files: B file (pruned in), sidecar-free file (conservative),
     // wide FULL file (conservative); A and C files pruned out
     assert(t2 == 5 && o2 == 3, s"expected 3/5 files, got $o2/$t2")
@@ -357,24 +358,24 @@ class SnapshotLogSpec extends AnyFunSuite with TempRoots {
     // every key answers exactly its row, opening fewer files than total
     Seq(0L, 123L, 399L).foreach { k =>
       val (pruned, (opened, total)) =
-        log.readPrunedByBloom(spark, v0, "id", k.toString)
+        log.readWhere(spark, v0, col("id") === k)
       assert(total == 4 && opened < total, s"key $k opened $opened/$total")
       assert(pruned.select("v").as[Long].collect().toSeq == Seq(k * 7L))
     }
     // an absent key opens nothing (modulo false positives: assert <= 1
     // would be flaky by construction; assert CORRECTNESS instead — zero
     // rows regardless of how many files a false positive re-opened)
-    assert(log.readPrunedByBloom(spark, v0, "id", "999999")._1.count() == 0L)
+    assert(log.readWhere(spark, v0, col("id") === 999999L)._1.count() == 0L)
     // a sidecar-free stage stays conservative (opened includes it)
     log.append(Seq((10000L, 1L)).toDF("id", "v"), partitions = 1)
     val (withLate, (o2, t2)) =
-      log.readPrunedByBloom(spark, log.currentVersion.get, "id", "10000")
+      log.readWhere(spark, log.currentVersion.get, col("id") === 10000L)
     assert(t2 == 5 && o2 >= 1 && withLate.count() == 1L, s"got $o2/$t2")
     // masks compose: a position delete on the looked-up row hides it
     // from the pruned read exactly as from the full read
     val (vDel, nDel) = log.deleteWhere(spark, col("id") === 123L)
     assert(nDel == 1L)
-    assert(log.readPrunedByBloom(spark, vDel, "id", "123")._1.count() == 0L)
+    assert(log.readWhere(spark, vDel, col("id") === 123L)._1.count() == 0L)
   }
 
   test("cloneDeep: materialized at the pinned version, zero lifetime coupling to the source") {

@@ -254,13 +254,22 @@ class SnapshotSqlEvolutionSpec extends AnyFunSuite with TempRoots {
       val after4 = log.dataFiles(log.currentVersion.get).toSet
       assert(zClustered.subsetOf(after4),
         "out-of-scope files carried byte-identical under WHERE")
+      // IN is a bound the file-skipping rule reads: it scopes the rewrite
+      val preIn = log.dataFiles(log.currentVersion.get)
+      val inScope =
+        log.statsCandidateFiles(spark, log.currentVersion.get, expr("k IN (1, 598)")).toSet
+      val rIn = spark.sql("OPTIMIZE graftevo.incr WHERE k IN (1, 598) ZORDER BY (k)").head()
+      assert(rIn.getString(1) == "zorder" && rIn.getInt(2) == inScope.size &&
+        inScope.size >= 2 && inScope.size < preIn.size, s"$rIn over ${preIn.size} files")
+      assert(preIn.filterNot(inScope).toSet.subsetOf(log.dataFiles(log.currentVersion.get).toSet),
+        "out-of-scope files carried byte-identical under WHERE … IN")
       // content never changes across any route
       assert(spark.sql("SELECT count(*) AS n, sum(v) AS s FROM graftevo.incr")
         .head().toSeq == Seq(750L, (0 until 200).map(_.toLong).sum * 3 +
           (0 until 50).map(_.toLong).sum * 3))
-      // unexpressible WHERE predicates refuse loudly
+      // a conjunct the rule cannot read refuses loudly
       val ex = intercept[Exception] {
-        spark.sql("OPTIMIZE graftevo.incr WHERE k IN (1, 2)")
+        spark.sql("OPTIMIZE graftevo.incr WHERE k % 2 = 0")
       }
       assert(ex.getMessage.contains("file-stats range"), ex.getMessage)
     } finally spark.conf.unset("spark.graft.optimize.maxFileSize")

@@ -871,7 +871,7 @@ class SnapshotSqlSpec extends AnyFunSuite with TempRoots {
       assert(all.subsetOf(probe.get.keySet),
         s"every post-OPTIMIZE file needs a filter: ${all -- probe.get.keySet}")
       // and the point-lookup skip still fires on the packed layout
-      val (pruned, (opened, total)) = log.readPrunedByBloom(spark, cur, "k", "5")
+      val (pruned, (opened, total)) = log.readWhere(spark, cur, col("k") === 5L)
       assert(pruned.count() == 1L && total >= 2 && opened < total,
         s"expected a live skip, got $opened/$total")
     } finally {

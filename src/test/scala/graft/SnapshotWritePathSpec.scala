@@ -95,7 +95,7 @@ class SnapshotWritePathSpec extends AnyFunSuite with TempRoots {
     log.append(Seq((900L, "B")).toDF("k", "status"), partitions = 1)
     val v = log.currentVersion.get
     Seq("A", "B", "Z").foreach { value =>
-      val (df, (opened, total)) = log.readPrunedByValue(spark, v, "status", value)
+      val (df, (opened, total)) = log.readWhere(spark, v, col("status") === value)
       val expected = log.statsCandidateFiles(spark, v, col("status") === lit(value))
         .map(p => new File(log.root, p).getCanonicalPath).toSet
       val kept = df.inputFiles.map(f => new File(new java.net.URI(f)).getCanonicalPath).toSet
